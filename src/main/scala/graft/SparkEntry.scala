@@ -16,6 +16,11 @@ object SparkEntry {
       TextQueries.all ++ DedupQueries.all ++ SimilarityQueries.all ++
       StreamingQueries.all ++ MultimodalQueries.all ++ MiscQueries.all
 
+  /** Every shared artifact, in prewarm order ([[Shared.prewarm]]). */
+  def sharedArtifacts: Seq[Shared[_]] =
+    DedupQueries.artifacts ++ StreamingQueries.artifacts ++ MiscQueries.artifacts ++
+      TextQueries.artifacts ++ Events.artifacts ++ SimilarityQueries.artifacts
+
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     queries("rel_join_multiway_region_revenue")(spark, "/root/testdata/sf0.001")

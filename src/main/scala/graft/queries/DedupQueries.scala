@@ -13,41 +13,34 @@ import org.apache.spark.sql.functions._
   */
 object DedupQueries {
 
+  private val pairConsumers = Set(
+    "ddp_jaccard_pairs", "ddp_jaccard_components", "ddp_dedup_keep",
+    "ddp_dedup_keep_best", "ddp_component_split", "ddp_lsh_recall_eval",
+    "ddp_lsh_banding_sweep",
+  )
+
   /** The distinct shingle table is the shared input of every fuzzy-dedup
     * operator; building it (tokenize + higher-order shingling) dominates
     * its consumers, so it is materialized once per (session, scale)
     * and reused — the local analog of writing the shingle table once
-    * before running a dedup suite over a 100 TB corpus.
-    *
-    * Lifetime contract: this map (and [[pairsCache]]) holds persisted
-    * DataFrames, which pin their SparkSession — these query objects
-    * assume ONE session per process (the Verify/Bench driver shape). A
-    * long-lived host that cycles sessions should not route through
-    * these entry points; the underlying `ops.*` methods are
-    * cache-free. */
-  private val shingleCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private def sharedShingles(s: SparkSession, d: String): DataFrame =
-    shingleCache.getOrElseUpdate(
-      (s, d),
-      Dedup
-        .shingleSets(documents(s, d), "doc_id", "text", 3)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
-    )
+    * before running a dedup suite over a 100 TB corpus. */
+  private val sharedShingles = Shared("dedup_shingles", pairConsumers ++ Set(
+    "ddp_jaccard_pairs_prefix", "ddp_jaccard_pairs_auto", "ddp_minhash_lsh_pairs",
+    "ddp_simhash_sigs", "ddp_simhash_pairs", "ddp_simhash64_pairs",
+    "ddp_simhash64_md5_pairs", "ddp_chunk_dedup",
+  )) { (s, d) =>
+    Dedup
+      .shingleSets(documents(s, d), "doc_id", "text", 3)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  }
 
   /** Verified Jaccard pairs (τ = 0.5) are likewise consumed twice (pair
     * listing + clustering) — materialized once. */
-  private val pairsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private def sharedJaccardPairs(s: SparkSession, d: String): DataFrame =
-    pairsCache.getOrElseUpdate(
-      (s, d),
-      Dedup
-        .jaccardPairs(sharedShingles(s, d), 0.5)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
-    )
+  private val sharedJaccardPairs = Shared("jaccard_pairs", pairConsumers) { (s, d) =>
+    Dedup
+      .jaccardPairs(sharedShingles(s, d), 0.5)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  }
 
   /** The MinHash(n=3, k=16) md5 signature table is re-derived by FOUR
     * gates (pairs, weighted, recall eval, banding sweep) — and inside
@@ -58,16 +51,14 @@ object DedupQueries {
     * production analog of writing the signature table beside the
     * shingle table (r16 optimization round; guide §2.4 — remove
     * recomputation, share one pass). */
-  private val sigsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private def sharedMinhashSigs(s: SparkSession, d: String): DataFrame =
-    sigsCache.getOrElseUpdate(
-      (s, d),
-      Dedup
-        .minhashSignaturesNative(documents(s, d), "doc_id", "text", n = 3, k = 16)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
-    )
+  private val sharedMinhashSigs = Shared("minhash_sigs", Set(
+    "ddp_minhash_lsh_pairs", "ddp_weighted_jaccard", "ddp_lsh_recall_eval",
+    "ddp_lsh_banding_sweep",
+  )) { (s, d) =>
+    Dedup
+      .minhashSignaturesNative(documents(s, d), "doc_id", "text", n = 3, k = 16)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  }
 
   /** The verified embedding near-dup pair table (auto-banded SRP
     * candidates, exact cosine ≥ 0.45) is the common input of the
@@ -78,64 +69,15 @@ object DedupQueries {
     * scale): the production analog of the near-dup pair table a
     * curation pipeline writes before its graph consumers (r16
     * optimization round, guide §2.4). */
-  private val embPairsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private def sharedEmbPairs(s: SparkSession, d: String): DataFrame =
-    embPairsCache.getOrElseUpdate(
-      (s, d),
-      graft.ops.Similarity
-        .embeddingDupPairsAuto(embeddings(s, d), idCol = "vec_id", embCol = "embedding",
-          tau = 0.45)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
-    )
-
-  /** Force-build this suite's shared inputs (the distinct shingle
-    * table, the verified pair list, the corpus survivor set) and
-    * return (artifact, seconds) per build. These model tables a
-    * production pipeline materializes ONCE per corpus generation and
-    * every downstream job reads; inside a single-process benchmark
-    * their first-touch cost otherwise lands on whichever query the
-    * Map iteration order happens to reach first, making per-query
-    * numbers non-decomposable. [[graft.Bench]] calls this in its
-    * warmup section and reports the cost on its own line. */
-  /** Which gate queries read each shared artifact — the skip map for
-    * selective benches: an artifact with no selected consumer is not
-    * built (its cost would be charged to nothing). Conservative
-    * supersets are fine; a missed consumer only re-pays first-touch
-    * inside that query's own timing. */
-  private val pairConsumers = Set(
-    "ddp_jaccard_pairs", "ddp_jaccard_components", "ddp_dedup_keep",
-    "ddp_dedup_keep_best", "ddp_component_split", "ddp_lsh_recall_eval",
-    "ddp_lsh_banding_sweep",
-  )
-  private val shingleConsumers = pairConsumers ++ Set(
-    "ddp_jaccard_pairs_prefix", "ddp_jaccard_pairs_auto", "ddp_minhash_lsh_pairs",
-    "ddp_simhash_sigs", "ddp_simhash_pairs", "ddp_simhash64_pairs",
-    "ddp_simhash64_md5_pairs", "ddp_chunk_dedup",
-  )
-  private val survivorConsumers =
-    Set("ddp_decontaminate", "ddp_corpus_prepare", "ddp_corpus_prepare_emb", "ddp_corpus_mix")
-
-  private val erMatchConsumers = Set("ddp_entity_match", "ddp_linkage_report")
-
-  private val sigConsumers = Set(
-    "ddp_minhash_lsh_pairs", "ddp_weighted_jaccard", "ddp_lsh_recall_eval",
-    "ddp_lsh_banding_sweep",
-  )
-
-  private val embPairConsumers = Set(
+  private val sharedEmbPairs = Shared("emb_pairs", Set(
     "ddp_embedding_pairs_auto", "ddp_semdedup_best", "sim_knn_graph_auto",
     "sim_knn_mutual_clusters", "sim_cluster_cohesion",
-  )
-
-  /** The blocked Jaccard best-match table (perturb → block →
-    * [[graft.ops.Blocking.matchBest]] at 0.4 Jaccard) is read by BOTH
-    * the entity-match gate and the linkage-quality report —
-    * materialized once, the production analog of an ER pipeline
-    * writing its match table once and every report reading it. */
-  private val erMatchCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  )) { (s, d) =>
+    graft.ops.Similarity
+      .embeddingDupPairsAuto(embeddings(s, d), idCol = "vec_id", embCol = "embedding",
+        tau = 0.45)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  }
 
   private def erEntities(s: SparkSession, d: String): DataFrame =
     part(s, d).select(
@@ -148,52 +90,34 @@ object DedupQueries {
     concat_ws(" ", expr("slice(split(name, ' '), 3, greatest(size(split(name, ' ')) - 2, 0))")),
   )
 
-  private def sharedErMatch(s: SparkSession, d: String): DataFrame =
-    erMatchCache.getOrElseUpdate(
-      (s, d), {
-        val ent = erEntities(s, d)
-        graft.ops.Blocking
-          .matchBest(
-            erBlocked(graft.ops.Blocking.perturbNames(ent, "id", "name")),
-            erBlocked(ent),
-            minSimPpm = 400000L,
-          )
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      },
-    )
+  /** The blocked Jaccard best-match table (perturb → block →
+    * [[graft.ops.Blocking.matchBest]] at 0.4 Jaccard) is read by BOTH
+    * the entity-match gate and the linkage-quality report —
+    * materialized once, the production analog of an ER pipeline
+    * writing its match table once and every report reading it. */
+  private val sharedErMatch = Shared("er_match", Set("ddp_entity_match", "ddp_linkage_report")) {
+    (s, d) =>
+      val ent = erEntities(s, d)
+      graft.ops.Blocking
+        .matchBest(
+          erBlocked(graft.ops.Blocking.perturbNames(ent, "id", "name")),
+          erBlocked(ent),
+          minSimPpm = 400000L,
+        )
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  }
+
+  /** This suite's shared artifacts, in prewarm order. */
+  private[graft] def artifacts: Seq[Shared[_]] = Seq(
+    sharedShingles, sharedJaccardPairs, sharedSurvivors, sharedErMatch, sharedMinhashSigs,
+    sharedEmbPairs,
+  )
 
   def prewarmShared(
       s: SparkSession,
       d: String,
       selected: Option[Set[String]] = None,
-  ): Seq[(String, Double)] = {
-    def wanted(consumers: Set[String]) = selected.forall(sel => (sel & consumers).nonEmpty)
-    def timed(name: String)(body: => Unit): (String, Double) = {
-      val t0 = System.nanoTime()
-      body
-      name -> (System.nanoTime() - t0) / 1e9
-    }
-    Seq(
-      Option.when(wanted(shingleConsumers))(timed("dedup_shingles") {
-        sharedShingles(s, d).count()
-      }),
-      Option.when(wanted(pairConsumers))(timed("jaccard_pairs") {
-        sharedJaccardPairs(s, d).count()
-      }),
-      Option.when(wanted(survivorConsumers))(timed("corpus_survivors") {
-        sharedSurvivors(s, d).count()
-      }),
-      Option.when(wanted(erMatchConsumers))(timed("er_match") {
-        sharedErMatch(s, d).count()
-      }),
-      Option.when(wanted(sigConsumers))(timed("minhash_sigs") {
-        sharedMinhashSigs(s, d).count()
-      }),
-      Option.when(wanted(embPairConsumers))(timed("emb_pairs") {
-        sharedEmbPairs(s, d).count()
-      }),
-    ).flatten
-  }
+  ): Seq[(String, Double)] = Shared.prewarm(artifacts, s, d, selected)
 
   /** Shared oracle CTEs: distinct 3-gram shingle sets + set sizes. */
   private val shingCte =
@@ -1399,16 +1323,13 @@ object DedupQueries {
     * once per (session, sfDir), the same shared-input pattern as the
     * shingle and pair caches. A production pipeline does the same:
     * the text-stage output is written once and both consumers read it. */
-  private val survivorsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private def sharedSurvivors(s: SparkSession, d: String): DataFrame =
-    survivorsCache.getOrElseUpdate(
-      (s, d),
+  private val sharedSurvivors = Shared("corpus_survivors",
+    Set("ddp_decontaminate", "ddp_corpus_prepare", "ddp_corpus_prepare_emb", "ddp_corpus_mix")) {
+    (s, d) =>
       graft.ops.CorpusPipeline
         .prepare(documents(s, d), "doc_id", "text")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
-    )
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  }
 
   private val corpusPrepare = Q(
     "ddp_corpus_prepare",

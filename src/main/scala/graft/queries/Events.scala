@@ -19,56 +19,28 @@ object Events {
     * `evt_transition_matrix` and `misc_markov_steady` (the
     * [[MiscQueries]] trade-projection pattern: the window is the
     * corpus-proportional cost, the |types|²-bounded result is cheap to
-    * persist). Same lifetime contract as the other shared caches. */
-  private val transitionCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.DataFrame]
+    * persist). */
+  private[queries] val sharedTransitionPairs =
+    Shared("transition_pairs", Set("evt_transition_matrix", "misc_markov_steady")) { (s, d) =>
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy("user_id").orderBy(col("ts"), col("event_id"))
+      events(s, d)
+        .withColumn("next_type", lead(col("event_type"), 1).over(w))
+        .filter(col("next_type").isNotNull)
+        .groupBy(col("event_type").as("src"), col("next_type").as("dst"))
+        .agg(count(lit(1)).as("n"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    }
 
-  private[queries] def sharedTransitionPairs(
-      s: org.apache.spark.sql.SparkSession,
-      d: String,
-  ): org.apache.spark.sql.DataFrame =
-    transitionCache.getOrElseUpdate(
-      (s, d), {
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-        events(s, d)
-          .withColumn("next_type", lead(col("event_type"), 1).over(w))
-          .filter(col("next_type").isNotNull)
-          .groupBy(col("event_type").as("src"), col("next_type").as("dst"))
-          .agg(count(lit(1)).as("n"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      },
-    )
+  /** This suite's shared artifacts, in prewarm order. */
+  private[graft] def artifacts: Seq[Shared[_]] =
+    Seq(sharedTransitionPairs, dtwSeriesDf, dtwPairsCheckpointed, dtwSeriesPairs)
 
-  private val transitionConsumers = Set("evt_transition_matrix", "misc_markov_steady")
-
-  private val dtwConsumers = Set("evt_dtw_pairs", "evt_dtw_medoid", "evt_dtw_barycenter")
-
-  /** Same contract as [[MiscQueries.prewarmShared]]: build the shared
-    * transition edges (and the frozen DTW series + pair tables when
-    * their consumers run) under the bench's `shared_build` accounting
-    * instead of charging the first consumer. */
   def prewarmShared(
       s: org.apache.spark.sql.SparkSession,
       d: String,
       selected: Option[Set[String]] = None,
-  ): Seq[(String, Double)] = {
-    val transition =
-      if (selected.forall(sel => (sel & transitionConsumers).nonEmpty)) {
-        val t0 = System.nanoTime()
-        sharedTransitionPairs(s, d).count()
-        Seq("transition_pairs" -> (System.nanoTime() - t0) / 1e9)
-      } else Seq.empty
-    val dtw =
-      if (selected.forall(sel => (sel & dtwConsumers).nonEmpty)) {
-        val t0 = System.nanoTime()
-        dtwSeriesDf(s, d)
-        dtwPairsCheckpointed(s, d)
-        Seq("dtw_series_pairs" -> (System.nanoTime() - t0) / 1e9)
-      } else Seq.empty
-    transition ++ dtw
-  }
+  ): Seq[(String, Double)] = Shared.prewarm(artifacts, s, d, selected)
 
   /** P1 dynamic JSON path extraction from a string column. */
   private val jsonExtractGroup = Q(
@@ -1455,15 +1427,7 @@ object Events {
     * work in the family — it must not repeat per consumer (birth
     * slope of the barycenter gate dropped from 2.9× to the scan's own
     * slope once shared). */
-  private val dtwSeriesCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.DataFrame]
-
-  private def dtwSeriesDf(
-      s: org.apache.spark.sql.SparkSession,
-      d: String,
-  ): org.apache.spark.sql.DataFrame =
-    dtwSeriesCache.getOrElseUpdate((s, d), dtwSeriesBuild(s, d).localCheckpoint())
+  private val dtwSeriesDf = Shared("dtw_series")((s, d) => dtwSeriesBuild(s, d).localCheckpoint())
 
   private def dtwSeriesBuild(
       s: org.apache.spark.sql.SparkSession,
@@ -1512,22 +1476,22 @@ object Events {
     * and barycenter gates — both re-read it several times, and the
     * underlying series/DP pipeline should run once per (session,
     * corpus), not once per consumer (the sharedTradeRows contract). */
-  private val dtwPairsCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.DataFrame]
+  private val dtwPairsCheckpointed =
+    Shared("dtw_pairs")((s, d) => dtwPairsDf(s, d).localCheckpoint())
 
-  private def dtwPairsCheckpointed(
-      s: org.apache.spark.sql.SparkSession,
-      d: String,
-  ): org.apache.spark.sql.DataFrame =
-    dtwPairsCache.getOrElseUpdate((s, d), dtwPairsDf(s, d).localCheckpoint())
+  /** The DTW family's shared tables as the prewarm builds them: series,
+    * then pairs, under one timing. */
+  private val dtwSeriesPairs =
+    Shared("dtw_series_pairs", Set("evt_dtw_pairs", "evt_dtw_medoid", "evt_dtw_barycenter")) {
+      (s, d) => (dtwSeriesDf(s, d), dtwPairsCheckpointed(s, d))
+    }
 
   private val dtwPairsQ = Q(
     "evt_dtw_pairs",
     s"""$dtwPairCtes
        |SELECT ta AS type_a, tb AS type_b, CAST(buf[m+2] AS BIGINT) AS dtw
        |FROM rec WHERE t = (n + 1) * (m + 1) - 1""".stripMargin,
-  )(dtwPairsCheckpointed)
+  )(dtwPairsCheckpointed(_, _))
 
   /** DTW MEDOID — the series that best represents the set: the type
     * minimizing its summed banded-DTW distance to every other type

@@ -14,55 +14,27 @@ object MiscQueries {
     * per line) feeds three graph queries — both PageRanks and the
     * triangle census — each deriving a different edge list from it.
     * Materialized once per (session, corpus) like
-    * [[DedupQueries]]' shingle table; same lifetime contract. */
-  private val tradeCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.DataFrame]
+    * [[DedupQueries]]' shingle table. */
+  private val sharedTradeRows = Shared("trade_rows", Set(
+    "misc_pagerank_trade", "misc_pagerank_weighted", "misc_triangle_census", "misc_kcore",
+    "misc_labelprop", "misc_bfs_khop", "misc_sssp_bounded", "misc_clustering_coeff",
+    "misc_ppr_trade", "misc_link_predict", "misc_hits_trade",
+  )) { (s, d) =>
+    lineitem(s, d)
+      .join(orders(s, d), col("l_orderkey") === col("o_orderkey"))
+      .select(col("l_partkey").as("pk"), col("l_suppkey").as("sk"), col("o_custkey").as("ck"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  }
 
-  private def sharedTradeRows(
-      s: org.apache.spark.sql.SparkSession,
-      d: String,
-  ): org.apache.spark.sql.DataFrame =
-    tradeCache.getOrElseUpdate(
-      (s, d),
-      lineitem(s, d)
-        .join(orders(s, d), col("l_orderkey") === col("o_orderkey"))
-        .select(col("l_partkey").as("pk"), col("l_suppkey").as("sk"), col("o_custkey").as("ck"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
-    )
+  /** This suite's shared artifacts, in prewarm order. */
+  private[graft] def artifacts: Seq[Shared[_]] =
+    Seq(sharedTradeRows, coPurchasePairs, coPurchaseEdges)
 
-  private val tradeConsumers =
-    Set("misc_pagerank_trade", "misc_pagerank_weighted", "misc_triangle_census", "misc_kcore",
-      "misc_labelprop", "misc_bfs_khop", "misc_sssp_bounded", "misc_clustering_coeff",
-      "misc_ppr_trade", "misc_link_predict", "misc_hits_trade")
-
-  private val copurchaseConsumers =
-    Set("misc_triangle_census", "misc_kcore", "misc_bfs_khop", "misc_sssp_bounded",
-      "misc_clustering_coeff", "misc_link_predict", "misc_diameter_sweep")
-
-  /** Same contract as [[DedupQueries.prewarmShared]]: build the shared
-    * trade projection (and, when its consumers run, the co-purchase
-    * edge list derived from it) under the bench's `shared_build`
-    * accounting instead of charging the first consumer. */
   def prewarmShared(
       s: org.apache.spark.sql.SparkSession,
       d: String,
       selected: Option[Set[String]] = None,
-  ): Seq[(String, Double)] = {
-    val trade =
-      if (selected.forall(sel => (sel & tradeConsumers).nonEmpty)) {
-        val t0 = System.nanoTime()
-        sharedTradeRows(s, d).count()
-        Seq("trade_rows" -> (System.nanoTime() - t0) / 1e9)
-      } else Seq.empty
-    val copurchase =
-      if (selected.forall(sel => (sel & copurchaseConsumers).nonEmpty)) {
-        val t0 = System.nanoTime()
-        coPurchaseEdges(s, d).count()
-        Seq("copurchase_edges" -> (System.nanoTime() - t0) / 1e9)
-      } else Seq.empty
-    trade ++ copurchase
-  }
+  ): Seq[(String, Double)] = Shared.prewarm(artifacts, s, d, selected)
 
   /** HyperLogLog++ approximate distinct (mergeable sketch — the
     * scalable form of COUNT(DISTINCT) at 100 TB), checked as an
@@ -1938,19 +1910,10 @@ object MiscQueries {
     * corpus): the capped-set pair explosion is the dominant cost both
     * [[coPurchaseEdges]] (distinct) and [[coPurchaseWeighted]] (count)
     * derive from with one cheap aggregate each. */
-  private val copurchasePairCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.DataFrame]
-
-  private def coPurchasePairs(
-      s: org.apache.spark.sql.SparkSession,
-      d: String,
-  ): org.apache.spark.sql.DataFrame =
-    copurchasePairCache.getOrElseUpdate(
-      (s, d),
-      coPurchasePairsUncached(s, d)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
-    )
+  private val coPurchasePairs = Shared("copurchase_pairs") { (s, d) =>
+    coPurchasePairsUncached(s, d)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  }
 
   private def coPurchasePairsUncached(
       s: org.apache.spark.sql.SparkSession,
@@ -1981,22 +1944,14 @@ object MiscQueries {
     * (session, corpus) — five gates (triangle census, k-core, local
     * clustering, BFS, SSSP via the weighted twin's shared pair base)
     * consume it, and the pair EXPLOSION plus its distinct is the
-    * dominant build cost they were each re-paying. Same lifetime
-    * contract as [[sharedTradeRows]]; the bench's prewarm charges the
-    * build to `shared_build`, not the first consumer. */
-  private val copurchaseCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.DataFrame]
-
-  private def coPurchaseEdges(
-      s: org.apache.spark.sql.SparkSession,
-      d: String,
-  ): org.apache.spark.sql.DataFrame =
-    copurchaseCache.getOrElseUpdate(
-      (s, d),
-      coPurchasePairs(s, d).distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
-    )
+    * dominant build cost they were each re-paying. */
+  private val coPurchaseEdges = Shared("copurchase_edges", Set(
+    "misc_triangle_census", "misc_kcore", "misc_bfs_khop", "misc_sssp_bounded",
+    "misc_clustering_coeff", "misc_link_predict", "misc_diameter_sweep",
+  )) { (s, d) =>
+    coPurchasePairs(s, d).distinct()
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  }
 
   /** The weighted form: `cnt` = number of (capped) parts the two
     * customers share — the tie-strength the SSSP gate inverts into a

@@ -1870,30 +1870,26 @@ object SimilarityQueries {
     * [[Similarity.ivfIndex]] partitioned by `cent_id` — the on-disk
     * layout [[Similarity.ivfTopKFromStoredIndex]]'s probed-cell
     * partition filter prunes against. Scratch-dir lifecycle follows
-    * the streaming-suite convention (shutdown-hook cleanup; identity
-    * key, nothing retains a stopped session). */
-  private val storedIndexCache =
-    scala.collection.concurrent.TrieMap.empty[(Int, String), String]
+    * the streaming-suite convention (shutdown-hook cleanup). */
+  private val storedIndexDir = Shared("ivf_stored_index") { (s, d) =>
+    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_index")
+    Runtime.getRuntime.addShutdownHook(new Thread(() =>
+      try org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+      catch { case _: Throwable => () }
+    ))
+    val emb       = embeddings(s, d)
+    val centroids = Similarity.ivfCentroids(emb, "vec_id", "embedding", 16)
+    val out       = dir.resolve("index").toString
+    Similarity
+      .ivfIndex(emb, "vec_id", "embedding", centroids)
+      .write
+      .partitionBy("cent_id")
+      .parquet(out)
+    out
+  }
 
-  private def storedIndexDir(s: org.apache.spark.sql.SparkSession, d: String): String =
-    storedIndexCache.getOrElseUpdate(
-      (System.identityHashCode(s), d), {
-        val dir = java.nio.file.Files.createTempDirectory("graft_ivf_index")
-        Runtime.getRuntime.addShutdownHook(new Thread(() =>
-          try org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
-          catch { case _: Throwable => () }
-        ))
-        val emb       = embeddings(s, d)
-        val centroids = Similarity.ivfCentroids(emb, "vec_id", "embedding", 16)
-        val out       = dir.resolve("index").toString
-        Similarity
-          .ivfIndex(emb, "vec_id", "embedding", centroids)
-          .write
-          .partitionBy("cent_id")
-          .parquet(out)
-        out
-      },
-    )
+  /** This suite's shared artifacts (none prewarmed). */
+  private[graft] def artifacts: Seq[Shared[_]] = Seq(storedIndexDir)
 
   /** IVF serving over the PERSISTED cent_id-partitioned index
     * ([[Similarity.ivfTopKFromStoredIndex]]): the query batch's probed

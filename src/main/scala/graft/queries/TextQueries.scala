@@ -617,26 +617,17 @@ object TextQueries {
     * vocabulary is a train-once artifact (the `dedup_shingles` /
     * `trade_rows` pattern); before this cache the tokenize, fertility,
     * and merges gates each re-paid the 8 shuffle training rounds.
-    * Driver-sized by contract (8 rows). */
-  private val bpeMergeListCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(org.apache.spark.sql.SparkSession, String), Seq[(String, String)]]
-
-  private[queries] def learnedMerges8(
-      s: org.apache.spark.sql.SparkSession,
-      d: String,
-  ): Seq[(String, String)] =
-    bpeMergeListCache.getOrElseUpdate(
-      (s, d),
+    * Driver-sized by contract (8 rows). (txt_bpe_merges is NOT a
+    * consumer: it gates [[graft.ops.Bpe.learnMerges]] itself, live.) */
+  private[queries] val learnedMerges8 =
+    Shared("bpe_merge_table", Set("txt_bpe_tokenize", "txt_bpe_fertility")) { (s, d) =>
       graft.ops.Bpe
         .learnMerges(documents(s, d), "text", 8)
         .collect()
         .sortBy(_.getInt(0))
         .map(r => (r.getString(1), r.getString(2)))
-        .toSeq,
-    )
-
-  private val bpeMergeConsumers = Set("txt_bpe_tokenize", "txt_bpe_fertility")
+        .toSeq
+    }
 
   /** The shared n-gram count-table artifact
     * ([[graft.ops.NgramCounts]]) — the write-once n-gram store the LM
@@ -645,48 +636,23 @@ object TextQueries {
     * 0`), which is therefore part of the artifact's identity; every
     * other consumer sums over the flag. Persisted + materialized once
     * per (session, corpus). */
-  private val lmTablesCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(org.apache.spark.sql.SparkSession, String), graft.ops.NgramCounts.NgramTables]
-
-  private[queries] def lmTables(
-      s: org.apache.spark.sql.SparkSession,
-      d: String,
-  ): graft.ops.NgramCounts.NgramTables =
-    lmTablesCache.getOrElseUpdate(
-      (s, d),
-      graft.ops.NgramCounts
-        .build(documents(s, d), "text", expr("doc_id % 10 = 0"))
-        .persistAll(),
-    )
-
-  private val lmTableConsumers = Set(
+  private[queries] val lmTables = Shared("ngram_count_tables", Set(
     "txt_bigram_lm_score", "txt_lm_prune", "txt_trigram_backoff",
-    "txt_freq_of_freqs", "txt_chao1", "txt_coverage_report", "txt_kn_counts")
+    "txt_freq_of_freqs", "txt_chao1", "txt_coverage_report", "txt_kn_counts",
+  )) { (s, d) =>
+    graft.ops.NgramCounts
+      .build(documents(s, d), "text", expr("doc_id % 10 = 0"))
+      .persistAll()
+  }
 
-  /** Same contract as [[MiscQueries.prewarmShared]]: build the shared
-    * artifacts under the bench's `shared_build` accounting when any
-    * consumer gate is selected. (txt_bpe_merges is NOT a BPE consumer:
-    * it gates [[graft.ops.Bpe.learnMerges]] itself, live.) */
+  /** This suite's shared artifacts, in prewarm order. */
+  private[graft] def artifacts: Seq[Shared[_]] = Seq(learnedMerges8, lmTables)
+
   def prewarmShared(
       s: org.apache.spark.sql.SparkSession,
       d: String,
       selected: Option[Set[String]] = None,
-  ): Seq[(String, Double)] = {
-    val bpe =
-      if (selected.forall(sel => (sel & bpeMergeConsumers).nonEmpty)) {
-        val t0 = System.nanoTime()
-        learnedMerges8(s, d)
-        Seq("bpe_merge_table" -> (System.nanoTime() - t0) / 1e9)
-      } else Seq.empty
-    val lm =
-      if (selected.forall(sel => (sel & lmTableConsumers).nonEmpty)) {
-        val t0 = System.nanoTime()
-        lmTables(s, d)
-        Seq("ngram_count_tables" -> (System.nanoTime() - t0) / 1e9)
-      } else Seq.empty
-    bpe ++ lm
-  }
+  ): Seq[(String, Double)] = Shared.prewarm(artifacts, s, d, selected)
 
   /** BPE vocabulary induction ([[graft.ops.Bpe.learnMerges]]): the
     * first 8 merges learned from the corpus's word-frequency table,
