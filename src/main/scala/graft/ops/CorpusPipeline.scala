@@ -1,6 +1,8 @@
 package graft.ops
 
+import graft.functions.{MinHashMd5Expr, ShingleSetExpr}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** End-to-end training-corpus preparation: the operator suites composed
@@ -10,9 +12,11 @@ import org.apache.spark.sql.functions._
   *
   * Each stage is DataFrame-in/DataFrame-out; the quality and language
   * gates are pure Column predicates (scan-local, pushdown-friendly, run
-  * before anything shuffles), exact dedup is one hash-groupBy, and the
-  * fuzzy stage pairs only LSH-colliding documents before clustering and
-  * canonical selection.
+  * before anything shuffles), exact dedup is one shuffle on the
+  * fingerprint, and the fuzzy stage pairs only LSH-colliding documents
+  * before clustering and canonical selection. Clustering needs the pair
+  * graph's size, so the fuzzy stage runs jobs at construction (see
+  * [[prepare]]).
   */
 object CorpusPipeline {
 
@@ -26,7 +30,15 @@ object CorpusPipeline {
       minJaccard: Double = 0.8,
   )
 
-  /** Returns the cleaned corpus (same schema as `docs`). */
+  /** Returns the cleaned corpus (same schema as `docs`).
+    *
+    * Not lazy: Spark jobs run when this is CALLED — the checkpoint of
+    * the per-document sketch table (gates, exact dedup and sketches in
+    * one job) and [[Dedup.clusterPairs]]' bounded pair probe, which
+    * executes the LSH self-join and the verify (plus the runtime
+    * bloom-filter subqueries Spark plans for those joins). The
+    * returned plan reads the checkpoint and anti-joins the
+    * non-canonical ids. */
   def prepare(docs: DataFrame, idCol: String, textCol: String, cfg: Config = Config()): DataFrame = {
     // 1. quality gate: token-count bounds (scan-local predicate)
     val nTok    = Text.tokenCount(col(textCol))
@@ -35,32 +47,42 @@ object CorpusPipeline {
     // 2. language gate: heuristic marker-word ID
     val inLang = quality.filter(Text.langId(col(textCol)).isin(cfg.languages.toSeq: _*))
 
-    // 3. exact dedup: keep the smallest id per normalized fingerprint.
-    // The surviving subset feeds two downstream consumers (the shingle
-    // build and the final canonical anti-join); localCheckpoint
-    // materializes the gates + dedup once instead of re-running the
-    // regex predicates and fingerprint groupBy per consumer.
-    val keep = Dedup
-      .exactGroups(inLang, idCol, textCol)
-      .select(col("keep_id").as("__keep_id"))
-    // lazy: materializes at the first action, not at plan construction,
-    // so prepare() keeps its DataFrame-in/DataFrame-out laziness
+    // 3. exact dedup: keep the smallest id (ids are keys) per
+    //    normalized fingerprint, as [[Dedup.exactGroups]] groups them.
+    //    A window over the fingerprint evaluates the gates above once; a
+    //    semi-join against the groups would evaluate them on both sides.
+    val byFingerprint = Window.partitionBy(Text.fingerprint(col(textCol)))
     val exactDeduped = inLang
-      .join(keep, inLang(idCol) === col("__keep_id"), "left_semi")
-      .localCheckpoint(eager = false)
+      .withColumn("__keep_id", min(col(idCol)).over(byFingerprint))
+      .filter(col(idCol) === col("__keep_id"))
+      .drop("__keep_id")
 
     // 4. fuzzy dedup: MinHash-LSH candidates → verified pairs →
-    //    components → canonical member per component. The shingle table
-    //    feeds both the signature aggregation and the Jaccard verify —
-    //    materialized once, the "write the shingle table before the
-    //    dedup suite" pattern at pipeline scope.
-    val shingles = Dedup
-      .shingleSets(exactDeduped, idCol, textCol, cfg.shingleN)
-      .localCheckpoint(eager = false)
+    //    components → canonical member per component. One map-only
+    //    pass adds each surviving document's MinHash signature and
+    //    distinct shingle set; that table is the only checkpoint and
+    //    feeds the banding, the Jaccard verify and the final anti-join.
+    //    Eager, so exactly one job computes it: a lazy checkpoint read
+    //    by two concurrently running broadcast jobs is computed by both,
+    //    and the first to finish truncates the lineage the other is
+    //    still running (its tasks then report SQL metrics the driver
+    //    has already dropped).
+    val spark = docs.sparkSession
+    MinHashMd5Expr.registerOn(spark, cfg.shingleN, cfg.minhashK)
+    ShingleSetExpr.registerOn(spark, Seq(cfg.shingleN))
+    val sketched = exactDeduped
+      .withColumn("__mh", MinHashMd5Expr.minhash_md5(col(textCol), cfg.shingleN, cfg.minhashK))
+      .withColumn("__shs", ShingleSetExpr.shingle_set(col(textCol), cfg.shingleN))
+      .localCheckpoint()
     val pairs = Dedup
-      .minhashLshPairs(shingles, cfg.minhashK, cfg.rowsPerBand, cfg.minJaccard)
+      .minhashLshPairsFromSketches(
+        sketched.select(col(idCol).as("doc_id"), col("__mh").as("mh"), col("__shs").as("shs")),
+        cfg.minhashK,
+        cfg.rowsPerBand,
+        cfg.minJaccard,
+      )
       .select("a_id", "b_id")
-    Dedup.dedupByPairs(exactDeduped, idCol, pairs)
+    Dedup.dedupByPairs(sketched.drop("__mh", "__shs"), idCol, pairs)
   }
 
   /** [[prepare]] chained with an embedding near-duplicate stage — the
@@ -77,8 +99,9 @@ object CorpusPipeline {
     * text-only dedup rather than dropping documents.
     *
     * The survivor set feeds both the embedding join and the final
-    * anti-join; it is lazily checkpointed once, the same
-    * twice-consumed-stage pattern [[prepare]] uses internally. */
+    * anti-join; it is lazily checkpointed once, and the embedding
+    * stage's first action (its banding-size `count()`) materializes
+    * it. */
   def prepareWithEmbeddings(
       docs: DataFrame,
       embeddings: DataFrame,

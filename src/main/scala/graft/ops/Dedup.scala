@@ -590,14 +590,22 @@ object Dedup {
       k: Int,
   ): DataFrame = {
     graft.functions.MinHashMd5Expr.registerOn(docs.sparkSession, n, k)
-    docs
-      .select(
+    unpackSignatures(
+      docs.select(
         col(idCol).as("doc_id"),
-        graft.functions.MinHashMd5Expr.minhash_md5(col(textCol), n, k).as("__mh"),
-      )
-      .filter(col("__mh").isNotNull)
-      .select(col("doc_id") +: (0 until k).map(i => col("__mh").getItem(i).as(s"mh$i")): _*)
+        graft.functions.MinHashMd5Expr.minhash_md5(col(textCol), n, k).as("mh"),
+      ),
+      k,
+    )
   }
+
+  /** (doc_id, mh array) → the wide (doc_id, mh0..mh{k-1}) signature
+    * form banding reads; documents with no shingles (null `mh`) have
+    * no signature row. */
+  private def unpackSignatures(sigs: DataFrame, k: Int): DataFrame =
+    sigs
+      .filter(col("mh").isNotNull)
+      .select(col("doc_id") +: (0 until k).map(i => col("mh").getItem(i).as(s"mh$i")): _*)
 
   /** LSH banding over a wide signature: `band_hash` = md5 of the
     * seed-ordered minhashes in each band of `rowsPerBand` consecutive
@@ -679,6 +687,32 @@ object Dedup {
   ): DataFrame =
     verifyJaccard(lshCandidates(lshBands(sigs, rowsPerBand)), shingles, minJaccard)
 
+  /** MinHash-LSH near-dup pairs over per-document SKETCHES
+    * `(doc_id, mh, shs)`: the md5 MinHash array and the distinct
+    * shingle array of each document, both computed map-only from the
+    * text ([[graft.functions.MinHashMd5Expr]],
+    * [[graft.functions.ShingleSetExpr]] — bit-equal to the relational
+    * [[minhashSignatures]] / [[shingleSets]] forms, FunctionsSpec).
+    * Banding and the (band, band_hash) self-join are
+    * [[minhashLshPairs]]'s; the verify joins the candidates straight to
+    * the sketch table, so no exploded shingle table and no per-document
+    * regroup exist anywhere in the plan. Result-identical to
+    * [[minhashLshPairs]] over [[shingleSets]] of the same documents
+    * (OpsSpec). */
+  def minhashLshPairsFromSketches(
+      sketches: DataFrame,
+      k: Int,
+      rowsPerBand: Int,
+      minJaccard: Double,
+  ): DataFrame = {
+    val sigs = unpackSignatures(sketches.select(col("doc_id"), col("mh")), k)
+    verifyJaccardSets(
+      lshCandidates(lshBands(sigs, rowsPerBand)),
+      sketches.select(col("doc_id"), col("shs")),
+      minJaccard,
+    )
+  }
+
   /** Production-path MinHash signatures: xxhash64 (codegen'd, integer
     * output, no string materialization) instead of md5 hex. Same
     * dataflow as [[minhashSignatures]] — one aggregation pass, k min
@@ -707,13 +741,13 @@ object Dedup {
       k: Int,
   ): DataFrame = {
     graft.functions.MinHashXxExpr.registerOn(docs.sparkSession, n, k)
-    docs
-      .select(
+    unpackSignatures(
+      docs.select(
         col(idCol).as("doc_id"),
-        graft.functions.MinHashXxExpr.minhash_xx(col(textCol), n, k).as("__mh"),
-      )
-      .filter(col("__mh").isNotNull)
-      .select(col("doc_id") +: (0 until k).map(i => col("__mh").getItem(i).as(s"mh$i")): _*)
+        graft.functions.MinHashXxExpr.minhash_xx(col(textCol), n, k).as("mh"),
+      ),
+      k,
+    )
   }
 
   /** LSH banding for xxhash64 signatures: band key = xxhash64 of the
@@ -769,32 +803,41 @@ object Dedup {
   }
 
   /** Exact shingle-Jaccard scores for a candidate pair table
-    * (a_id, b_id). Work is candidate-proportional: per-doc sorted
-    * shingle arrays are built once (one groupBy of the shingle table),
-    * then each candidate pair costs two doc_id-keyed joins and one
-    * linear `array_intersect` — no re-join of the full shingle table
-    * per pair and no groupBy over the pair×shingle blowup. Shared by
-    * every candidate-generating path (MinHash-LSH md5/xx, prefix
-    * join). */
+    * (a_id, b_id). Work is candidate-proportional: per-doc shingle
+    * arrays are built once (one groupBy of the shingle table), then
+    * each candidate pair costs two doc_id-keyed joins and one linear
+    * `array_intersect` — no re-join of the full shingle table per pair
+    * and no groupBy over the pair×shingle blowup. Shared by every
+    * candidate-generating path (MinHash-LSH md5/xx, prefix join). */
   private[ops] def verifyJaccard(
       cands: DataFrame,
       shingles: DataFrame,
       minJaccard: Double,
-  ): DataFrame = {
-    val docSets = shingles
-      .groupBy("doc_id")
-      .agg(sort_array(collect_list(col("sh"))).as("shs"), count(lit(1)).as("n"))
+  ): DataFrame =
+    verifyJaccardSets(
+      cands,
+      shingles.groupBy("doc_id").agg(collect_list(col("sh")).as("shs")),
+      minJaccard,
+    )
+
+  /** [[verifyJaccard]] against per-document DISTINCT shingle arrays
+    * `(doc_id, shs)` that already exist — nothing is regrouped. */
+  private def verifyJaccardSets(
+      cands: DataFrame,
+      sets: DataFrame,
+      minJaccard: Double,
+  ): DataFrame =
     cands
-      .join(docSets.as("da"), col("a_id") === col("da.doc_id"))
-      .join(docSets.as("db"), col("b_id") === col("db.doc_id"))
+      .join(sets.as("da"), col("a_id") === col("da.doc_id"))
+      .join(sets.as("db"), col("b_id") === col("db.doc_id"))
       .withColumn("__c", size(array_intersect(col("da.shs"), col("db.shs"))).cast("long"))
       .select(
         col("a_id"),
         col("b_id"),
-        (col("__c").cast("double") / (col("da.n") + col("db.n") - col("__c"))).as("jaccard"),
+        (col("__c").cast("double") / (size(col("da.shs")) + size(col("db.shs")) - col("__c")))
+          .as("jaccard"),
       )
       .filter(col("jaccard") >= minJaccard)
-  }
 
   /** Weighted (multiset) Jaccard over word-token HISTOGRAMS for
     * LSH-surfaced candidate pairs: J_w = Σ_t min(c_a(t), c_b(t)) /
@@ -903,19 +946,27 @@ object Dedup {
     * fingerprint aggregate per round (count + order-independent hash
     * xor) — no edge-set diff join.
     *
-    * Hybrid round budget: each star round pays a fixed
-    * persist/checkpoint/fingerprint cost (~1s on local[32]) that
-    * dwarfs tiny pair graphs. The initial fingerprint already counts
-    * the deduplicated edges for free, so when the graph has at most
-    * `driverEdgeCutoff` edges (and ids are LongType, keeping the
-    * output schema identical) we solve it with an exact union-find on
-    * the driver instead — the same "the small side fits in one
-    * process" reasoning Spark applies when broadcasting a join side.
-    * The collect is bounded by the probe, never speculative. Past the
-    * cutoff — the regime a 100 TB corpus is in — the distributed
-    * star-contraction rounds run unchanged. Both paths are
-    * result-identical (spec-pinned on random graphs and a
-    * diameter-200 chain).
+    * Hybrid: the star path's cost is Spark jobs, not rows. Measured
+    * with AQE off on local[4], a round runs 6 jobs (its checkpoint, its
+    * fingerprint and four broadcast join sides) on top of 5 fixed ones
+    * (the probe below, the edge checkpoint, the first fingerprint, the
+    * labelling's broadcast and action): 11 jobs and ~2 s for a single
+    * edge, 42 jobs and ~8 s for a 200-node chain. So ONE
+    * bounded probe runs first: a single job collects at most
+    * `driverEdgeCutoff + 1` pairs (a global limit under a
+    * collect_list, so the driver never receives more). When the graph
+    * has at most `driverEdgeCutoff` pairs (and ids are LongType,
+    * keeping the output schema identical) an exact union-find on the
+    * driver solves it and the labels come back as a local relation —
+    * the same "the small side fits in one process" reasoning Spark
+    * applies when broadcasting a join side. Past the cutoff — the
+    * regime a 100 TB corpus is in — the pairs are checkpointed and the
+    * distributed star-contraction rounds run unchanged. Both paths are
+    * result-identical (spec-pinned on random graphs with self-loops,
+    * duplicate and reversed pairs, and on a diameter-200 chain).
+    *
+    * Not lazy: the probe job (and, past the cutoff, every round) runs
+    * when this is CALLED.
     */
   def clusterPairs(
       pairs: DataFrame,
@@ -924,11 +975,30 @@ object Dedup {
   ): DataFrame = {
     import org.apache.spark.sql.Row
     val spark = pairs.sparkSession
-    // The pair-producing chain upstream (LSH candidates + similarity
-    // verify) is consumed twice here — once for the canonical edge set
-    // and once for the node universe. Materialize the (small, verified)
-    // pair list once so the expensive chain never re-executes.
-    val p0 = pairs.select(col("a_id"), col("b_id")).localCheckpoint()
+    // The pair chain upstream (LSH candidates + similarity verify) is
+    // read by the probe and, past the cutoff, twice more (the canonical
+    // edge set and the node universe). The probe job's own tasks
+    // checkpoint it — a cached partition is computed whole, whatever
+    // the limit above it takes — so the chain runs exactly once.
+    val p0 = pairs.select(col("a_id"), col("b_id")).localCheckpoint(eager = false)
+
+    val idsAreLong = p0.schema.forall(_.dataType == org.apache.spark.sql.types.LongType)
+    if (idsAreLong && driverEdgeCutoff >= 0L) {
+      val probe = p0
+        .limit(math.min(driverEdgeCutoff + 1L, Int.MaxValue.toLong).toInt)
+        .agg(collect_list(struct(col("a_id"), col("b_id"))))
+        .head()
+        .getSeq[Row](0)
+      if (probe.size <= driverEdgeCutoff) {
+        import spark.implicits._
+        val labels = unionFindMinLabels(probe).toSeq.map { case (n, c) => (Option(n), Option(c)) }
+        // a null id is its own (null) component, as on the star path
+        val nullIds =
+          if (probe.exists(r => r.isNullAt(0) || r.isNullAt(1))) Seq((None, None)) else Nil
+        return (labels ++ nullIds).toDF("doc_id", "component")
+      }
+    }
+
     // canonical directed edges: u -> v with u > v
     var e = p0
       .filter(col("a_id") =!= col("b_id"))
@@ -946,22 +1016,6 @@ object Dedup {
       }
 
     var fp = fingerprint(e)
-
-    val idsAreLong = e.schema("u").dataType ==
-      org.apache.spark.sql.types.LongType
-    if (idsAreLong && fp._1 <= driverEdgeCutoff) {
-      import spark.implicits._
-      // bounded by the probe above: at most driverEdgeCutoff edges
-      val edges = e.select(col("u"), col("v")).as[(Long, Long)].collect()
-      val labels = unionFindMinLabels(edges)
-      val stars  = labels.toSeq.toDF("doc_id", "__comp")
-      return p0
-        .select(col("a_id").as("doc_id"))
-        .unionAll(p0.select(col("b_id").as("doc_id")))
-        .distinct()
-        .join(broadcast(stars), Seq("doc_id"), "left")
-        .select(col("doc_id"), coalesce(col("__comp"), col("doc_id")).as("component"))
-    }
 
     var changed = true
     var i       = 0
@@ -1016,10 +1070,11 @@ object Dedup {
   }
 
   /** Exact union-find (path halving + union by root value) over a
-    * driver-resident edge list; returns every node mapped to the
-    * minimum id in its component. Only reachable through the bounded
-    * small-graph branch of [[clusterPairs]]. */
-  private def unionFindMinLabels(edges: Array[(Long, Long)]): Map[Long, Long] = {
+    * driver-resident pair list; returns every non-null node mapped to
+    * the minimum id in its component (a node seen only in a self-loop
+    * or beside a null id labels itself). Only reachable through the
+    * bounded small-graph branch of [[clusterPairs]]. */
+  private def unionFindMinLabels(pairs: Seq[org.apache.spark.sql.Row]): Map[Long, Long] = {
     val parent = scala.collection.mutable.HashMap.empty[Long, Long]
     def find(x: Long): Long = {
       var r = x
@@ -1030,13 +1085,15 @@ object Dedup {
       }
       r
     }
-    edges.foreach { case (u, v) =>
-      parent.getOrElseUpdate(u, u)
-      parent.getOrElseUpdate(v, v)
-      val (ru, rv) = (find(u), find(v))
-      // root at the smaller id so roots are already component minima
-      if (ru < rv) parent(rv) = ru
-      else if (rv < ru) parent(ru) = rv
+    pairs.foreach { r =>
+      if (!r.isNullAt(0)) parent.getOrElseUpdate(r.getLong(0), r.getLong(0))
+      if (!r.isNullAt(1)) parent.getOrElseUpdate(r.getLong(1), r.getLong(1))
+      if (!r.isNullAt(0) && !r.isNullAt(1)) {
+        val (ru, rv) = (find(r.getLong(0)), find(r.getLong(1)))
+        // root at the smaller id so roots are already component minima
+        if (ru < rv) parent(rv) = ru
+        else if (rv < ru) parent(ru) = rv
+      }
     }
     parent.keysIterator.map(n => n -> find(n)).toMap
   }

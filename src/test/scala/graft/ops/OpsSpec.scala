@@ -947,6 +947,21 @@ class OpsSpec extends AnyFunSuite {
     assert(viaUnionFind === viaStars)
     assert(viaUnionFind === toMap(Dedup.clusterPairsPropagate(rand)))
 
+    // the same graph as a pair list arrives from a verify join: self-
+    // loops on graph nodes, duplicate and reversed pairs, and node 500
+    // seen only in a self-loop (its own component)
+    val edges = rand.as[(Long, Long)].collect().toSeq
+    val messy = (edges ++ edges.take(10) ++ edges.slice(10, 20).map(_.swap) ++
+      edges.take(5).map { case (a, _) => (a, a) } :+ ((500L, 500L))).toDF("a_id", "b_id")
+    val (small, jobs) = org.apache.spark.JobCount(spark.sparkContext) {
+      toMap(Dedup.clusterPairs(messy))
+    }
+    info(s"small-graph clustering + collect: $jobs Spark jobs")
+    assert(jobs <= 2, s"small-graph clustering ran $jobs Spark jobs")
+    assert(small === toMap(Dedup.clusterPairs(messy, driverEdgeCutoff = 0L)))
+    assert(small === toMap(Dedup.clusterPairsPropagate(messy)))
+    assert(small(500L) === 500L && small - 500L === viaUnionFind)
+
     // pathological chain 0-1-…-200: diameter far beyond the default
     // round budget of label propagation; star contraction closes it
     // inside its O(log² n) budget and labels every node 0
@@ -1250,6 +1265,92 @@ class OpsSpec extends AnyFunSuite {
       .map(_.getLong(0))
       .sorted
     assert(kept === Array(1L, 5L))
+  }
+
+  /** The corpus pipeline as separately composed stages: exact dedup by
+    * a semi-join against [[Dedup.exactGroups]], then the exploded
+    * shingle table → [[Dedup.minhashLshPairs]] → [[Dedup.dedupByPairs]].
+    * [[CorpusPipeline.prepare]] fuses these and must return the same
+    * rows. */
+  private def composedPrepare(docs: org.apache.spark.sql.DataFrame, cfg: CorpusPipeline.Config) = {
+    val nTok   = Text.tokenCount(col("text"))
+    val inLang = docs
+      .filter(nTok >= cfg.minTokens && nTok <= cfg.maxTokens)
+      .filter(Text.langId(col("text")).isin(cfg.languages.toSeq: _*))
+    val keep  = Dedup.exactGroups(inLang, "doc_id", "text").select(col("keep_id").as("__keep_id"))
+    val exact = inLang.join(keep, inLang("doc_id") === col("__keep_id"), "left_semi")
+    val pairs = Dedup
+      .minhashLshPairs(Dedup.shingleSets(exact, "doc_id", "text", cfg.shingleN),
+        cfg.minhashK, cfg.rowsPerBand, cfg.minJaccard)
+      .select("a_id", "b_id")
+    Dedup.dedupByPairs(exact, "doc_id", pairs)
+  }
+
+  private val plantedCorpus = {
+    val base    = "the data pipeline processes " + (1 to 40).map(i => s"tok$i").mkString(" ")
+    val nearDup = "the data pipeline processes " + (1 to 38).map(i => s"tok$i").mkString(" ") + " tokX tokY"
+    val farDup  = "the data pipeline processes " + (1 to 30).map(i => s"tok$i").mkString(" ") + " a b c d e"
+    Seq(
+      (1L, base),
+      (2L, base),    // exact duplicate of 1
+      (3L, nearDup), // Jaccard ~0.9 with 1
+      (4L, farDup),  // Jaccard ~0.7 with 1: a duplicate at 0.5 only
+      (5L, "too short"),
+      (6L, "the unrelated corpus " + (100 to 140).map(i => s"w$i").mkString(" ")),
+    )
+  }
+
+  test("corpus pipeline: fused prepare equals the composed stages, planted and sf0.01 corpora") {
+    val planted = plantedCorpus.toDF("doc_id", "text")
+    val sf001   = spark.read.parquet("perfbench/data/sf0.01/documents.parquet")
+    for ((name, docs) <- Seq("planted" -> planted, "sf0.01" -> sf001); tau <- Seq(0.5, 0.8)) {
+      val cfg  = CorpusPipeline.Config(minTokens = 10, minJaccard = tau)
+      val want = composedPrepare(docs, cfg).collect().map(_.toString).sorted.toSeq
+      val got  = CorpusPipeline.prepare(docs, "doc_id", "text", cfg).collect().map(_.toString).sorted.toSeq
+      assert(got === want, s"$name at minJaccard $tau")
+      // the fuzzy stage must actually drop something, or equality is vacuous
+      val exactOnly = composedPrepare(docs, cfg.copy(minJaccard = 1.01)).count()
+      info(s"$name at minJaccard $tau: ${want.size} survivors of $exactOnly after exact dedup")
+      assert(want.size < exactOnly, s"$name at minJaccard $tau: no near-duplicate dropped")
+    }
+  }
+
+  test("minhashLshPairsFromSketches equals minhashLshPairs over the shingle table, Jaccard included") {
+    import graft.functions.{MinHashMd5Expr, ShingleSetExpr}
+    MinHashMd5Expr.registerOn(spark, 3, 16)
+    ShingleSetExpr.registerOn(spark, Seq(3))
+    val planted = plantedCorpus.toDF("doc_id", "text")
+    val sf001   = spark.read.parquet("perfbench/data/sf0.01/documents.parquet")
+    for ((name, docs) <- Seq("planted" -> planted, "sf0.01" -> sf001)) {
+      val sketches = docs.select(
+        col("doc_id"),
+        MinHashMd5Expr.minhash_md5(col("text"), 3, 16).as("mh"),
+        ShingleSetExpr.shingle_set(col("text"), 3).as("shs"),
+      )
+      // minJaccard 0: every LSH candidate with its score
+      val got  = Dedup.minhashLshPairsFromSketches(sketches, 16, 4, 0.0)
+      val want = Dedup.minhashLshPairs(Dedup.shingleSets(docs, "doc_id", "text", 3), 16, 4, 0.0)
+      val rows = (df: org.apache.spark.sql.DataFrame) => df.collect().map(_.toString).sorted.toSeq
+      val wantRows = rows(want)
+      info(s"$name: ${wantRows.size} candidate pairs")
+      assert(wantRows.nonEmpty && rows(got) === wantRows, name)
+    }
+  }
+
+  test("corpus pipeline: prepare(...).count() stays within its Spark job ceiling") {
+    // the benchmarked configuration: AQE off, fixed shuffle partitions
+    val s = spark.newSession()
+    s.conf.set("spark.sql.adaptive.enabled", "false")
+    s.conf.set("spark.sql.shuffle.partitions", "4")
+    val docs = s.read.parquet("perfbench/data/sf0.01/documents.parquet")
+    val (n, jobs) = org.apache.spark.JobCount(s.sparkContext) {
+      CorpusPipeline.prepare(docs, "doc_id", "text").count()
+    }
+    info(s"$n survivors, $jobs Spark jobs")
+    assert(n > 0)
+    // the sketch-table checkpoint, two runtime bloom-filter subqueries,
+    // the clustering probe, the drop-id broadcast and the count: 6
+    assert(jobs <= 6, s"prepare + count ran $jobs Spark jobs")
   }
 
   test("corpus pipeline embedding stage: collapses semantic dups, passes unembedded docs through") {

@@ -10,8 +10,10 @@ Usage: python3 tools/check.py [sfDir] [outDir] [--skip-verify] [names...]
 """
 import json
 import math
+import shutil
 import subprocess
 import sys
+import tempfile
 from datetime import datetime, date
 from decimal import Decimal
 from pathlib import Path
@@ -61,7 +63,22 @@ def main():
             print("VERIFY FAILED rc", r.returncode)
             return 1
 
-    con = duckdb.connect()
+    # A fixed memory cap with a spill directory: DuckDB's default cap
+    # (80% of the host's RAM) let a recursive-CTE oracle take the whole
+    # machine; under the cap, large intermediates spill to disk. 4 GB
+    # is too little for ddp_corpus_prepare_emb's oracle (two recursive
+    # closures). evt_burst_detect's recursive CTE still grows past the
+    # cap: the cap does not bound that oracle.
+    spill_dir = tempfile.mkdtemp(prefix="check_duckdb_spill_")
+    con = duckdb.connect(config={"memory_limit": "6GB", "temp_directory": spill_dir})
+    try:
+        return compare(con, sf_dir, out_dir, only)
+    finally:
+        con.close()
+        shutil.rmtree(spill_dir, ignore_errors=True)
+
+
+def compare(con, sf_dir, out_dir, only):
     for t in TABLES:
         sel = "*"
         if t == "events":
