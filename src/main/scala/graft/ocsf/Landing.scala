@@ -1,7 +1,8 @@
 package graft.ocsf
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Landing layer: append-only table of raw OCSF findings
   * (`dbt_project/models/landing/raw_ocsf_findings.sql:24-40`,
@@ -36,10 +37,25 @@ object Landing {
       .partitionBy("loaded_date")
       .parquet(path)
 
+  /** The landing columns as declared: [[prepare]]'s output over the
+    * OCSF finding model. Analysis only, no Spark job. Staging reads
+    * landing by it: the columns staging uses are all in the model, and
+    * a declared read skips [[read]]'s footer merge, a job that touches
+    * every landing file. Derived once per process (the analysis takes
+    * milliseconds; the types do not depend on session settings). */
+  def schema(spark: SparkSession): StructType = {
+    if (declared == null)
+      declared = prepare(spark.createDataFrame(java.util.Collections.emptyList[Row](),
+        OcsfModel.ocsfFinding)).schema
+    declared
+  }
+  @volatile private var declared: StructType = _
+
   /** Reads with schema merging: the reference's
     * `on_schema_change='append_new_columns'` (SURVEY §1.4 regime 3) —
     * an append that carries new columns widens the read schema; old
-    * rows surface NULL for them. */
+    * rows surface NULL for them. For readers of the full evolved
+    * document; it reads the footer of every landing file. */
   def read(spark: SparkSession, path: String): DataFrame =
     spark.read.option("mergeSchema", value = true).parquet(path)
 

@@ -1,6 +1,6 @@
 package graft.ocsf
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -76,9 +76,13 @@ object Monitor {
     * surface: one [[IngestMetrics]] row per committed batch —
     * good/corrupt row counts and batch duration — the engine analog of
     * the reference's per-file validation timing logs
-    * (`scripts/ocsf_monitor.py:98-102`). The batch is pinned in memory
-    * while counted so the count and the two writes share one read of
-    * the source files (batches are bounded by `maxFilesPerTrigger`, so
+    * (`scripts/ocsf_monitor.py:98-102`).
+    *
+    * Every batch is counted the same way, with or without metrics: the
+    * counts are observed on the landing write itself, so a batch of
+    * good files costs one Spark job (the append) plus the metrics row.
+    * Only a batch that holds corrupt rows is pinned in memory, for the
+    * failed-row write (batches are bounded by `maxFilesPerTrigger`, so
     * the pin is bounded too). */
   def run(
       spark: SparkSession,
@@ -97,51 +101,45 @@ object Monitor {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val started = System.nanoTime()
-        val good    = batch.filter(col("_corrupt").isNull).drop("_corrupt")
-        val bad     = batch.filter(col("_corrupt").isNotNull).select(col("_corrupt"))
-        metricsPath match {
-          case None =>
-            // persist here too: without it the good write, the
-            // bad.isEmpty probe, and the bad write would each re-parse
-            // the batch's multiLine JSON — up to 3 source reads on the
-            // DEFAULT path per micro-batch
-            batch.persist()
-            try {
-              Landing.append(good, landingPath)
-              if (!bad.isEmpty) {
-                bad.write.mode("append").text(s"$failedDir/batch_$batchId")
-              }
-            } finally batch.unpersist()
-          case Some(mp) =>
-            batch.persist()
-            try {
-              // One aggregation pass carries the row counts AND the
-              // accepted-values gates (the reference's dbt generic
-              // tests, severity_levels.sql / status.sql) — the
-              // streaming path gets the same CHECK-style contract the
-              // batch validators enforce, with violations counted per
-              // batch into the metrics table, at no extra scan.
-              def viol(c: String, accepted: Seq[String]) =
-                sum(
-                  when(col("_corrupt").isNull && col(c).isNotNull && !col(c).isin(accepted: _*), 1L)
-                    .otherwise(0L)
-                )
-              val counts = batch.agg(
-                sum(when(col("_corrupt").isNull, 1L).otherwise(0L)).as("good"),
-                sum(when(col("_corrupt").isNotNull, 1L).otherwise(0L)).as("bad"),
-                viol("severity", Staging.SeverityLevels).as("sev_bad"),
-                viol("status", Staging.StatusNames).as("st_bad"),
-              ).collect()(0)
-              def cnt(i: Int) = if (counts.isNullAt(i)) 0L else counts.getLong(i)
-              val (goodRows, badRows) = (cnt(0), cnt(1))
-              Landing.append(good, landingPath)
-              if (badRows > 0) {
-                bad.write.mode("append").text(s"$failedDir/batch_$batchId")
-              }
-              val durationMs = (System.nanoTime() - started) / 1000000L
-              IngestMetrics.append(spark, mp, batchId, goodRows, badRows, durationMs,
-                severityViolations = cnt(2), statusViolations = cnt(3))
-            } finally batch.unpersist()
+        // One aggregation rides the landing write and carries the row
+        // counts AND the accepted-values gates (the reference's dbt
+        // generic tests, severity_levels.sql / status.sql): the
+        // streaming path gets the same CHECK-style contract the batch
+        // validators enforce, counted per batch, at no extra scan. It
+        // observes the batch before the corrupt-row filter, so the
+        // corrupt count comes from the same job.
+        def viol(c: String, accepted: Seq[String]) =
+          sum(
+            when(col("_corrupt").isNull && col(c).isNotNull && !col(c).isin(accepted: _*), 1L)
+              .otherwise(0L)
+          )
+        val obs = Observation()
+        val observed = batch.observe(
+          obs,
+          count(lit(1)).as("rows"),
+          count(col("_corrupt")).as("bad"),
+          coalesce(viol("severity", Staging.SeverityLevels), lit(0L)).as("sev_bad"),
+          coalesce(viol("status", Staging.StatusNames), lit(0L)).as("st_bad"),
+        )
+        Landing.append(observed.filter(col("_corrupt").isNull).drop("_corrupt"), landingPath)
+        val counts = obs.get
+        def cnt(name: String) = counts(name).asInstanceOf[Long]
+        val badRows = cnt("bad")
+        if (badRows > 0) {
+          // Spark rejects a raw-JSON scan whose only referenced column
+          // is the corrupt-record column, so the failed-row write reads
+          // a pinned copy of the batch; batches without corrupt rows
+          // are read once
+          batch.persist()
+          try
+            batch.filter(col("_corrupt").isNotNull).select(col("_corrupt"))
+              .write.mode("append").text(s"$failedDir/batch_$batchId")
+          finally batch.unpersist()
+        }
+        metricsPath.foreach { mp =>
+          val durationMs = (System.nanoTime() - started) / 1000000L
+          IngestMetrics.append(spark, mp, batchId, cnt("rows") - badRows, badRows, durationMs,
+            severityViolations = cnt("sev_bad"), statusViolations = cnt("st_bad"))
         }
         ()
       }

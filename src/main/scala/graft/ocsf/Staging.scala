@@ -1,8 +1,8 @@
 package graft.ocsf
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.TimestampType
+import org.apache.spark.sql.types.{StructType, TimestampType}
 
 /** Staging layer: the reference's dbt model
   * `dbt_project/models/staging/stg_ocsf_findings.sql:31-163` re-expressed
@@ -135,6 +135,34 @@ object Staging {
     )
   }
 
+  /** The staging columns as declared: [[transform]]'s output over
+    * [[Landing.schema]]. Analysis only, no Spark job; derived once per
+    * process, like [[Landing.schema]]. */
+  def schema(spark: SparkSession): StructType = {
+    if (declared == null)
+      declared = transform(spark.createDataFrame(java.util.Collections.emptyList[Row](),
+        Landing.schema(spark))).schema
+    declared
+  }
+  @volatile private var declared: StructType = _
+
+  /** Declared-schema reads: no footer merge or schema-inference job. */
+  private def readLanding(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(Landing.schema(spark)).parquet(path)
+
+  private def readStaging(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(schema(spark)).parquet(path)
+
+  /** `max(staging_loaded_at)` in microseconds since the epoch: the
+    * watermark's exact form, as an aggregate and as an observed
+    * metric. */
+  private val maxLoadedAtMicros: Column = unix_micros(max(col("staging_loaded_at")))
+
+  private def maxLoadedAt(staging: DataFrame): Option[Long] = {
+    val r = staging.agg(maxLoadedAtMicros).head()
+    if (r.isNullAt(0)) None else Some(r.getLong(0))
+  }
+
   // `transform` name collides with this object's method.
   private def transform_(arr: Column, f: Column => Column): Column =
     org.apache.spark.sql.functions.transform(arr, f)
@@ -151,14 +179,15 @@ object Staging {
     * commit (the reference's own cron-vs-monitor constraint). */
   private def freshAbove(
       landing: DataFrame,
-      watermark: Option[java.sql.Timestamp],
+      watermarkMicros: Option[Long],
       inclusive: Boolean,
   ): DataFrame =
-    watermark match {
-      case Some(w) =>
+    watermarkMicros match {
+      case Some(us) =>
+        val w = timestamp_micros(lit(us))
         landing
-          .filter(col("loaded_date") >= to_date(lit(w)))
-          .filter(if (inclusive) col("loaded_at") >= lit(w) else col("loaded_at") > lit(w))
+          .filter(col("loaded_date") >= to_date(w))
+          .filter(if (inclusive) col("loaded_at") >= w else col("loaded_at") > w)
       case None => landing
     }
 
@@ -166,23 +195,20 @@ object Staging {
     * current staging max(staging_loaded_at) (driver-side scalar — the
     * one place the reference's incremental runner genuinely needs an
     * action), filters the landing scan above it (min/max-pruned by
-    * parquet + partition pruning on loaded_date), appends.
+    * parquet + partition pruning on loaded_date), appends. Landing
+    * and staging are read by their declared schemas.
     *
     * Returns the APPENDED batch's row count, observed on the write job
     * itself (`Dataset.observe`) — no post-write rescan of the staging
     * table, which at 100 TB would be a gratuitous extra pass.
     */
   def incrementalRun(spark: SparkSession, landingPath: String, stagingPath: String): Long = {
-    val landing = Landing.read(spark, landingPath)
-    val watermark: Option[java.sql.Timestamp] =
-      if (exists(spark, stagingPath))
-        Option(
-          spark.read.parquet(stagingPath).agg(max("staging_loaded_at")).head().getTimestamp(0)
-        )
-      else None
+    val landing = readLanding(spark, landingPath)
+    val watermark =
+      if (exists(spark, stagingPath)) maxLoadedAt(readStaging(spark, stagingPath)) else None
 
     val fresh = freshAbove(landing, watermark, inclusive = false)
-    val obs = org.apache.spark.sql.Observation()
+    val obs = Observation()
     val out = enforceUidPattern(transform(fresh), storedUidPattern(spark, stagingPath))
       .observe(obs, count(lit(1)).as("rows"))
     // uid-clustered files for row-group skipping (see mergeRun's note)
@@ -213,7 +239,16 @@ object Staging {
     * + an anti-join keyed on the uid — at 100 TB this is the compaction
     * pattern (rewrite partitions, not rows in place); a transactional
     * table format replaces the swap with a metadata commit, same
-    * dataflow. */
+    * dataflow. The watermark of record is committed with each version:
+    * the compaction write observes the snapshot's
+    * `max(staging_loaded_at)` and stores it as `v=N/_WATERMARK` before
+    * the pointer swap, so the next run reads one small file instead of
+    * aggregating the snapshot. Only a version written before watermarks
+    * were committed has no such file; it falls back to the aggregate
+    * once and the next commit writes the file. Landing and staging are
+    * read by their declared schemas ([[Landing.schema]], [[schema]]),
+    * so no run pays a job per landing file footer or a schema
+    * inference. */
   def mergeRun(
       spark: SparkSession,
       landingPath: String,
@@ -242,7 +277,7 @@ object Staging {
     // committed while this run was compacting fails THIS run loudly
     // instead of letting it silently clobber the newer snapshot.
     val basePtr = readSideFile(rootFs, rootPath, "_CURRENT")
-    val landing = Landing.read(spark, landingPath)
+    val landing = readLanding(spark, landingPath)
     // Writers resolve the current snapshot ONLY through the pointer —
     // never [[currentVersion]]'s highest-complete-version fallback.
     // With never-reused version numbers, a CAS-aborted run can leave a
@@ -250,10 +285,11 @@ object Staging {
     // pointer; a writer that fell back to it would merge (and then
     // commit) data that was never current. Readers keep the fallback
     // as a recovery heuristic for pointer loss.
-    val current: Option[DataFrame] =
-      basePtr.map(v => spark.read.parquet(s"$stagingRoot/v=$v"))
-    val watermark: Option[java.sql.Timestamp] =
-      current.map(c => c.agg(max("staging_loaded_at")).head().getTimestamp(0)).filter(_ != null)
+    val current: Option[DataFrame] = basePtr.map(v => readStaging(spark, s"$stagingRoot/v=$v"))
+    val watermark: Option[Long] = basePtr.flatMap { v =>
+      readWatermark(rootFs, new org.apache.hadoop.fs.Path(rootPath, s"v=$v"))
+        .getOrElse(maxLoadedAt(current.get))
+    }
     val fresh = freshAbove(landing, watermark, inclusive = true)
     val keys = Seq("finding_uid", "scan_run_id")
     val freshT = enforceUidPattern(transform(fresh), storedUidPattern(spark, stagingRoot))
@@ -350,27 +386,33 @@ object Staging {
     // point lookups AND loaded-date range scans prune files). Size n
     // to the snapshot (target ~128 MB–1 GB per file at scale).
     try {
-      val written: Long = clusterFiles match {
+      val (written, versionWatermark) = clusterFiles match {
         case Some(n) =>
           // No Observation here: repartitionByRange's boundary-sampling
           // job executes the plan (and would bump a CollectMetrics
           // accumulator) a second time — observed counts double. Count
-          // from the written files instead; parquet count() is answered
-          // from footer metadata, no data pages are read.
+          // from the written files instead, with the watermark in the
+          // same aggregate (the count comes from footer metadata, the
+          // max reads the one timestamp column).
           clusteredWrite(merged, versionDir, n)
-          spark.read.parquet(versionDir).count()
+          val r = readStaging(spark, versionDir).agg(count(lit(1)), maxLoadedAtMicros).head()
+          (r.getLong(0), if (r.isNullAt(1)) None else Some(r.getLong(1)))
         case None =>
-          // Snapshot row count observed on the compaction write itself —
-          // the new version is never rescanned just for the return value.
-          val obs = org.apache.spark.sql.Observation()
+          // Snapshot row count and watermark observed on the compaction
+          // write itself — the new version is never rescanned for them.
+          val obs = Observation()
           merged
-            .observe(obs, count(lit(1)).as("rows"))
+            .observe(obs, count(lit(1)).as("rows"), maxLoadedAtMicros.as("watermark"))
             .sortWithinPartitions("finding_uid")
             .write
             .mode("overwrite")
             .parquet(versionDir)
-          obs.get("rows").asInstanceOf[Long]
+          val m = obs.get
+          (m("rows").asInstanceOf[Long], Option(m("watermark")).map(_.asInstanceOf[Long]))
       }
+      // committed with the version: written before the pointer swap
+      writeSideFile(rootFs, new org.apache.hadoop.fs.Path(versionDir), "_WATERMARK",
+        versionWatermark.fold("")(_.toString))
       beforeCommit()
       commitPointer(rootFs, rootPath, next, basePtr)
       written
@@ -502,7 +544,7 @@ object Staging {
     * pointer, falling back to the highest complete (`_SUCCESS`-marked)
     * version while a swap is in flight. */
   def readCurrent(spark: SparkSession, stagingRoot: String): Option[DataFrame] =
-    currentVersion(spark, stagingRoot).map(v => spark.read.parquet(s"$stagingRoot/v=$v"))
+    currentVersion(spark, stagingRoot).map(v => readStaging(spark, s"$stagingRoot/v=$v"))
 
   def currentVersion(spark: SparkSession, stagingRoot: String): Option[Long] = {
     val root = new org.apache.hadoop.fs.Path(stagingRoot)
@@ -522,12 +564,12 @@ object Staging {
   }
 
   /** Atomic side-file swap shared by every underscore-prefixed metadata
-    * file (`_CURRENT`, `_UID_PATTERN`): write to `.tmp`, rename into
-    * place with OVERWRITE — a single atomic replacement, so readers
-    * never observe the file absent mid-swap. (The pre-FileContext form
-    * deleted then renamed, leaving a gap the pointer's
-    * highest-complete-version fallback had to cover; the fallback now
-    * only matters for genuine pointer loss.) */
+    * file (`_CURRENT`, `_UID_PATTERN`, `v=N/_WATERMARK`): write to
+    * `.tmp`, rename into place with OVERWRITE — a single atomic
+    * replacement, so readers never observe the file absent mid-swap.
+    * (The pre-FileContext form deleted then renamed, leaving a gap the
+    * pointer's highest-complete-version fallback had to cover; the
+    * fallback now only matters for genuine pointer loss.) */
   private def writeSideFile(
       fs: org.apache.hadoop.fs.FileSystem,
       root: org.apache.hadoop.fs.Path,
@@ -544,6 +586,17 @@ object Staging {
     fc.rename(tmp, ptr, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
     ()
   }
+
+  /** A version's watermark of record, in microseconds since the epoch:
+    * `Some(None)` for an empty version, `None` when the version has no
+    * `_WATERMARK` file (written before watermarks were committed). */
+  private def readWatermark(
+      fs: org.apache.hadoop.fs.FileSystem,
+      versionDir: org.apache.hadoop.fs.Path,
+  ): Option[Option[Long]] =
+    if (fs.exists(new org.apache.hadoop.fs.Path(versionDir, "_WATERMARK")))
+      Some(readSideFile(fs, versionDir, "_WATERMARK").map(_.toLong))
+    else None
 
   private def readSideFile(
       fs: org.apache.hadoop.fs.FileSystem,
@@ -764,7 +817,7 @@ object Staging {
     * reads directly. */
   private def readStagingAny(spark: SparkSession, stagingPath: String): Option[DataFrame] =
     readCurrent(spark, stagingPath)
-      .orElse(if (exists(spark, stagingPath)) Some(spark.read.parquet(stagingPath)) else None)
+      .orElse(if (exists(spark, stagingPath)) Some(readStaging(spark, stagingPath)) else None)
 
   /** Insert-time enforcement of the installed constraint — the half
     * Postgres does on every INSERT. `assert_true` rides the write job's

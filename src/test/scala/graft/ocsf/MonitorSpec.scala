@@ -31,6 +31,10 @@ class MonitorSpec extends AnyFunSuite {
   private def writeFile(dir: String, name: String, content: String): Unit =
     Files.write(Paths.get(dir, name), content.getBytes("UTF-8"))
 
+  /** The corrupt records routed to `failedDir`, one per malformed document. */
+  private def failedRows(failedDir: String): Seq[String] =
+    spark.read.text(s"$failedDir/batch_*").collect().map(_.getString(0)).toSeq
+
   private def finding(uid: String): String =
     s"""{"severity": "High", "status": "New",
        | "metadata": {"product": {"name": "t", "version": "1"}, "version": "1.5.0"},
@@ -58,9 +62,8 @@ class MonitorSpec extends AnyFunSuite {
       landed.select("finding_uid").collect().map(_.getString(0)).sorted ===
         Array("uid-1", "uid-2", "uid-3")
     )
-    // corrupt file captured for triage
-    val failedFiles = Files.list(Paths.get(failed)).toArray
-    assert(failedFiles.nonEmpty)
+    // corrupt file captured for triage, without a metrics table too
+    assert(failedRows(failed) === Seq("{ this is not valid json"))
 
     // restart with same checkpoint: nothing reprocessed (exactly-once per file)
     val q2 = Monitor.run(spark, src, landing, failed, checkpoint, archiveDir = Some(archive))
@@ -257,6 +260,23 @@ class MonitorSpec extends AnyFunSuite {
     val after = IngestMetrics.perBatch(spark, metrics).collect()
     assert(after.length === 4)
     assert(after.map(_.getAs[Long]("good_rows")).sum === 4L)
+
+    // one batch that mixes good and malformed files: the counts
+    // observed on the landing write equal the planted ones, and the
+    // malformed files' records reach failed/
+    writeFile(src, "e.ocsf.json", s"[${finding("m-5")}, ${finding("m-6")}]")
+    writeFile(src, "f.ocsf.json", "[{ truncated")
+    writeFile(src, "g.ocsf.json", s"[${finding("m-7")}]")
+    writeFile(src, "h.ocsf.json", "not json at all")
+    val q4 = Monitor.run(spark, src, landing, failed, checkpoint, metricsPath = Some(metrics))
+    q4.awaitTermination()
+    val mixed = IngestMetrics.perBatch(spark, metrics).filter("batch_id = 4").collect()
+    assert(mixed.length === 1, s"expected one batch 4, got ${mixed.toSeq}")
+    assert(mixed(0).getAs[Long]("good_rows") === 3L)
+    assert(mixed(0).getAs[Long]("corrupt_rows") === 2L)
+    assert(Landing.read(spark, landing).count() === 7)
+    assert(failedRows(failed).sorted ===
+      Seq("[{ truncated", "not json at all", "{ this is not valid json"))
   }
 
   test("streaming accepted-values gates: severity/status violations counted per batch") {

@@ -682,6 +682,111 @@ class StagingSpec extends AnyFunSuite {
     assert(Staging.failingUidFormat(df, "^other:.*$").count() === 1)
   }
 
+  /** The committed `_WATERMARK` of the current version, if any. */
+  private def watermarkFile(root: String): Option[String] = {
+    val v = Staging.currentVersion(spark, root).get
+    val p = java.nio.file.Paths.get(root, s"v=$v", "_WATERMARK")
+    if (java.nio.file.Files.exists(p)) Some(new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
+    else None
+  }
+
+  /** `max(staging_loaded_at)` of the current version, recomputed from its rows. */
+  private def snapshotMaxMicros(root: String): String = {
+    import org.apache.spark.sql.functions.{max, unix_micros}
+    Staging.readCurrent(spark, root).get
+      .agg(unix_micros(max("staging_loaded_at"))).head().getLong(0).toString
+  }
+
+  private def docsFor(uids: String*): org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    val docs = uids.map(u => richFinding.replace("boann:sast:snyk:fingerprint:abc", u))
+    spark.read.schema(OcsfModel.ocsfFinding).json(docs.toDS())
+  }
+
+  test("_WATERMARK: each commit stores its version's max(staging_loaded_at); no fresh rows carries it") {
+    val landingDir  = tmpDir("landing_wm")
+    val stagingRoot = tmpDir("staging_wm")
+    Landing.append(docsFor("wm-1", "wm-2"), landingDir)
+    Staging.mergeRun(spark, landingDir, stagingRoot)
+    val first = watermarkFile(stagingRoot)
+    assert(first === Some(snapshotMaxMicros(stagingRoot)))
+
+    Landing.append(docsFor("wm-3"), landingDir)
+    assert(Staging.mergeRun(spark, landingDir, stagingRoot) === 3L)
+    val second = watermarkFile(stagingRoot)
+    assert(second === Some(snapshotMaxMicros(stagingRoot)))
+    assert(second.get.toLong > first.get.toLong, "fresh rows must move the watermark")
+
+    // no fresh rows: a new version, same rows, same watermark
+    assert(Staging.mergeRun(spark, landingDir, stagingRoot) === 3L)
+    assert(Staging.currentVersion(spark, stagingRoot) === Some(2L))
+    assert(watermarkFile(stagingRoot) === second)
+  }
+
+  test("_WATERMARK: a version without the file falls back to the aggregate, merges the same, writes it") {
+    import java.nio.file.{Files, Paths}
+    val landingDir = tmpDir("landing_wm_legacy")
+    val withFile   = tmpDir("staging_wm_file")
+    val legacy     = tmpDir("staging_wm_legacy")
+    Landing.append(docsFor("lg-1", "lg-2"), landingDir)
+    Staging.mergeRun(spark, landingDir, withFile)
+    Staging.mergeRun(spark, landingDir, legacy)
+    // the legacy case: a version committed before versions carried
+    // their watermark
+    Files.delete(Paths.get(legacy, "v=0", "_WATERMARK"))
+    Files.deleteIfExists(Paths.get(legacy, "v=0", "._WATERMARK.crc"))
+    assert(watermarkFile(legacy) === None)
+
+    // a re-ingested finding and a new one
+    Landing.append(docsFor("lg-2", "lg-3"), landingDir)
+    assert(Staging.mergeRun(spark, landingDir, withFile) === 3L)
+    assert(Staging.mergeRun(spark, landingDir, legacy) === 3L)
+    def rows(root: String) =
+      Staging.readCurrent(spark, root).get.collect().map(_.toString).sorted.toSeq
+    assert(rows(legacy) === rows(withFile))
+    assert(watermarkFile(legacy) === Some(snapshotMaxMicros(legacy)))
+    assert(watermarkFile(legacy) === watermarkFile(withFile))
+  }
+
+  test("_WATERMARK: the clusterFiles path commits it too") {
+    val landingDir  = tmpDir("landing_wm_cl")
+    val stagingRoot = tmpDir("staging_wm_cl")
+    Landing.append(docsFor("cl-1", "cl-2", "cl-3"), landingDir)
+    assert(Staging.mergeRun(spark, landingDir, stagingRoot, clusterFiles = Some(2)) === 3L)
+    assert(watermarkFile(stagingRoot) === Some(snapshotMaxMicros(stagingRoot)))
+    Landing.append(docsFor("cl-4"), landingDir)
+    assert(Staging.mergeRun(spark, landingDir, stagingRoot, clusterFiles = Some(2)) === 4L)
+    assert(watermarkFile(stagingRoot) === Some(snapshotMaxMicros(stagingRoot)))
+  }
+
+  test("Spark job ceilings: mergeRun over a snapshot, and a dashboard read") {
+    // the pipeline's session settings: AQE on (the default), 4 shuffle
+    // partitions
+    assert(spark.conf.get("spark.sql.adaptive.enabled") === "true")
+    val landingDir  = tmpDir("landing_jobs")
+    val stagingRoot = tmpDir("staging_jobs")
+    Landing.append(docsFor("jc-1", "jc-2"), landingDir)
+    Staging.mergeRun(spark, landingDir, stagingRoot)
+    Landing.append(docsFor("jc-2", "jc-3"), landingDir)
+    val (n, mergeJobs) = org.apache.spark.JobCount(spark.sparkContext) {
+      Staging.mergeRun(spark, landingDir, stagingRoot)
+    }
+    info(s"mergeRun: $mergeJobs Spark jobs")
+    assert(n === 3L)
+    // the compaction write and the jobs of its shuffle and broadcast
+    // stages; the watermark is read from its file and both tables by
+    // declared schema, so no footer merge, inference or aggregate job
+    assert(mergeJobs <= 4, s"mergeRun ran $mergeJobs Spark jobs")
+
+    val (summary, dashboardJobs) = org.apache.spark.JobCount(spark.sparkContext) {
+      CoreLayer.openFindingsBySeverity(Staging.readCurrent(spark, stagingRoot).get).collect()
+    }
+    info(s"dashboard read: $dashboardJobs Spark jobs")
+    assert(summary.map(_.getAs[Long]("n_findings")).sum === 3L)
+    // the window's shuffle, the aggregate's shuffle and the result
+    assert(dashboardJobs <= 3, s"the dashboard read ran $dashboardJobs Spark jobs")
+  }
+
   private lazy val stagingRowsSchema = {
     import spark.implicits._
     val docs = spark.read.schema(OcsfModel.ocsfFinding).json(Seq(richFinding).toDS())
