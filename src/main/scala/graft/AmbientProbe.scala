@@ -108,9 +108,9 @@ object AmbientProbe {
   val memProbeKeys: Long = 3L * 1000 * 1000
 
   /** Idle-machine min-of-4 of [[timeMem]] at local[32] on the
-    * benchmark box (measured 2026-08, two fresh JVMs via
-    * [[ProbeCalibrate]]: 1.067 / 1.166 s; see PERF.md "Ambient
-    * sentinel"). The 2× tripwire therefore fires at ≥2.2 s. */
+    * benchmark box (measured 2026-08, two fresh JVMs via the
+    * test-scoped `graft.ProbeCalibrate`: 1.067 / 1.166 s; see PERF.md
+    * "Ambient sentinel"). The 2× tripwire therefore fires at ≥2.2 s. */
   val pinnedIdleMemSeconds32: Double = 1.10
 
   /** Same approximate fixed-total-work rescaling as [[expectedIdle]];

@@ -1,5 +1,6 @@
 package graft.ocsf
 
+import graft.functions.BoundValue
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -18,16 +19,23 @@ object Landing {
 
   /** Landing columns: finding_uid, raw (typed struct), raw_json (full
     * fidelity, mirroring the reference keeping the complete document),
-    * loaded_at, loaded_date (partition key). */
-  def prepare(findings: DataFrame): DataFrame =
+    * loaded_at, loaded_date (partition key). The load time reaches
+    * generated code as a [[graft.functions.BoundValue]], so each append
+    * reuses the previous append's compiled classes. The load day stays
+    * a literal: the writer sorts its rows by a partition column unless
+    * the column is constant, and the day changes once a day. Both come
+    * from the query's one `current_timestamp()`. */
+  def prepare(findings: DataFrame): DataFrame = {
+    BoundValue.registerOn(findings.sparkSession)
     findings
       .select(
         col("finding_info.uid").as("finding_uid"),
         struct(findings.columns.map(col): _*).as("raw"),
         to_json(struct(findings.columns.map(col): _*)).as("raw_json"),
       )
-      .withColumn("loaded_at", current_timestamp())
-      .withColumn("loaded_date", to_date(col("loaded_at")))
+      .withColumn("loaded_at", BoundValue.bound_value(current_timestamp()))
+      .withColumn("loaded_date", to_date(current_timestamp()))
+  }
 
   /** S7: batch append (replaces row-at-a-time INSERT). */
   def append(findings: DataFrame, path: String): Unit =

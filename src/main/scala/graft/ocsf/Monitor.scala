@@ -149,8 +149,21 @@ object Monitor {
       // ocsf_monitor.py:120-342): poll the directory on a processing
       // -time cadence until stopped.
       else writer.trigger(Trigger.ProcessingTime(pollInterval))
-    triggered.start()
+    // The query runs on a clone of the caller's session, taken in
+    // start(). Under Spark's per-session artifact isolation each clone
+    // gets an executor classloader of its own, and the codegen cache
+    // does not serve classes across classloaders, so a query on an
+    // isolated clone compiles its whole plan again. The clone is taken
+    // with isolation off (it keeps that setting; this pipeline adds no
+    // artifacts) and the caller's setting is restored; the query stays
+    // in the caller's `spark.streams`.
+    val before = spark.conf.getOption(ArtifactIsolation)
+    spark.conf.set(ArtifactIsolation, "false")
+    try triggered.start()
+    finally before.fold(spark.conf.unset(ArtifactIsolation))(spark.conf.set(ArtifactIsolation, _))
   }
+
+  private val ArtifactIsolation = "spark.sql.artifact.isolation.enabled"
 
   /** ST2: graceful shutdown, bounded by `timeoutMs`. Deliberately no
     * drain: `processAllAvailable` can block forever under continuous

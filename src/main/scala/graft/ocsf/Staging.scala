@@ -1,6 +1,8 @@
 package graft.ocsf
 
+import graft.functions.BoundValue
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StructType, TimestampType}
 
@@ -184,7 +186,11 @@ object Staging {
   ): DataFrame =
     watermarkMicros match {
       case Some(us) =>
-        val w = timestamp_micros(lit(us))
+        // bound, not inlined: each run's new watermark reuses the last
+        // run's compiled filter (loaded_at carries no parquet
+        // statistics, so a literal would prune nothing more)
+        BoundValue.registerOn(landing.sparkSession)
+        val w = BoundValue.bound_value(timestamp_micros(lit(us)))
         landing
           .filter(col("loaded_date") >= to_date(w))
           .filter(if (inclusive) col("loaded_at") >= w else col("loaded_at") > w)
@@ -194,9 +200,12 @@ object Staging {
   /** P5/ST4: incremental high-watermark materialization. Reads the
     * current staging max(staging_loaded_at) (driver-side scalar — the
     * one place the reference's incremental runner genuinely needs an
-    * action), filters the landing scan above it (min/max-pruned by
-    * parquet + partition pruning on loaded_date), appends. Landing
-    * and staging are read by their declared schemas.
+    * action), filters the landing scan above it, appends. Only the
+    * `loaded_date` partitions older than the watermark's day are
+    * pruned: landing writes `loaded_at` as parquet INT96, which carries
+    * no min/max statistics, so every file of the watermark's day and
+    * later is read and filtered row by row. Landing and staging are
+    * read by their declared schemas.
     *
     * Returns the APPENDED batch's row count, observed on the write job
     * itself (`Dataset.observe`) — no post-write rescan of the staging
@@ -232,14 +241,23 @@ object Staging {
     * superseded versions are retained for time travel until
     * [[vacuumVersions]].
     *
-    * Within a batch, duplicate keys keep the latest staging_loaded_at
-    * (ties are payload-identical re-reads of one file).
+    * The merge is one keyed pass, [[upsert]]: a fresh row replaces the
+    * snapshot's row of its key, and among fresh duplicates the latest
+    * load wins (ties are payload-identical re-reads of one file).
     *
-    * Scale notes: the rewrite cost is one shuffle-free scan of current
-    * + an anti-join keyed on the uid — at 100 TB this is the compaction
-    * pattern (rewrite partitions, not rows in place); a transactional
-    * table format replaces the swap with a metadata commit, same
-    * dataflow. The watermark of record is committed with each version:
+    * Scale notes: the default layout runs two Spark jobs at every size
+    * (under AQE, the window's shuffle map stage and the compaction
+    * write); the fresh rows are computed once. The snapshot is
+    * shuffled once by key on every merge: a broadcast anti-join of
+    * the fresh keys would leave it unshuffled only while the fresh
+    * side fits under the broadcast threshold, and past it Spark plans
+    * a sort-merge join, which shuffles the snapshot too. Either way the
+    * whole snapshot is rewritten into the new version; at 100 TB that
+    * is a full-table rewrite per merge, which a version layout that
+    * references unchanged files (manifests) would avoid. The fresh
+    * read prunes landing by `loaded_date` only (see [[incrementalRun]]),
+    * so every merge reads all of the watermark day's landing files.
+    * The watermark of record is committed with each version:
     * the compaction write observes the snapshot's
     * `max(staging_loaded_at)` and stores it as `v=N/_WATERMARK` before
     * the pointer swap, so the next run reads one small file instead of
@@ -267,7 +285,6 @@ object Staging {
       clusterFiles: Option[Int],
       beforeCommit: () => Unit,
   ): Long = {
-    import org.apache.spark.sql.expressions.Window
     val rootPath = new org.apache.hadoop.fs.Path(stagingRoot)
     val rootFs   = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // Single-writer enforcement (the transactionality the reference
@@ -291,28 +308,8 @@ object Staging {
         .getOrElse(maxLoadedAt(current.get))
     }
     val fresh = freshAbove(landing, watermark, inclusive = true)
-    val keys = Seq("finding_uid", "scan_run_id")
     val freshT = enforceUidPattern(transform(fresh), storedUidPattern(spark, stagingRoot))
-      .withColumn(
-        "__rn",
-        row_number().over(
-          Window.partitionBy(keys.map(col): _*).orderBy(col("staging_loaded_at").desc)
-        ),
-      )
-      .filter(col("__rn") === 1)
-      .drop("__rn")
-    val merged = current match {
-      case Some(c) =>
-        // NULL-SAFE key equality (<=>): a finding staged without the
-        // scan_metadata enrichment carries scan_run_id = NULL, and a
-        // plain equi-anti-join would never match the old NULL-key row
-        // against the re-ingested one — the "replace, not duplicate"
-        // upsert contract would silently break for exactly that key
-        // class (the within-batch window above already groups NULLs).
-        val cond = keys.map(k => c(k) <=> freshT(k)).reduce(_ && _)
-        freshT.unionByName(c.join(freshT.select(keys.map(freshT(_)): _*), cond, "left_anti"))
-      case None => freshT
-    }
+    val merged = upsert(freshT, current)
     // Version numbers are never reused: `next` is one past BOTH the
     // committed version and any version directory already on disk
     // (abandoned pre-commit leftovers of a crashed/aborted run, or a
@@ -424,6 +421,24 @@ object Staging {
       rootFs.delete(new org.apache.hadoop.fs.Path(rootPath, s"_CLAIM_v$next"), false)
   }
 
+  /** [[mergeRun]]'s keyed pass: the fresh rows (tagged 1) and the
+    * snapshot (tagged 0) are unioned, and a window over
+    * `(finding_uid, scan_run_id)` keeps one row per key, ordered by tag,
+    * then staging_loaded_at, both descending. A window partition
+    * groups NULL keys together, which is the null-safe (`<=>`) key
+    * match the upsert needs for findings without a scan_run_id. */
+  private[ocsf] def upsert(fresh: DataFrame, current: Option[DataFrame]): DataFrame = {
+    val tagged = fresh.withColumn("__fresh", lit(1))
+    val latestFirst = Window
+      .partitionBy(col("finding_uid"), col("scan_run_id"))
+      .orderBy(col("__fresh").desc, col("staging_loaded_at").desc)
+    current
+      .fold(tagged)(c => tagged.unionByName(c.withColumn("__fresh", lit(0))))
+      .withColumn("__rn", row_number().over(latestFirst))
+      .filter(col("__rn") === 1)
+      .drop("__rn", "__fresh")
+  }
+
   /** Z-ORDER clustered snapshot write — the Spark analog of the
     * reference's TWO btree indexes on the landing table
     * (`add_new_indexes.sql` → `raw_ocsf_findings.sql:12-15`:
@@ -480,14 +495,7 @@ object Staging {
       fs: org.apache.hadoop.fs.FileSystem,
       p: org.apache.hadoop.fs.Path,
   ): Boolean = {
-    val local: Option[java.io.File] = fs match {
-      case lf: org.apache.hadoop.fs.LocalFileSystem =>
-        Some(lf.pathToFile(p))
-      case _: org.apache.hadoop.fs.RawLocalFileSystem =>
-        Some(new java.io.File(p.toUri.getPath))
-      case _ => None
-    }
-    local match {
+    localFile(fs, p) match {
       case Some(f) =>
         try { java.nio.file.Files.createFile(f.toPath); true }
         catch {
@@ -569,22 +577,51 @@ object Staging {
     * replacement, so readers never observe the file absent mid-swap.
     * (The pre-FileContext form deleted then renamed, leaving a gap the
     * pointer's highest-complete-version fallback had to cover; the
-    * fallback now only matters for genuine pointer loss.) */
+    * fallback now only matters for genuine pointer loss.)
+    *
+    * Local paths take the platform's atomic replace
+    * (`Files.move` with `ATOMIC_MOVE`), the routing [[exclusiveCreate]]
+    * uses: Hadoop's local shim forks `chmod` and `readlink` processes
+    * for the create and the `FileContext` rename (tens of ms per side
+    * file). No checksum file is written; a stale one left by an earlier
+    * Hadoop write of the name is removed before the swap, since the
+    * checksummed reader verifies against it. */
   private def writeSideFile(
       fs: org.apache.hadoop.fs.FileSystem,
       root: org.apache.hadoop.fs.Path,
       name: String,
       value: String,
   ): Unit = {
-    if (!fs.exists(root)) fs.mkdirs(root)
-    val tmp = new org.apache.hadoop.fs.Path(root, s"$name.tmp")
-    val ptr = new org.apache.hadoop.fs.Path(root, name)
-    val out = fs.create(tmp, true)
-    try out.write(value.getBytes("UTF-8"))
-    finally out.close()
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(root.toUri, fs.getConf)
-    fc.rename(tmp, ptr, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    localFile(fs, root).map(_.toPath) match {
+      case Some(dir) =>
+        import java.nio.file.{Files, StandardCopyOption}
+        val tmp = dir.resolve(s"$name.tmp")
+        Files.createDirectories(dir)
+        Files.write(tmp, value.getBytes("UTF-8"))
+        Files.deleteIfExists(dir.resolve(s".$name.crc"))
+        Files.move(tmp, dir.resolve(name), StandardCopyOption.ATOMIC_MOVE,
+          StandardCopyOption.REPLACE_EXISTING)
+      case None =>
+        val tmp = new org.apache.hadoop.fs.Path(root, s"$name.tmp")
+        val ptr = new org.apache.hadoop.fs.Path(root, name)
+        if (!fs.exists(root)) fs.mkdirs(root)
+        val out = fs.create(tmp, true)
+        try out.write(value.getBytes("UTF-8"))
+        finally out.close()
+        val fc = org.apache.hadoop.fs.FileContext.getFileContext(root.toUri, fs.getConf)
+        fc.rename(tmp, ptr, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    }
     ()
+  }
+
+  /** The local file behind `p` when `fs` is Hadoop's local filesystem. */
+  private def localFile(
+      fs: org.apache.hadoop.fs.FileSystem,
+      p: org.apache.hadoop.fs.Path,
+  ): Option[java.io.File] = fs match {
+    case lf: org.apache.hadoop.fs.LocalFileSystem    => Some(lf.pathToFile(p))
+    case _: org.apache.hadoop.fs.RawLocalFileSystem => Some(new java.io.File(p.toUri.getPath))
+    case _                                           => None
   }
 
   /** A version's watermark of record, in microseconds since the epoch:

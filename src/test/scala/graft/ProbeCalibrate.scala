@@ -8,7 +8,7 @@ import org.apache.spark.sql.SparkSession
   * `pinnedIdleMemSeconds32` can be re-measured after a hardware or
   * Spark-version change instead of trusted blindly. Run on an IDLE box:
   *
-  * {{{ SPARK_GRAFT_CPUS=32 sbt "runMain graft.ProbeCalibrate" }}}
+  * {{{ SPARK_GRAFT_CPUS=32 sbt "Test/runMain graft.ProbeCalibrate" }}}
   */
 object ProbeCalibrate {
   def main(args: Array[String]): Unit = {

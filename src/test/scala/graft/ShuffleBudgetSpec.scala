@@ -65,7 +65,7 @@ class ShuffleBudgetSpec extends AnyFunSuite {
     "ddp_snm_pairs"               -> 16995L,
     "sim_ann_ivf_refresh"         -> 451752L,
     "sim_ann_ivf_refresh_drift"   -> 314971L,
-    // r13 additions: the new heavy gates (ShuffleProbe, sf0.001) —
+    // r13 additions: the new heavy gates (ShuffleAudit, sf0.001) —
     // the kNN ladder pair, the candidate×token weighted verify, the
     // trigram type table, and the tiered-rank stats trio; bootstrap's
     // tiny bill pins that the 30M-draw amplification stays MAP-ONLY

@@ -373,4 +373,32 @@ class FunctionsSpec extends AnyFunSuite {
     assert(path(Seq.empty, Seq.empty, 1) === Some(Seq.empty))
     assert(path(Seq(1L), Seq.empty, 1) === None)
   }
+
+  test("BoundValue: same value as the literal, interpreted and generated; a new value reuses the class") {
+    BoundValue.registerOn(spark)
+    def run(v: Long, nullable: Boolean) = spark.range(0, 50, 1, 2)
+      .select((col("id") + BoundValue.bound_value(lit(v) * 2)).as("s"),
+        BoundValue.bound_value(lit(if (nullable) null else "x")).as("n"))
+      .filter(col("s") >= BoundValue.bound_value(lit(v)))
+      .collect().map(r => (r.getLong(0), Option(r.getString(1)))).toSeq
+    def expected(v: Long, nullable: Boolean) =
+      (0L until 50L).map(_ + 2 * v).filter(_ >= v).map((_, if (nullable) None else Some("x")))
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    assert(run(7, nullable = false) === expected(7, nullable = false))
+    val before = compiles.getCount
+    assert(run(40, nullable = false) === expected(40, nullable = false))
+    assert(compiles.getCount === before, "a new bound value compiled a new class")
+    assert(run(3, nullable = true) === expected(3, nullable = true))
+    val modes = Seq("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode")
+    val saved = modes.map(k => k -> spark.conf.getOption(k))
+    try {
+      spark.conf.set("spark.sql.codegen.wholeStage", "false")
+      spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+      assert(run(5, nullable = true) === expected(5, nullable = true))
+    } finally saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+    val err = intercept[org.apache.spark.sql.AnalysisException] {
+      spark.range(1).select(BoundValue.bound_value(col("id"))).collect()
+    }
+    assert(err.getMessage.contains("bound_value takes no column reference"))
+  }
 }

@@ -7,13 +7,22 @@ Usage: python3 tools/check.py [sfDir] [outDir] [--skip-verify] [names...]
 2. For each query: load Spark parquet result + run the oracle SQL in
    DuckDB over the same tables; sort columns by name, sort rows, compare
    values (timestamps as epoch-ms, exact floats).
+
+Each query is compared in a process of its own, with its own DuckDB
+connection, under a watchdog: a comparison that runs longer than
+--timeout=S seconds (default 600) or whose resident memory passes
+--rss-gb=G (default 7) is killed and counts as a FAIL with the reason,
+so one oracle can neither stall the run nor hide the others.
 """
 import json
 import math
+import multiprocessing
+import os
 import shutil
 import subprocess
 import sys
 import tempfile
+import time
 from datetime import datetime, date
 from decimal import Decimal
 from pathlib import Path
@@ -46,6 +55,13 @@ def canon(cols, rows):
     return [cols[i] for i in order], out
 
 
+def flag(name, default):
+    for a in sys.argv[1:]:
+        if a.startswith(f"--{name}="):
+            return float(a.split("=", 1)[1])
+    return default
+
+
 def main():
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
     skip_verify = "--skip-verify" in sys.argv
@@ -62,23 +78,17 @@ def main():
         if r.returncode != 0:
             print("VERIFY FAILED rc", r.returncode)
             return 1
+    return compare(sf_dir, out_dir, only, flag("timeout", 600.0), flag("rss-gb", 7.0))
 
+
+def connect(sf_dir, spill_dir):
     # A fixed memory cap with a spill directory: DuckDB's default cap
     # (80% of the host's RAM) let a recursive-CTE oracle take the whole
     # machine; under the cap, large intermediates spill to disk. 4 GB
     # is too little for ddp_corpus_prepare_emb's oracle (two recursive
     # closures). evt_burst_detect's recursive CTE still grows past the
-    # cap: the cap does not bound that oracle.
-    spill_dir = tempfile.mkdtemp(prefix="check_duckdb_spill_")
+    # cap: the cap does not bound that oracle, the watchdog does.
     con = duckdb.connect(config={"memory_limit": "6GB", "temp_directory": spill_dir})
-    try:
-        return compare(con, sf_dir, out_dir, only)
-    finally:
-        con.close()
-        shutil.rmtree(spill_dir, ignore_errors=True)
-
-
-def compare(con, sf_dir, out_dir, only):
     for t in TABLES:
         sel = "*"
         if t == "events":
@@ -91,25 +101,21 @@ def compare(con, sf_dir, out_dir, only):
             if ts_type == "BIGINT":
                 sel = "* REPLACE (make_timestamp(ts // 1000) AS ts)"
         con.execute(f"CREATE VIEW {t} AS SELECT {sel} FROM read_parquet('{sf_dir}/{t}.parquet')")
+    return con
 
-    oracle = json.loads(Path(out_dir, "oracle_sql.json").read_text())
-    n_pass = n_fail = n_skip = 0
-    dump_dirs = sorted(p.name for p in Path(out_dir).iterdir() if p.is_dir())
-    for name in dump_dirs:
-        if only and name not in only:
-            continue
+
+def compare_one(sf_dir, out_dir, name, sql, spill_dir):
+    """One gate's verdict: ("PASS"|"FAIL"|"SKIP", line)."""
+    con = connect(sf_dir, spill_dir)
+    try:
         try:
             rel = con.execute(f"SELECT * FROM read_parquet('{out_dir}/{name}/*.parquet')")
             got_cols = [dd[0] for dd in rel.description]
             got = rel.fetchall()
         except Exception as e:
-            print(f"FAIL {name}: cannot read spark result: {e}")
-            n_fail += 1
-            continue
-        if name not in oracle:
-            print(f"SKIP {name}: no oracle ({len(got)} rows)")
-            n_skip += 1
-            continue
+            return "FAIL", f"FAIL {name}: cannot read spark result: {e}"
+        if sql is None:
+            return "SKIP", f"SKIP {name}: no oracle ({len(got)} rows)"
         try:
             # Single execution via arrow: rows AND schema from one
             # materialization. Driver's hash is type-sensitive: a
@@ -118,47 +124,109 @@ def compare(con, sf_dir, out_dir, only):
             # arrow-level compare and hash-mismatches Spark's int64
             # even when values agree; fetchall() would hide that
             # (HUGEINT -> plain int), so the guard reads arrow types.
-            tbl = con.execute(oracle[name]).fetch_arrow_table()
+            tbl = con.execute(sql).fetch_arrow_table()
             arrow_schema = tbl.schema
             exp_cols = tbl.column_names
             exp = [tuple(d[c] for c in exp_cols) for d in tbl.to_pylist()]
         except Exception as e:
-            print(f"FAIL {name}: oracle error: {e}")
-            n_fail += 1
-            continue
+            return "FAIL", f"FAIL {name}: oracle error: {e}"
         dec_cols = [f.name for f in arrow_schema
                     if str(f.type).startswith("decimal")]
         if dec_cols:
-            print(f"FAIL {name}: oracle returns decimal-typed column(s) {dec_cols} — add CAST(... AS BIGINT/DOUBLE) in oracle SQL")
-            n_fail += 1
-            continue
+            return "FAIL", (f"FAIL {name}: oracle returns decimal-typed column(s) {dec_cols} — "
+                            "add CAST(... AS BIGINT/DOUBLE) in oracle SQL")
         gc, g = canon(got_cols, got)
         ec, e = canon(exp_cols, exp)
         if gc != ec:
-            print(f"FAIL {name}: columns differ spark={gc} duck={ec}")
-            n_fail += 1
-            continue
+            return "FAIL", f"FAIL {name}: columns differ spark={gc} duck={ec}"
         if len(g) != len(e):
-            print(f"FAIL {name}: rowcount spark={len(g)} duck={len(e)}")
-            n_fail += 1
-            continue
+            return "FAIL", f"FAIL {name}: rowcount spark={len(g)} duck={len(e)}"
         bad = [(a, b) for a, b in zip(g, e) if a != b]
         if bad:
-            print(f"FAIL {name}: {len(bad)}/{len(g)} rows differ; first: spark={bad[0][0]} duck={bad[0][1]}")
-            n_fail += 1
-        else:
-            if len(g) == 0:
-                print(f"WARN {name}: PASS but 0 rows (weak test)")
-            else:
-                print(f"PASS {name} ({len(g)} rows)")
-            n_pass += 1
+            return "FAIL", f"FAIL {name}: {len(bad)}/{len(g)} rows differ; first: spark={bad[0][0]} duck={bad[0][1]}"
+        if len(g) == 0:
+            return "PASS", f"WARN {name}: PASS but 0 rows (weak test)"
+        return "PASS", f"PASS {name} ({len(g)} rows)"
+    finally:
+        con.close()
+
+
+def child(conn, sf_dir, out_dir, name, sql, spill_dir):
+    try:
+        conn.send(compare_one(sf_dir, out_dir, name, sql, spill_dir))
+    except Exception as e:
+        conn.send(("FAIL", f"FAIL {name}: comparison error: {e}"))
+    finally:
+        conn.close()
+
+
+def rss_bytes(pid):
+    try:
+        with open(f"/proc/{pid}/status") as f:
+            for line in f:
+                if line.startswith("VmRSS:"):
+                    return int(line.split()[1]) * 1024
+    except OSError:
+        pass
+    return 0
+
+
+def watched(sf_dir, out_dir, name, sql, timeout_s, rss_cap):
+    """compare_one in a child process, killed past the wall-time or RSS cap.
+    The spill directory belongs to this process, so a killed child's
+    spill files are removed too."""
+    spill_dir = tempfile.mkdtemp(prefix="check_duckdb_spill_")
+    ctx = multiprocessing.get_context("fork")
+    recv, send = ctx.Pipe(duplex=False)
+    p = ctx.Process(target=child, args=(send, sf_dir, out_dir, name, sql, spill_dir))
+    p.start()
+    send.close()
+    deadline = time.monotonic() + timeout_s
+    reason = None
+    while not recv.poll(0.2):
+        if not p.is_alive():
+            break
+        if time.monotonic() > deadline:
+            reason = f"did not finish within {timeout_s:.0f} s"
+        elif rss_bytes(p.pid) > rss_cap:
+            reason = f"resident memory passed {rss_cap / 2**30:.1f} GB"
+        if reason:
+            p.kill()
+            break
+    verdict = None
+    if reason is None:
+        try:
+            verdict = recv.recv()
+        except EOFError:
+            pass
+    p.join()
+    recv.close()
+    shutil.rmtree(spill_dir, ignore_errors=True)
+    if reason:
+        return "FAIL", f"FAIL {name}: watchdog killed the comparison: {reason}"
+    if verdict is None:
+        return "FAIL", f"FAIL {name}: comparison process died (exit code {p.exitcode})"
+    return verdict
+
+
+def compare(sf_dir, out_dir, only, timeout_s, rss_gb):
+    oracle = json.loads(Path(out_dir, "oracle_sql.json").read_text())
+    counts = {"PASS": 0, "FAIL": 0, "SKIP": 0}
+    dump_dirs = sorted(p.name for p in Path(out_dir).iterdir() if p.is_dir())
+    for name in dump_dirs:
+        if only and name not in only:
+            continue
+        verdict, line = watched(sf_dir, out_dir, name, oracle.get(name), timeout_s,
+                                rss_gb * 2**30)
+        print(line, flush=True)
+        counts[verdict] += 1
+    n_pass, n_fail, n_skip = counts["PASS"], counts["FAIL"], counts["SKIP"]
     print(f"== {n_pass} pass, {n_fail} fail, {n_skip} no-oracle ==")
     # Loud-fail on a silently-empty/thin record (the round-15 incident:
     # CORRECTNESS_r15.json recorded "{}" while the suite actually passed).
     # Without an explicit name filter, every oracle-bearing gate must have
     # been compared — anything less means the dump or the compare loop
     # silently dropped work, which must be a hard failure, not a quiet 0.
-    import os
     if not only and not os.environ.get("SPARK_GRAFT_ONLY"):
         if len(oracle) == 0:
             print("HARD FAIL: oracle_sql.json is empty — no gates compared")
