@@ -248,10 +248,15 @@ object Staging {
     * Scale notes: the default layout runs two Spark jobs at every size
     * (under AQE, the window's shuffle map stage and the compaction
     * write); the fresh rows are computed once. The snapshot is
-    * shuffled once by key on every merge: a broadcast anti-join of
-    * the fresh keys would leave it unshuffled only while the fresh
-    * side fits under the broadcast threshold, and past it Spark plans
-    * a sort-merge join, which shuffles the snapshot too. Either way the
+    * shuffled once by key on every merge, and the write's parallelism
+    * follows the shuffle, not the previous version's files. A
+    * null-safe anti-join of the snapshot against the fresh keys would
+    * leave it unshuffled only while Spark broadcast the keys, and that
+    * choice follows the landing table's size, not the batch's: with a
+    * 1M-row landing table it planned a sort-merge join, shuffling the
+    * snapshot, for a 250-row arrival. `MergeScaleProbe` (test scope)
+    * times the merge against the snapshot's size; PERF.md "Arrival
+    * fixed costs" has the figures for both plans. Either way the
     * whole snapshot is rewritten into the new version; at 100 TB that
     * is a full-table rewrite per merge, which a version layout that
     * references unchanged files (manifests) would avoid. The fresh
@@ -376,7 +381,9 @@ object Staging {
     // reference's btree indexes (`add_new_indexes.sql:19-26` at
     // `raw_ocsf_findings.sql:12-15`). Default: within-partition sort
     // on finding_uid, so parquet row-group min/max stats skip on uid
-    // point lookups with no extra shuffle and a stable file count.
+    // point lookups. The sort adds no exchange: it orders the keyed
+    // window's shuffle partitions, so the file count follows those
+    // partitions as AQE coalesces them, not the input's files.
     // `clusterFiles = Some(n)`: [[clusteredWrite]]'s Z-ORDER layout
     // over (uid rank, load day) — n files, each bounded in BOTH
     // dimensions, matching the reference's TWO-index posture (uid

@@ -10,9 +10,9 @@ Usage: python3 tools/check.py [sfDir] [outDir] [--skip-verify] [names...]
 
 Each query is compared in a process of its own, with its own DuckDB
 connection, under a watchdog: a comparison that runs longer than
---timeout=S seconds (default 600) or whose resident memory passes
---rss-gb=G (default 7) is killed and counts as a FAIL with the reason,
-so one oracle can neither stall the run nor hide the others.
+TIMEOUT_S or whose resident memory passes RSS_CAP is killed and counts
+as a FAIL with the reason, so one oracle can neither stall the run nor
+hide the others.
 """
 import json
 import math
@@ -30,6 +30,11 @@ from pathlib import Path
 import duckdb
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
+
+# Watchdog limits per comparison, above DuckDB's own 6 GB memory_limit
+# (see connect): wall time in seconds and resident memory in bytes.
+TIMEOUT_S = 600
+RSS_CAP = 7 * 2**30
 
 
 def norm(v):
@@ -55,13 +60,6 @@ def canon(cols, rows):
     return [cols[i] for i in order], out
 
 
-def flag(name, default):
-    for a in sys.argv[1:]:
-        if a.startswith(f"--{name}="):
-            return float(a.split("=", 1)[1])
-    return default
-
-
 def main():
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
     skip_verify = "--skip-verify" in sys.argv
@@ -78,7 +76,7 @@ def main():
         if r.returncode != 0:
             print("VERIFY FAILED rc", r.returncode)
             return 1
-    return compare(sf_dir, out_dir, only, flag("timeout", 600.0), flag("rss-gb", 7.0))
+    return compare(sf_dir, out_dir, only)
 
 
 def connect(sf_dir, spill_dir):
@@ -171,7 +169,7 @@ def rss_bytes(pid):
     return 0
 
 
-def watched(sf_dir, out_dir, name, sql, timeout_s, rss_cap):
+def watched(sf_dir, out_dir, name, sql):
     """compare_one in a child process, killed past the wall-time or RSS cap.
     The spill directory belongs to this process, so a killed child's
     spill files are removed too."""
@@ -181,15 +179,15 @@ def watched(sf_dir, out_dir, name, sql, timeout_s, rss_cap):
     p = ctx.Process(target=child, args=(send, sf_dir, out_dir, name, sql, spill_dir))
     p.start()
     send.close()
-    deadline = time.monotonic() + timeout_s
+    deadline = time.monotonic() + TIMEOUT_S
     reason = None
     while not recv.poll(0.2):
         if not p.is_alive():
             break
         if time.monotonic() > deadline:
-            reason = f"did not finish within {timeout_s:.0f} s"
-        elif rss_bytes(p.pid) > rss_cap:
-            reason = f"resident memory passed {rss_cap / 2**30:.1f} GB"
+            reason = f"did not finish within {TIMEOUT_S} s"
+        elif rss_bytes(p.pid) > RSS_CAP:
+            reason = f"resident memory passed {RSS_CAP / 2**30:.0f} GB"
         if reason:
             p.kill()
             break
@@ -209,15 +207,14 @@ def watched(sf_dir, out_dir, name, sql, timeout_s, rss_cap):
     return verdict
 
 
-def compare(sf_dir, out_dir, only, timeout_s, rss_gb):
+def compare(sf_dir, out_dir, only):
     oracle = json.loads(Path(out_dir, "oracle_sql.json").read_text())
     counts = {"PASS": 0, "FAIL": 0, "SKIP": 0}
     dump_dirs = sorted(p.name for p in Path(out_dir).iterdir() if p.is_dir())
     for name in dump_dirs:
         if only and name not in only:
             continue
-        verdict, line = watched(sf_dir, out_dir, name, oracle.get(name), timeout_s,
-                                rss_gb * 2**30)
+        verdict, line = watched(sf_dir, out_dir, name, oracle.get(name))
         print(line, flush=True)
         counts[verdict] += 1
     n_pass, n_fail, n_skip = counts["PASS"], counts["FAIL"], counts["SKIP"]
