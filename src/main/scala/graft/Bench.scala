@@ -87,29 +87,13 @@ object Bench {
             .mkString("{", ",", "}")},"value":${f3(sharedBuildS)}}"""
       )
     val selected = SparkEntry.queries.filter { case (n, _) => only.forall(_.contains(n)) }
-    // SHUFFLE ACCOUNTING — measure, don't guess: a QueryExecutionListener
-    // captures each action's executed plan; summing the plans'
-    // `shuffleBytesWritten` SQLMetrics gives the bytes that actually
-    // crossed an exchange per query (the quantity that becomes the
-    // network bill at 100 TB), with zero change to the timed action.
-    // Listener delivery is async; a bounded post-action poll drains it.
-    val capturedQes =
-      java.util.Collections.synchronizedList(
-        new java.util.ArrayList[org.apache.spark.sql.execution.QueryExecution]())
-    spark.listenerManager.register(new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(
-          funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          durationNs: Long,
-      ): Unit = { capturedQes.add(qe); () }
-      override def onFailure(
-          funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          exception: Exception,
-      ): Unit = ()
-    })
-    // Plan walking + quiescence drain live in ShuffleAudit — ONE
-    // definition shared with the ShuffleBudgetSpec regression gate.
+    // SHUFFLE ACCOUNTING — measure, don't guess: the first run of each
+    // query goes through ShuffleAudit.measure (one definition shared
+    // with the ShuffleBudgetSpec regression gate), which sums the
+    // executed plans' `shuffleBytesWritten` SQLMetrics — the bytes
+    // that actually crossed an exchange per query, the quantity that
+    // becomes the network bill at 100 TB — with zero change to the
+    // timed action.
     // A throwing query must not hide inside a normal-looking wall time:
     // every-repeat failures go to `failed`, intermittent ones to
     // `flaky` (still timed from the surviving runs); either fails the run.
@@ -121,25 +105,21 @@ object Bench {
     val ambientSeries   = scala.collection.mutable.ListBuffer.empty[(Int, Double, Double)]
     var queriesDone     = 0
     val results = selected.flatMap { case (name, fn) =>
-      val times = (1 to repeat).flatMap { i =>
-        capturedQes.clear()
+      def timed(): Double = {
         val t0 = System.nanoTime()
+        fn(spark, sfDir).count()
+        (System.nanoTime() - t0) / 1e9
+      }
+      val times = (1 to repeat).flatMap { i =>
         try {
-          fn(spark, sfDir).count()
-          val dt = (System.nanoTime() - t0) / 1e9
-          if (i == 1) {
-            // First run only: drain the async listener to QUIESCENCE,
-            // not just non-emptiness — queries whose builder ran inner
-            // driver actions (training collects, streaming replays)
-            // already populated the list before the timed count's own
-            // event arrives, and stopping early would drop the final
-            // (usually dominant) QueryExecution from the sum. The copy
-            // happens under the list's monitor (a straggling append
-            // during an unlocked iteration would CME outside the
-            // per-plan try/catch and fail the query spuriously).
-            shuffleBytes(name) = ShuffleAudit.drainAndSum(capturedQes)
+          if (i > 1) Some(timed())
+          else {
+            // The wall time is taken inside the measured block; the
+            // listener's drain to quiescence runs after it, untimed.
+            var dt = 0.0
+            shuffleBytes(name) = ShuffleAudit.measure(spark) { dt = timed() }
+            Some(dt)
           }
-          Some(dt)
         } catch {
           case e: Throwable =>
             System.err.println(s"BENCH FAIL $name: ${e.getClass.getName}: ${e.getMessage}")
@@ -246,55 +226,23 @@ object Bench {
       val path = sys.env.getOrElse("SPARK_GRAFT_ANCHORS", "tools/bench_anchors.json")
       scala.util
         .Try {
-          val txt = new String(
-            java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)),
-            java.nio.charset.StandardCharsets.UTF_8)
+          import org.json4s._
+          val json = org.json4s.jackson.JsonMethods.parse(
+            new String(
+              java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)),
+              java.nio.charset.StandardCharsets.UTF_8))
           // compare the sf BASENAME (trailing-slash-proof — a record
           // run with SPARK_GRAFT_SF_DIR=/.../sf0.1/ must still
-          // self-annotate) and parse pairs only INSIDE the "anchors"
-          // object — sliced at its MATCHING closing brace (anchor
-          // values are flat numerics, so the first unbalanced '}'
-          // closes the object), not to EOF, so a future top-level
-          // `"key": 1.23` after the object can't be mis-read as a
-          // query anchor; the sf key is likewise checked OUTSIDE the
-          // slice so an anchor named "sf" could never satisfy it.
-          val body = txt.indexOf("\"anchors\"") match {
-            case -1 => ""
-            case i =>
-              val open = txt.indexOf('{', i)
-              if (open == -1) ""
-              else {
-                var depth = 0; var j = open; var end = -1
-                while (end == -1 && j < txt.length) {
-                  txt.charAt(j) match {
-                    case '{' => depth += 1
-                    case '}' => depth -= 1; if (depth == 0) end = j
-                    case _   =>
-                  }
-                  j += 1
-                }
-                if (end == -1) "" else txt.substring(open, end + 1)
-              }
-          }
-          // "outside" = everything around the anchors OBJECT (prefix
-          // AND suffix), so a re-serialization that reorders top-level
-          // keys can't silently disable the annotation
-          val outside =
-            if (body.isEmpty) txt
-            else {
-              val at = txt.indexOf(body)
-              txt.substring(0, at) + txt.substring(at + body.length)
-            }
+          // self-annotate); only numeric anchors are read
           val sfBase = sfDir.replaceAll("/+$", "").split('/').last
-          val sfOk = """"sf"\s*:\s*"([^"]+)"""".r
-            .findFirstMatchIn(outside)
-            .exists(_.group(1) == sfBase)
-          if (!sfOk) Map.empty[String, Double]
-          else
-            """"([A-Za-z0-9_]+)"\s*:\s*([0-9]+\.[0-9]+)""".r
-              .findAllMatchIn(body)
-              .map(m => m.group(1) -> m.group(2).toDouble)
-              .toMap
+          (json \ "sf", json \ "anchors") match {
+            case (JString(sf), JObject(fields)) if sf == sfBase =>
+              fields.collect {
+                case (k, JDouble(v)) => k -> v
+                case (k, JInt(v))    => k -> v.toDouble
+              }.toMap
+            case _ => Map.empty[String, Double]
+          }
         }
         .getOrElse(Map.empty)
     }

@@ -42,7 +42,7 @@ object ShuffleAudit {
   /** Drain `captured` to quiescence (size stable across two polls, at
     * least one element) within `deadlineMs`, then sum its plans'
     * shuffle bytes under the list's monitor. */
-  def drainAndSum(
+  private def drainAndSum(
       captured: java.util.List[QueryExecution],
       deadlineMs: Long = 1000L,
   ): Long = {

@@ -52,21 +52,10 @@ object Verify {
     }
     val expected = SparkEntry.queries.count { case (n, _) => only.forall(_.contains(n)) }
     println(s"[verify] dumped $dumped/$expected queries to $outDir")
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    implicit val formats: org.json4s.Formats = org.json4s.DefaultFormats
+    Files.writeString(
+      Paths.get(s"$outDir/oracle_sql.json"),
+      org.json4s.jackson.Serialization.write(SparkEntry.oracleSql))
     spark.stop()
     // A silently-thin dump would make the downstream differential
     // record an empty "{}" while git history claims green (the

@@ -69,33 +69,19 @@ object Landing {
 
   /** Retention cleanup the reference documents as required but leaves
     * unimplemented (`raw_ocsf_findings.sql:33-34` "Data retention
-    * policies should be implemented based on loaded_at timestamps"):
-    * drop whole `loaded_date=` partitions strictly older than
-    * `cutoff`, always retaining the newest partition. Partition-level
-    * deletion is the 100 TB form — a metadata/directory operation per
-    * day, never a row scan — and is safe against the staging
-    * watermark, which only ever reads forward. Returns the dropped
-    * partition dates, oldest first. */
-  def retentionVacuum(
-      spark: SparkSession,
-      path: String,
-      cutoff: java.time.LocalDate,
-  ): Seq[String] =
-    // keepDays=1: never drop the newest partition even when it predates
-    // the cutoff — an empty landing directory cannot be read back (no
-    // schema), which would wedge the next staging run until new data
-    // arrives.
-    retentionVacuumPolicy(spark, path, keepDays = 1, cutoff)
-
-  /** Composed retention in one listing pass, the landing twin of
+    * policies should be implemented based on loaded_at timestamps"),
+    * composed in one listing pass, the landing twin of
     * [[Staging.vacuumVersionsPolicy]]: always retain the newest
-    * `keepDays` date partitions; among the rest, drop only those
-    * strictly older than `cutoff`. The count bound guarantees a
-    * replay/debug window regardless of ingest cadence; the date bound
-    * enforces the retention policy. `keepDays` is clamped to ≥ 1: the
-    * newest partition is never dropped, whatever the arguments — an
-    * empty landing dir is unreadable (no schema) and would wedge the
-    * next staging run. Returns dropped dates, oldest first. */
+    * `keepDays` date partitions; among the rest, drop whole
+    * `loaded_date=` partitions strictly older than `cutoff`. The count
+    * bound guarantees a replay/debug window regardless of ingest
+    * cadence; the date bound enforces the retention policy. `keepDays`
+    * is clamped to ≥ 1: the newest partition is never dropped, whatever
+    * the arguments — an empty landing dir is unreadable (no schema) and
+    * would wedge the next staging run. Partition-level deletion is the
+    * 100 TB form — a directory operation per day, never a row scan —
+    * and is safe against the staging watermark, which only ever reads
+    * forward. Returns dropped dates, oldest first. */
   def retentionVacuumPolicy(
       spark: SparkSession,
       path: String,

@@ -210,7 +210,6 @@ object OcsfModel {
   val CategoryName     = "Findings"
   val ActivityId       = 2
   val ActivityName     = "Update"
-  val TypeUid: Int     = ClassUid * 100 + ActivityId // 200702
   val OcsfVersion      = "1.5.0"
   val Unknown          = "UNKNOWN"
   val FileTypeRegular  = 1

@@ -220,7 +220,7 @@ object Staging {
     val obs = Observation()
     val out = enforceUidPattern(transform(fresh), storedUidPattern(spark, stagingPath))
       .observe(obs, count(lit(1)).as("rows"))
-    // uid-clustered files for row-group skipping (see mergeRun's note)
+    // uid-sorted files for row-group skipping (see mergeRun's note)
     out.sortWithinPartitions("finding_uid").write.mode("append").parquet(stagingPath)
     obs.get("rows").asInstanceOf[Long]
   }
@@ -239,13 +239,13 @@ object Staging {
     * consistent snapshot, never a half-written mix. Single writer
     * assumed (the reference's ingestion is a single monitor loop);
     * superseded versions are retained for time travel until
-    * [[vacuumVersions]].
+    * [[vacuumVersionsPolicy]].
     *
     * The merge is one keyed pass, [[upsert]]: a fresh row replaces the
     * snapshot's row of its key, and among fresh duplicates the latest
     * load wins (ties are payload-identical re-reads of one file).
     *
-    * Scale notes: the default layout runs two Spark jobs at every size
+    * Scale notes: the merge runs two Spark jobs at every size
     * (under AQE, the window's shuffle map stage and the compaction
     * write); the fresh rows are computed once. The snapshot is
     * shuffled once by key on every merge, and the write's parallelism
@@ -276,8 +276,7 @@ object Staging {
       spark: SparkSession,
       landingPath: String,
       stagingRoot: String,
-      clusterFiles: Option[Int] = None,
-  ): Long = mergeRun(spark, landingPath, stagingRoot, clusterFiles, () => ())
+  ): Long = mergeRun(spark, landingPath, stagingRoot, () => ())
 
   /** [[mergeRun]] with a test seam: `beforeCommit` runs after the new
     * version directory is fully written, immediately before the commit
@@ -287,7 +286,6 @@ object Staging {
       spark: SparkSession,
       landingPath: String,
       stagingRoot: String,
-      clusterFiles: Option[Int],
       beforeCommit: () => Unit,
   ): Long = {
     val rootPath = new org.apache.hadoop.fs.Path(stagingRoot)
@@ -325,18 +323,7 @@ object Staging {
     // another run's directory and a failed commit can always be
     // retried. The commit CAS below then decides which claimed version
     // becomes current.
-    val existingMax =
-      if (rootFs.exists(rootPath))
-        rootFs
-          .listStatus(rootPath)
-          .collect {
-            // strict `v=<digits>` match: stray operator-created entries
-            // (v=backup, v=3.old) must not crash version allocation
-            case s if s.isDirectory && s.getPath.getName.matches("v=\\d+") =>
-              s.getPath.getName.stripPrefix("v=").toLong
-          }
-          .maxOption
-      else None
+    val existingMax = versionDirs(rootFs, rootPath).lastOption.map(_._1)
     var next = (basePtr.map(_.toLong).getOrElse(-1L) max existingMax.getOrElse(-1L)) + 1
     if (!rootFs.exists(rootPath)) rootFs.mkdirs(rootPath)
     var claimed   = false
@@ -377,49 +364,29 @@ object Staging {
         }
     }
     val versionDir = s"$stagingRoot/v=$next"
-    // Cluster at compaction time — the Spark analog of the
-    // reference's btree indexes (`add_new_indexes.sql:19-26` at
-    // `raw_ocsf_findings.sql:12-15`). Default: within-partition sort
-    // on finding_uid, so parquet row-group min/max stats skip on uid
-    // point lookups. The sort adds no exchange: it orders the keyed
-    // window's shuffle partitions, so the file count follows those
-    // partitions as AQE coalesces them, not the input's files.
-    // `clusterFiles = Some(n)`: [[clusteredWrite]]'s Z-ORDER layout
-    // over (uid rank, load day) — n files, each bounded in BOTH
-    // dimensions, matching the reference's TWO-index posture (uid
-    // point lookups AND loaded-date range scans prune files). Size n
-    // to the snapshot (target ~128 MB–1 GB per file at scale).
+    // uid-sorted files — the Spark analog of the reference's btree
+    // index on finding_uid (`add_new_indexes.sql:19-26` at
+    // `raw_ocsf_findings.sql:12-15`): parquet row-group min/max stats
+    // skip on uid point lookups. The sort adds no exchange: it orders
+    // the keyed window's shuffle partitions, so the file count follows
+    // those partitions as AQE coalesces them, not the input's files.
+    // The snapshot's row count and watermark are observed on the write
+    // itself; the new version is never rescanned for them.
     try {
-      val (written, versionWatermark) = clusterFiles match {
-        case Some(n) =>
-          // No Observation here: repartitionByRange's boundary-sampling
-          // job executes the plan (and would bump a CollectMetrics
-          // accumulator) a second time — observed counts double. Count
-          // from the written files instead, with the watermark in the
-          // same aggregate (the count comes from footer metadata, the
-          // max reads the one timestamp column).
-          clusteredWrite(merged, versionDir, n)
-          val r = readStaging(spark, versionDir).agg(count(lit(1)), maxLoadedAtMicros).head()
-          (r.getLong(0), if (r.isNullAt(1)) None else Some(r.getLong(1)))
-        case None =>
-          // Snapshot row count and watermark observed on the compaction
-          // write itself — the new version is never rescanned for them.
-          val obs = Observation()
-          merged
-            .observe(obs, count(lit(1)).as("rows"), maxLoadedAtMicros.as("watermark"))
-            .sortWithinPartitions("finding_uid")
-            .write
-            .mode("overwrite")
-            .parquet(versionDir)
-          val m = obs.get
-          (m("rows").asInstanceOf[Long], Option(m("watermark")).map(_.asInstanceOf[Long]))
-      }
+      val obs = Observation()
+      merged
+        .observe(obs, count(lit(1)).as("rows"), maxLoadedAtMicros.as("watermark"))
+        .sortWithinPartitions("finding_uid")
+        .write
+        .mode("overwrite")
+        .parquet(versionDir)
+      val m = obs.get
       // committed with the version: written before the pointer swap
       writeSideFile(rootFs, new org.apache.hadoop.fs.Path(versionDir), "_WATERMARK",
-        versionWatermark.fold("")(_.toString))
+        Option(m("watermark")).fold("")(_.toString))
       beforeCommit()
       commitPointer(rootFs, rootPath, next, basePtr)
-      written
+      m("rows").asInstanceOf[Long]
     } finally
       // The claim file's job ends once the outcome is on disk: either
       // the version directory now exists (and guards the number through
@@ -444,43 +411,6 @@ object Staging {
       .withColumn("__rn", row_number().over(latestFirst))
       .filter(col("__rn") === 1)
       .drop("__rn", "__fresh")
-  }
-
-  /** Z-ORDER clustered snapshot write — the Spark analog of the
-    * reference's TWO btree indexes on the landing table
-    * (`add_new_indexes.sql` → `raw_ocsf_findings.sql:12-15`:
-    * finding_uid AND loaded_date): each output file covers a compact
-    * segment of the Morton curve over (uid-rank, load-day), so its
-    * min/max envelope is bounded in BOTH dimensions and both a uid
-    * point lookup and a load-date range scan prune whole files —
-    * single-column range clustering serves only the first.
-    *
-    * finding_uid is a string, so its Morton input is a monotone RANK,
-    * obtained the way Delta's `OPTIMIZE ZORDER` computes
-    * range-partition ids: one range shuffle on the uid (sampled
-    * boundaries, ordered partition ids), `spark_partition_id()` as
-    * the rank. The day rank is days since 2020-01-01, clamped to the
-    * key width. [[graft.ops.Layout.zorderKey]] interleaves the two;
-    * a second range shuffle lays files along the curve. Two shuffles
-    * total — compaction-time cost, never query-time; the layout
-    * (unlike query results) may vary with the range sampler's seed,
-    * which only moves file boundaries, not correctness. */
-  private[ocsf] def clusteredWrite(merged: DataFrame, versionDir: String, n: Int): Unit = {
-    val zbits      = 12  // day span: 4096 days ≈ 11 years from the base
-    val uidBuckets = 256 // uid-rank resolution (8 of the 12 bit planes)
-    val ranked = merged
-      .repartitionByRange(uidBuckets, col("finding_uid"))
-      .withColumn("__urank", org.apache.spark.sql.functions.spark_partition_id().cast("long"))
-    val day = datediff(to_date(col("staging_loaded_at")), lit(java.sql.Date.valueOf("2020-01-01")))
-    val drank = least(greatest(coalesce(day, lit(0)), lit(0)), lit((1 << zbits) - 1)).cast("long")
-    ranked
-      .withColumn("__zkey", graft.ops.Layout.zorderKey(Seq(col("__urank"), drank), zbits))
-      .repartitionByRange(n, col("__zkey"))
-      .sortWithinPartitions(col("__zkey"), col("finding_uid"))
-      .drop("__urank", "__zkey")
-      .write
-      .mode("overwrite")
-      .parquet(versionDir)
   }
 
   /** Atomically create an empty marker file, returning false if it
@@ -564,19 +494,31 @@ object Staging {
   def currentVersion(spark: SparkSession, stagingRoot: String): Option[Long] = {
     val root = new org.apache.hadoop.fs.Path(stagingRoot)
     val fs   = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    readSideFile(fs, root, "_CURRENT") match {
-      case Some(v) => Some(v.toLong)
-      case None if fs.exists(root) =>
-        fs.listStatus(root)
-          .toSeq
-          .filter(s => s.isDirectory && s.getPath.getName.matches("v=\\d+"))
-          .filter(s => fs.exists(new org.apache.hadoop.fs.Path(s.getPath, "_SUCCESS")))
-          .map(_.getPath.getName.stripPrefix("v=").toLong)
-          .sorted
-          .lastOption
-      case None => None
-    }
+    readSideFile(fs, root, "_CURRENT").map(_.toLong).orElse(
+      versionDirs(fs, root)
+        .filter { case (_, s) => fs.exists(new org.apache.hadoop.fs.Path(s.getPath, "_SUCCESS")) }
+        .lastOption
+        .map(_._1)
+    )
   }
+
+  /** The `v=<digits>` version directories under a staging root, in
+    * version order — the one listing behind version allocation, the
+    * pointer fallback and both vacuums. The match is strict: a stray
+    * operator-created entry (v=backup, v=3.old) must not crash any of
+    * them. */
+  private def versionDirs(
+      fs: org.apache.hadoop.fs.FileSystem,
+      root: org.apache.hadoop.fs.Path,
+  ): Seq[(Long, org.apache.hadoop.fs.FileStatus)] =
+    if (!fs.exists(root)) Seq.empty
+    else
+      fs.listStatus(root).toSeq
+        .collect {
+          case s if s.isDirectory && s.getPath.getName.matches("v=\\d+") =>
+            s.getPath.getName.stripPrefix("v=").toLong -> s
+        }
+        .sortBy(_._1)
 
   /** Atomic side-file swap shared by every underscore-prefixed metadata
     * file (`_CURRENT`, `_UID_PATTERN`, `v=N/_WATERMARK`): write to
@@ -655,23 +597,6 @@ object Staging {
     } else None
   }
 
-  /** Age-based retention for [[mergeRun]] version directories — the
-    * time-travel twin of the landing layer's date-based
-    * [[Landing.retentionVacuum]] (the reference's documented retention
-    * requirement, `raw_ocsf_findings.sql:33-34`): drop superseded
-    * versions whose snapshot write time is older than `maxAge`. The
-    * active version and the newest version are never dropped, whatever
-    * their age — a reader must always have a snapshot to resolve.
-    * Directory-level deletes only, never a row scan. Returns the
-    * dropped version numbers, oldest first. */
-  def vacuumVersionsByAge(
-      spark: SparkSession,
-      stagingRoot: String,
-      maxAge: java.time.Duration,
-      nowMillis: Long = System.currentTimeMillis(),
-  ): Seq[Long] =
-    vacuumVersionsPolicy(spark, stagingRoot, keep = 1, maxAge, nowMillis)
-
   /** A version's snapshot time = its commit marker's (`_SUCCESS`)
     * modification time; falls back to the directory's own mtime for
     * uncommitted leftovers so aborted writes still age out. */
@@ -684,12 +609,17 @@ object Staging {
     else dir.getModificationTime
   }
 
-  /** Composed retention in one listing pass: always retain the active
-    * version and the newest `keep` versions; among the rest, drop only
-    * those older than `maxAge`. The count bound caps storage growth,
-    * the age bound preserves a recent-history time-travel window — the
-    * usual pairing for snapshot stores. Returns dropped versions,
-    * oldest first. */
+  /** Retention for [[mergeRun]] version directories, in one listing
+    * pass — the time-travel twin of the landing layer's
+    * [[Landing.retentionVacuumPolicy]] (the reference's documented
+    * retention requirement, `raw_ocsf_findings.sql:33-34`): always
+    * retain the active version and the newest `keep` versions (at least
+    * one — a reader must always have a snapshot to resolve); among the
+    * rest, drop only those whose snapshot write time is older than
+    * `maxAge`. The count bound caps storage growth, the age bound
+    * preserves a recent-history time-travel window — the usual pairing
+    * for snapshot stores. Directory-level deletes only, never a row
+    * scan. Returns dropped versions, oldest first. */
   def vacuumVersionsPolicy(
       spark: SparkSession,
       stagingRoot: String,
@@ -697,20 +627,11 @@ object Staging {
       maxAge: java.time.Duration,
       nowMillis: Long = System.currentTimeMillis(),
   ): Seq[Long] = {
-    val root = new org.apache.hadoop.fs.Path(stagingRoot)
-    val fs   = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return Seq.empty
+    val root   = new org.apache.hadoop.fs.Path(stagingRoot)
+    val fs     = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val cutoff = nowMillis - maxAge.toMillis
-    val versions = fs
-      .listStatus(root)
-      .toSeq
-      // strict v=<digits>, like every other listing: a stray operator
-      // entry (v=backup) must not crash retention forever
-      .filter(s => s.isDirectory && s.getPath.getName.matches("v=\\d+"))
-      .map(s => s.getPath.getName.stripPrefix("v=").toLong -> s)
-      .sortBy(_._1)
     val active = currentVersion(spark, stagingRoot)
-    val dropped = versions
+    val dropped = versionDirs(fs, root)
       .dropRight(math.max(keep, 1)) // never drop the newest
       .filterNot { case (v, _) => active.contains(v) }
       .filter { case (_, s) => versionWriteTime(fs, s) < cutoff }
@@ -740,33 +661,19 @@ object Staging {
   ): Seq[Long] = {
     val root = new org.apache.hadoop.fs.Path(stagingRoot)
     val fs   = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return Seq.empty
     val committed = readSideFile(fs, root, "_CURRENT").map(_.toLong) match {
       case Some(p) => p
       case None    => return Seq.empty
     }
     val cutoff = nowMillis - maxAge.toMillis
-    val dropped = fs
-      .listStatus(root)
-      .toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.matches("v=\\d+"))
-      .map(s => s.getPath.getName.stripPrefix("v=").toLong -> s)
+    val dropped = versionDirs(fs, root)
       .filter { case (v, s) =>
         v > committed &&
         !fs.exists(new org.apache.hadoop.fs.Path(root, s"_CLAIM_v$v")) &&
         versionWriteTime(fs, s) < cutoff
       }
-      .sortBy(_._1)
     dropped.foreach { case (_, s) => fs.delete(s.getPath, true) }
     dropped.map(_._1)
-  }
-
-  /** Drop superseded version directories, keeping the newest `keep` —
-    * the count-only case of [[vacuumVersionsPolicy]] (age bound ZERO:
-    * every superseded version outside the window qualifies). */
-  def vacuumVersions(spark: SparkSession, stagingRoot: String, keep: Int = 2): Unit = {
-    vacuumVersionsPolicy(spark, stagingRoot, keep, java.time.Duration.ZERO)
-    ()
   }
 
   /** "Has data" = contains something a parquet reader would not skip.

@@ -46,7 +46,6 @@ object NgramCounts {
       toks.unpersist()
       this
     }
-    def unpersistAll(): Unit = Seq(uni, bi, tri).foreach(_.unpersist())
   }
 
   /** One tokenize pass, three gram-keyed count aggregations. `isTest`

@@ -770,20 +770,6 @@ object Similarity {
     knnGraph(df, idCol, embCol, k, tau, nPlanes, bands, dim = 0, probes = probes)
   }
 
-  /** [[mutualKnnClusters]] on the auto-banded ladder — see
-    * [[knnGraphAuto]]. */
-  def mutualKnnClustersAuto(
-      df: DataFrame,
-      idCol: String,
-      embCol: String,
-      k: Int,
-      tau: Double,
-      probes: Int = 0,
-  ): DataFrame = {
-    val (nPlanes, bands) = chooseBanding(df.count())
-    mutualKnnClusters(df, idCol, embCol, k, tau, nPlanes, bands, dim = 0, probes = probes)
-  }
-
   /** Cluster-cohesion report over the mutual-k-NN components — the
     * SemDeDup quality artifact: per semantic cluster, its size and the
     * MEAN PAIRWISE COSINE among members (how tight is the cluster the

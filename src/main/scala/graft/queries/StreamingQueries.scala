@@ -172,6 +172,19 @@ object StreamingQueries {
     streamDir.toString
   }
 
+  /** The time split as a replay stream: one [[leftOuterSplitDir]] file
+    * per micro-batch, read by the events table's schema. */
+  private def splitEventsStream(
+      s: org.apache.spark.sql.SparkSession,
+      d: String,
+  ): org.apache.spark.sql.DataFrame = {
+    val schema = graft.Tables.events(s, d).schema
+    s.readStream
+      .schema(schema)
+      .option("maxFilesPerTrigger", 1)
+      .parquet(leftOuterSplitDir(s, d))
+  }
+
   /** Run `body` with the session's shuffle-partition count temporarily
     * lowered to `n`. Stateful streaming operators create one state
     * store per shuffle partition per operator per micro-batch — at
@@ -466,11 +479,7 @@ object StreamingQueries {
     "stream_dedup",
     "SELECT DISTINCT user_id, event_type FROM events",
   ) { (s, d) =>
-    val rewrittenSchema = graft.Tables.events(s, d).schema
-    val stream = s.readStream
-      .schema(rewrittenSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(leftOuterSplitDir(s, d))
+    val stream = splitEventsStream(s, d)
       .select("user_id", "event_type", "ts")
     val deduped = graft.ops.StreamDedup
       .dedupWithinWatermark(stream, "ts", "45 days", Seq("user_id", "event_type"))
@@ -535,7 +544,6 @@ object StreamingQueries {
        |  FROM numbered GROUP BY user_id, sid)
        |SELECT * FROM sessions WHERE w_end < TIMESTAMP '2024-01-18 00:00:00'""".stripMargin,
   ) { (s, d) =>
-    val rewrittenSchema = graft.Tables.events(s, d).schema
     // NB the w_end bound is applied to the SINK TABLE, not inside the
     // streaming query: a post-aggregation predicate on the session
     // window's end gets pushed below the aggregation (sound for fixed
@@ -543,10 +551,7 @@ object StreamingQueries {
     // timestamp — unsound for session windows, where merging can move
     // the end past the bound: the push drops the merge partner and
     // un-merges the session, observed at sf0.1).
-    val sessions = s.readStream
-      .schema(rewrittenSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(leftOuterSplitDir(s, d))
+    val sessions = splitEventsStream(s, d)
       .withWatermark("ts", "1 hour")
       .groupBy(session_window(col("ts"), "30 minutes").as("sw"), col("user_id"))
       .agg(count(lit(1)).as("n_events"))
@@ -587,11 +592,7 @@ object StreamingQueries {
       |LEFT JOIN t2 ON t2.user_id = b.user_id
       |LEFT JOIN t3 ON t3.user_id = b.user_id""".stripMargin,
   ) { (s, d) =>
-    val rewrittenSchema = graft.Tables.events(s, d).schema
-    val stream = s.readStream
-      .schema(rewrittenSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(leftOuterSplitDir(s, d))
+    val stream = splitEventsStream(s, d)
     val updates = graft.ops.Funnel
       .streamingFunnel3(stream, "user_id", "event_type", "ts", Seq("view", "click", "purchase"))
     // finalNoDataBatch = false: the funnel emits only in update mode on
@@ -632,11 +633,7 @@ object StreamingQueries {
       |  count(*) AS cnt
       |FROM events, rows_ GROUP BY 1, 2""".stripMargin,
   ) { (s, d) =>
-    val rewrittenSchema = graft.Tables.events(s, d).schema
-    val stream = s.readStream
-      .schema(rewrittenSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(leftOuterSplitDir(s, d))
+    val stream = splitEventsStream(s, d)
     val sk = stream
       .select(explode(org.apache.spark.sql.functions.sequence(lit(0), lit(3))).as("row_"), col("user_id"))
       .groupBy(col("row_"), graft.ops.Cms.bucketOf(col("row_"), col("user_id"), 128).as("bucket"))
@@ -783,11 +780,7 @@ object StreamingQueries {
     "stream_rate_anomaly",
     Events.rateAnomalySql, // the batch gate's oracle, shared verbatim
   ) { (s, d) =>
-    val rewrittenSchema = graft.Tables.events(s, d).schema
-    val stream = s.readStream
-      .schema(rewrittenSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(leftOuterSplitDir(s, d))
+    val stream = splitEventsStream(s, d)
     val hourly = stream
       .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("hour_ts"))
       .agg(count(lit(1)).as("n"))
@@ -889,11 +882,7 @@ object StreamingQueries {
     "stream_cusum", "stream_hampel", "stream_ewma", "stream_holt",
     "stream_holt_winters", "stream_seasonal",
   )) { (s, d) =>
-    val rewrittenSchema = graft.Tables.events(s, d).schema
-    val stream = s.readStream
-      .schema(rewrittenSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(leftOuterSplitDir(s, d))
+    val stream = splitEventsStream(s, d)
     val hourly = stream
       .groupBy(col("event_type").as("key"), date_trunc("hour", col("ts")).as("hour_ts"))
       .agg(count(lit(1)).as("n"))
@@ -966,11 +955,7 @@ object StreamingQueries {
       |  CAST(row_number() OVER (ORDER BY value DESC, event_id) AS BIGINT) AS rnk
       |FROM events ORDER BY value DESC, event_id LIMIT 10""".stripMargin,
   ) { (s, d) =>
-    val rewrittenSchema = graft.Tables.events(s, d).schema
-    val stream = s.readStream
-      .schema(rewrittenSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(leftOuterSplitDir(s, d))
+    val stream = splitEventsStream(s, d)
     val agg = stream.agg(
       graft.functions.TopKAgg.top_k_entries(10)(col("event_id"), col("value")).as("top"))
     runCompleteStream(s, agg, "topkmaint")
@@ -996,11 +981,7 @@ object StreamingQueries {
     * which `value_total` includes. */
   private val conformalStateTable =
     Shared("events_conformal_state", Set("stream_conformal", "stream_conformal_by")) { (s, d) =>
-      val rewrittenSchema = graft.Tables.events(s, d).schema
-      val stream = s.readStream
-        .schema(rewrittenSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(leftOuterSplitDir(s, d))
+      val stream = splitEventsStream(s, d)
       val calHist = stream
         .filter(col("value").isNotNull)
         .filter(graft.ops.Sampling.hashPpm(col("event_id")) < 500000L)
@@ -1156,11 +1137,7 @@ object StreamingQueries {
       |  CAST(r.pos * 1000000 // r.n AS BIGINT) AS rate_ppm
       |FROM (SELECT unnest(stk) AS r FROM fin)""".stripMargin,
   ) { (s, d) =>
-    val rewrittenSchema = graft.Tables.events(s, d).schema
-    val stream = s.readStream
-      .schema(rewrittenSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(leftOuterSplitDir(s, d))
+    val stream = splitEventsStream(s, d)
     val hist = stream
       .filter(col("value").isNotNull)
       .groupBy(expr("CAST(round(value * 100) AS BIGINT) div 5000").as("b"))
@@ -1191,11 +1168,7 @@ object StreamingQueries {
       |  TRUE AS weight_matches_n, TRUE AS p50_within_bound, TRUE AS p90_within_bound
       |FROM events WHERE value IS NOT NULL""".stripMargin,
   ) { (s, d) =>
-    val rewrittenSchema = graft.Tables.events(s, d).schema
-    val stream = s.readStream
-      .schema(rewrittenSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(leftOuterSplitDir(s, d))
+    val stream = splitEventsStream(s, d)
     val sketch = stream
       .filter(col("value").isNotNull)
       .agg(graft.functions.KllAgg.kll(200)(col("value").cast("double")).as("__sk"))
@@ -1238,11 +1211,7 @@ object StreamingQueries {
       |  TRUE AS weight_matches_n, TRUE AS p50_within_bound, TRUE AS p90_within_bound
       |FROM events WHERE value IS NOT NULL GROUP BY 1""".stripMargin,
   ) { (s, d) =>
-    val rewrittenSchema = graft.Tables.events(s, d).schema
-    val stream = s.readStream
-      .schema(rewrittenSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(leftOuterSplitDir(s, d))
+    val stream = splitEventsStream(s, d)
     val sketch = stream
       .filter(col("value").isNotNull)
       .groupBy(col("event_type").as("key"))
@@ -1282,11 +1251,7 @@ object StreamingQueries {
       |  array_to_string((list(event_id ORDER BY value DESC, event_id))[1:3], ',') AS top_events
       |FROM events GROUP BY event_type""".stripMargin,
   ) { (s, d) =>
-    val rewrittenSchema = graft.Tables.events(s, d).schema
-    val stream = s.readStream
-      .schema(rewrittenSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(leftOuterSplitDir(s, d))
+    val stream = splitEventsStream(s, d)
     val agg = stream
       .groupBy("event_type")
       .agg(
@@ -1317,11 +1282,7 @@ object StreamingQueries {
     """SELECT event_type, CAST(count(DISTINCT user_id) AS BIGINT) AS exact_users, TRUE AS within_bound
       |FROM events GROUP BY event_type""".stripMargin,
   ) { (s, d) =>
-    val rewrittenSchema = graft.Tables.events(s, d).schema
-    val stream = s.readStream
-      .schema(rewrittenSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(leftOuterSplitDir(s, d))
+    val stream = splitEventsStream(s, d)
     val agg = stream
       .groupBy("event_type")
       .agg(approx_count_distinct(col("user_id"), 0.05).as("approx_users"))
@@ -1411,11 +1372,7 @@ object StreamingQueries {
       |  CAST(NULL AS BIGINT), CAST(NULL AS BIGINT), min(event_type), max(event_type)
       |FROM events""".stripMargin,
   ) { (s, d) =>
-    val rewrittenSchema = graft.Tables.events(s, d).schema
-    val stream = s.readStream
-      .schema(rewrittenSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(leftOuterSplitDir(s, d))
+    val stream = splitEventsStream(s, d)
     val prof = graft.ops.Profile
       .unpivot(stream, Seq(("user_id", true), ("event_id", true), ("event_type", false)))
       .groupBy("column")
@@ -1486,11 +1443,7 @@ object StreamingQueries {
       .collect()
       .map(r => (r.getAs[Long]("bucket"), r.getAs[Long]("hi")))
       .toSeq
-    val rewrittenSchema = graft.Tables.events(s, d).schema
-    val stream = s.readStream
-      .schema(rewrittenSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(leftOuterSplitDir(s, d))
+    val stream = splitEventsStream(s, d)
     val curCounts = stream
       .filter(col("event_type") === "purchase")
       .select(cents.as("v"))
@@ -1524,11 +1477,7 @@ object StreamingQueries {
       |FROM (SELECT event_type, CAST(round(value * 100) AS BIGINT) AS v FROM events)
       |GROUP BY 1""".stripMargin,
   ) { (s, d) =>
-    val schema = graft.Tables.events(s, d).schema
-    val stream = s.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(leftOuterSplitDir(s, d))
+    val stream = splitEventsStream(s, d)
     val aggDir  = scratchDir("graft_ivm_agg").toString
     val version = new java.util.concurrent.atomic.AtomicInteger(-1)
     withStatePartitions(s, 4) {

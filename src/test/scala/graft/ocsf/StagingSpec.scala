@@ -156,7 +156,7 @@ class StagingSpec extends AnyFunSuite {
     out.write("1".getBytes); out.close()
 
     val dropped =
-      Staging.vacuumVersionsByAge(spark, stagingRoot, java.time.Duration.ofDays(7))
+      Staging.vacuumVersionsPolicy(spark, stagingRoot, keep = 1, java.time.Duration.ofDays(7))
     assert(dropped === Seq(0L))
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(stagingRoot, "v=0")))
     assert(Staging.readCurrent(spark, stagingRoot).get.count() === 1L)
@@ -164,88 +164,8 @@ class StagingSpec extends AnyFunSuite {
     // fresh snapshots are untouched even with maxAge=0 … except
     // superseded ones older than the cutoff; here nothing qualifies
     // once only active+newest remain
-    assert(Staging.vacuumVersionsByAge(spark, stagingRoot, java.time.Duration.ZERO) === Seq.empty)
-  }
-
-  test("clustered compaction: range-partitioned files cover disjoint uid ranges, same table") {
-    import spark.implicits._
-    val findings = ('a' to 'h').map(c =>
-      richFinding.replace("boann:sast:snyk:fingerprint:abc", s"boann:sast:snyk:fingerprint:$c"))
-    val docs = spark.read.schema(OcsfModel.ocsfFinding).json(findings.toDS())
-    val landingDir  = tmpDir("landing_cl")
-    val plainRoot   = tmpDir("staging_cl_plain")
-    val clusterRoot = tmpDir("staging_cl_ranged")
-    Landing.append(docs, landingDir)
-    Staging.mergeRun(spark, landingDir, plainRoot)
-    val written = Staging.mergeRun(spark, landingDir, clusterRoot, clusterFiles = Some(2))
-    // guards the Observation/repartitionByRange double-count: the range
-    // boundary-sampling job must not inflate the returned row count
-    assert(written === 8L)
-
-    val plain  = Staging.readCurrent(spark, plainRoot).get
-    val ranged = Staging.readCurrent(spark, clusterRoot).get
-    assert(ranged.count() === 8L)
-    def uids(df: org.apache.spark.sql.DataFrame) =
-      df.select("finding_uid").collect().map(_.getString(0)).sorted.toSeq
-    assert(uids(ranged) === uids(plain))
-
-    // exactly 2 data files, and their uid ranges do not overlap
-    val parts = java.nio.file.Files
-      .list(java.nio.file.Paths.get(clusterRoot, "v=0"))
-      .toArray.map(_.toString)
-      .filter(_.endsWith(".parquet"))
-      .sorted
-    assert(parts.length === 2, parts.mkString(", "))
-    val ranges = parts.map { p =>
-      val uids = spark.read.parquet(p).select("finding_uid").collect().map(_.getString(0))
-      (uids.min, uids.max)
-    }.sortBy(_._1)
-    assert(ranges(0)._2 < ranges(1)._1, s"file uid ranges overlap: ${ranges.toSeq}")
-  }
-
-  test("z-order compaction: file min/max envelopes bounded on BOTH finding_uid and load day") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    // 32 uids × 2 load days far apart (2020-04-10 / 2025-01-04 differ
-    // in the HIGH bits of the day rank, so the curve separates days
-    // before uid) — the two-index posture a single-column uid sort
-    // cannot give: there every uid-quarter file would span both days.
-    val rows = for {
-      i   <- 0 until 32
-      day <- Seq("2020-04-10", "2025-01-04")
-    } yield (f"boann:sast:snyk:fingerprint:$i%02d", java.sql.Timestamp.valueOf(s"$day 12:00:00"))
-    val merged = rows.toDF("finding_uid", "staging_loaded_at")
-    val dir    = tmpDir("staging_zorder") + "/v=0"
-    Staging.clusteredWrite(merged, dir, n = 4)
-
-    val files = java.nio.file.Files
-      .list(java.nio.file.Paths.get(dir))
-      .toArray.map(_.toString).filter(_.endsWith(".parquet")).sorted
-    assert(files.length === 4, files.mkString(", "))
-    val envelopes = files.map { f =>
-      val r = spark.read.parquet(f)
-        .agg(min("finding_uid"), max("finding_uid"),
-          min(to_date(col("staging_loaded_at"))), max(to_date(col("staging_loaded_at"))))
-        .head()
-      (r.getString(0), r.getString(1), r.getDate(2).toString, r.getDate(3).toString)
-    }
-    // BOTH-dimension pruning: every file covers exactly one load day…
-    envelopes.foreach { case (_, _, dMin, dMax) =>
-      assert(dMin === dMax, s"file spans multiple load days: $envelopes")
-    }
-    // …and within each day the files split the uid range disjointly
-    envelopes.groupBy(_._3).foreach { case (_, fs) =>
-      val sorted = fs.sortBy(_._1)
-      assert(sorted.length === 2)
-      assert(sorted(0)._2 < sorted(1)._1, s"uid ranges overlap within a day: $envelopes")
-    }
-    // a uid point lookup prunes to ≤ 2 of 4 files; a day filter to 2
-    val uidHit = envelopes.count { case (lo, hi, _, _) =>
-      lo <= "boann:sast:snyk:fingerprint:07" && "boann:sast:snyk:fingerprint:07" <= hi
-    }
-    assert(uidHit <= 2)
-    // nothing lost in the layout shuffle
-    assert(spark.read.parquet(dir).count() === 64L)
+    assert(Staging.vacuumVersionsPolicy(spark, stagingRoot, keep = 1, java.time.Duration.ZERO) ===
+      Seq.empty)
   }
 
   test("vacuumAbandoned: stale never-committed dirs above the pointer drop; claimed/young/committed survive") {
@@ -434,7 +354,7 @@ class StagingSpec extends AnyFunSuite {
     assert(n4 === 2L)
 
     // vacuum keeps the active version readable
-    Staging.vacuumVersions(spark, stagingRoot, keep = 1)
+    Staging.vacuumVersionsPolicy(spark, stagingRoot, keep = 1, java.time.Duration.ZERO)
     assert(Staging.readCurrent(spark, stagingRoot).get.count() === 2L)
   }
 
@@ -460,7 +380,7 @@ class StagingSpec extends AnyFunSuite {
     }
     Landing.append(docs, landingDir)
     val ex = intercept[java.util.ConcurrentModificationException] {
-      Staging.mergeRun(spark, landingDir, stagingRoot, None, () => movePointer())
+      Staging.mergeRun(spark, landingDir, stagingRoot, () => movePointer())
     }
     assert(ex.getMessage.contains("_CURRENT moved"))
     assert(Staging.currentVersion(spark, stagingRoot) === Some(7L))
@@ -551,7 +471,7 @@ class StagingSpec extends AnyFunSuite {
           try {
             Thread.sleep(delays(w))
             val n = Staging.mergeRun(
-              spark, landingDir, stagingRoot, None,
+              spark, landingDir, stagingRoot,
               () => Thread.sleep(delays(2 + w)), // chaos inside the pre-commit window
             )
             results.put(w, Right(n))
@@ -581,7 +501,8 @@ class StagingSpec extends AnyFunSuite {
         .map(_.toString).filter(_.contains("_CLAIM_"))
       assert(claims.isEmpty, s"iter $i: leaked claims: ${claims.mkString(",")}")
       // bound the version-dir population so listing stays O(keep)
-      if (i % 20 == 0) Staging.vacuumVersions(spark, stagingRoot, keep = 2)
+      if (i % 20 == 0)
+        Staging.vacuumVersionsPolicy(spark, stagingRoot, keep = 2, java.time.Duration.ZERO)
     }
     // the final snapshot is the complete merge of everything landed
     val cur = Staging.readCurrent(spark, stagingRoot).get
@@ -632,17 +553,21 @@ class StagingSpec extends AnyFunSuite {
       .partitionBy("loaded_date")
       .parquet(path)
 
-    val dropped = Landing.retentionVacuum(spark, path, java.time.LocalDate.parse("2024-02-01"))
+    val dropped = Landing
+      .retentionVacuumPolicy(spark, path, keepDays = 1, java.time.LocalDate.parse("2024-02-01"))
     assert(dropped === Seq("2024-01-05"))
     val remaining = spark.read.parquet(path).select("finding_uid").collect().map(_.getString(0)).sorted
     assert(remaining === Array("uid-mid", "uid-new"))
     // idempotent: nothing else to drop
-    assert(Landing.retentionVacuum(spark, path, java.time.LocalDate.parse("2024-02-01")).isEmpty)
+    assert(Landing
+      .retentionVacuumPolicy(spark, path, keepDays = 1, java.time.LocalDate.parse("2024-02-01"))
+      .isEmpty)
 
     // a cutoff past every partition still keeps the newest one — an
     // empty landing dir would be unreadable (no schema) and wedge the
     // next staging run
-    val dropped2 = Landing.retentionVacuum(spark, path, java.time.LocalDate.parse("2030-01-01"))
+    val dropped2 = Landing
+      .retentionVacuumPolicy(spark, path, keepDays = 1, java.time.LocalDate.parse("2030-01-01"))
     assert(dropped2 === Seq("2024-02-10"))
     assert(spark.read.parquet(path).select("finding_uid").collect().map(_.getString(0)) ===
       Array("uid-new"))
@@ -746,17 +671,6 @@ class StagingSpec extends AnyFunSuite {
     assert(rows(legacy) === rows(withFile))
     assert(watermarkFile(legacy) === Some(snapshotMaxMicros(legacy)))
     assert(watermarkFile(legacy) === watermarkFile(withFile))
-  }
-
-  test("_WATERMARK: the clusterFiles path commits it too") {
-    val landingDir  = tmpDir("landing_wm_cl")
-    val stagingRoot = tmpDir("staging_wm_cl")
-    Landing.append(docsFor("cl-1", "cl-2", "cl-3"), landingDir)
-    assert(Staging.mergeRun(spark, landingDir, stagingRoot, clusterFiles = Some(2)) === 3L)
-    assert(watermarkFile(stagingRoot) === Some(snapshotMaxMicros(stagingRoot)))
-    Landing.append(docsFor("cl-4"), landingDir)
-    assert(Staging.mergeRun(spark, landingDir, stagingRoot, clusterFiles = Some(2)) === 4L)
-    assert(watermarkFile(stagingRoot) === Some(snapshotMaxMicros(stagingRoot)))
   }
 
   test("Spark job ceilings: mergeRun over a snapshot, and a dashboard read") {
