@@ -1,5 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import org.json4s._
+import org.json4s.jackson.JsonMethods.{compact, parse, render}
 object Bench {
 
   /** Deliberate fixed-configuration ORACLE-DEMO rows → their
@@ -21,9 +23,6 @@ object Bench {
   )
 
   def main(args: Array[String]): Unit = {
-    val demoJson = demoFixedConfig.toSeq.sorted
-      .map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }
-      .mkString("{", ",", "}")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
@@ -42,7 +41,14 @@ object Bench {
     graft.plans.EditDistancePrefilter.installOn(spark)
     // Absorb session/codegen warmup outside any query's timing.
     spark.range(1000).selectExpr("sum(id)").collect()
-    def f3(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
+    // every reported number with three decimals, as rendered text
+    def f3(v: Double): JValue =
+      JDecimal(BigDecimal("%.3f".formatLocal(java.util.Locale.ROOT, v)))
+    def line(fields: JField*): String = compact(render(JObject(fields.toList)))
+    def secs(entries: Seq[(String, Double)]): JValue =
+      JObject(entries.map { case (k, v) => k -> f3(v) }.toList)
+    def names(xs: Seq[String]): JValue = JArray(xs.map(JString(_)).toList)
+    val sf = "sf" -> JString(sfDir)
     // AMBIENT SENTINEL (r11 post-mortem, widened r14): pinned
     // calibration probes self-label a contended record — BENCH_r11.json
     // shipped 620 s for a 295 s-idle suite with byte-identical shuffle
@@ -81,11 +87,8 @@ object Bench {
       else graft.queries.Shared.prewarm(SparkEntry.sharedArtifacts, spark, sfDir, only)
     val sharedBuildS = sharedArts.map(_._2).sum
     if (sharedArts.nonEmpty)
-      println(
-        s"""{"metric":"shared_build","unit":"sec","sf":"$sfDir","artifacts":${sharedArts
-            .map { case (k, v) => "\"" + k + "\":" + f3(v) }
-            .mkString("{", ",", "}")},"value":${f3(sharedBuildS)}}"""
-      )
+      println(line("metric" -> JString("shared_build"), "unit" -> JString("sec"), sf,
+        "artifacts" -> secs(sharedArts), "value" -> f3(sharedBuildS)))
     val selected = SparkEntry.queries.filter { case (n, _) => only.forall(_.contains(n)) }
     // SHUFFLE ACCOUNTING — measure, don't guess: the first run of each
     // query goes through ShuffleAudit.measure (one definition shared
@@ -147,14 +150,12 @@ object Bench {
     // and the judge, and the final line is a compact summary — total,
     // failure counts, and only the heaviest few per-query timings —
     // guaranteed well under the 2000-char tail.
-    def qmap(entries: Seq[(String, Double)]): String =
-      entries.map { case (k, v) => "\"" + k + "\":" + f3(v) }.mkString("{", ",", "}")
-    val fs = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val fl = flaky.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val fs    = "failed" -> names(failed.toSeq)
+    val fl    = "flaky" -> names(flaky.toSeq)
     val total = if (results.nonEmpty) results.values.sum else 0.0
-    println(
-      s"""{"metric":"per_query","sf":"$sfDir","failed":$fs,"flaky":$fl,"demo_fixed_config":${demoJson},"queries":${qmap(results.toSeq.sortBy(_._2))}}"""
-    )
+    val demo  = JObject(demoFixedConfig.toList.sorted.map { case (k, v) => k -> JString(v) })
+    println(line("metric" -> JString("per_query"), sf, fs, fl, "demo_fixed_config" -> demo,
+      "queries" -> secs(results.toSeq.sortBy(_._2))))
     // FULL per-query map persisted to a committed artifact (r16 verdict
     // item 6): the driver's 2000-char tail keeps only the 10 heaviest
     // timings, so round-over-round comparison was blind for ~97% of the
@@ -164,10 +165,8 @@ object Bench {
     try {
       val outPath = sys.env.getOrElse(
         "SPARK_GRAFT_BENCH_OUT", s"tools/bench_last_c$cpus.json")
-      val fullJson =
-        s"""{"sf":"$sfDir","cpus":$cpus,"failed":$fs,"flaky":$fl,
-           |"shared_build":${qmap(sharedArts)},
-           |"queries":${qmap(results.toSeq.sortBy(_._1))}}""".stripMargin.replace("\n", "")
+      val fullJson = line(sf, "cpus" -> JInt(nCpus), fs, fl, "shared_build" -> secs(sharedArts),
+        "queries" -> secs(results.toSeq.sortBy(_._1)))
       java.nio.file.Files.write(
         java.nio.file.Paths.get(outPath),
         fullJson.getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -179,12 +178,8 @@ object Bench {
     // suite total and heaviest-10 — the number a 100 TB capacity plan
     // starts from.
     val shuffleTotal = shuffleBytes.values.sum
-    def bmap(entries: Seq[(String, Long)]): String =
-      entries.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    println(
-      s"""{"metric":"shuffle_bytes","sf":"$sfDir","total":$shuffleTotal,"queries":${bmap(
-          shuffleBytes.toSeq.sortBy(_._2))}}"""
-    )
+    println(line("metric" -> JString("shuffle_bytes"), sf, "total" -> JLong(shuffleTotal),
+      "queries" -> JObject(shuffleBytes.toList.sortBy(_._2).map { case (k, v) => k -> JLong(v) })))
     // Heaviest-10 only (cheapest-first within the object); ~500 chars.
     val top = results.toSeq.sortBy(-_._2).take(10).sortBy(_._2)
     // END-of-suite probes (r12 post-mortem): BENCH_r12.json recorded
@@ -209,13 +204,14 @@ object Bench {
     // full checkpoint series on its own line (start/end + every
     // checkpointEvery queries): the evidence trail that says WHERE in
     // the run contention lived, not just whether it existed.
-    println(
-      s"""{"metric":"ambient_series","sf":"$sfDir","checkpoint_every":$checkpointEvery,"start":{"alu":${f3(
-          ambientRatio)},"mem":${f3(memRatio)}},"checkpoints":[${ambientSeries
-          .map(c => s"""{"after":${c._1},"alu":${f3(c._2)},"mem":${f3(c._3)}}""")
-          .mkString(",")}],"end":{"alu":${f3(ambientRatioEnd)},"mem":${f3(
-          memRatioEnd)}},"worst":${f3(seriesWorst)}}"""
-    )
+    def probes(alu: Double, mem: Double) = List("alu" -> f3(alu), "mem" -> f3(mem))
+    println(line("metric" -> JString("ambient_series"), sf,
+      "checkpoint_every" -> JInt(checkpointEvery),
+      "start" -> JObject(probes(ambientRatio, memRatio)),
+      "checkpoints" -> JArray(ambientSeries.toList.map(c =>
+        JObject(("after" -> JInt(c._1)) :: probes(c._2, c._3)))),
+      "end" -> JObject(probes(ambientRatioEnd, memRatioEnd)),
+      "worst" -> f3(seriesWorst)))
     // PER-QUERY INFLATION self-annotation (r13 post-mortem): wall /
     // committed best-ever (tools/bench_anchors.json, min over clean
     // runs at the same SF) — a contaminated record annotates itself
@@ -226,8 +222,7 @@ object Bench {
       val path = sys.env.getOrElse("SPARK_GRAFT_ANCHORS", "tools/bench_anchors.json")
       scala.util
         .Try {
-          import org.json4s._
-          val json = org.json4s.jackson.JsonMethods.parse(
+          val json = parse(
             new String(
               java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)),
               java.nio.charset.StandardCharsets.UTF_8))
@@ -261,11 +256,9 @@ object Bench {
       r > 2.0 && results.get(n).exists(_ >= noiseFloorS)
     if (inflation.nonEmpty) {
       val over2x = inflation.collect { case (n, r) if alarming(n, r) => n }
-      println(
-        s"""{"metric":"inflation","sf":"$sfDir","anchored":${inflation.size},"noise_floor_s":$noiseFloorS,"over2x":${over2x
-            .map("\"" + _ + "\"")
-            .mkString("[", ",", "]")},"queries":${qmap(inflation)}}"""
-      )
+      println(line("metric" -> JString("inflation"), sf, "anchored" -> JInt(inflation.size),
+        "noise_floor_s" -> JDouble(noiseFloorS), "over2x" -> names(over2x),
+        "queries" -> secs(inflation)))
     }
     val inflationMed =
       if (inflation.isEmpty) 0.0 else inflation.map(_._2).sorted.apply(inflation.size / 2)
@@ -278,20 +271,17 @@ object Bench {
     // shared-build decomposition repeats on the SUMMARY line (the only
     // line the driver's 2000-char tail is guaranteed to keep) so the
     // per-artifact accounting can't be truncated away.
-    println(
-      s"""{"metric":"total","unit":"sec","sf":"$sfDir","queries_total":${results.size},"failed":${failed.size},"flaky":${flaky.size},"contended":$contendedAny,"ambient_worst":${f3(
-          seriesWorst
-        )},"ambient_ratio":${f3(ambientRatio)},"mem_ratio":${f3(
-          memRatio
-        )},"ambient_ratio_end":${f3(ambientRatioEnd)},"mem_ratio_end":${f3(
-          memRatioEnd
-        )},"inflation_med":${f3(inflationMed)},"inflation_over2x":$inflationOver2x,"inflation_over2x_rows":${qmap(
-          over2xRows
-        )},"shared_build_s":${f3(
-          sharedBuildS
-        )},"shared_build":${qmap(sharedArts)},"queries":${qmap(top)},"value":${f3(
-          total)},"value_total":${f3(total + sharedBuildS)}}"""
-    )
+    println(line(
+      "metric" -> JString("total"), "unit" -> JString("sec"), sf,
+      "queries_total" -> JInt(results.size), "failed" -> JInt(failed.size),
+      "flaky" -> JInt(flaky.size), "contended" -> JBool(contendedAny),
+      "ambient_worst" -> f3(seriesWorst), "ambient_ratio" -> f3(ambientRatio),
+      "mem_ratio" -> f3(memRatio), "ambient_ratio_end" -> f3(ambientRatioEnd),
+      "mem_ratio_end" -> f3(memRatioEnd), "inflation_med" -> f3(inflationMed),
+      "inflation_over2x" -> JInt(inflationOver2x), "inflation_over2x_rows" -> secs(over2xRows),
+      "shared_build_s" -> f3(sharedBuildS), "shared_build" -> secs(sharedArts),
+      "queries" -> secs(top), "value" -> f3(total), "value_total" -> f3(total + sharedBuildS),
+    ))
     spark.stop()
     if (failed.nonEmpty || flaky.nonEmpty) sys.exit(1)
   }

@@ -1,91 +1,50 @@
 package graft
 
-import graft.functions.{FloatVecDot, SimHash32Expr, SimHash64Md5Expr}
-import org.apache.spark.sql.SparkSessionExtensions
+import graft.functions._
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** Engine extensions, injected via
   * `SparkSession.builder().withExtensions(new GraftExtensions)` or
-  * `spark.sql.extensions=graft.GraftExtensions`.
-  *
-  * Registers the engine's native expressions (`float_dot` —
-  * [[graft.functions.FloatVecDot]]; `simhash32` —
-  * [[graft.functions.SimHash32Expr]]) in the session function registry
-  * so they resolve from both SQL text and the Column API.
+  * `spark.sql.extensions=graft.GraftExtensions`: the optimizer rules
+  * and the SQL surface of the native expressions. The Column API
+  * (`graft.functions`) builds its expressions directly and needs
+  * neither.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectOptimizerRule(_ => graft.plans.ShingleRewrite)
     e.injectOptimizerRule(_ => graft.plans.EditDistancePrefilter)
-    e.injectFunction(
-      (
-        FunctionIdentifier("float_dot"),
-        new ExpressionInfo(classOf[FloatVecDot].getName, "float_dot"),
-        (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-          FloatVecDot(exprs.head, exprs(1)),
-      )
-    )
-    e.injectFunction(
-      (
-        FunctionIdentifier("damerau_levenshtein"),
-        new ExpressionInfo(
-          classOf[graft.functions.DamerauLevenshteinExpr].getName,
-          "damerau_levenshtein",
-        ),
-        (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-          graft.functions.DamerauLevenshteinExpr(exprs.head, exprs(1)),
-      )
-    )
-    e.injectFunction(
-      (
-        FunctionIdentifier("jaro_winkler"),
-        new ExpressionInfo(classOf[graft.functions.JaroWinklerExpr].getName, "jaro_winkler"),
-        (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-          graft.functions.JaroWinklerExpr(exprs.head, exprs(1)),
-      )
-    )
-    e.injectFunction(
-      (
-        FunctionIdentifier("simhash32"),
-        new ExpressionInfo(classOf[SimHash32Expr].getName, "simhash32"),
-        (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-          SimHash32Expr(exprs.head),
-      )
-    )
-    e.injectFunction(
-      (
-        FunctionIdentifier("simhash64_md5"),
-        new ExpressionInfo(classOf[SimHash64Md5Expr].getName, "simhash64_md5"),
-        (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-          SimHash64Md5Expr(exprs.head),
-      )
-    )
-    e.injectFunction(
-      (
-        FunctionIdentifier("lcs_len"),
-        new ExpressionInfo(classOf[graft.functions.LcsLenExpr].getName, "lcs_len"),
-        (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-          graft.functions.LcsLenExpr(exprs.head, exprs(1)),
-      )
-    )
-    e.injectFunction(
-      (
-        FunctionIdentifier("dtw_distance"),
-        new ExpressionInfo(classOf[graft.functions.DtwExpr].getName, "dtw_distance"),
-        (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-          graft.functions.DtwExpr(exprs.head, exprs(1), exprs(2)),
-      )
-    )
-    Seq(2, 3, 4).foreach { n =>
-      e.injectFunction(
-        (
-          FunctionIdentifier(s"shingle_set_$n"),
-          new ExpressionInfo(classOf[graft.functions.ShingleSetExpr].getName, s"shingle_set_$n"),
-          (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-            graft.functions.ShingleSetExpr(exprs.head, n),
-        )
-      )
-    }
+    GraftExtensions.sqlFunctions.foreach(e.injectFunction)
   }
+}
+
+object GraftExtensions {
+
+  /** The native expressions callable from SQL text, by name. */
+  val sqlFunctions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = {
+    def fn(name: String, cls: Class[_])(build: Seq[Expression] => Expression) =
+      (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build)
+    Seq(
+      fn("float_dot", classOf[FloatVecDot])(e => FloatVecDot(e(0), e(1))),
+      fn("damerau_levenshtein", classOf[DamerauLevenshteinExpr])(e =>
+        DamerauLevenshteinExpr(e(0), e(1))
+      ),
+      fn("jaro_winkler", classOf[JaroWinklerExpr])(e => JaroWinklerExpr(e(0), e(1))),
+      fn("simhash32", classOf[SimHash32Expr])(e => SimHash32Expr(e(0))),
+      fn("simhash64_md5", classOf[SimHash64Md5Expr])(e => SimHash64Md5Expr(e(0))),
+      fn("lcs_len", classOf[LcsLenExpr])(e => LcsLenExpr(e(0), e(1))),
+      fn("dtw_distance", classOf[DtwExpr])(e => DtwExpr(e(0), e(1), e(2))),
+    ) ++ Seq(2, 3, 4).map(n =>
+      fn(s"shingle_set_$n", classOf[ShingleSetExpr])(e => ShingleSetExpr(e(0), n))
+    )
+  }
+
+  /** Installs [[sqlFunctions]] into a session built without the
+    * extensions (`withExtensions` only takes effect on a new session). */
+  def register(spark: SparkSession): Unit =
+    sqlFunctions.foreach { case (id, info, build) =>
+      spark.sessionState.functionRegistry.registerFunction(id, info, build)
+    }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graftbridge.ColumnExpr.{column, expression}
 import org.apache.spark.sql.types.{DataType, LongType}
 
 /** ADC table lookup as one native fold: given a candidate's m PQ codes
@@ -45,14 +45,6 @@ case class AdcScoreExpr(left: Expression, right: Expression)
 }
 
 object AdcScoreExpr {
-  private val name = "adc_score"
-
-  def adc_score(spark: org.apache.spark.sql.SparkSession, codes: Column, lut: Column): Column = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name,
-      exprs => AdcScoreExpr(exprs(0), exprs(1)),
-      "scala_udf",
-    )
-    call_function(name, codes, lut)
-  }
+  def adc_score(codes: Column, lut: Column): Column =
+    column(AdcScoreExpr(expression(codes), expression(lut)))
 }

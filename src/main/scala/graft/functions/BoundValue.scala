@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, JavaCode}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graftbridge.ColumnExpr.{column, expression}
 import org.apache.spark.sql.types.DataType
 
 /** The value of an expression over no column, evaluated once per plan
@@ -57,14 +57,5 @@ case class BoundValue(child: Expression) extends UnaryExpression {
 }
 
 object BoundValue {
-
-  /** Column API (the session must carry [[registerOn]]). */
-  def bound_value(c: Column): Column = call_function("bound_value", c)
-
-  def registerOn(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bound_value",
-      exprs => BoundValue(exprs.head),
-      "scala_udf",
-    )
+  def bound_value(c: Column): Column = column(BoundValue(expression(c)))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graftbridge.ColumnExpr.{column, expression}
 import org.apache.spark.sql.types.{DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -67,17 +67,8 @@ case class DamerauLevenshteinExpr(left: Expression, right: Expression)
 
 object DamerauLevenshteinExpr {
 
-  /** Column API (session must carry [[graft.GraftExtensions]] or
-    * [[registerOn]]). */
   def damerau_levenshtein(a: Column, b: Column): Column =
-    call_function("damerau_levenshtein", a, b)
-
-  def registerOn(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "damerau_levenshtein",
-      exprs => DamerauLevenshteinExpr(exprs(0), exprs(1)),
-      "scala_udf",
-    )
+    column(DamerauLevenshteinExpr(expression(a), expression(b)))
 
   /** Lowrance–Wagner DP over code points. The `h` matrix (flat
     * row-major — ONE allocation, sequential access) has a −1th

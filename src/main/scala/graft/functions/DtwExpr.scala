@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graftbridge.ColumnExpr.{column, expression}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
 
 /** Banded Dynamic Time Warping distance (Sakoe–Chiba 1978) between two
@@ -92,17 +92,8 @@ case class DtwExpr(first: Expression, second: Expression, third: Expression)
 
 object DtwExpr {
 
-  /** Column API (session must carry [[graft.GraftExtensions]] or
-    * [[registerOn]]). */
   def dtw_distance(a: Column, b: Column, w: Column): Column =
-    call_function("dtw_distance", a, b, w)
-
-  def registerOn(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dtw_distance",
-      exprs => DtwExpr(exprs(0), exprs(1), exprs(2)),
-      "scala_udf",
-    )
+    column(DtwExpr(expression(a), expression(b), expression(w)))
 
   private val Inf = Long.MaxValue / 4
 

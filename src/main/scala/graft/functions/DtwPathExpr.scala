@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graftbridge.ColumnExpr.{column, expression}
 import org.apache.spark.sql.types._
 
 /** The optimal banded-DTW WARPING PATH between two `array<bigint>`
@@ -90,16 +90,8 @@ object DtwPathExpr {
     containsNull = false,
   )
 
-  /** Column API. */
   def dtw_path(a: Column, b: Column, w: Column): Column =
-    call_function("dtw_path", a, b, w)
-
-  def registerOn(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dtw_path",
-      exprs => DtwPathExpr(exprs(0), exprs(1), exprs(2)),
-      "scala_udf",
-    )
+    column(DtwPathExpr(expression(a), expression(b), expression(w)))
 
   private val Inf = Long.MaxValue / 4
 

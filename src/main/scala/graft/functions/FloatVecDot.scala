@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graftbridge.ColumnExpr.{column, expression}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 /** Native dot product over two `array<float>` columns, accumulated
@@ -19,9 +19,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * the fold exactly, so results are bit-identical to the composed form
   * (and to the DuckDB oracle's `list_reduce` left fold).
   *
-  * Registered as SQL function `float_dot` by [[graft.GraftExtensions]];
-  * the Column API is [[FloatVecDot.float_dot]] (resolved through the
-  * session function registry via `call_function`).
+  * SQL function `float_dot` (see [[graft.GraftExtensions]]); the Column
+  * API [[FloatVecDot.float_dot]] builds the expression directly.
   */
 case class FloatVecDot(left: Expression, right: Expression) extends BinaryExpression {
 
@@ -84,16 +83,5 @@ case class FloatVecDot(left: Expression, right: Expression) extends BinaryExpres
 }
 
 object FloatVecDot {
-
-  /** Column API for the native dot product (requires the session to be
-    * built with [[graft.GraftExtensions]] or `registerOn`). */
-  def float_dot(a: Column, b: Column): Column = call_function("float_dot", a, b)
-
-  /** Imperative registration for sessions built without extensions. */
-  def registerOn(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "float_dot",
-      exprs => FloatVecDot(exprs(0), exprs(1)),
-      "scala_udf",
-    )
+  def float_dot(a: Column, b: Column): Column = column(FloatVecDot(expression(a), expression(b)))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graftbridge.ColumnExpr.{column, expression}
 import org.apache.spark.sql.types.{DataType, DoubleType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -62,16 +62,8 @@ case class JaroWinklerExpr(left: Expression, right: Expression) extends BinaryEx
 
 object JaroWinklerExpr {
 
-  /** Column API (session must carry [[graft.GraftExtensions]] or
-    * [[registerOn]]). */
-  def jaro_winkler(a: Column, b: Column): Column = call_function("jaro_winkler", a, b)
-
-  def registerOn(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "jaro_winkler",
-      exprs => JaroWinklerExpr(exprs(0), exprs(1)),
-      "scala_udf",
-    )
+  def jaro_winkler(a: Column, b: Column): Column =
+    column(JaroWinklerExpr(expression(a), expression(b)))
 
   /** Jaro similarity over code points; 0.0 when either side is empty
     * (including both — the DuckDB convention the oracle pins). */

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graftbridge.ColumnExpr.{column, expression}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 
 /** Longest-common-SUBSEQUENCE length between two token sequences
@@ -61,16 +61,7 @@ case class LcsLenExpr(left: Expression, right: Expression) extends BinaryExpress
 
 object LcsLenExpr {
 
-  /** Column API (session must carry [[graft.GraftExtensions]] or
-    * [[registerOn]]). */
-  def lcs_len(a: Column, b: Column): Column = call_function("lcs_len", a, b)
-
-  def registerOn(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "lcs_len",
-      exprs => LcsLenExpr(exprs(0), exprs(1)),
-      "scala_udf",
-    )
+  def lcs_len(a: Column, b: Column): Column = column(LcsLenExpr(expression(a), expression(b)))
 
   /** Two-rolling-row LCS DP over UTF8String tokens. Called from
     * generated code — must stay a static, allocation-local method. */

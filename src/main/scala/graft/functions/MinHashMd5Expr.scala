@@ -5,7 +5,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graftbridge.ColumnExpr.{column, expression}
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -123,16 +123,6 @@ case class MinHashMd5Expr(child: Expression, n: Int, k: Int)
 }
 
 object MinHashMd5Expr {
-  /** Registered per (n, k) like `shingle_gen_<n>` — the registry API
-    * carries no extra literals. */
-  private def fname(n: Int, k: Int) = s"minhash_md5_${n}_$k"
-
-  def minhash_md5(text: Column, n: Int, k: Int): Column = call_function(fname(n, k), text)
-
-  def registerOn(spark: org.apache.spark.sql.SparkSession, n: Int, k: Int): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      fname(n, k),
-      exprs => MinHashMd5Expr(exprs.head, n, k),
-      "scala_udf",
-    )
+  def minhash_md5(text: Column, n: Int, k: Int): Column =
+    column(MinHashMd5Expr(expression(text), n, k))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XxHash64Function}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graftbridge.ColumnExpr.{column, expression}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -83,14 +83,6 @@ case class MinHashXxExpr(child: Expression, n: Int, k: Int)
 }
 
 object MinHashXxExpr {
-  private def fname(n: Int, k: Int) = s"minhash_xx_${n}_$k"
-
-  def minhash_xx(text: Column, n: Int, k: Int): Column = call_function(fname(n, k), text)
-
-  def registerOn(spark: org.apache.spark.sql.SparkSession, n: Int, k: Int): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      fname(n, k),
-      exprs => MinHashXxExpr(exprs.head, n, k),
-      "scala_udf",
-    )
+  def minhash_xx(text: Column, n: Int, k: Int): Column =
+    column(MinHashXxExpr(expression(text), n, k))
 }

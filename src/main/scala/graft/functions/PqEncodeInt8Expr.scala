@@ -4,7 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graftbridge.ColumnExpr.{column, expression}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType}
 
 /** One-pass native PQ encode: int8-quantize the embedding and emit its
@@ -100,31 +100,7 @@ case class PqEncodeInt8Expr(child: Expression, codebook: Array[Array[Array[Long]
 
 object PqEncodeInt8Expr {
 
-  /** Content fingerprint of a codebook — the registered function name
-    * must be distinct per codebook so two indexes in one session never
-    * alias each other's encode. */
-  private def fingerprint(cb: Array[Array[Array[Long]]]): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val bb = java.nio.ByteBuffer.allocate(8)
-    cb.foreach(_.foreach(_.foreach { v =>
-      bb.clear(); bb.putLong(v); md.update(bb.array())
-    }))
-    md.digest().take(8).map("%02x".format(_)).mkString
-  }
-
-  /** Column builder: registers a temp function capturing this codebook
-    * (the registry API carries no non-column arguments) and calls it. */
-  def pq_encode(
-      spark: org.apache.spark.sql.SparkSession,
-      emb: Column,
-      codebook: Array[Array[Array[Long]]],
-  ): Column = {
-    val name = s"pq_encode_int8_${codebook.length}_${fingerprint(codebook)}"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name,
-      exprs => PqEncodeInt8Expr(exprs.head, codebook),
-      "scala_udf",
-    )
-    call_function(name, emb)
-  }
+  /** Column builder; the codebook rides in the expression instance. */
+  def pq_encode(emb: Column, codebook: Array[Array[Array[Long]]]): Column =
+    column(PqEncodeInt8Expr(expression(emb), codebook))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graftbridge.ColumnExpr.{column, expression}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -76,15 +76,5 @@ case class ShingleGen(child: Expression, n: Int)
 }
 
 object ShingleGen {
-  def shingle_gen(text: Column, n: Int): Column = call_function(s"shingle_gen_$n", text)
-
-  /** Registers `shingle_gen_<n>` for the given sizes. */
-  def registerOn(spark: org.apache.spark.sql.SparkSession, sizes: Seq[Int] = Seq(2, 3, 4)): Unit =
-    sizes.foreach { n =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        s"shingle_gen_$n",
-        exprs => ShingleGen(exprs.head, n),
-        "scala_udf",
-      )
-    }
+  def shingle_gen(text: Column, n: Int): Column = column(ShingleGen(expression(text), n))
 }

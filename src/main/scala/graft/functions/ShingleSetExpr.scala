@@ -4,7 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graftbridge.ColumnExpr.{column, expression}
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -60,15 +60,5 @@ case class ShingleSetExpr(child: Expression, n: Int) extends UnaryExpression wit
 }
 
 object ShingleSetExpr {
-  def shingle_set(text: Column, n: Int): Column = call_function(s"shingle_set_$n", text)
-
-  /** Registers `shingle_set_<n>` for the given sizes. */
-  def registerOn(spark: org.apache.spark.sql.SparkSession, sizes: Seq[Int] = Seq(2, 3, 4)): Unit =
-    sizes.foreach { n =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        s"shingle_set_$n",
-        exprs => ShingleSetExpr(exprs.head, n),
-        "scala_udf",
-      )
-    }
+  def shingle_set(text: Column, n: Int): Column = column(ShingleSetExpr(expression(text), n))
 }

@@ -4,7 +4,7 @@ import java.security.MessageDigest
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graftbridge.ColumnExpr.{column, expression}
 import org.apache.spark.sql.types.{DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -72,14 +72,5 @@ case class SimHash32Expr(child: Expression) extends UnaryExpression with Codegen
 }
 
 object SimHash32Expr {
-  /** Column API (session must have registered the function — see
-    * [[registerOn]] / [[graft.GraftExtensions]]). */
-  def simhash32(text: Column): Column = call_function("simhash32", text)
-
-  def registerOn(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash32",
-      exprs => SimHash32Expr(exprs.head),
-      "scala_udf",
-    )
+  def simhash32(text: Column): Column = column(SimHash32Expr(expression(text)))
 }

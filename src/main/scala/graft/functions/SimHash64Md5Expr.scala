@@ -4,7 +4,7 @@ import java.security.MessageDigest
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graftbridge.ColumnExpr.{column, expression}
 import org.apache.spark.sql.types.{DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -76,14 +76,5 @@ case class SimHash64Md5Expr(child: Expression) extends UnaryExpression with Code
 }
 
 object SimHash64Md5Expr {
-  /** Column API (session must have registered the function — see
-    * [[registerOn]] / [[graft.GraftExtensions]]). */
-  def simhash64_md5(text: Column): Column = call_function("simhash64_md5", text)
-
-  def registerOn(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash64_md5",
-      exprs => SimHash64Md5Expr(exprs.head),
-      "scala_udf",
-    )
+  def simhash64_md5(text: Column): Column = column(SimHash64Md5Expr(expression(text)))
 }

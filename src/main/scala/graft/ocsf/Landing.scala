@@ -26,7 +26,6 @@ object Landing {
     * the column is constant, and the day changes once a day. Both come
     * from the query's one `current_timestamp()`. */
   def prepare(findings: DataFrame): DataFrame = {
-    BoundValue.registerOn(findings.sparkSession)
     findings
       .select(
         col("finding_info.uid").as("finding_uid"),

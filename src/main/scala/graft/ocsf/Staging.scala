@@ -189,7 +189,6 @@ object Staging {
         // bound, not inlined: each run's new watermark reuses the last
         // run's compiled filter (loaded_at carries no parquet
         // statistics, so a literal would prune nothing more)
-        BoundValue.registerOn(landing.sparkSession)
         val w = BoundValue.bound_value(timestamp_micros(lit(us)))
         landing
           .filter(col("loaded_date") >= to_date(w))

@@ -243,7 +243,6 @@ object Blocking {
     * @param minSim keep candidates with jw ≥ minSim
     * @return (`dirty_id`, `canon_id`, `jw`, `n_candidates`) */
   def matchBestJw(dirty: DataFrame, canon: DataFrame, minSim: Double): DataFrame = {
-    graft.functions.JaroWinklerExpr.registerOn(dirty.sparkSession)
     val jw = graft.functions.JaroWinklerExpr.jaro_winkler _
     val pairs = dirty
       .select(col("id").as("dirty_id"), col("name").as("__dn"), col("block"))

@@ -134,7 +134,7 @@ object Bpe {
         cur = keep(
           cur.withColumn(
             "sym",
-            call_function("replace", col("sym"), lit(s" $l  $r "), lit(s" $l$r ")),
+            replace(col("sym"), lit(s" $l  $r "), lit(s" $l$r ")),
           )
         )
         rank += 1
@@ -240,8 +240,7 @@ object Bpe {
               "sym",
               when(
                 col("__l").isNotNull,
-                call_function(
-                  "replace",
+                replace(
                   col("sym"),
                   concat(lit(" "), col("__l"), lit("  "), col("__r"), lit(" ")),
                   concat(lit(" "), col("__l"), col("__r"), lit(" ")),
@@ -318,20 +317,20 @@ object Bpe {
   ): DataFrame = {
     def tokenizeFold(word: org.apache.spark.sql.Column) =
       merges.foldLeft(symInit(word)) { case (acc, (l, r)) =>
-        call_function("replace", acc, lit(s" $l  $r "), lit(s" $l$r "))
+        replace(acc, lit(s" $l  $r "), lit(s" $l$r "))
       }
     def tokenizeLoop(word: org.apache.spark.sql.Column) = {
       val pairs = typedlit(merges.map { case (l, r) => (s" $l  $r ", s" $l$r ") })
       aggregate(
         pairs,
         symInit(word),
-        (acc, m) => call_function("replace", acc, m.getField("_1"), m.getField("_2")),
+        (acc, m) => replace(acc, m.getField("_1"), m.getField("_2")),
       )
     }
     def tokenize(word: org.apache.spark.sql.Column) = {
       val folded = if (merges.size <= foldLimit) tokenizeFold(word) else tokenizeLoop(word)
       // collapse the double separators back to single spaces
-      call_function("replace", trim(folded), lit("  "), lit(" "))
+      replace(trim(folded), lit("  "), lit(" "))
     }
     docs.withColumn(
       "bpe_tokens",

@@ -67,9 +67,6 @@ object CorpusPipeline {
     //    and the first to finish truncates the lineage the other is
     //    still running (its tasks then report SQL metrics the driver
     //    has already dropped).
-    val spark = docs.sparkSession
-    MinHashMd5Expr.registerOn(spark, cfg.shingleN, cfg.minhashK)
-    ShingleSetExpr.registerOn(spark, Seq(cfg.shingleN))
     val sketched = exactDeduped
       .withColumn("__mh", MinHashMd5Expr.minhash_md5(col(textCol), cfg.shingleN, cfg.minhashK))
       .withColumn("__shs", ShingleSetExpr.shingle_set(col(textCol), cfg.shingleN))

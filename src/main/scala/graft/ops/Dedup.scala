@@ -33,7 +33,6 @@ object Dedup {
     * instead of materializing each document's full shingle array
     * across an explode boundary. */
   def shingleSets(docs: DataFrame, idCol: String, textCol: String, n: Int): DataFrame = {
-    graft.functions.ShingleGen.registerOn(docs.sparkSession, Seq(n))
     docs.select(
       col(idCol).as("doc_id"),
       graft.functions.ShingleGen.shingle_gen(col(textCol), n).as("sh"),
@@ -589,7 +588,6 @@ object Dedup {
       n: Int,
       k: Int,
   ): DataFrame = {
-    graft.functions.MinHashMd5Expr.registerOn(docs.sparkSession, n, k)
     unpackSignatures(
       docs.select(
         col(idCol).as("doc_id"),
@@ -740,7 +738,6 @@ object Dedup {
       n: Int,
       k: Int,
   ): DataFrame = {
-    graft.functions.MinHashXxExpr.registerOn(docs.sparkSession, n, k)
     unpackSignatures(
       docs.select(
         col(idCol).as("doc_id"),
@@ -1278,9 +1275,7 @@ object Dedup {
     * stateful machinery to re-assemble per-document verdicts. */
   def contaminatedPredicate(textCol: Column, benchShingles: Seq[String], n: Int): Column = {
     // native single-pass shingling (the composed HOF form pays ~20x at
-    // corpus scale); registration is idempotent, resolved at analysis
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .foreach(s => graft.functions.ShingleSetExpr.registerOn(s, Seq(n)))
+    // corpus scale)
     val sh    = graft.functions.ShingleSetExpr.shingle_set(textCol, n)
     val exact = arrays_overlap(sh, typedlit(benchShingles.sorted))
     if (benchShingles.size <= BloomCutover) exact
@@ -1310,19 +1305,16 @@ object Dedup {
       val bos = new java.io.ByteArrayOutputStream()
       bf.writeTo(bos)
       val bloomLit = lit(bos.toByteArray)
-      // BloomFilterMightContain is not in the public SQL registry —
-      // registered the same way the other native expressions are
-      org.apache.spark.sql.SparkSession.getActiveSession.foreach { s =>
-        s.sessionState.functionRegistry.createOrReplaceTempFunction(
-          "graft_might_contain",
-          exprs =>
+      // BloomFilterMightContain has no SQL or Column API: built directly
+      import org.apache.spark.sql.graftbridge.ColumnExpr.{column, expression}
+      val bloomHit = exists(
+        sh,
+        x =>
+          column(
             org.apache.spark.sql.catalyst.expressions
-              .BloomFilterMightContain(exprs.head, exprs(1)),
-          "scala_udf",
-        )
-      }
-      val bloomHit =
-        exists(sh, x => call_function("graft_might_contain", bloomLit, xxhash64(x)))
+              .BloomFilterMightContain(expression(bloomLit), expression(xxhash64(x)))
+          ),
+      )
       bloomHit && exact // And short-circuits: exact runs on bloom hits only
     }
   }

@@ -55,10 +55,8 @@ object Similarity {
 
   /** Add a precomputed `nrm` column (norms are reused across every pair
     * a row participates in — never recompute them inside the join). */
-  def withNorm(df: DataFrame, embCol: String): DataFrame = {
-    graft.functions.FloatVecDot.registerOn(df.sparkSession)
+  def withNorm(df: DataFrame, embCol: String): DataFrame =
     df.withColumn("nrm", l2Norm(col(embCol)))
-  }
 
   /** Symmetric int8 scalar quantization of an embedding column — the
     * 4× memory cut that makes a 100 TB vector corpus cache-resident for
@@ -265,7 +263,6 @@ object Similarity {
   ): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(mult >= 1, s"mult must be >= 1, got $mult")
-    graft.functions.FloatVecDot.registerOn(queries.sparkSession)
     val pool = bruteForceTopKInt8(queries, candidates, idCol, embCol, k * mult)
       .select(col("q_id"), col("n_id"))
     val q = queries.select(col(idCol).as("q_id"), col(embCol).as("__qe"))
@@ -291,7 +288,6 @@ object Similarity {
       embCol: String,
       k: Int,
   ): DataFrame = {
-    graft.functions.FloatVecDot.registerOn(queries.sparkSession)
     val q = withNorm(queries, embCol)
       .select(col(idCol).as("q_id"), col(embCol).as("q_emb"), col("nrm").as("q_nrm"))
     val c = withNorm(candidates, embCol)
@@ -493,7 +489,6 @@ object Similarity {
     // 1L << p wraps at p >= 64 (JVM shifts are mod 64): planes past 63
     // would silently alias earlier bits and collapse the bucket split
     require(nPlanes >= 1 && nPlanes <= 63, s"srpBuckets supports 1..63 planes, got $nPlanes")
-    graft.functions.FloatVecDot.registerOn(df.sparkSession)
     val planes  = srpPlaneLiterals(nPlanes, resolveDim(df, embCol, dim))
     val bucket = (0 until nPlanes)
       .map(p =>
@@ -572,7 +567,6 @@ object Similarity {
       dim: Int = 0,
   ): DataFrame = {
     require(nPlanes % bands == 0, s"nPlanes ($nPlanes) must divide into bands ($bands)")
-    graft.functions.FloatVecDot.registerOn(df.sparkSession)
     val r = nPlanes / bands
     // Precomputed ±1 planes as array<float> literals: each plane dot is
     // one codegen'd float_dot call (±1.0f casts to ±1.0 double exactly,
@@ -1100,7 +1094,6 @@ object Similarity {
     * drift_sq); a centroid whose cell was empty keeps its embedding
     * ([[ivfRefine]] coalesces) and reports drift 0. */
   def ivfCentroidDrift(before: DataFrame, after: DataFrame): DataFrame = {
-    graft.functions.FloatVecDot.registerOn(before.sparkSession)
     val d = zip_with(
       col("__old"),
       col("__new"),
@@ -1125,10 +1118,6 @@ object Similarity {
       queryPred: Column,
       candidatePred: Column = lit(true),
   ): DataFrame = {
-    // the documented standalone use is a FRESH session querying a
-    // persisted index — register the native dot here, not only in the
-    // build-side entry points
-    graft.functions.FloatVecDot.registerOn(index.sparkSession)
     // FILTERED vector search, single-stage form: the metadata
     // predicate lands on the index rows BEFORE the probe join, so a
     // probed cell contributes exactly its matching members — no
@@ -1188,7 +1177,6 @@ object Similarity {
       centroids: DataFrame,
       nprobe: Int,
   ): DataFrame = {
-    graft.functions.FloatVecDot.registerOn(spark)
     val qry = ivfAssign(withNorm(queries, embCol), centroids, idCol, embCol, nprobe = nprobe)
       .select(col(idCol).as("q_id"), col(embCol).as("q_emb"), col("nrm").as("q_nrm"), col("cent_id"))
     val cells = qry.select("cent_id").distinct().collect().map(_.getLong(0))
@@ -1333,7 +1321,7 @@ object Similarity {
     df.select(
       col(idCol),
       graft.functions.PqEncodeInt8Expr
-        .pq_encode(df.sparkSession, col(embCol), cb)
+        .pq_encode(col(embCol), cb)
         .as("pq_codes"),
     )
   }
@@ -1520,7 +1508,7 @@ object Similarity {
         col("q_id"),
         col("n_id"),
         graft.functions.AdcScoreExpr
-          .adc_score(df.sparkSession, col("pq_codes"), col("lut"))
+          .adc_score(col("pq_codes"), col("lut"))
           .as("adc"),
       )
       .withColumn("rnk", row_number().over(w))
@@ -1647,7 +1635,7 @@ object Similarity {
         col("q_id"),
         col("n_id"),
         graft.functions.AdcScoreExpr
-          .adc_score(df.sparkSession, col("pq_codes"), col("lut"))
+          .adc_score(col("pq_codes"), col("lut"))
           .as("adc"),
       )
       .withColumn("rnk", row_number().over(w))
@@ -1733,7 +1721,7 @@ object Similarity {
     val cand = cres.select(
       col(idCol).as("n_id"),
       col("cent_id"),
-      graft.functions.PqEncodeInt8Expr.pq_encode(df.sparkSession, col("res"), cbArr).as("pq_codes"),
+      graft.functions.PqEncodeInt8Expr.pq_encode(col("res"), cbArr).as("pq_codes"),
     )
     val qres = resid(ivfAssign(base.filter(queryPred), centroids, idCol, embCol, nprobe))
     val qsubs = quantizeInt8(qres, "res")
@@ -1757,7 +1745,7 @@ object Similarity {
         col("q_id"),
         col("n_id"),
         graft.functions.AdcScoreExpr
-          .adc_score(df.sparkSession, col("pq_codes"), col("lut"))
+          .adc_score(col("pq_codes"), col("lut"))
           .as("adc"),
       )
       .withColumn("rnk", row_number().over(w))
@@ -1970,7 +1958,6 @@ object Similarity {
       k: Int,
   ): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    graft.functions.FloatVecDot.registerOn(queries.sparkSession)
     val q = withNorm(queries, embCol)
       .select(
         col(idCol).as("q_id"),
@@ -2042,7 +2029,6 @@ object Similarity {
     require(k >= 1, s"k must be >= 1, got $k")
     require(lambdaPpm >= 1 && lambdaPpm <= 1000000L,
       s"lambdaPpm must be in [1, 1e6], got $lambdaPpm")
-    graft.functions.FloatVecDot.registerOn(queries.sparkSession)
     val spark = queries.sparkSession
     val q = withNorm(queries, embCol)
       .select(col(idCol).as("q_id"), col(embCol).as("__qe"), col("nrm").as("__qn"))

@@ -1,7 +1,9 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.ShiftRight
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnExpr.{column, expression}
 
 /** Count-Min Sketch (Cormode & Muthukrishnan 2005) — the mergeable
   * frequency sketch behind heavy-hitter counting at stream/corpus
@@ -242,11 +244,10 @@ object Bloom {
     (0 until k)
       .map { i =>
         val bit = bitOf(lit(i), keyCol, bits)
-        (call_function(
-          "shiftright",
-          element_at(arr, (bit / 64).cast("int") + 1),
-          (bit % 64).cast("int"),
-        ).bitwiseAND(lit(1L))) === lit(1L)
+        // shiftright's Column API takes a constant shift only
+        val word = element_at(arr, (bit / 64).cast("int") + 1)
+        column(ShiftRight(expression(word), expression((bit % 64).cast("int"))))
+          .bitwiseAND(lit(1L)) === lit(1L)
       }
       .reduce(_ && _)
   }

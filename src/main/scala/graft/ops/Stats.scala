@@ -1465,37 +1465,43 @@ object Stats {
       s"isotonicFit collected > maxBuckets=$maxBuckets buckets — " +
         "quantize the score column to a bounded grid before calling",
     )
-    // stack of pools (lo, hi, pos, n); merge while rate(prev) >= rate(top)
+    val pools = pavaPools(rows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))))
+    import scala.jdk.CollectionConverters._
+    spark
+      .createDataFrame(
+        new java.util.ArrayList[org.apache.spark.sql.Row](
+          pools.map(p => org.apache.spark.sql.Row(p._1, p._2, p._3, p._4)).asJava
+        ),
+        org.apache.spark.sql.types.StructType(poolFields),
+      )
+      .withColumn("rate_ppm", expr("pos * 1000000L div n"))
+  }
+
+  /** The PAVA sweep shared by [[isotonicFromHist]] and [[isotonicFitBy]]:
+    * bucket histogram `(b, pos, n)` in ascending `b` → pools
+    * `(lo, hi, pos, n)`, on a stack merged while rate(prev) ≥ rate(top).
+    * BigInt cross-product: pooled pos·n can reach corpus scale, so the
+    * comparison must not wrap (the oracle compares in HUGEINT). */
+  private def pavaPools(hist: Iterable[(Long, Long, Long)]): Seq[(Long, Long, Long, Long)] = {
     val stack = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long)]
-    rows.foreach { r =>
-      stack += ((r.getLong(0), r.getLong(0), r.getLong(1), r.getLong(2)))
+    hist.foreach { case (b, pos, n) =>
+      stack += ((b, b, pos, n))
       var merging = true
       while (merging && stack.size >= 2) {
         val top  = stack(stack.size - 1)
         val prev = stack(stack.size - 2)
-        // BigInt cross-product: pooled pos·n can reach corpus scale, so
-        // the comparison must not wrap (the oracle compares in HUGEINT)
         if (BigInt(prev._3) * top._4 >= BigInt(top._3) * prev._4) {
           stack.remove(stack.size - 1)
           stack(stack.size - 1) = (prev._1, top._2, prev._3 + top._3, prev._4 + top._4)
         } else merging = false
       }
     }
-    import scala.jdk.CollectionConverters._
+    stack.toSeq
+  }
+
+  private def poolFields = {
     import org.apache.spark.sql.types._
-    spark
-      .createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](
-          stack.map(p => org.apache.spark.sql.Row(p._1, p._2, p._3, p._4)).asJava
-        ),
-        StructType(Seq(
-          StructField("bucket_lo", LongType, nullable = false),
-          StructField("bucket_hi", LongType, nullable = false),
-          StructField("pos", LongType, nullable = false),
-          StructField("n", LongType, nullable = false),
-        )),
-      )
-      .withColumn("rate_ppm", expr("pos * 1000000L div n"))
+    Seq("bucket_lo", "bucket_hi", "pos", "n").map(StructField(_, LongType, nullable = false))
   }
 
   /** PER-SEGMENT isotonic calibration — [[isotonicFit]] generalized by
@@ -1531,33 +1537,15 @@ object Stats {
     )
     val out = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
     rows.groupBy(_.getString(0)).foreach { case (k, rs) =>
-      val stack = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long)]
-      rs.sortBy(_.getLong(1)).foreach { r =>
-        stack += ((r.getLong(1), r.getLong(1), r.getLong(2), r.getLong(3)))
-        var merging = true
-        while (merging && stack.size >= 2) {
-          val top  = stack(stack.size - 1)
-          val prev = stack(stack.size - 2)
-          if (BigInt(prev._3) * top._4 >= BigInt(top._3) * prev._4) {
-            stack.remove(stack.size - 1)
-            stack(stack.size - 1) = (prev._1, top._2, prev._3 + top._3, prev._4 + top._4)
-          } else merging = false
-        }
-      }
-      stack.foreach(p => out += org.apache.spark.sql.Row(k, p._1, p._2, p._3, p._4))
+      pavaPools(rs.sortBy(_.getLong(1)).map(r => (r.getLong(1), r.getLong(2), r.getLong(3))))
+        .foreach(p => out += org.apache.spark.sql.Row(k, p._1, p._2, p._3, p._4))
     }
     import scala.jdk.CollectionConverters._
     import org.apache.spark.sql.types._
     spark
       .createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](out.asJava),
-        StructType(Seq(
-          StructField("key", StringType, nullable = false),
-          StructField("bucket_lo", LongType, nullable = false),
-          StructField("bucket_hi", LongType, nullable = false),
-          StructField("pos", LongType, nullable = false),
-          StructField("n", LongType, nullable = false),
-        )),
+        StructType(StructField("key", StringType, nullable = false) +: poolFields),
       )
       .withColumn("rate_ppm", expr("pos * 1000000L div n"))
   }

@@ -638,7 +638,6 @@ object DedupQueries {
     // drops them (no sig row) while the native expression would emit a
     // 0 signature — filter them here so both sides agree by
     // construction, not by accident of the current testdata.
-    graft.functions.SimHash32Expr.registerOn(s)
     documents(s, d)
       .filter(size(graft.ops.Text.tokens(col("text"))) >= 3)
       .select(col("doc_id"), graft.functions.SimHash32Expr.simhash32(col("text")).as("simhash"))
@@ -663,7 +662,6 @@ object DedupQueries {
        |FROM sigs a JOIN sigs b ON a.doc_id < b.doc_id
        |WHERE bit_count(xor(a.simhash, b.simhash)) <= 4""".stripMargin,
   ) { (s, d) =>
-    graft.functions.SimHash32Expr.registerOn(s)
     // shingle-less docs carry no signature on either side (see
     // ddp_simhash_sigs): without this filter two sub-3-token docs
     // would pair at hamming 0 here but produce no oracle pair
@@ -724,7 +722,6 @@ object DedupQueries {
     // the signature stage is map-only over the documents scan — no
     // shingle shuffle — leaving the banded self-join as the query's
     // only exchange.
-    graft.functions.SimHash64Md5Expr.registerOn(s)
     // same zero-shingle guard as the 32-bit queries: the oracle has no
     // sig row for sub-3-token docs, the native expression returns 0
     val sigs = documents(s, d)

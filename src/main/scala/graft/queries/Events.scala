@@ -1457,7 +1457,6 @@ object Events {
       s: org.apache.spark.sql.SparkSession,
       d: String,
   ): org.apache.spark.sql.DataFrame = {
-    graft.functions.DtwExpr.registerOn(s)
     val series = dtwSeriesDf(s, d)
     series
       .select(col("t").as("type_a"), col("arr").as("__a"))
@@ -1588,7 +1587,6 @@ object Events {
          |FROM al GROUP BY 1""".stripMargin
     },
   ) { (s, d) =>
-    graft.functions.DtwPathExpr.registerOn(s)
     val pairs = dtwPairsCheckpointed(s, d)
     val medoid = pairs
       .select(col("type_a").as("t"), col("dtw"))

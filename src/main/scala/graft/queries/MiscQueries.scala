@@ -85,8 +85,8 @@ object MiscQueries {
   }
 
   /** Native SQL surface of the custom codegen'd expression
-    * ([[graft.functions.FloatVecDot]] via GraftExtensions /
-    * registerOn): self dot products through SQL text. */
+    * ([[graft.functions.FloatVecDot]] via
+    * [[graft.GraftExtensions.register]]): self dot products through SQL text. */
   private val floatDotSql = Q(
     "misc_float_dot_sql",
     s"""SELECT vec_id,
@@ -95,7 +95,7 @@ object MiscQueries {
        |              (x, y) -> x + y) AS self_dot
        |FROM embeddings""".stripMargin,
   ) { (s, d) =>
-    graft.functions.FloatVecDot.registerOn(s)
+    graft.GraftExtensions.register(s)
     embeddings(s, d).createOrReplaceTempView("v_embeddings")
     s.sql("SELECT vec_id, float_dot(embedding, embedding) AS self_dot FROM v_embeddings")
   }

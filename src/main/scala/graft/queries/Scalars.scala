@@ -119,7 +119,6 @@ object Scalars {
       |FROM nation a JOIN nation b ON a.n_name < b.n_name
       |WHERE damerau_levenshtein(a.n_name, b.n_name) <= 4""".stripMargin,
   ) { (s, d) =>
-    graft.functions.DamerauLevenshteinExpr.registerOn(s)
     val dl = graft.functions.DamerauLevenshteinExpr.damerau_levenshtein _
     val a  = nation(s, d).select(col("n_name").as("a_name"))
     val b  = nation(s, d).select(col("n_name").as("b_name"))
@@ -146,7 +145,6 @@ object Scalars {
       |FROM nation a JOIN nation b ON a.n_name < b.n_name
       |WHERE jaro_winkler_similarity(a.n_name, b.n_name) > 0.7""".stripMargin,
   ) { (s, d) =>
-    graft.functions.JaroWinklerExpr.registerOn(s)
     val jwf = graft.functions.JaroWinklerExpr.jaro_winkler _
     val a   = nation(s, d).select(col("n_name").as("a_name"))
     val b   = nation(s, d).select(col("n_name").as("b_name"))

@@ -2155,7 +2155,6 @@ object SimilarityQueries {
        |    // (2 * CAST(n1 AS HUGEINT) * n2) AS BIGINT) AS auc_ppm
        |FROM a""".stripMargin,
   ) { (s, d) =>
-    graft.functions.FloatVecDot.registerOn(s)
     val emb = embeddings(s, d)
     val probe = emb
       .filter(col("label") === 0)
@@ -2164,7 +2163,10 @@ object SimilarityQueries {
       .select(col("embedding").as("__pe"))
     val scored = emb
       .crossJoin(broadcast(probe))
-      .select(expr("float_dot(embedding, __pe)").as("__s"), (col("label") === 0).as("__is1"))
+      .select(
+        graft.functions.FloatVecDot.float_dot(col("embedding"), col("__pe")).as("__s"),
+        (col("label") === 0).as("__is1"),
+      )
     graft.ops.Eval.rocAuc(scored, col("__s"), col("__is1"))
   }
 

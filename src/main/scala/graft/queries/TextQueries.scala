@@ -1511,7 +1511,6 @@ object TextQueries {
       |  CAST(buf[m+2] * 2 * 1000000 // (n + m) AS BIGINT) AS sim_ppm
       |FROM rec WHERE s = (n + 1) * (m + 1) - 1""".stripMargin,
   ) { (s, d) =>
-    graft.functions.LcsLenExpr.registerOn(s)
     val t = documents(s, d)
       .select(col("doc_id"), slice(graft.ops.Text.tokens(col("text")), 1, 40).as("toks"))
     t.filter(col("doc_id") < 40)

@@ -435,7 +435,7 @@ class PlanSpec extends AnyFunSuite {
 
   test("EditDistancePrefilter: bounded distance predicates gain the length guard; rows unchanged") {
     graft.plans.EditDistancePrefilter.installOn(spark)
-    graft.functions.DamerauLevenshteinExpr.registerOn(spark)
+    graft.GraftExtensions.register(spark)
     val n = Tables.nation(spark, sf).select(org.apache.spark.sql.functions.col("n_name"))
     n.createOrReplaceTempView("v_edp_nation")
 
@@ -532,7 +532,6 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("native damerau_levenshtein participates in codegen (no interpreted fallback marker)") {
-    graft.functions.DamerauLevenshteinExpr.registerOn(spark)
     val n = Tables.nation(spark, sf)
     val d = n.select(graft.functions.DamerauLevenshteinExpr.damerau_levenshtein(
       org.apache.spark.sql.functions.col("n_name"),
@@ -713,7 +712,6 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("native float_dot participates in codegen (no interpreted fallback marker)") {
-    graft.functions.FloatVecDot.registerOn(spark)
     val emb = Tables.embeddings(spark, sf)
     val d = emb.select(graft.functions.FloatVecDot.float_dot(
       org.apache.spark.sql.functions.col("embedding"),

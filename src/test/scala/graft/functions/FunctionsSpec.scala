@@ -59,8 +59,6 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("ShingleGen generator rows equal the shingle_set+explode form on real documents") {
-    ShingleGen.registerOn(spark)
-    ShingleSetExpr.registerOn(spark, Seq(3))
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val viaGen = docs.select(col("doc_id"), ShingleGen.shingle_gen(col("text"), 3).as("sh"))
     // explicitly the ARRAY expression + explode — Dedup.shingleSets now
@@ -78,7 +76,6 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("simhash32 expression is bit-equal to the relational pipeline on real documents") {
-    SimHash32Expr.registerOn(spark)
     val docs = spark.read
       .parquet("/root/testdata/sf0.001/documents.parquet")
       .select("doc_id", "text")
@@ -97,8 +94,6 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("simhash64_md5 expression is bit-equal to the relational pipeline; low 32 = simhash32") {
-    graft.functions.SimHash64Md5Expr.registerOn(spark)
-    SimHash32Expr.registerOn(spark)
     val docs = spark.read
       .parquet("/root/testdata/sf0.001/documents.parquet")
       .select("doc_id", "text")
@@ -174,7 +169,7 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("simhash32 via SQL text; short documents yield 0 (no shingles)") {
-    SimHash32Expr.registerOn(spark)
+    graft.GraftExtensions.register(spark)
     Seq((1L, "one two"), (2L, "a b c d")).toDF("id", "text").createOrReplaceTempView("v_sh")
     val rows = spark.sql("SELECT id, simhash32(text) AS s FROM v_sh").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -201,7 +196,7 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("shingle_set: short documents yield empty set; n respected") {
-    ShingleSetExpr.registerOn(spark, Seq(2, 3))
+    graft.GraftExtensions.register(spark)
     Seq((1L, "one two"), (2L, "a b c a b c")).toDF("id", "text").createOrReplaceTempView("v_shs")
     val r3 = spark.sql("SELECT id, shingle_set_3(text) AS s FROM v_shs").collect()
       .map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
@@ -229,7 +224,7 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("damerau_levenshtein expression: SQL registry + codegen agree with the static eval") {
-    DamerauLevenshteinExpr.registerOn(spark)
+    graft.GraftExtensions.register(spark)
     val rows = Seq(
       ("CA", "ABC"), ("ab", "ba"), ("kitten", "sitting"), ("", "x"),
       ("GERMANY", "ROMANIA"), ("UNITED STATES", "UNITED KINGDOM"),
@@ -262,7 +257,7 @@ class FunctionsSpec extends AnyFunSuite {
     // boost only above 0.7 and the prefix caps at 4
     assert(similarity("abcdefgh", "abcdzzzz") < 1.0)
     // SQL registry path + null propagation
-    JaroWinklerExpr.registerOn(spark)
+    graft.GraftExtensions.register(spark)
     val v = spark.sql("SELECT jaro_winkler('martha', 'marhta') AS j").head().getDouble(0)
     assert(v === 0.9611111111111111)
     assert(spark.sql("SELECT jaro_winkler(CAST(NULL AS STRING), 'x') AS j").head().isNullAt(0))
@@ -270,9 +265,9 @@ class FunctionsSpec extends AnyFunSuite {
 
   test("float_dot resolves from SQL text through the function registry") {
     // (withExtensions only takes effect on a fresh SparkSession; the
-    // shared test session uses the imperative registration path, which
-    // installs the same builder GraftExtensions injects.)
-    FloatVecDot.registerOn(spark)
+    // shared test session installs the same table through
+    // GraftExtensions.register.)
+    graft.GraftExtensions.register(spark)
     val v = spark
       .sql("SELECT float_dot(array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT)), array(CAST(3.0 AS FLOAT), CAST(4.0 AS FLOAT))) AS d")
       .head()
@@ -281,7 +276,7 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("lcs_len: hand-checked subsequences; order sensitivity; null elements never match") {
-    LcsLenExpr.registerOn(spark)
+    graft.GraftExtensions.register(spark)
     def lcs(a: Seq[String], b: Seq[String]): Long = Seq((a, b))
       .toDF("a", "b")
       .select(LcsLenExpr.lcs_len(col("a"), col("b")).as("d"))
@@ -301,7 +296,7 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("dtw_distance: hand-checked alignment, band clipping, degenerate inputs") {
-    DtwExpr.registerOn(spark)
+    graft.GraftExtensions.register(spark)
     def dtw(a: Seq[Long], b: Seq[Long], w: Int): Option[Long] = {
       val r = Seq((a, b))
         .toDF("a", "b")
@@ -337,8 +332,6 @@ class FunctionsSpec extends AnyFunSuite {
 
   test("dtw_path: valid monotone path whose cost equals dtw_distance; pinned ties") {
     import graft.functions.{DtwExpr, DtwPathExpr}
-    DtwExpr.registerOn(spark)
-    DtwPathExpr.registerOn(spark)
     def path(a: Seq[Long], b: Seq[Long], w: Int): Option[Seq[(Int, Int)]] = {
       val r = Seq((a, b))
         .toDF("a", "b")
@@ -375,7 +368,6 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("BoundValue: same value as the literal, interpreted and generated; a new value reuses the class") {
-    BoundValue.registerOn(spark)
     def run(v: Long, nullable: Boolean) = spark.range(0, 50, 1, 2)
       .select((col("id") + BoundValue.bound_value(lit(v) * 2)).as("s"),
         BoundValue.bound_value(lit(if (nullable) null else "x")).as("n"))

@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.SparkTestBase
-import graft.functions.FloatVecDot
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -977,7 +976,6 @@ class OpsSpec extends AnyFunSuite {
       (i.toLong, Array.fill(64)(rnd.nextFloat() - 0.5f), Array.fill(64)(rnd.nextFloat() - 0.5f))
     }
     val df = vecs.toDF("id", "a", "b")
-    FloatVecDot.registerOn(spark)
     val rows = df
       .select(
         Similarity.dotFold(col("a"), col("b")).as("fold"),
@@ -1317,8 +1315,6 @@ class OpsSpec extends AnyFunSuite {
 
   test("minhashLshPairsFromSketches equals minhashLshPairs over the shingle table, Jaccard included") {
     import graft.functions.{MinHashMd5Expr, ShingleSetExpr}
-    MinHashMd5Expr.registerOn(spark, 3, 16)
-    ShingleSetExpr.registerOn(spark, Seq(3))
     val planted = plantedCorpus.toDF("doc_id", "text")
     val sf001   = spark.read.parquet("perfbench/data/sf0.01/documents.parquet")
     for ((name, docs) <- Seq("planted" -> planted, "sf0.01" -> sf001)) {
@@ -1819,7 +1815,6 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("annRerankTopK: with a full-coverage pool the rerank equals exact inner-product top-k") {
-    FloatVecDot.registerOn(spark)
     val vecs = Seq(
       (0L, Array(1.0f, 0.0f)),
       (1L, Array(0.9f, 0.1f)),
@@ -1834,7 +1829,6 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("annIvfInt8TopK: integer ranking within probed cells; full probe equals int8 brute force") {
-    FloatVecDot.registerOn(spark)
     val emb = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
     val cents = Similarity.ivfCentroids(emb, "vec_id", "embedding", 4)
     // probing EVERY cell makes the candidate set the whole corpus, so
