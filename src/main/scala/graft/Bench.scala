@@ -154,8 +154,9 @@ object Bench {
     val fl    = "flaky" -> names(flaky.toSeq)
     val total = if (results.nonEmpty) results.values.sum else 0.0
     val demo  = JObject(demoFixedConfig.toList.sorted.map { case (k, v) => k -> JString(v) })
-    println(line("metric" -> JString("per_query"), sf, fs, fl, "demo_fixed_config" -> demo,
-      "queries" -> secs(results.toSeq.sortBy(_._2))))
+    val cpusField = "cpus" -> JInt(nCpus)
+    println(line("metric" -> JString("per_query"), sf, cpusField, fs, fl,
+      "demo_fixed_config" -> demo, "queries" -> secs(results.toSeq.sortBy(_._2))))
     // FULL per-query map persisted to a committed artifact (r16 verdict
     // item 6): the driver's 2000-char tail keeps only the 10 heaviest
     // timings, so round-over-round comparison was blind for ~97% of the
@@ -165,7 +166,7 @@ object Bench {
     try {
       val outPath = sys.env.getOrElse(
         "SPARK_GRAFT_BENCH_OUT", s"tools/bench_last_c$cpus.json")
-      val fullJson = line(sf, "cpus" -> JInt(nCpus), fs, fl, "shared_build" -> secs(sharedArts),
+      val fullJson = line(sf, cpusField, fs, fl, "shared_build" -> secs(sharedArts),
         "queries" -> secs(results.toSeq.sortBy(_._1)))
       java.nio.file.Files.write(
         java.nio.file.Paths.get(outPath),
@@ -214,10 +215,10 @@ object Bench {
       "worst" -> f3(seriesWorst)))
     // PER-QUERY INFLATION self-annotation (r13 post-mortem): wall /
     // committed best-ever (tools/bench_anchors.json, min over clean
-    // runs at the same SF) — a contaminated record annotates itself
-    // row-by-row even if every probe sample missed the load. Anchors
-    // are advisory: queries without one (new gates, changed SF) are
-    // simply unannotated.
+    // runs at the same SF and core count) — a contaminated record
+    // annotates itself row-by-row even if every probe sample missed the
+    // load. Anchors are advisory: queries without one (new gates,
+    // changed SF or core count) are simply unannotated.
     val anchors: Map[String, Double] = {
       val path = sys.env.getOrElse("SPARK_GRAFT_ANCHORS", "tools/bench_anchors.json")
       scala.util
@@ -228,10 +229,12 @@ object Bench {
               java.nio.charset.StandardCharsets.UTF_8))
           // compare the sf BASENAME (trailing-slash-proof — a record
           // run with SPARK_GRAFT_SF_DIR=/.../sf0.1/ must still
-          // self-annotate); only numeric anchors are read
+          // self-annotate); walls scale with the core count, so an
+          // anchor from another count is no reference; only numeric
+          // anchors are read
           val sfBase = sfDir.replaceAll("/+$", "").split('/').last
-          (json \ "sf", json \ "anchors") match {
-            case (JString(sf), JObject(fields)) if sf == sfBase =>
+          (json \ "sf", json \ "cpus", json \ "anchors") match {
+            case (JString(sf), JInt(c), JObject(fields)) if sf == sfBase && c == nCpus =>
               fields.collect {
                 case (k, JDouble(v)) => k -> v
                 case (k, JInt(v))    => k -> v.toDouble

@@ -1,5 +1,6 @@
 package graft.ocsf
 
+import graft.io.NioLocalFileSystem
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -62,6 +63,7 @@ object IngestMetrics {
       .createDataFrame(java.util.Collections.singletonList(row), schema)
       .coalesce(1)
       .write
+      .options(NioLocalFileSystem.options)
       .mode("append")
       .parquet(path)
   }

@@ -1,6 +1,7 @@
 package graft.ocsf
 
 import graft.functions.BoundValue
+import graft.io.NioLocalFileSystem
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -40,6 +41,7 @@ object Landing {
   def append(findings: DataFrame, path: String): Unit =
     prepare(findings)
       .write
+      .options(NioLocalFileSystem.options)
       .mode("append")
       .partitionBy("loaded_date")
       .parquet(path)

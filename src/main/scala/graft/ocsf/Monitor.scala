@@ -1,5 +1,6 @@
 package graft.ocsf
 
+import graft.io.NioLocalFileSystem
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -133,7 +134,8 @@ object Monitor {
           batch.persist()
           try
             batch.filter(col("_corrupt").isNotNull).select(col("_corrupt"))
-              .write.mode("append").text(s"$failedDir/batch_$batchId")
+              .write.options(NioLocalFileSystem.options).mode("append")
+              .text(s"$failedDir/batch_$batchId")
           finally batch.unpersist()
         }
         metricsPath.foreach { mp =>
@@ -150,20 +152,36 @@ object Monitor {
       // -time cadence until stopped.
       else writer.trigger(Trigger.ProcessingTime(pollInterval))
     // The query runs on a clone of the caller's session, taken in
-    // start(). Under Spark's per-session artifact isolation each clone
-    // gets an executor classloader of its own, and the codegen cache
-    // does not serve classes across classloaders, so a query on an
-    // isolated clone compiles its whole plan again. The clone is taken
-    // with isolation off (it keeps that setting; this pipeline adds no
-    // artifacts) and the caller's setting is restored; the query stays
-    // in the caller's `spark.streams`.
-    val before = spark.conf.getOption(ArtifactIsolation)
-    spark.conf.set(ArtifactIsolation, "false")
+    // start(). The clone keeps [[StreamSettings]]; the caller's values
+    // are restored once it is taken, and the query stays in the
+    // caller's `spark.streams`.
+    val before = StreamSettings.keys.map(k => k -> spark.conf.getOption(k))
+    StreamSettings.foreach { case (k, v) => spark.conf.set(k, v) }
     try triggered.start()
-    finally before.fold(spark.conf.unset(ArtifactIsolation))(spark.conf.set(ArtifactIsolation, _))
+    finally before.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
   }
 
-  private val ArtifactIsolation = "spark.sql.artifact.isolation.enabled"
+  /** The stream's session settings:
+    *  - artifact isolation off. Under Spark's per-session artifact
+    *    isolation each clone gets an executor classloader of its own,
+    *    and the codegen cache does not serve classes across
+    *    classloaders, so a query on an isolated clone compiles its whole
+    *    plan again. This pipeline adds no artifacts.
+    *  - local paths through [[NioLocalFileSystem]], and the offset and
+    *    commit logs through Spark's `FileSystem`-based checkpoint
+    *    manager: the default `FileContext` manager renames through
+    *    link-status lookups, which fork a process each on the local
+    *    filesystem. For local paths both managers check that the batch
+    *    file is absent and then rename, so a second writer of a batch
+    *    fails the same way under either. Other schemes keep their
+    *    filesystems. The file source's own log is created by the
+    *    stream thread on the caller's session, so it takes the caller's
+    *    settings unless it is created before they are restored. */
+  private[ocsf] val StreamSettings: Map[String, String] = NioLocalFileSystem.options ++ Map(
+    "spark.sql.artifact.isolation.enabled" -> "false",
+    "spark.sql.streaming.checkpointFileManagerClass" ->
+      "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager",
+  )
 
   /** ST2: graceful shutdown, bounded by `timeoutMs`. Deliberately no
     * drain: `processAllAvailable` can block forever under continuous

@@ -1,5 +1,6 @@
 package graft.ocsf
 
+import graft.io.NioLocalFileSystem
 import org.apache.spark.sql.SparkSession
 
 /** CLI entry points mirroring the reference's scripts (SURVEY.md §3):
@@ -56,7 +57,7 @@ object OcsfCli {
         SarifToOcsf.writeFindingsArray(findings, output)
         println(s"[ocsf] converted ${spark.read.option("multiLine", true).json(output).count()} findings -> $output")
       } else {
-        findings.write.mode("overwrite").json(output)
+        findings.write.options(NioLocalFileSystem.options).mode("overwrite").json(output)
         println(s"[ocsf] converted ${spark.read.json(output).count()} findings -> $output")
       }
       0

@@ -1,6 +1,7 @@
 package graft.ocsf
 
 import graft.functions.BoundValue
+import graft.io.NioLocalFileSystem
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -220,7 +221,8 @@ object Staging {
     val out = enforceUidPattern(transform(fresh), storedUidPattern(spark, stagingPath))
       .observe(obs, count(lit(1)).as("rows"))
     // uid-sorted files for row-group skipping (see mergeRun's note)
-    out.sortWithinPartitions("finding_uid").write.mode("append").parquet(stagingPath)
+    out.sortWithinPartitions("finding_uid").write.options(NioLocalFileSystem.options)
+      .mode("append").parquet(stagingPath)
     obs.get("rows").asInstanceOf[Long]
   }
 
@@ -288,7 +290,9 @@ object Staging {
       beforeCommit: () => Unit,
   ): Long = {
     val rootPath = new org.apache.hadoop.fs.Path(stagingRoot)
-    val rootFs   = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // the root's own Hadoop writes (the first run's mkdirs) take the writers' map
+    val rootFs   = rootPath.getFileSystem(
+      spark.sessionState.newHadoopConfWithOptions(NioLocalFileSystem.options))
     // Single-writer enforcement (the transactionality the reference
     // inherits from Postgres): remember the raw pointer as of this
     // run's read, and commit only if it has not moved since (CAS),
@@ -377,6 +381,7 @@ object Staging {
         .observe(obs, count(lit(1)).as("rows"), maxLoadedAtMicros.as("watermark"))
         .sortWithinPartitions("finding_uid")
         .write
+        .options(NioLocalFileSystem.options)
         .mode("overwrite")
         .parquet(versionDir)
       val m = obs.get
@@ -529,11 +534,12 @@ object Staging {
     *
     * Local paths take the platform's atomic replace
     * (`Files.move` with `ATOMIC_MOVE`), the routing [[exclusiveCreate]]
-    * uses: Hadoop's local shim forks `chmod` and `readlink` processes
-    * for the create and the `FileContext` rename (tens of ms per side
-    * file). No checksum file is written; a stale one left by an earlier
-    * Hadoop write of the name is removed before the swap, since the
-    * checksummed reader verifies against it. */
+    * uses: one rename system call. Hadoop's `FileContext` rename runs
+    * on a `RawLocalFileSystem` of its own, not the one `fs.file.impl`
+    * names, and without `libhadoop` it forks a `readlink` for each of
+    * its link-status lookups. No checksum file is written; a stale one
+    * left by an earlier Hadoop write of the name is removed before the
+    * swap, since the checksummed reader verifies against it. */
   private def writeSideFile(
       fs: org.apache.hadoop.fs.FileSystem,
       root: org.apache.hadoop.fs.Path,

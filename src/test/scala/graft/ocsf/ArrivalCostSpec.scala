@@ -5,13 +5,17 @@ import graft.SparkTestBase.tmpDir
 import java.nio.file.{Files, Paths}
 import java.util.UUID
 import java.util.concurrent.ConcurrentLinkedQueue
+import jdk.jfr.Recording
+import jdk.jfr.consumer.RecordingFile
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** The fixed cost of one steady arrival (monitor → merge → dashboard
   * read): once an arrival of the same shape has run, the next one
-  * compiles no generated class. */
+  * compiles no generated class, and the parquet writers, the commit
+  * protocol and the stream's offset and commit logs start no process. */
 class ArrivalCostSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
 
@@ -23,6 +27,41 @@ class ArrivalCostSpec extends AnyFunSuite {
        | "finding_info": {"uid": "$uid", "title": "T", "desc": "D", "created_time": 1709287200000},
        | "enrichments": [{"name": "scan_metadata", "data": {"scan_run_id": "$run"}}]}"""
       .stripMargin.replaceAll("\n", "")
+
+  /** Whether a started process's stack (class names) is a pipeline
+    * write: a parquet writer, the commit protocol, a `graft.ocsf` call,
+    * or a write of the stream's offset or commit log. Those logs write
+    * through their base class, so a frame names `HDFSMetadataLog`; the
+    * file source's own log is the one metadata log with a frame of its
+    * own, `FileStreamSourceLog`, and is not counted. */
+  private def pipelineWrite(stack: Seq[String]): Boolean =
+    stack.exists(c => c.startsWith("graft.ocsf.") ||
+      c == "org.apache.parquet.hadoop.ParquetFileWriter" ||
+      c == "org.apache.hadoop.mapreduce.lib.output.FileOutputCommitter") ||
+      (stack.exists(_.endsWith(".HDFSMetadataLog")) && !stack.exists(_.endsWith(".FileStreamSourceLog")))
+
+  /** `body`'s value and the processes the JVM starts while it runs,
+    * each as the class names of its stack (JFR `jdk.ProcessStart`,
+    * innermost frame first). */
+  private def processStarts[A](body: => A): (A, Seq[Seq[String]]) = {
+    val rec = new Recording()
+    rec.enable("jdk.ProcessStart").withStackTrace()
+    rec.start()
+    val value =
+      try body
+      finally rec.stop()
+    val file = Files.createTempFile("arrival", ".jfr")
+    try {
+      rec.dump(file)
+      value -> RecordingFile.readAllEvents(file).asScala.toSeq.map { e =>
+        Option(e.getStackTrace).fold(Seq.empty[String])(
+          _.getFrames.asScala.toSeq.map(_.getMethod.getType.getName))
+      }
+    } finally {
+      rec.close()
+      Files.delete(file)
+    }
+  }
 
   private def await(what: String)(cond: => Boolean): Unit = {
     val deadline = System.nanoTime() + 30L * 1000000000L
@@ -65,9 +104,15 @@ class ArrivalCostSpec extends AnyFunSuite {
       }
       val (initial, _) = arrival(0) // the first build: no snapshot yet
       val (warm, _)    = arrival(1) // the first merge over a snapshot
-      val (steady, id) = arrival(2)
+      val ((steady, id), forks) = processStarts(arrival(2))
       info(s"classes compiled: initial $initial, warm $warm, steady $steady")
       assert(steady === 0L, s"a steady arrival compiled $steady generated classes")
+      val pipelineForks = forks.filter(pipelineWrite)
+      info(s"processes started by the steady arrival: ${forks.size}, " +
+        s"${pipelineForks.size} from a pipeline write")
+      assert(pipelineForks.isEmpty,
+        s"a steady arrival's writes started ${pipelineForks.size} processes, the first from " +
+          pipelineForks.headOption.fold("")(_.take(24).mkString(" < ")))
       assert(Staging.readCurrent(spark, staging).get.count() === 6L)
       assert(IngestMetrics.summary(spark, s"$root/metrics").head().getAs[Long]("good_rows") === 6L)
       // the query ran in the caller's spark.streams

@@ -6,7 +6,9 @@ should label itself row-by-row, not wait for a human to re-measure).
 
 Usage: pipe or point at a bench stdout capture; the script finds the
 per_query line, REFUSES contaminated input (the total line's
-contended flag), and min-merges into the anchors file.
+contended flag) and a run made at another sf or core count than the
+anchors file's (walls scale with both), and min-merges into the
+anchors file.
 
     python3 tools/anchors.py bench_run.out [--anchors tools/bench_anchors.json]
 """
@@ -45,11 +47,17 @@ def main():
                  "(--force to override)")
 
     sf = os.path.basename(per_query.get("sf", "").rstrip("/"))
-    anchors = {"sf": sf, "anchors": {}}
+    cpus = per_query.get("cpus")
+    if not isinstance(cpus, int):
+        sys.exit("per_query line records no cpus - refusing to anchor walls of an "
+                 "unknown core count")
+    anchors = {"sf": sf, "cpus": cpus, "anchors": {}}
     if os.path.exists(args.anchors):
         anchors = json.load(open(args.anchors))
         if anchors.get("sf") != sf:
             sys.exit(f"anchors file is for sf={anchors.get('sf')}, run is {sf}")
+        if anchors.get("cpus") != cpus:
+            sys.exit(f"anchors file is for cpus={anchors.get('cpus')}, run is {cpus}")
         if not isinstance(anchors.get("anchors"), dict):
             sys.exit(f"{args.anchors} has no 'anchors' object - refusing to clobber "
                      "a malformed file (fix or delete it)")
