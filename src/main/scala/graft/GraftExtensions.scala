@@ -3,7 +3,7 @@ package graft
 import graft.functions._
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BitwiseAnd, Expression, ExpressionInfo, Literal}
 
 /** Engine extensions, injected via
   * `SparkSession.builder().withExtensions(new GraftExtensions)` or
@@ -32,7 +32,9 @@ object GraftExtensions {
         DamerauLevenshteinExpr(e(0), e(1))
       ),
       fn("jaro_winkler", classOf[JaroWinklerExpr])(e => JaroWinklerExpr(e(0), e(1))),
-      fn("simhash32", classOf[SimHash32Expr])(e => SimHash32Expr(e(0))),
+      fn("simhash32", classOf[SimHash64Md5Expr])(e =>
+        BitwiseAnd(SimHash64Md5Expr(e(0)), Literal(0xFFFFFFFFL))
+      ),
       fn("simhash64_md5", classOf[SimHash64Md5Expr])(e => SimHash64Md5Expr(e(0))),
       fn("lcs_len", classOf[LcsLenExpr])(e => LcsLenExpr(e(0), e(1))),
       fn("dtw_distance", classOf[DtwExpr])(e => DtwExpr(e(0), e(1), e(2))),

@@ -1,6 +1,7 @@
 package graft.functions
 
 import java.security.MessageDigest
+import java.util.HexFormat
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -10,15 +11,14 @@ import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Whole-document k-seed md5 MinHash signature as a single native
-  * expression: tokenize → distinct `n`-gram shingles → per seed s the
-  * min of md5("s:" + shingle) hex — one JVM pass per row, the same
-  * one-pass treatment [[SimHash32Expr]]/[[SimHash64Md5Expr]] give
-  * SimHash. Semantics are EXACTLY
-  * [[graft.ops.Dedup.minhashSignatures]] over
-  * [[graft.ops.Dedup.shingleSets]] (same `\w+` tokenizer, same
-  * space-joined shingles, same seed-prefix hash; min over lowercase
-  * hex strings — ASCII, so JVM String ordering and Spark's UTF8 binary
-  * min agree), asserted bit-equal in FunctionsSpec.
+  * expression: distinct `n`-gram shingles ([[Shingles.distinct]]) →
+  * per seed s the min of md5("s:" + shingle) hex — one JVM pass per
+  * row, the same one-pass treatment [[SimHash64Md5Expr]] gives SimHash.
+  * Semantics are EXACTLY [[graft.ops.Dedup.minhashSignatures]] over
+  * [[graft.ops.Dedup.shingleSets]] (same shingles, same seed-prefix
+  * hash; min over lowercase hex strings — ASCII, so JVM String ordering
+  * and Spark's UTF8 binary min agree), asserted bit-equal in
+  * FunctionsSpec.
   *
   * The relational form explodes every shingle and runs a k-way min
   * hash-aggregate (map-side combined, but still a k·|shingles| row
@@ -35,6 +35,7 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 case class MinHashMd5Expr(child: Expression, n: Int, k: Int)
     extends UnaryExpression
+    with TextInput
     with CodegenFallback {
 
   require(n >= 1, s"n must be >= 1, got $n")
@@ -43,31 +44,17 @@ case class MinHashMd5Expr(child: Expression, n: Int, k: Int)
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def nullable: Boolean  = true
 
-  private val tokenRe = java.util.regex.Pattern.compile("\\w+")
-
-  private val hexDigits = "0123456789abcdef".toCharArray
-
   // "<seed>:" prefixes, built once — the per-(shingle, seed) digest is
   // md.update(prefix) + md.update(shingleBytes), no string allocation
   // in the hot loop.
   private val seedPrefixes: Array[Array[Byte]] =
     Array.tabulate(k)(s => s"$s:".getBytes("UTF-8"))
 
-  private def hex(bytes: Array[Byte]): String = {
-    val out = new Array[Char](bytes.length * 2)
-    var i = 0
-    while (i < bytes.length) {
-      val b = bytes(i) & 0xff
-      out(2 * i) = hexDigits(b >> 4)
-      out(2 * i + 1) = hexDigits(b & 0xf)
-      i += 1
-    }
-    new String(out)
-  }
-
   /** Unsigned lexicographic byte compare — identical ordering to the
     * lowercase-hex string compare the relational `min(md5(...))` does
-    * (each byte maps monotonically to its two hex chars). */
+    * (each byte maps monotonically to its two hex chars). Hand-written:
+    * it runs once per (shingle, seed), and most digests differ in their
+    * first byte. */
   private def ltUnsigned(a: Array[Byte], b: Array[Byte]): Boolean = {
     var i = 0
     while (i < a.length) {
@@ -80,31 +67,14 @@ case class MinHashMd5Expr(child: Expression, n: Int, k: Int)
   }
 
   override def nullSafeEval(input: Any): Any = {
-    val text   = input.asInstanceOf[UTF8String].toString
-    val m      = tokenRe.matcher(text)
-    val tokens = scala.collection.mutable.ArrayBuffer.empty[String]
-    while (m.find()) tokens += m.group()
-    if (tokens.length < n) return null
-
-    val shingles = scala.collection.mutable.HashSet.empty[String]
-    val sb       = new java.lang.StringBuilder
-    var i = 0
-    while (i <= tokens.length - n) {
-      sb.setLength(0)
-      var j = 0
-      while (j < n) {
-        if (j > 0) sb.append(' ')
-        sb.append(tokens(i + j))
-        j += 1
-      }
-      shingles += sb.toString
-      i += 1
-    }
+    val shingles = Shingles.distinct(input.asInstanceOf[UTF8String], n)
+    if (shingles.isEmpty) return null
 
     val mins = new Array[Array[Byte]](k)
     val md   = MessageDigest.getInstance("MD5")
-    shingles.foreach { sh =>
-      val shB  = sh.getBytes("UTF-8")
+    val it   = shingles.iterator()
+    while (it.hasNext) {
+      val shB  = it.next().getBytes("UTF-8")
       var seed = 0
       while (seed < k) {
         md.reset()
@@ -115,7 +85,8 @@ case class MinHashMd5Expr(child: Expression, n: Int, k: Int)
         seed += 1
       }
     }
-    new GenericArrayData(mins.map(d => UTF8String.fromString(hex(d))).toArray[Any])
+    val hex = HexFormat.of()
+    new GenericArrayData(mins.map(d => UTF8String.fromString(hex.formatHex(d))).toArray[Any])
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =

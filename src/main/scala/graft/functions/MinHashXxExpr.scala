@@ -27,6 +27,7 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 case class MinHashXxExpr(child: Expression, n: Int, k: Int)
     extends UnaryExpression
+    with TextInput
     with CodegenFallback {
 
   require(n >= 1, s"n must be >= 1, got $n")
@@ -35,8 +36,6 @@ case class MinHashXxExpr(child: Expression, n: Int, k: Int)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean  = true
 
-  private val tokenRe = java.util.regex.Pattern.compile("\\w+")
-
   // xxhash64(lit(s), sh) folds left from the expression's default seed
   // (42): h1 = hash(s: Int, 42), h2 = hash(sh, h1). h1 is a constant
   // per seed — precompute it.
@@ -44,30 +43,13 @@ case class MinHashXxExpr(child: Expression, n: Int, k: Int)
     Array.tabulate(k)(s => XxHash64Function.hash(s, IntegerType, 42L))
 
   override def nullSafeEval(input: Any): Any = {
-    val text   = input.asInstanceOf[UTF8String].toString
-    val m      = tokenRe.matcher(text)
-    val tokens = scala.collection.mutable.ArrayBuffer.empty[String]
-    while (m.find()) tokens += m.group()
-    if (tokens.length < n) return null
-
-    val shingles = scala.collection.mutable.HashSet.empty[String]
-    val sb       = new java.lang.StringBuilder
-    var i = 0
-    while (i <= tokens.length - n) {
-      sb.setLength(0)
-      var j = 0
-      while (j < n) {
-        if (j > 0) sb.append(' ')
-        sb.append(tokens(i + j))
-        j += 1
-      }
-      shingles += sb.toString
-      i += 1
-    }
+    val shingles = Shingles.distinct(input.asInstanceOf[UTF8String], n)
+    if (shingles.isEmpty) return null
 
     val mins = Array.fill(k)(Long.MaxValue)
-    shingles.foreach { sh =>
-      val u    = UTF8String.fromString(sh)
+    val it   = shingles.iterator()
+    while (it.hasNext) {
+      val u    = UTF8String.fromString(it.next())
       var seed = 0
       while (seed < k) {
         val h = XxHash64Function.hash(u, StringType, seedHashes(seed))

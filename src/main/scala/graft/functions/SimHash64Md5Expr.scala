@@ -4,20 +4,22 @@ import java.security.MessageDigest
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.graftbridge.ColumnExpr.{column, expression}
 import org.apache.spark.sql.types.{DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Whole-document 64-bit md5-twin SimHash as a single native
-  * expression — the one-pass form of
+  * expression over the document's distinct 3-gram shingles
+  * ([[Shingles.distinct]]) — the one-pass form of
   * [[graft.ops.Dedup.simhash64Md5]] over
-  * [[graft.ops.Dedup.shingleSets]], the same relationship
-  * [[SimHash32Expr]] has to `Dedup.simhash32` (bit-equality asserted in
-  * FunctionsSpec, including the 0L convention for sub-3-token
-  * documents).
+  * [[graft.ops.Dedup.shingleSets]] (bit-equality asserted in
+  * FunctionsSpec, including the 0L of a document with no shingles:
+  * no votes, no bits).
   *
   * Bit rule: bits 0–31 are each md5 hex nibble's top bit (value >= 8,
-  * exactly the 32-bit hash); bits 32–63 are each nibble's second bit
+  * exactly [[graft.ops.Dedup.simhash32]], so the 32-bit SimHash is
+  * this signature's low word); bits 32–63 are each nibble's second bit
   * (value & 4) — 64 independent bit sources from one md5 per shingle.
   * The relational form costs a shingle explode plus a 64-sum aggregate
   * (a shuffle of every shingle row); this runs scan-local, making the
@@ -28,31 +30,20 @@ import org.apache.spark.unsafe.types.UTF8String
   * expression codegen — deliberately [[CodegenFallback]]; the
   * surrounding projection still codegens.
   */
-case class SimHash64Md5Expr(child: Expression) extends UnaryExpression with CodegenFallback {
+case class SimHash64Md5Expr(child: Expression)
+    extends UnaryExpression
+    with TextInput
+    with CodegenFallback {
 
   override def dataType: DataType = LongType
 
-  private val tokenRe = java.util.regex.Pattern.compile("\\w+")
-
   override def nullSafeEval(input: Any): Any = {
-    val text   = input.asInstanceOf[UTF8String].toString
-    val m      = tokenRe.matcher(text)
-    val tokens = scala.collection.mutable.ArrayBuffer.empty[String]
-    while (m.find()) tokens += m.group()
-    if (tokens.length < 3) return 0L
-
-    val shingles = scala.collection.mutable.HashSet.empty[String]
-    var i = 0
-    while (i <= tokens.length - 3) {
-      shingles += s"${tokens(i)} ${tokens(i + 1)} ${tokens(i + 2)}"
-      i += 1
-    }
-
     val votes = new Array[Int](64)
     val md    = MessageDigest.getInstance("MD5")
-    shingles.foreach { sh =>
+    val it    = Shingles.distinct(input.asInstanceOf[UTF8String], 3).iterator()
+    while (it.hasNext) {
       md.reset()
-      val digest = md.digest(sh.getBytes("UTF-8"))
+      val digest = md.digest(it.next().getBytes("UTF-8"))
       var pos = 0
       while (pos < 32) {
         val b      = digest(pos / 2) & 0xff
@@ -77,4 +68,8 @@ case class SimHash64Md5Expr(child: Expression) extends UnaryExpression with Code
 
 object SimHash64Md5Expr {
   def simhash64_md5(text: Column): Column = column(SimHash64Md5Expr(expression(text)))
+
+  /** The 32-bit SimHash ([[graft.ops.Dedup.simhash32]]): the low word
+    * of [[simhash64_md5]]. */
+  def simhash32(text: Column): Column = simhash64_md5(text).bitwiseAND(lit(0xFFFFFFFFL))
 }

@@ -44,7 +44,7 @@ object SarifToOcsf {
     val now: Column =
       nowMillis.map(m => lit(m)).getOrElse(unix_millis(current_timestamp()))
 
-    // ---- per-run columns (hoisted once, exactly like the reference) ----
+    // ---- per-run columns (once per run, like the reference) ----
     val runs = sarif.select(explode(col("runs")).as("run"))
     val drv  = col("run.tool.driver")
 
@@ -94,15 +94,22 @@ object SarifToOcsf {
       transform(namedRules, r => struct(r.getField("id").as("key"), r.as("value")))
     )
 
-    val perRun = runs.select(
-      toolName.as("__tool_name"),
-      toolVersion.as("__tool_version"),
-      createdTime.as("__created_time"),
-      scanRunId.as("__scan_run_id"),
-      rulesMap.as("__rules"),
-      explode(coalesce(col("run.results"), array().cast(ArrayType(OcsfModel.sarifResult))))
-        .as("r"),
-    )
+    // The run-level columns are projected before the explode, so each
+    // result row carries them and not the whole `run` struct: computed
+    // in the exploding select, they would land above the Generate and
+    // every result row would hold its run's full results array,
+    // O(results²) bytes per file.
+    val runCols = Seq("__tool_name", "__tool_version", "__created_time", "__scan_run_id", "__rules")
+    val perRun = runs
+      .select(
+        toolName.as("__tool_name"),
+        toolVersion.as("__tool_version"),
+        createdTime.as("__created_time"),
+        scanRunId.as("__scan_run_id"),
+        rulesMap.as("__rules"),
+        coalesce(col("run.results"), array().cast(ArrayType(OcsfModel.sarifResult))).as("__results"),
+      )
+      .select(runCols.map(col) :+ explode(col("__results")).as("r"): _*)
 
     // ---- per-result expressions (_convert_result, :153-211) ----
     val r    = col("r")

@@ -13,10 +13,11 @@ import org.apache.spark.sql.functions._
   */
 object Text {
 
-  /** Word tokens (`\w+` runs; robust to repeated/trailing whitespace,
+  /** Word tokens ([[graft.functions.Shingles.TokenRegex]] runs, the
+    * tokenizer of every shingle; robust to repeated/trailing whitespace,
     * unlike a split-on-space). */
   def tokens(text: Column): Column =
-    regexp_extract_all(text, lit("\\w+"), lit(0))
+    regexp_extract_all(text, lit(graft.functions.Shingles.TokenRegex), lit(0))
 
   /** Number of word tokens. */
   def tokenCount(text: Column): Column = size(tokens(text))

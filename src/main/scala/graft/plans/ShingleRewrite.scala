@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.functions.ShingleGen
+import graft.functions.{ShingleGen, Shingles}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Generate, LogicalPlan, Project}
@@ -26,7 +26,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * The match is deliberately conservative — it fires only on the exact
   * library shape: `explode` (not `explode_outer`) of `array_distinct`
   * of the guarded transform built by [[graft.ops.Text.shingles]] over
-  * `regexp_extract_all(text, '\w+', 0)` tokens, with the text
+  * [[graft.ops.Text.tokens]] (the shared
+  * [[graft.functions.Shingles.TokenRegex]]), with the text
   * expression's references available from the Generate's child (the
   * inline single-select form). Anything else — a different tokenizer,
   * no distinct, a rewritten guard — is left untouched, because only
@@ -147,10 +148,11 @@ object ShingleRewrite extends Rule[LogicalPlan] {
     case _                 => None
   }
 
-  /** `regexp_extract_all(text, '\w+', 0)` → the text expression. */
+  /** [[graft.ops.Text.tokens]]`(text)`, i.e. `regexp_extract_all(text,
+    * Shingles.TokenRegex, 0)` → the text expression. */
   private def asTokens(e: Expression): Option[Expression] = e match {
     case RegExpExtractAll(text, Literal(re: UTF8String, StringType), Literal(0, IntegerType))
-        if re.toString == "\\w+" =>
+        if re.toString == Shingles.TokenRegex =>
       Some(text)
     case _ => None
   }

@@ -640,7 +640,7 @@ object DedupQueries {
     // construction, not by accident of the current testdata.
     documents(s, d)
       .filter(size(graft.ops.Text.tokens(col("text"))) >= 3)
-      .select(col("doc_id"), graft.functions.SimHash32Expr.simhash32(col("text")).as("simhash"))
+      .select(col("doc_id"), graft.functions.SimHash64Md5Expr.simhash32(col("text")).as("simhash"))
   }
 
   /** SimHash near-dup pairs at Hamming distance <= 4. */
@@ -667,7 +667,7 @@ object DedupQueries {
     // would pair at hamming 0 here but produce no oracle pair
     val sigs = documents(s, d)
       .filter(size(graft.ops.Text.tokens(col("text"))) >= 3)
-      .select(col("doc_id"), graft.functions.SimHash32Expr.simhash32(col("text")).as("simhash"))
+      .select(col("doc_id"), graft.functions.SimHash64Md5Expr.simhash32(col("text")).as("simhash"))
     Dedup.simhashPairs(sigs, maxHamming = 4)
   }
 

@@ -80,7 +80,7 @@ class FunctionsSpec extends AnyFunSuite {
       .parquet("/root/testdata/sf0.001/documents.parquet")
       .select("doc_id", "text")
     val native = docs
-      .select(col("doc_id"), SimHash32Expr.simhash32(col("text")).as("simhash"))
+      .select(col("doc_id"), SimHash64Md5Expr.simhash32(col("text")).as("simhash"))
       .collect()
       .map(r => r.getLong(0) -> r.getLong(1))
       .toMap
@@ -93,7 +93,7 @@ class FunctionsSpec extends AnyFunSuite {
     relational.foreach { case (id, sig) => assert(native(id) === sig, s"doc $id") }
   }
 
-  test("simhash64_md5 expression is bit-equal to the relational pipeline; low 32 = simhash32") {
+  test("simhash64_md5 expression is bit-equal to the relational pipeline") {
     val docs = spark.read
       .parquet("/root/testdata/sf0.001/documents.parquet")
       .select("doc_id", "text")
@@ -112,13 +112,6 @@ class FunctionsSpec extends AnyFunSuite {
       .toMap
     assert(relational.nonEmpty)
     relational.foreach { case (id, sig) => assert(native(id) === sig, s"doc $id") }
-    // strict widening of the 32-bit expression
-    val n32 = docs
-      .select(col("doc_id"), SimHash32Expr.simhash32(col("text")).as("s"))
-      .collect()
-      .map(r => r.getLong(0) -> r.getLong(1))
-      .toMap
-    native.foreach { case (id, sig) => assert((sig & 0xffffffffL) === n32(id), s"doc $id") }
   }
 
   test("minhash_md5 expression is bit-equal to the relational signature pipeline") {
@@ -175,6 +168,30 @@ class FunctionsSpec extends AnyFunSuite {
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(rows(1L) === 0L) // < 3 tokens
     assert(rows(2L) !== 0L)
+  }
+
+  test("the shingling expressions reject non-string input at analysis, before any job runs") {
+    graft.GraftExtensions.register(spark)
+    val sc    = spark.sparkContext
+    val group = "shingling-type-check"
+    sc.setJobGroup(group, "analysis only")
+    try {
+      for {
+        name <- Seq("simhash32", "simhash64_md5", "shingle_set_2", "shingle_set_3", "shingle_set_4")
+        arg  <- Seq("42", "array('a')")
+      } intercept[org.apache.spark.sql.AnalysisException](spark.sql(s"SELECT $name($arg)"))
+      // the kernel expressions with no SQL name, through their builders
+      val df = Seq((42, Seq("a"))).toDF("i", "a")
+      for {
+        build <- Seq[org.apache.spark.sql.Column => org.apache.spark.sql.Column](
+          ShingleGen.shingle_gen(_, 3),
+          MinHashMd5Expr.minhash_md5(_, 3, 4),
+          MinHashXxExpr.minhash_xx(_, 3, 4),
+        )
+        arg <- Seq(col("i"), col("a"))
+      } intercept[org.apache.spark.sql.AnalysisException](df.select(build(arg)))
+    } finally sc.clearJobGroup()
+    assert(sc.statusTracker.getJobIdsForGroup(group).isEmpty)
   }
 
   test("shingle_set expression is set-equal to the composed-builtins form on real documents") {

@@ -205,6 +205,55 @@ class SarifConvertSpec extends AnyFunSuite {
     assert(back.count() === 3)
   }
 
+  /** True when `dt` is, or nests, an array of SARIF results. */
+  private def holdsResults(dt: org.apache.spark.sql.types.DataType): Boolean = {
+    import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
+    dt match {
+      case ArrayType(et, _) =>
+        DataType.equalsStructurally(et, OcsfModel.sarifResult, ignoreNullability = true) ||
+          holdsResults(et)
+      case st: StructType   => st.fields.exists(f => holdsResults(f.dataType))
+      case MapType(k, v, _) => holdsResults(k) || holdsResults(v)
+      case _                => false
+    }
+  }
+
+  test("convert: no Generate carries a results array into the exploded rows") {
+    val path = getClass.getResource("/sample.sarif").getPath
+    // optimized from the analyzed plan: `findings` caches this same
+    // conversion, and the cache lookup would replace it with a scan of
+    // the cached relation
+    val analyzed = SarifToOcsf.convertFile(spark, path, nowMillis = Some(Now)).queryExecution.analyzed
+    val plan     = spark.sessionState.optimizer.execute(analyzed)
+    val generates = plan.collect { case g: org.apache.spark.sql.catalyst.plans.logical.Generate => g }
+    assert(generates.nonEmpty, plan.treeString)
+    generates.foreach { g =>
+      val carried = g.requiredChildOutput.filter(a => holdsResults(a.dataType))
+      assert(carried.isEmpty, s"Generate ${g.generator.prettyName} carries ${carried.map(_.name)}")
+    }
+  }
+
+  test("convert: a 4000-result file converts in the test JVM, one finding per result") {
+    val planted = 4000
+    val rules   = (0 until 20).map(i => s"""{"id": "R$i", "shortDescription": {"text": "rule $i"}}""")
+    val results = (0 until planted).map { i =>
+      s"""{"ruleId": "R${i % 20}", "level": "warning", "message": {"text": "finding $i in module ${i % 97}"},
+         | "locations": [{"physicalLocation": {"artifactLocation": {"uri": "src/m${i % 97}/f$i.c"},
+         |   "region": {"startLine": ${i + 1}, "endLine": ${i + 2}}}}],
+         | "fingerprints": {"v0": "fp-$i"}}""".stripMargin
+    }
+    val sarif =
+      s"""{"version": "2.1.0", "runs": [{"tool": {"driver": {"name": "Gen", "version": "1",
+         |  "rules": [${rules.mkString(",")}]}},
+         |  "invocations": [{"startTimeUtc": "2024-03-01T10:00:00Z"}],
+         |  "results": [${results.mkString(",\n")}]}]}""".stripMargin
+    val path = tmpNioPath("large.sarif")
+    java.nio.file.Files.write(java.nio.file.Paths.get(path), sarif.getBytes("UTF-8"))
+    val rows = SarifToOcsf.convertFile(spark, path, nowMillis = Some(Now)).collect()
+    assert(rows.length === planted)
+    assert(rows.map(_.getAs[Row]("finding_info").getAs[String]("uid")).distinct.length === planted)
+  }
+
   private def tmpNioPath(name: String): String = {
     val dir = java.nio.file.Files.createTempDirectory("sarif-spec").toFile
     dir.deleteOnExit()

@@ -217,6 +217,11 @@ def compare(sf_dir, out_dir, only):
         verdict, line = watched(sf_dir, out_dir, name, oracle.get(name))
         print(line, flush=True)
         counts[verdict] += 1
+    # A named gate with no dump was never compared: a typo, or a stale
+    # dump under --skip-verify. It fails rather than passing unseen.
+    for name in sorted(only - set(dump_dirs)):
+        print(f"FAIL {name}: not dumped", flush=True)
+        counts["FAIL"] += 1
     n_pass, n_fail, n_skip = counts["PASS"], counts["FAIL"], counts["SKIP"]
     print(f"== {n_pass} pass, {n_fail} fail, {n_skip} no-oracle ==")
     # Loud-fail on a silently-empty/thin record (the round-15 incident:
