@@ -14,7 +14,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * expression: distinct `n`-gram shingles ([[Shingles.distinct]]) →
   * per seed s the min of md5("s:" + shingle) hex — one JVM pass per
   * row, the same one-pass treatment [[SimHash64Md5Expr]] gives SimHash.
-  * Semantics are EXACTLY [[graft.ops.Dedup.minhashSignatures]] over
+  * Semantics are EXACTLY the relational per-seed
+  * `min(md5(seed ':' sh))` aggregate over
   * [[graft.ops.Dedup.shingleSets]] (same shingles, same seed-prefix
   * hash; min over lowercase hex strings — ASCII, so JVM String ordering
   * and Spark's UTF8 binary min agree), asserted bit-equal in

@@ -11,15 +11,14 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Whole-document 64-bit md5-twin SimHash as a single native
   * expression over the document's distinct 3-gram shingles
-  * ([[Shingles.distinct]]) — the one-pass form of
-  * [[graft.ops.Dedup.simhash64Md5]] over
-  * [[graft.ops.Dedup.shingleSets]] (bit-equality asserted in
-  * FunctionsSpec, including the 0L of a document with no shingles:
-  * no votes, no bits).
+  * ([[Shingles.distinct]]) — the one-pass form of the relational
+  * per-document vote aggregate over [[graft.ops.Dedup.shingleSets]]
+  * (bit-equality asserted in FunctionsSpec, including the 0L of a
+  * document with no shingles: no votes, no bits).
   *
   * Bit rule: bits 0–31 are each md5 hex nibble's top bit (value >= 8,
-  * exactly [[graft.ops.Dedup.simhash32]], so the 32-bit SimHash is
-  * this signature's low word); bits 32–63 are each nibble's second bit
+  * the 32-bit SimHash's bit rule, so that SimHash is this signature's
+  * low word); bits 32–63 are each nibble's second bit
   * (value & 4) — 64 independent bit sources from one md5 per shingle.
   * The relational form costs a shingle explode plus a 64-sum aggregate
   * (a shuffle of every shingle row); this runs scan-local, making the
@@ -69,7 +68,7 @@ case class SimHash64Md5Expr(child: Expression)
 object SimHash64Md5Expr {
   def simhash64_md5(text: Column): Column = column(SimHash64Md5Expr(expression(text)))
 
-  /** The 32-bit SimHash ([[graft.ops.Dedup.simhash32]]): the low word
-    * of [[simhash64_md5]]. */
+  /** The 32-bit SimHash — each md5 hex nibble's top bit votes — is the
+    * low word of [[simhash64_md5]]. */
   def simhash32(text: Column): Column = simhash64_md5(text).bitwiseAND(lit(0xFFFFFFFFL))
 }

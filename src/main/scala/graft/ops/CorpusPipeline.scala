@@ -82,45 +82,23 @@ object CorpusPipeline {
     Dedup.dedupByPairs(sketched.drop("__mh", "__shs"), idCol, pairs)
   }
 
-  /** [[prepare]] chained with an embedding near-duplicate stage — the
-    * order a real LLM corpus pipeline runs: text-level dedup first
-    * (cheap signals, removes exact/boilerplate copies), then
-    * embedding-cosine near-dup over the survivors (catches semantic
-    * duplicates that share few shingles). The embedding stage pairs
-    * only SRP band-collision candidates
+  /** The embedding near-dup stage that follows [[prepare]] — the order
+    * a real LLM corpus pipeline runs: text-level dedup first (cheap
+    * signals, removes exact/boilerplate copies), then embedding-cosine
+    * near-dup over the survivors (catches semantic duplicates that
+    * share few shingles). It pairs only SRP band-collision candidates
     * ([[Similarity.embeddingDupPairs]] — map-only signatures, a join
     * keyed on (band, key), never an all-pairs product), clusters them,
     * and keeps each component's minimum-id member. Survivors without an
-    * embedding row pass through the stage untouched (they can never be
-    * a candidate), so a partially-embedded corpus degrades to
-    * text-only dedup rather than dropping documents.
+    * embedding row pass through untouched (they can never be a
+    * candidate), so a partially-embedded corpus degrades to text-only
+    * dedup rather than dropping documents.
     *
-    * The survivor set feeds both the embedding join and the final
-    * anti-join; it is lazily checkpointed once, and the embedding
-    * stage's first action (its banding-size `count()`) materializes
-    * it. */
-  def prepareWithEmbeddings(
-      docs: DataFrame,
-      embeddings: DataFrame,
-      idCol: String,
-      textCol: String,
-      embIdCol: String,
-      embCol: String,
-      embTau: Double,
-      cfg: Config = Config(),
-      nPlanes: Int = 0,
-      bands: Int = 0,
-  ): DataFrame = {
-    val survivors = prepare(docs, idCol, textCol, cfg).localCheckpoint(eager = false)
-    embeddingStage(survivors, embeddings, idCol, embIdCol, embCol, embTau, nPlanes, bands)
-  }
-
-  /** The embedding near-dup stage of [[prepareWithEmbeddings]], over an
-    * already-materialized survivor set — callers that consume both the
-    * text-stage output AND the chained result (a pipeline writing
-    * intermediate tables, or the gate running both as separate queries)
-    * materialize `survivors` once and feed it here instead of
-    * re-running the text pipeline per consumer. */
+    * `survivors` is an already-materialized [[prepare]] result:
+    * callers that consume both the text-stage output AND the chained
+    * result (a pipeline writing intermediate tables, or the gate
+    * running both as separate queries) materialize it once and feed it
+    * here instead of re-running the text pipeline per consumer. */
   def embeddingStage(
       survivors: DataFrame,
       embeddings: DataFrame,

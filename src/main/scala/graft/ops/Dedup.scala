@@ -39,16 +39,6 @@ object Dedup {
     )
   }
 
-  /** The composed-builtins shingle form (reference semantics the native
-    * expression is tested against; see shingleSets). */
-  def shingleSetsComposed(docs: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
-    docs
-      .select(col(idCol).as("doc_id"), Text.tokens(col(textCol)).as("__toks"))
-      .select(
-        col("doc_id"),
-        explode(array_distinct(Text.shingles(col("__toks"), n))).as("sh"),
-      )
-
   /** Exact dedup groups: normalize-and-hash fingerprint → smallest id
     * kept as the canonical representative, copy count retained. */
   def exactGroups(docs: DataFrame, idCol: String, textCol: String): DataFrame =
@@ -115,79 +105,12 @@ object Dedup {
   }
 
   /** Distinct LSH (band, band_hash) rows of a corpus — the compact
-    * cross-run state for [[dedupIncrementalFuzzy]]: like
+    * cross-run state for [[dedupIncrementalFuzzyNative]]: like
     * [[fingerprintIndex]] but at near-dup granularity, ~nBands rows of
-    * 16 bytes per indexed document regardless of document size. */
-  def bandIndex(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      n: Int,
-      k: Int,
-      rowsPerBand: Int,
-  ): DataFrame =
-    bandIndexFromShingles(shingleSets(docs, idCol, textCol, n), k, rowsPerBand)
-
-  /** [[bandIndex]] over a pre-materialized shingle table (`doc_id`,
-    * `sh`) — the production shape: a 100 TB dedup suite writes the
-    * shingle table once and every fuzzy operator reads it, rather than
-    * re-tokenizing the corpus per operator. */
-  def bandIndexFromShingles(shingles: DataFrame, k: Int, rowsPerBand: Int): DataFrame =
-    lshBands(minhashSignatures(shingles, k), rowsPerBand)
-      .select("band", "band_hash")
-      .distinct()
-
-  /** Incremental (cross-run) NEAR-dup screen — the fuzzy analog of
-    * [[dedupIncremental]]: an incoming batch is checked against the
-    * persisted [[bandIndex]] and any document one of whose LSH bands
-    * collides with the index is dropped. A band collision is the
-    * standard LSH S-curve evidence of Jaccard at or above the banding's
-    * threshold; skipping the exact verify against the (absent) indexed
-    * corpus is the deliberate ingestion-time trade — conservative
-    * toward dropping, exactly reproducible, and the index stays
-    * orders of magnitude narrower than the corpus it stands for.
-    * Within-batch near-dups are [[minhashLshPairs]]'s job, run before
-    * or after the screen.
-    *
-    * Dataflow: signature build is one wide aggregate over the batch's
-    * shingles (map-side combinable); the screen is a left-semi join
-    * keyed on (band, band_hash) — AQE broadcasts the index when it
-    * fits. Survivors' bands ([[bandIndex]] of the result) are the
-    * index delta to append for the next run. */
-  def dedupIncrementalFuzzy(
-      batch: DataFrame,
-      idCol: String,
-      textCol: String,
-      index: DataFrame,
-      n: Int,
-      k: Int,
-      rowsPerBand: Int,
-  ): DataFrame =
-    dedupIncrementalFuzzyFromShingles(
-      batch,
-      idCol,
-      shingleSets(batch, idCol, textCol, n),
-      index,
-      k,
-      rowsPerBand,
-    )
-
-  /** [[dedupIncrementalFuzzy]] over the batch's pre-materialized
-    * shingle table (`doc_id`, `sh`) — see [[bandIndexFromShingles]]
-    * for why the shingle build is externalized. */
-  def dedupIncrementalFuzzyFromShingles(
-      batch: DataFrame,
-      idCol: String,
-      batchShingles: DataFrame,
-      index: DataFrame,
-      k: Int,
-      rowsPerBand: Int,
-  ): DataFrame =
-    screenByBands(batch, idCol, lshBands(minhashSignatures(batchShingles, k), rowsPerBand), index)
-
-  /** [[bandIndex]] via the native one-pass signature expression
-    * ([[minhashSignaturesNative]]) — the scan-local production form:
-    * index maintenance reads the corpus once, no shingle exchange. */
+    * 16 bytes per indexed document regardless of document size.
+    * Signatures come from the native one-pass expression
+    * ([[minhashSignaturesNative]]): index maintenance reads the corpus
+    * once, no shingle exchange. */
   def bandIndexNative(
       docs: DataFrame,
       idCol: String,
@@ -200,9 +123,23 @@ object Dedup {
       .select("band", "band_hash")
       .distinct()
 
-  /** [[dedupIncrementalFuzzy]] via the native one-pass signature
-    * expression: the batch-side signature build is map-only, so the
-    * whole screen is one scan plus the keyed semi-join. */
+  /** Incremental (cross-run) NEAR-dup screen — the fuzzy analog of
+    * [[dedupIncremental]]: an incoming batch is checked against the
+    * persisted [[bandIndexNative]] and any document one of whose LSH
+    * bands collides with the index is dropped. A band collision is the
+    * standard LSH S-curve evidence of Jaccard at or above the banding's
+    * threshold; skipping the exact verify against the (absent) indexed
+    * corpus is the deliberate ingestion-time trade — conservative
+    * toward dropping, exactly reproducible, and the index stays
+    * orders of magnitude narrower than the corpus it stands for.
+    * Within-batch near-dups are [[minhashLshPairsFromSigs]]'s job, run
+    * before or after the screen.
+    *
+    * Dataflow: the batch-side signature build is the native one-pass
+    * expression (map-only), so the whole screen is one scan plus the
+    * left-semi join keyed on (band, band_hash) — AQE broadcasts the
+    * index when it fits. Survivors' bands ([[bandIndexNative]] of the
+    * result) are the index delta to append for the next run. */
   def dedupIncrementalFuzzyNative(
       batch: DataFrame,
       idCol: String,
@@ -211,27 +148,12 @@ object Dedup {
       n: Int,
       k: Int,
       rowsPerBand: Int,
-  ): DataFrame =
-    screenByBands(
-      batch,
-      idCol,
-      lshBands(minhashSignaturesNative(batch, idCol, textCol, n, k), rowsPerBand),
-      index,
-    )
-
-  /** The screen stage shared by the fuzzy-incremental variants: drop
-    * every batch document one of whose bands collides with the index. */
-  private def screenByBands(
-      batch: DataFrame,
-      idCol: String,
-      bands: DataFrame,
-      index: DataFrame,
   ): DataFrame = {
     require(
       index.columns.contains("band") && index.columns.contains("band_hash"),
       "index must carry (band, band_hash) columns",
     )
-    val hit = bands
+    val hit = lshBands(minhashSignaturesNative(batch, idCol, textCol, n, k), rowsPerBand)
       .join(index.select("band", "band_hash").distinct(), Seq("band", "band_hash"), "left_semi")
       .select(col("doc_id").as("__hit_id"))
       .distinct()
@@ -314,13 +236,13 @@ object Dedup {
 
   /** Per-shingle document frequency — shared input of the cap, the
     * df>=2 pruning, the prefix ranking, and the skew probe. */
-  private def docFreq(shingles: DataFrame): DataFrame =
+  private[ops] def docFreq(shingles: DataFrame): DataFrame =
     shingles.groupBy("sh").agg(count(lit(1)).as("__df"))
 
   /** The shared maxDocFreq preamble: (capped shingle table, capped
     * document-frequency table). Single definition so the naive and
     * prefix joins cannot silently diverge on capped-set semantics. */
-  private def cappedShingles(
+  private[ops] def cappedShingles(
       shingles: DataFrame,
       freq: DataFrame,
       maxDocFreq: Option[Long],
@@ -363,30 +285,7 @@ object Dedup {
     * docs (identical shingle sets) keep both directions — the caller's
     * keep rule (e.g. [[dedupKeepBest]] on the pair list) decides.
     *
-    * Dataflow is [[jaccardPairs]]' pruned self-join with the predicate
-    * `c = |inner|` instead of a Jaccard threshold: shingles with
-    * document frequency 1 cannot contribute to any pair and are pruned
-    * before the join; every surviving join is keyed on the shingle. A
-    * document with any singleton shingle can never be contained, so
-    * the pruning ALSO bounds which docs can appear as inners — at a
-    * natural corpus' long-tailed vocabulary that is most of them. */
-  def containmentPairs(shingles: DataFrame, maxDocFreq: Option[Long] = None): DataFrame = {
-    val (capped, cappedFreq) = cappedShingles(shingles, docFreq(shingles), maxDocFreq)
-    val sizes    = capped.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val joinable = cappedFreq.filter(col("__df") >= 2).select("sh")
-    val pruned   = capped.join(joinable, "sh")
-    val common = pruned
-      .as("a")
-      .join(pruned.as("b"), col("a.sh") === col("b.sh") && col("a.doc_id") =!= col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("inner_id"), col("b.doc_id").as("outer_id"))
-      .agg(count(lit(1)).as("c"))
-    common
-      .join(sizes.as("na"), col("inner_id") === col("na.doc_id"))
-      .filter(col("c") === col("na.n"))
-      .select(col("inner_id"), col("outer_id"), col("c").as("n_shingles"))
-  }
-
-  /** [[containmentPairs]] with the AllPairs rarest-prefix trick: a
+    * Candidates use the AllPairs rarest-prefix trick: a
     * contained inner shares EVERY shingle with its outer — in
     * particular its rarest one — so candidates need only the join of
     * each doc's single (df, sh)-minimal shingle against the full
@@ -394,7 +293,8 @@ object Dedup {
     * shingle (Σ df(rarest) ≪ Σ df² of the full self-join; measured
     * 64s → linear at the 10× corpus). Verification counts the full
     * intersection for candidates only — candidate-proportional, and
-    * result-identical to the naive form (spec-pinned). */
+    * result-identical to the naive df >= 2 pruned self-join (OpsSpec,
+    * against its test-scope reference). */
   def containmentPairsPrefix(shingles: DataFrame, maxDocFreq: Option[Long] = None): DataFrame = {
     val (capped, cappedFreq) = cappedShingles(shingles, docFreq(shingles), maxDocFreq)
     val sizes = capped.groupBy("doc_id").agg(count(lit(1)).as("n"))
@@ -503,13 +403,11 @@ object Dedup {
     else naiveJaccard(shingles, capped, cappedFreq, minJaccard)
   }
 
-  /** The [[jaccardPairsAuto]] probe: p99/median of the shingle
-    * document-frequency distribution. ~1 on a flat vocabulary; grows
-    * with boilerplate (the shingles that blow up the naive join). An
-    * empty corpus probes as 1.0 (flat). */
-  def dfSkewProbe(shingles: DataFrame): Double = dfSkewProbeFromFreq(docFreq(shingles))
-
-  private def dfSkewProbeFromFreq(freq: DataFrame): Double = {
+  /** The [[jaccardPairsAuto]] probe over a [[docFreq]] table:
+    * p99/median of the shingle document-frequency distribution. ~1 on
+    * a flat vocabulary; grows with boilerplate (the shingles that blow
+    * up the naive join). An empty corpus probes as 1.0 (flat). */
+  private[ops] def dfSkewProbeFromFreq(freq: DataFrame): Double = {
     val row = freq
       .agg(
         expr("percentile_approx(__df, 0.99)").cast("double").as("p99"),
@@ -563,23 +461,13 @@ object Dedup {
   }
 
   /** MinHash signatures, wide form: one row per doc with columns
-    * `mh0..mh{k-1}`, each the min over the doc's shingles of
-    * md5(seed ':' shingle). One aggregation pass — no k× row
-    * amplification — and md5 keeps the signature engine-independent
-    * (byte-identical in any SQL engine); the scale path swaps in
-    * xxhash64 without changing the dataflow. */
-  def minhashSignatures(shingles: DataFrame, k: Int): DataFrame =
-    shingles
-      .groupBy(col("doc_id"))
-      .agg(
-        min(md5(concat(lit("0:"), col("sh")))).as("mh0"),
-        (1 until k).map(seed => min(md5(concat(lit(s"$seed:"), col("sh")))).as(s"mh$seed")): _*
-      )
-
-  /** [[minhashSignatures]] over [[shingleSets]] computed by the native
-    * one-pass [[graft.functions.MinHashMd5Expr]] — bit-equal (asserted
-    * in FunctionsSpec) but scan-local: no shingle explode, no k-way min
-    * aggregate, no exchange before banding. Documents with no shingles
+    * `mh0..mh{k-1}`, each the min over the doc's [[shingleSets]]
+    * shingles of md5(seed ':' shingle) — md5 keeps the signature
+    * engine-independent (byte-identical in any SQL engine). Computed by
+    * the native one-pass [[graft.functions.MinHashMd5Expr]] —
+    * bit-equal to the relational k-way min aggregate (FunctionsSpec)
+    * but scan-local: no shingle explode, no k-way min aggregate, no
+    * exchange before banding. Documents with no shingles
     * have no signature row, same as the relational pipeline. */
   def minhashSignaturesNative(
       docs: DataFrame,
@@ -637,46 +525,15 @@ object Dedup {
       .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
       .distinct()
 
-  /** End-to-end MinHash-LSH near-dup detection: LSH candidates verified
-    * with the true shingle Jaccard (computed only for candidates). */
-  def minhashLshPairs(
-      shingles: DataFrame,
-      k: Int,
-      rowsPerBand: Int,
-      minJaccard: Double,
-  ): DataFrame = {
-    val cands = lshCandidates(lshBands(minhashSignatures(shingles, k), rowsPerBand))
-    verifyJaccard(cands, shingles, minJaccard)
-  }
-
-  /** [[minhashLshPairs]] with the signature stage computed by the
-    * native one-pass expression ([[minhashSignaturesNative]]) —
-    * map-only signatures from the documents scan; the shingle table is
-    * still consumed, but only by the candidate-proportional exact
-    * verify. */
-  def minhashLshPairsNative(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      shingles: DataFrame,
-      n: Int,
-      k: Int,
-      rowsPerBand: Int,
-      minJaccard: Double,
-  ): DataFrame = {
-    val sigs  = minhashSignaturesNative(docs, idCol, textCol, n, k)
-    val cands = lshCandidates(lshBands(sigs, rowsPerBand))
-    verifyJaccard(cands, shingles, minJaccard)
-  }
-
-  /** [[minhashLshPairsNative]] over a PREBUILT signature table — the
-    * entry point for pipelines that materialize the (doc, mh0..mh{k-1})
-    * signatures once per corpus and fan several banding/verify jobs off
-    * the one table (the shared-artifact discipline: the signature pass
+  /** End-to-end MinHash-LSH near-dup detection over a PREBUILT
+    * signature table ([[minhashSignaturesNative]]): LSH candidates
+    * verified with the true shingle Jaccard (computed only for
+    * candidates). The entry point for pipelines that materialize the
+    * (doc, mh0..mh{k-1}) signatures once per corpus and fan several
+    * banding/verify jobs off the one table (the shared-artifact discipline: the signature pass
     * is the dominant map cost, and every consumer re-deriving it pays
     * it once per PLAN SUBTREE — a candidate self-join alone evaluates
-    * it twice). Dataflow and results identical to
-    * [[minhashLshPairsNative]] given equal signatures. */
+    * it twice). */
   def minhashLshPairsFromSigs(
       sigs: DataFrame,
       shingles: DataFrame,
@@ -690,13 +547,13 @@ object Dedup {
     * shingle array of each document, both computed map-only from the
     * text ([[graft.functions.MinHashMd5Expr]],
     * [[graft.functions.ShingleSetExpr]] — bit-equal to the relational
-    * [[minhashSignatures]] / [[shingleSets]] forms, FunctionsSpec).
-    * Banding and the (band, band_hash) self-join are
-    * [[minhashLshPairs]]'s; the verify joins the candidates straight to
-    * the sketch table, so no exploded shingle table and no per-document
-    * regroup exist anywhere in the plan. Result-identical to
-    * [[minhashLshPairs]] over [[shingleSets]] of the same documents
-    * (OpsSpec). */
+    * signature and [[shingleSets]] forms, FunctionsSpec). Banding and
+    * the (band, band_hash) self-join are [[minhashLshPairsFromSigs]]';
+    * the verify joins the candidates straight to the sketch table, so
+    * no exploded shingle table and no per-document regroup exist
+    * anywhere in the plan. Result-identical to the relational
+    * signature → banding → verify chain over [[shingleSets]] of the
+    * same documents (OpsSpec). */
   def minhashLshPairsFromSketches(
       sketches: DataFrame,
       k: Int,
@@ -711,101 +568,13 @@ object Dedup {
     )
   }
 
-  /** Production-path MinHash signatures: xxhash64 (codegen'd, integer
-    * output, no string materialization) instead of md5 hex. Same
-    * dataflow as [[minhashSignatures]] — one aggregation pass, k min
-    * columns — but each hash is a single 64-bit mix instead of a full
-    * digest over a concatenated string. Signatures are engine-specific
-    * (Spark's xxhash64 seeding), so this path has no cross-engine
-    * oracle; the md5 path remains the differential-gate twin. */
-  def minhashSignaturesXx(shingles: DataFrame, k: Int): DataFrame =
-    shingles
-      .groupBy(col("doc_id"))
-      .agg(
-        min(xxhash64(lit(0), col("sh"))).as("mh0"),
-        (1 until k).map(seed => min(xxhash64(lit(seed), col("sh"))).as(s"mh$seed")): _*
-      )
-
-  /** [[minhashSignaturesXx]] computed by the native one-pass
-    * [[graft.functions.MinHashXxExpr]] — bit-equal (FunctionsSpec,
-    * same [[org.apache.spark.sql.catalyst.expressions.XxHash64Function]]
-    * fold) but scan-local, the production analog of
-    * [[minhashSignaturesNative]]. */
-  def minhashSignaturesXxNative(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      n: Int,
-      k: Int,
-  ): DataFrame = {
-    unpackSignatures(
-      docs.select(
-        col(idCol).as("doc_id"),
-        graft.functions.MinHashXxExpr.minhash_xx(col(textCol), n, k).as("mh"),
-      ),
-      k,
-    )
-  }
-
-  /** LSH banding for xxhash64 signatures: band key = xxhash64 of the
-    * band's member minhashes (long columns hash directly — no string
-    * concat). Produces the same (doc_id, band, band_hash) shape as
-    * [[lshBands]], so [[lshCandidates]] and the true-Jaccard
-    * verification compose unchanged. */
-  def lshBandsXx(signatures: DataFrame, rowsPerBand: Int): DataFrame = {
-    val k = signatures.columns.count(_.startsWith("mh"))
-    require(k % rowsPerBand == 0, s"k=$k not divisible by rowsPerBand=$rowsPerBand")
-    val nBands = k / rowsPerBand
-    val stackArgs = (0 until nBands).flatMap { b =>
-      val members = (b * rowsPerBand until (b + 1) * rowsPerBand).map(s => col(s"mh$s"))
-      Seq(lit(b), xxhash64(members: _*))
-    }
-    signatures.select(
-      col("doc_id"),
-      stack(lit(nBands) +: stackArgs: _*).as(Seq("band", "band_hash")),
-    )
-  }
-
-  /** Production-path MinHash-LSH near-dup pairs: xxhash64 candidate
-    * generation, exact shingle-Jaccard verification. Output pairs all
-    * truly satisfy `jaccard >= minJaccard` (verification is exact);
-    * only LSH recall depends on the hash family. */
-  def minhashLshPairsXx(
-      shingles: DataFrame,
-      k: Int,
-      rowsPerBand: Int,
-      minJaccard: Double,
-  ): DataFrame = {
-    val cands = lshCandidates(lshBandsXx(minhashSignaturesXx(shingles, k), rowsPerBand))
-    verifyJaccard(cands, shingles, minJaccard)
-  }
-
-  /** [[minhashLshPairsXx]] with the signature stage computed by the
-    * native one-pass expression ([[minhashSignaturesXxNative]]) — the
-    * fully map-only production signature path; the shingle table only
-    * feeds the candidate-proportional exact verify. */
-  def minhashLshPairsXxNative(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      shingles: DataFrame,
-      n: Int,
-      k: Int,
-      rowsPerBand: Int,
-      minJaccard: Double,
-  ): DataFrame = {
-    val sigs  = minhashSignaturesXxNative(docs, idCol, textCol, n, k)
-    val cands = lshCandidates(lshBandsXx(sigs, rowsPerBand))
-    verifyJaccard(cands, shingles, minJaccard)
-  }
-
   /** Exact shingle-Jaccard scores for a candidate pair table
     * (a_id, b_id). Work is candidate-proportional: per-doc shingle
     * arrays are built once (one groupBy of the shingle table), then
     * each candidate pair costs two doc_id-keyed joins and one linear
     * `array_intersect` — no re-join of the full shingle table per pair
     * and no groupBy over the pair×shingle blowup. Shared by every
-    * candidate-generating path (MinHash-LSH md5/xx, prefix join). */
+    * candidate-generating path (MinHash-LSH, prefix join). */
   private[ops] def verifyJaccard(
       cands: DataFrame,
       shingles: DataFrame,
@@ -841,30 +610,14 @@ object Dedup {
     * Σ_t max(c_a(t), c_b(t)) — the near-dup measure that still sees
     * repeated content (boilerplate runs, copy-paste amplification)
     * where set Jaccard saturates at one occurrence per type. Candidate
-    * generation is the standard MinHash-LSH banding over shingle sets
-    * (never all-pairs); the min-sum is a token-keyed equi-join
-    * restricted to candidates (candidate-proportional, like
-    * [[verifyJaccard]]), and the max-sum needs no second join:
-    * Σmax = S_a + S_b − Σmin. Integer-exact throughout — `wj_ppm` is
-    * the floored ppm quotient any engine replays bit-for-bit.
-    * Output: `(a_id, b_id, inter, uni, wj_ppm)` for wj_ppm ≥ tauPpm. */
-  def weightedJaccardPairs(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      n: Int,
-      k: Int,
-      rowsPerBand: Int,
-      tauPpm: Long,
-  ): DataFrame =
-    weightedJaccardPairsFromSigs(
-      docs, idCol, textCol,
-      minhashSignaturesNative(docs, idCol, textCol, n, k),
-      rowsPerBand, tauPpm)
-
-  /** [[weightedJaccardPairs]] over a PREBUILT signature table (the
-    * [[minhashLshPairsFromSigs]] discipline) — candidate generation
-    * reads the shared signatures instead of re-hashing the corpus. */
+    * generation is the standard MinHash-LSH banding over a PREBUILT
+    * signature table (the [[minhashLshPairsFromSigs]] discipline; never
+    * all-pairs); the min-sum is a token-keyed equi-join restricted to
+    * candidates (candidate-proportional, like [[verifyJaccard]]), and
+    * the max-sum needs no second join: Σmax = S_a + S_b − Σmin.
+    * Integer-exact throughout — `wj_ppm` is the floored ppm quotient
+    * any engine replays bit-for-bit. Output: `(a_id, b_id, inter, uni,
+    * wj_ppm)` for wj_ppm ≥ tauPpm. */
   def weightedJaccardPairsFromSigs(
       docs: DataFrame,
       idCol: String,
@@ -903,30 +656,6 @@ object Dedup {
       .filter(col("wj_ppm") >= tauPpm)
   }
 
-  /** 32-bit SimHash over the shingle set. Bit j of md5(shingle) (taken
-    * as hex-nibble high bits) votes ±1; the sign of each position's vote
-    * sum becomes signature bit j. Pure integer arithmetic — identical in
-    * any engine, and order-independent (sums).
-    *
-    * Computed as one aggregation pass with 32 vote-sum columns over a
-    * pre-hashed shingle column (no 32× row amplification, md5 evaluated
-    * once per shingle). */
-  def simhash32(shingles: DataFrame): DataFrame = {
-    val hashed = shingles.select(col("doc_id"), md5(col("sh")).as("h"))
-    val votes = (1 to 32).map { pos =>
-      sum(
-        when(expr(s"instr('0123456789abcdef', substring(h, $pos, 1)) - 1") >= 8, 1).otherwise(-1)
-      ).as(s"s$pos")
-    }
-    val sig = (1 to 32)
-      .map(pos => when(col(s"s$pos") > 0, lit(1L << (pos - 1))).otherwise(0L))
-      .reduce(_ + _)
-    hashed
-      .groupBy("doc_id")
-      .agg(votes.head, votes.tail: _*)
-      .select(col("doc_id"), sig.as("simhash"))
-  }
-
   /** Connected components over near-dup pairs: every document in a
     * component mapped to the smallest doc_id reachable from it (the
     * canonical representative to keep).
@@ -936,7 +665,7 @@ object Dedup {
     * SoCC'14) — each round is two join+aggregate steps, and the round
     * count is O(log² n) in the worst case regardless of component
     * diameter, vs the O(diameter) rounds of plain min-label
-    * propagation ([[clusterPairsPropagate]]). On a 100 TB corpus a
+    * propagation (the spec's reference). On a 100 TB corpus a
     * pathological near-dup chain (pairwise-overlapping boilerplate)
     * can have diameter in the thousands; star contraction closes it in
     * a handful of rounds. Convergence is detected with one scalar
@@ -1093,53 +822,6 @@ object Dedup {
       }
     }
     parent.keysIterator.map(n => n -> find(n)).toMap
-  }
-
-  /** Min-label-propagation connected components — the composed-builtins
-    * baseline [[clusterPairs]] is spec-checked against. Converges in
-    * component-diameter iterations with one join + one aggregation per
-    * round; `localCheckpoint` cuts plan lineage per round (iterative
-    * DataFrame loops otherwise grow an exponential plan). */
-  def clusterPairsPropagate(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
-    val edges = pairs
-      .select(col("a_id").as("src"), col("b_id").as("dst"))
-      .unionAll(pairs.select(col("b_id").as("src"), col("a_id").as("dst")))
-      .persist()
-    var labels = edges
-      .select(col("src").as("node"))
-      .distinct()
-      .withColumn("component", col("node"))
-      .localCheckpoint()
-    var changed = true
-    var i       = 0
-    while (changed && i < maxIter) {
-      val nbrMin = edges
-        .join(labels, edges("dst") === labels("node"))
-        .groupBy(col("src").as("n2"))
-        .agg(min("component").as("nbr_component"))
-      val updated = labels
-        .join(nbrMin, labels("node") === nbrMin("n2"), "left")
-        .select(
-          col("node"),
-          least(col("component"), coalesce(col("nbr_component"), col("component")))
-            .as("component"),
-        )
-        .localCheckpoint()
-      changed = updated
-        .join(labels.withColumnRenamed("component", "old"), "node")
-        .filter(col("component") =!= col("old"))
-        .limit(1)
-        .count() > 0
-      labels = updated
-      i += 1
-    }
-    edges.unpersist()
-    // min-label propagation needs ~diameter rounds; a chain longer than
-    // maxIter would otherwise return silently split components
-    if (changed)
-      throw new IllegalStateException(
-        s"label propagation did not converge within $maxIter rounds (component diameter too large)")
-    labels.select(col("node").as("doc_id"), col("component"))
   }
 
   /** Benchmark decontamination — the eval-leakage guard every serious
@@ -1378,42 +1060,13 @@ object Dedup {
       )
   }
 
-  /** md5 oracle twin of [[simhash64Xx]] — the same twin pattern as
-    * [[minhashSignatures]] vs [[minhashSignaturesXx]]: a 64-bit
-    * signature whose per-shingle hash any engine reproduces, so the
-    * 64-bit BANDING + PAIRING stage ([[simhashPairs]] with bits = 64,
-    * the production configuration) gets a full differential oracle even
-    * though xxhash64 itself is Spark-specific. Bits 0–31 are each md5
-    * hex nibble's top bit (exactly [[simhash32]]'s hash); bits 32–63
-    * are each nibble's SECOND bit (value & 4) — 64 independent bit
-    * sources from the 32 nibbles of one md5. Bit 63 contributes
-    * 1L << 63 (Long.MIN_VALUE) to the signature sum; two's-complement
-    * wraparound makes the signature the correct signed 64-bit pattern,
-    * which the oracle mirrors by summing in 128-bit and re-wrapping. */
-  def simhash64Md5(shingles: DataFrame): DataFrame = {
-    val hashed = shingles.select(col("doc_id"), md5(col("sh")).as("h"))
-    def digit(pos: Int) = expr(s"instr('0123456789abcdef', substring(h, $pos, 1)) - 1")
-    val votes = (0 until 64).map { j =>
-      val bitSet =
-        if (j < 32) digit(j + 1) >= 8
-        else digit(j - 31) % 8 >= 4
-      sum(when(bitSet, 1).otherwise(-1)).as(s"s$j")
-    }
-    val sig = (0 until 64)
-      .map(pos => when(col(s"s$pos") > 0, lit(1L << pos)).otherwise(0L))
-      .reduce(_ + _)
-    hashed
-      .groupBy("doc_id")
-      .agg(votes.head, votes.tail: _*)
-      .select(col("doc_id"), sig.as("simhash"))
-  }
-
   /** Production-path 64-bit SimHash: bit j of xxhash64(shingle) votes
     * ±1 directly (no hex-nibble decode), one aggregation pass with 64
-    * vote sums. Twice the signature bits of [[simhash32]] at lower
-    * hashing cost; engine-specific, so no cross-engine oracle for the
-    * signature itself — [[simhash64Md5]] is the twin that oracles the
-    * 64-bit banding/pairing stage. */
+    * vote sums. Twice the signature bits of the 32-bit md5 SimHash at
+    * lower hashing cost; engine-specific, so no cross-engine oracle for
+    * the signature itself — the md5 twin
+    * ([[graft.functions.SimHash64Md5Expr]]) oracles the 64-bit
+    * banding/pairing stage. */
   def simhash64Xx(shingles: DataFrame): DataFrame = {
     val hashed = shingles.select(col("doc_id"), xxhash64(col("sh")).as("h"))
     val votes = (0 until 64).map { pos =>

@@ -150,7 +150,7 @@ object Funnel {
 
   /** Streaming 3-step funnel over `mapGroupsWithState` — the custom-
     * state form of [[funnelSteps]] (SURVEY §2.8's stateful extension
-    * point, like [[Sessionize.streamingSessions]]). Each micro-batch
+    * point). Each micro-batch
     * folds its events into the per-user state ([[foldFunnel3]] — the
     * watermark-bounded scalar-min + pending-window form) and emits
     * that user's recomputed walk (update mode).

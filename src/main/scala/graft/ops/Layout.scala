@@ -125,41 +125,9 @@ object Layout {
        |  (st, s) -> (($d2 * $p + $yF) * $p + $xF)) // ${p * p})""".stripMargin
   }
 
-  /** Range-partition by the Hilbert key and sort within partitions —
-    * [[zorderBy]]'s locality-preserving sibling: each output file
-    * covers one contiguous curve segment, and because consecutive
-    * Hilbert cells are always Manhattan-adjacent the segment's min/max
-    * envelope is at least as tight as the Z-order segment's (no
-    * cross-grid jumps at power-of-two boundaries). One shuffle. */
-  def hilbertBy(
-      df: DataFrame,
-      xCol: Column,
-      yCol: Column,
-      bits: Int,
-      numFiles: Int,
-  ): DataFrame = {
-    val keyed = df.withColumn("__hkey", hilbertKey(xCol, yCol, bits))
-    keyed
-      .repartitionByRange(numFiles, col("__hkey"))
-      .sortWithinPartitions("__hkey")
-      .drop("__hkey")
-  }
-
-  /** Range-partition by the Morton key and sort within partitions —
-    * one shuffle; each output file covers a compact curve segment, so
-    * its min/max envelope is tight in EVERY clustered dimension (the
-    * LayoutSpec assertion). `numFiles` maps to target file count. */
-  def zorderBy(df: DataFrame, cols: Seq[Column], bits: Int, numFiles: Int): DataFrame = {
-    val keyed = df.withColumn("__zkey", zorderKey(cols, bits))
-    keyed
-      .repartitionByRange(numFiles, col("__zkey"))
-      .sortWithinPartitions("__zkey")
-      .drop("__zkey")
-  }
-
   /** Small-file compaction planning — the other half of table
-    * maintenance beside [[zorderBy]] (Delta/Iceberg `OPTIMIZE`'s
-    * bin-packing step): assign each file to a compaction bin so every
+    * maintenance beside Z-order clustering ([[zorderKey]];
+    * Delta/Iceberg `OPTIMIZE`'s bin-packing step): assign each file to a compaction bin so every
     * bin's total size approaches `targetBytes`.
     *
     * Files are packed greedily in (size DESC, id) order per partition

@@ -17,13 +17,11 @@ import org.apache.spark.sql.functions._
   * at a time (the seam where a vectorized decoder amortizes
   * model/codec init) and MUST be row-level error-isolating — one
   * corrupt payload yields one failed feature row, never a task
-  * failure (the ST7 discipline applied to media). Two implementations
-  * ship: [[ByteStatsDecoder]], the deterministic byte-derived fake
-  * whose output any engine can reproduce (it is the oracle-gated
-  * path — heavyweight codecs stay out of the differential harness by
-  * design), and [[ImageIoDecoder]], a REAL image decoder over the
-  * JDK's `javax.imageio` (PNG/JPEG/GIF/BMP) proving the contract
-  * carries an actual codec, not only the fake.
+  * failure (the ST7 discipline applied to media). The shipped
+  * decoders ([[ByteStatsDecoder]], [[AudioWindowDecoder]]) are
+  * deterministic byte-derived forms whose output any engine can
+  * reproduce — the oracle-gated path; heavyweight codecs stay out of
+  * the differential harness by design.
   */
 object Multimodal {
 
@@ -37,18 +35,6 @@ object Multimodal {
 
   /** Per-payload windowed "audio" features ([[AudioWindowDecoder]]). */
   final case class AudioWindowSet(doc_id: Long, windows: Seq[AudioWindow])
-
-  /** Decoded-image features ([[ImageIoDecoder]]). `ok=false` rows
-    * carry the per-payload failure (`err`) instead of failing the
-    * task; numeric fields are zeroed. */
-  final case class ImageFeature(
-      doc_id: Long,
-      ok: Boolean,
-      width: Int,
-      height: Int,
-      mean_luma: Double,
-      err: String,
-  )
 
   /** The decode extension point. `decodeBatch` receives up to
     * `batchSize` (id, payload) pairs; the default implementation maps
@@ -121,40 +107,6 @@ object Multimodal {
       .select(col("doc_id"), col("w.window_id"), col("w.n_samples"), col("w.energy"))
   }
 
-  /** A REAL decoder on the contract: `javax.imageio` (JDK-shipped,
-    * public API) decodes PNG/JPEG/GIF/BMP payloads to pixels;
-    * features are the decoded dimensions and mean luminance
-    * (ITU-R BT.601 weights) sampled on a pixel stride that bounds
-    * per-image cost for arbitrarily large frames. Undecodable bytes
-    * become an `ok=false` row with the exception message — never a
-    * task failure. */
-  final class ImageIoDecoder(lumaStride: Int = 4) extends MediaDecoder[ImageFeature] {
-    def decode(docId: Long, bytes: Array[Byte]): ImageFeature =
-      try {
-        val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
-        if (img == null) ImageFeature(docId, ok = false, 0, 0, 0.0, "no registered ImageReader")
-        else {
-          val stride      = math.max(lumaStride, 1)
-          var (sum, n)    = (0.0, 0L)
-          var y           = 0
-          while (y < img.getHeight) {
-            var x = 0
-            while (x < img.getWidth) {
-              val rgb = img.getRGB(x, y)
-              sum += 0.299 * ((rgb >> 16) & 0xff) + 0.587 * ((rgb >> 8) & 0xff) + 0.114 * (rgb & 0xff)
-              n += 1
-              x += stride
-            }
-            y += stride
-          }
-          ImageFeature(docId, ok = true, img.getWidth, img.getHeight, if (n == 0) 0.0 else sum / n, "")
-        }
-      } catch {
-        case e: Exception =>
-          ImageFeature(docId, ok = false, 0, 0, 0.0, s"${e.getClass.getSimpleName}: ${e.getMessage}")
-      }
-  }
-
   /** Pack a text corpus into the multimodal shape: (doc_id, content
     * binary, meta struct) — the layout a real pipeline would land
     * images into. */
@@ -198,71 +150,6 @@ object Multimodal {
     val spark = media.sparkSession
     import spark.implicits._
     decodeWith(media, ByteStatsDecoder, batchSize)
-  }
-
-  /** Real-codec extraction: [[decodeWith]] on [[ImageIoDecoder]]. */
-  def extractImageFeatures(media: DataFrame, batchSize: Int = 64): Dataset[ImageFeature] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    decodeWith(media, new ImageIoDecoder(), batchSize)
-  }
-
-  /** One resized image row: the re-encoded payload plus its (now
-    * known) dimensions. `ok=false` carries the failure, never a task
-    * error. */
-  final case class ResizedImage(
-      doc_id: Long,
-      ok: Boolean,
-      width: Int,
-      height: Int,
-      content: Array[Byte],
-      err: String,
-  )
-
-  /** A REAL resize stage on the decoder contract (the mandate's
-    * decode / feature-extract / RESIZE / frame-sample list): decode
-    * with `javax.imageio`, scale to (targetW, targetH) with bilinear
-    * interpolation (`java.awt.Graphics2D` — JDK-shipped public API,
-    * no external codec), re-encode as PNG. The normalization step a
-    * vision-training pipeline runs before batching tensors; output
-    * payloads are fixed-size-bounded, so downstream batch shapes are
-    * predictable regardless of source image size. Same row isolation
-    * as [[ImageIoDecoder]]. */
-  final class ImageIoResizer(targetW: Int, targetH: Int) extends MediaDecoder[ResizedImage] {
-    require(targetW >= 1 && targetH >= 1, s"target dims must be positive, got ${targetW}x$targetH")
-    def decode(docId: Long, bytes: Array[Byte]): ResizedImage =
-      try {
-        val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
-        if (img == null)
-          ResizedImage(docId, ok = false, 0, 0, Array.emptyByteArray, "no registered ImageReader")
-        else {
-          val out = new java.awt.image.BufferedImage(
-            targetW, targetH, java.awt.image.BufferedImage.TYPE_INT_RGB)
-          val g = out.createGraphics()
-          g.setRenderingHint(
-            java.awt.RenderingHints.KEY_INTERPOLATION,
-            java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR,
-          )
-          g.drawImage(img, 0, 0, targetW, targetH, null)
-          g.dispose()
-          val baos = new java.io.ByteArrayOutputStream()
-          javax.imageio.ImageIO.write(out, "png", baos)
-          ResizedImage(docId, ok = true, targetW, targetH, baos.toByteArray, "")
-        }
-      } catch {
-        case e: Exception =>
-          ResizedImage(
-            docId, ok = false, 0, 0, Array.emptyByteArray,
-            s"${e.getClass.getSimpleName}: ${e.getMessage}")
-      }
-  }
-
-  /** Batched resize over the binary column: [[decodeWith]] on
-    * [[ImageIoResizer]]. */
-  def resizeImages(media: DataFrame, w: Int, h: Int, batchSize: Int = 64): Dataset[ResizedImage] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    decodeWith(media, new ImageIoResizer(w, h), batchSize)
   }
 
   /** Deterministic fake "frame sampling": n evenly spaced fixed-width

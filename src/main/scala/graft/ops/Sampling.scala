@@ -43,11 +43,6 @@ object Sampling {
     * misc_split_group_disjoint / misc_conformal SQL. */
   def hashPpm(key: Column): Column = shiftright(hash24(key) * lit(1000000L), 24)
 
-  /** Deterministic Bernoulli sample: keep each row iff
-    * hashFraction(key) < rate. */
-  def bernoulli(df: DataFrame, keyCol: String, rate: Double): DataFrame =
-    df.filter(hashFraction(col(keyCol)) < lit(rate))
-
   /** Stratified deterministic sample — the corpus-mixing operation:
     * re-balance a training mix by keeping each stratum (source,
     * language, quality band, ...) at its own rate. `rates` compiles to
@@ -165,7 +160,7 @@ object Sampling {
     * while common crawl is seen once or subsampled). For stratum s with
     * budget b_s rows and n_s source rows, every row is emitted
     * `b_s div n_s` times and an additional hash-selected fraction
-    * (`rate = (b_s mod n_s)/n_s`, the [[bernoulli]] predicate on the
+    * (`rate = (b_s mod n_s)/n_s`, the [[hashFraction]] predicate on the
     * row key) once more, with an `epoch` column (1-based) so a shard
     * writer can spread the copies across epochs. E[rows emitted] = b_s
     * exactly; the realized fractional count is binomial around it (the

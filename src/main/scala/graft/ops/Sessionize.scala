@@ -1,38 +1,15 @@
 package graft.ops
 
 import graft.expr.Parity
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import org.apache.spark.sql.types.DoubleType
 
-/** Gap-based sessionization, in both execution models:
-  *
-  *  - [[batchSessions]]: the declarative form — a boundary flag
-  *    (`gap > threshold`) turned into session ids by a running sum, then
-  *    one aggregation. Two window passes + one shuffle; this is the
-  *    shape to use for backfills over historical data.
-  *  - [[streamingSessions]]: the Structured Streaming form over
-  *    `flatMapGroupsWithState` — bounded state per key (one open
-  *    session), sessions emitted as soon as a gap closes them. This is
-  *    the SURVEY §2.8 custom-state extension point (the reference has no
-  *    sessionization; its monitor pipeline is the only stateful piece).
-  *
-  * Both produce identical rows for the same input (the streaming spec
-  * asserts it).
+/** Gap-based sessionization: [[batchSessions]], the declarative form —
+  * a boundary flag (`gap > threshold`) turned into session ids by a
+  * running sum, then one aggregation. Two window passes + one shuffle.
   */
 object Sessionize {
-
-  final case class Ev(user_id: Long, ts_ms: Long, value: Double)
-  final case class OpenSession(start_ms: Long, last_ms: Long, n: Int, total: BigDecimal)
-  final case class Session(
-      user_id: Long,
-      session_start_ms: Long,
-      session_end_ms: Long,
-      n_events: Long,
-      total_value: Double,
-  )
 
   /** Declarative batch sessionization over (user_id, ts, event_id, value). */
   def batchSessions(events: DataFrame, gapMs: Long): DataFrame = {
@@ -50,88 +27,5 @@ object Sessionize {
         count(lit(1)).as("n_events"),
         Parity.dsum(col("value")).as("total_value"),
       )
-  }
-
-  /** Streaming sessionization with one open session of state per key.
-    * Closed sessions are emitted in event order. The trailing open
-    * session is closed EITHER by a later event from the same key that
-    * falls outside the gap, OR — new in r10 — by an event-time timeout
-    * once the watermark passes `last_ms + gapMs`: at that point no
-    * on-time event can extend the session (late rows below the
-    * watermark are dropped upstream; surviving rows start a new
-    * session by the gap test), so the open session is provably final.
-    * Timing out both (a) emits a quiet key's last session without
-    * needing a successor event and (b) REMOVES the key's state, so
-    * idle keys do not leak state-store rows on an unbounded key space
-    * (the [[Funnel.streamingFunnel3]] lifecycle bar).
-    *
-    * `watermarkDelay` is the allowed lateness; the default is generous
-    * because the op's contract is batch-parity first (the spec replays
-    * epoch-adjacent fixtures), production callers should pass their
-    * real lateness bound. */
-  def streamingSessions(
-      events: Dataset[Ev],
-      gapMs: Long,
-      watermarkDelay: String = "30 days",
-  ): Dataset[Session] = {
-    implicit val sessionEnc = Encoders.product[Session]
-    implicit val stateEnc   = Encoders.product[OpenSession]
-    implicit val longEnc    = Encoders.scalaLong
-    implicit val rowEnc = Encoders.tuple(
-      Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaDouble, Encoders.TIMESTAMP)
-
-    // Mirrors Parity.dsum exactly: each value rounded to DECIMAL(38,6)
-    // once, summed exactly, cast to double at emission.
-    def dec(v: Double): BigDecimal =
-      BigDecimal(v).setScale(6, scala.math.BigDecimal.RoundingMode.HALF_UP)
-
-    def update(
-        userId: Long,
-        rows: Iterator[(Long, Long, Double, java.sql.Timestamp)],
-        state: GroupState[OpenSession],
-    ): Iterator[Session] = {
-      if (state.hasTimedOut) {
-        // watermark passed last_ms + gap: the open session is final
-        val fin = state.getOption.map(s =>
-          Session(userId, s.start_ms, s.last_ms, s.n.toLong, s.total.toDouble)
-        )
-        state.remove()
-        fin.iterator
-      } else {
-        val sorted = rows.toSeq.sortBy(_._2)
-        var open   = state.getOption
-        val out    = Seq.newBuilder[Session]
-        sorted.foreach { case (_, tsMs, value, _) =>
-          open match {
-            case Some(s) if tsMs - s.last_ms <= gapMs =>
-              open = Some(s.copy(last_ms = tsMs, n = s.n + 1, total = s.total + dec(value)))
-            case Some(s) =>
-              out += Session(userId, s.start_ms, s.last_ms, s.n.toLong, s.total.toDouble)
-              open = Some(OpenSession(tsMs, tsMs, 1, dec(value)))
-            case None =>
-              open = Some(OpenSession(tsMs, tsMs, 1, dec(value)))
-          }
-        }
-        open.foreach { s =>
-          state.update(s)
-          // must be strictly above the current watermark or Spark
-          // rejects the call; max() covers a session already behind it
-          state.setTimeoutTimestamp(
-            math.max(s.last_ms + gapMs, state.getCurrentWatermarkMs() + 1L)
-          )
-        }
-        out.result().iterator
-      }
-    }
-
-    events
-      .withColumn("__ts", timestamp_millis(col("ts_ms")))
-      .withWatermark("__ts", watermarkDelay)
-      // __ts must survive into the stateful op: the event-time-timeout
-      // check requires the watermarked attribute in its child
-      .select(col("user_id"), col("ts_ms"), col("value"), col("__ts"))
-      .as[(Long, Long, Double, java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(update)
   }
 }

@@ -23,18 +23,10 @@ import org.apache.spark.sql.functions._
   */
 object Similarity {
 
-  /** Left-to-right fold dot product of two float-array columns, in
-    * double precision — the composed-builtins reference form. */
-  def dotFold(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0),
-      (acc, v) => acc + v,
-    )
-
   /** Native codegen'd dot product ([[graft.functions.FloatVecDot]]) —
-    * bit-identical to [[dotFold]], ~interpreter-free. This is the form
-    * every operator here uses. */
+    * bit-identical to the left-to-right double fold of the element
+    * products (OpsSpec), ~interpreter-free. This is the form every
+    * operator here uses. */
   def dot(a: Column, b: Column): Column = graft.functions.FloatVecDot.float_dot(a, b)
 
   /** NaN-proof cosine: NULL when either norm is zero instead of the
@@ -713,32 +705,15 @@ object Similarity {
       )
   }
 
-  /** Mutual-k-NN clusters: connected components of the RECIPROCATED
-    * [[knnGraph]] edges — the standard "semantic cluster" definition
-    * (mutuality prunes hub nodes that would chain unrelated regions
-    * through one popular neighbor). Components run the large-star/
-    * small-star O(log² n) loop ([[Dedup.clusterPairs]]). Output:
-    * `(id, component)` for every node on a mutual edge (isolated
-    * nodes are their own trivial clusters — excluded, matching
-    * [[Dedup.clusterPairs]]). */
-  def mutualKnnClusters(
-      df: DataFrame,
-      idCol: String,
-      embCol: String,
-      k: Int,
-      tau: Double,
-      nPlanes: Int = 72,
-      bands: Int = 12,
-      dim: Int = 0,
-      probes: Int = 0,
-  ): DataFrame =
-    mutualKnnClustersFromPairs(
-      embeddingDupPairs(df, idCol, embCol, tau, nPlanes, bands, dim, probes),
-      k,
-    )
-
-  /** [[mutualKnnClusters]] over a PREBUILT verified pair table (the
-    * [[knnGraphFromPairs]] discipline). */
+  /** Mutual-k-NN clusters over a PREBUILT verified pair table (the
+    * [[knnGraphFromPairs]] discipline): connected components of the
+    * RECIPROCATED k-NN edges — the standard "semantic cluster"
+    * definition (mutuality prunes hub nodes that would chain unrelated
+    * regions through one popular neighbor). Components run the
+    * large-star/small-star O(log² n) loop ([[Dedup.clusterPairs]]).
+    * Output: `(id, component)` for every node on a mutual edge
+    * (isolated nodes are their own trivial clusters — excluded,
+    * matching [[Dedup.clusterPairs]]). */
   def mutualKnnClustersFromPairs(pairs: DataFrame, k: Int): DataFrame = {
     val mutualEdges = knnGraphFromPairs(pairs, k)
       .filter(col("mutual") && col("src") < col("dst"))
@@ -746,25 +721,10 @@ object Similarity {
     Dedup.clusterPairs(mutualEdges)
   }
 
-  /** [[knnGraph]] with the banding chosen by the corpus-count probe
-    * ([[chooseBanding]]) — the production path: the fixed 72/12 config
-    * has the documented quadratic random-collision floor past a few
-    * thousand vectors (measured 38× at the 10× corpus), while the
-    * ladder keeps the floor ∝ N. Identical results at gate scale (the
-    * first rung IS 72/12; the verify is exact on every rung). */
-  def knnGraphAuto(
-      df: DataFrame,
-      idCol: String,
-      embCol: String,
-      k: Int,
-      tau: Double,
-      probes: Int = 0,
-  ): DataFrame = {
-    val (nPlanes, bands) = chooseBanding(df.count())
-    knnGraph(df, idCol, embCol, k, tau, nPlanes, bands, dim = 0, probes = probes)
-  }
-
-  /** Cluster-cohesion report over the mutual-k-NN components — the
+  /** Cluster-cohesion report over the mutual-k-NN components of a
+    * PREBUILT verified pair table (the [[knnGraphFromPairs]]
+    * discipline; `df` still supplies the embeddings for the
+    * within-component cosine pairs) — the
     * SemDeDup quality artifact: per semantic cluster, its size and the
     * MEAN PAIRWISE COSINE among members (how tight is the cluster the
     * dedup rule is about to collapse?). The per-pair cosine floors to
@@ -776,24 +736,6 @@ object Similarity {
     * (this reports on DEDUP clusters, not arbitrary partitions —
     * a corpus-sized component upstream means τ is set wrong).
     * Output: `(component, n_members, n_pairs, mean_cos_ppm)`. */
-  def clusterCohesion(
-      df: DataFrame,
-      idCol: String,
-      embCol: String,
-      k: Int,
-      tau: Double,
-  ): DataFrame =
-    // auto-banded candidate generation (the production collision
-    // floor stays ∝ N; the ≤4000-vector rung IS the oracle's 72/12)
-    clusterCohesionFromPairs(
-      df, idCol, embCol,
-      embeddingDupPairsAuto(df, idCol, embCol, tau),
-      k,
-    )
-
-  /** [[clusterCohesion]] over a PREBUILT verified pair table (the
-    * [[knnGraphFromPairs]] discipline) — `df` still supplies the
-    * embeddings for the within-component cosine pairs. */
   def clusterCohesionFromPairs(
       df: DataFrame,
       idCol: String,
@@ -969,8 +911,8 @@ object Similarity {
     * scored rows per vector collapses back to one row per vector by a
     * map-side partial `min(struct(-cos, cent_id))` INSIDE the same
     * task, so the exchange moves one embedding copy per vector instead
-    * of C copies through a window shuffle — the [[pqEncodeInt8]]
-    * shape. nprobe>1 (only ever the small probed query side) keeps the
+    * of C copies through a window shuffle — a `min(struct)` hash
+    * aggregate argmin. nprobe>1 (only ever the small probed query side) keeps the
     * window. Both paths share the (cos desc, cent_id asc) tie-break,
     * so results are identical. */
   def ivfAssign(
@@ -1204,21 +1146,11 @@ object Similarity {
     * variant of Jégou et al.'s PQ).
     *
     * Returns (sub_id, code_id, code array<bigint>): m × ksub rows —
-    * a few KB however large the corpus, always broadcastable. */
-  def pqTrainInt8(
-      df: DataFrame,
-      idCol: String,
-      embCol: String,
-      m: Int,
-      ksub: Int,
-  ): DataFrame =
-    pqTrainInt8Dim(df, idCol, embCol, m, ksub, resolveDim(df, embCol, -1))
-
-  /** [[pqTrainInt8]] with the dimension already resolved — the composed
-    * entry points ([[pqAdcTopK]], [[annIvfPqTopK]]) probe the data once
-    * and thread the result here rather than re-running the LIMIT-1
-    * probe job per stage. */
-  private def pqTrainInt8Dim(
+    * a few KB however large the corpus, always broadcastable. The
+    * composed entry points ([[pqAdcTopK]], [[annIvfPqTopK]]) probe the
+    * dimension once and thread it here rather than re-running the
+    * LIMIT-1 probe job per stage. */
+  private[graft] def pqTrainInt8Dim(
       df: DataFrame,
       idCol: String,
       embCol: String,
@@ -1248,25 +1180,17 @@ object Similarity {
     * its nearest codebook entry (integer L2, ties to the smaller
     * code_id) per subspace. 64 floats shrink to 8 bytes: the
     * compression that lets a 100 TB vector corpus's index live in
-    * memory.
+    * memory. The dimension is pre-resolved (see [[pqTrainInt8Dim]]).
     *
-    * Dataflow: quantize is map-only; subvector explode is m rows per
-    * vector; the codebook join is broadcast; the per-(vector, subspace)
-    * argmin is `min(struct(dist, code_id))` — a hash aggregate with
-    * map-side partial combine, not a window — and the code collect is
-    * one groupBy on the id. */
-  def pqEncodeInt8(
-      df: DataFrame,
-      codebook: DataFrame,
-      idCol: String,
-      embCol: String,
-      m: Int,
-  ): DataFrame =
-    pqEncodeInt8Dim(df, codebook, idCol, embCol, m, resolveDim(df, embCol, -1))
-
-  /** [[pqEncodeInt8]] with the dimension pre-resolved (see
-    * [[pqTrainInt8Dim]]). */
-  private def pqEncodeInt8Dim(
+    * MAP-ONLY: the codebook is collected once ([[codebookArray]], a
+    * few KB by PQ construction) and carried inside a native one-pass
+    * expression ([[graft.functions.PqEncodeInt8Expr]]) that quantizes
+    * the vector and computes the m argmins in tight integer loops. No
+    * subvector explode, no broadcast join, no argmin exchange, no
+    * re-collect groupBy: the whole encode pass is one projection over
+    * the corpus scan — at 100 TB the difference between a zero-shuffle
+    * stage and two N·m-row exchanges. */
+  private[graft] def pqEncodeInt8Dim(
       df: DataFrame,
       codebook: DataFrame,
       idCol: String,
@@ -1275,7 +1199,14 @@ object Similarity {
       dim: Int,
   ): DataFrame = {
     require(m >= 1 && dim % m == 0, s"m=$m must divide dim=$dim")
-    pqEncodeLiteralDim(df, codebook, idCol, embCol, m, dim)
+    val cb = codebookArray(codebook, m).map(_.map(_.toArray).toArray).toArray
+    require(cb(0)(0).length == dim / m, s"codebook dsub ${cb(0)(0).length} != dim/m = ${dim / m}")
+    df.select(
+      col(idCol),
+      graft.functions.PqEncodeInt8Expr
+        .pq_encode(col(embCol), cb)
+        .as("pq_codes"),
+    )
   }
 
   /** Collect an m-subspace codebook into a dense driver-side array.
@@ -1299,38 +1230,11 @@ object Similarity {
     }
   }
 
-  /** MAP-ONLY PQ encode: the codebook is collected once
-    * ([[codebookArray]], a few KB by PQ construction) and carried
-    * inside a native one-pass expression
-    * ([[graft.functions.PqEncodeInt8Expr]]) that quantizes the vector
-    * and computes the m argmins in tight integer loops. No subvector
-    * explode, no broadcast join, no argmin exchange, no re-collect
-    * groupBy: the whole encode pass is one projection over the corpus
-    * scan — at 100 TB the difference between a zero-shuffle stage and
-    * two N·m-row exchanges. */
-  private def pqEncodeLiteralDim(
-      df: DataFrame,
-      codebook: DataFrame,
-      idCol: String,
-      embCol: String,
-      m: Int,
-      dim: Int,
-  ): DataFrame = {
-    val cb = codebookArray(codebook, m).map(_.map(_.toArray).toArray).toArray
-    require(cb(0)(0).length == dim / m, s"codebook dsub ${cb(0)(0).length} != dim/m = ${dim / m}")
-    df.select(
-      col(idCol),
-      graft.functions.PqEncodeInt8Expr
-        .pq_encode(col(embCol), cb)
-        .as("pq_codes"),
-    )
-  }
-
   /** The (id, sub_id, qsub) quantized-subvector table every PQ stage
     * consumes — built once per entry point and, when training runs,
     * materialized once and shared between the Lloyd rounds and the
     * encode pass instead of re-quantizing the corpus per stage. */
-  private def pqSubvectors(
+  private[ops] def pqSubvectors(
       df: DataFrame,
       idCol: String,
       embCol: String,
@@ -1362,41 +1266,17 @@ object Similarity {
     * integers and engine-reproducible, no decimal-division dialect
     * gaps. Entries that lose every member keep their position.
     *
-    * Scale shape per round: assignment is the same broadcast-codebook
-    * argmin aggregate as [[pqEncodeInt8]]; the recompute is one
+    * Scale shape per round: assignment is a broadcast-codebook
+    * `min(struct(dist, code_id))` hash aggregate; the recompute is one
     * position-exploded hash aggregate (N·dim rows map-side-combined
     * straight down to m·ksub·dsub cells). The codebook is
     * localCheckpointed between rounds — m×ksub rows — so lineage stays
-    * flat and each broadcast re-plans nothing. */
-  def pqRefineInt8(
-      df: DataFrame,
-      codebook: DataFrame,
-      idCol: String,
-      embCol: String,
-      m: Int,
-      iters: Int,
-  ): DataFrame =
-    pqRefineInt8Dim(df, codebook, idCol, embCol, m, resolveDim(df, embCol, -1), iters)
-
-  private def pqRefineInt8Dim(
-      df: DataFrame,
-      codebook: DataFrame,
-      idCol: String,
-      embCol: String,
-      m: Int,
-      dim: Int,
-      iters: Int,
-  ): DataFrame = {
-    require(iters >= 0, s"iters must be >= 0, got $iters")
-    if (iters == 0) return codebook
-    val subs = pqSubvectors(df, idCol, embCol, m, dim / m).localCheckpoint(eager = false)
-    pqRefineFromSubs(subs, codebook, idCol, iters)
-  }
-
-  /** Lloyd rounds over a pre-materialized subvector table (the rounds
-    * scan it once per iteration; callers that also encode share the
-    * same materialization). */
-  private def pqRefineFromSubs(
+    * flat and each broadcast re-plans nothing.
+    *
+    * The rounds scan a pre-materialized subvector table
+    * ([[pqSubvectors]]) once per iteration; callers that also encode
+    * share the same materialization. */
+  private[ops] def pqRefineFromSubs(
       subs: DataFrame,
       codebook: DataFrame,
       idCol: String,
@@ -1654,7 +1534,7 @@ object Similarity {
     * The integer ladder is preserved: residuals are computed in double
     * (float operands widen exactly, subtraction is exactly rounded)
     * and rounded once to float, then the UNCHANGED int8 PQ machinery —
-    * [[pqTrainInt8]] seeding, [[PqEncodeInt8Expr]] map-only encode,
+    * [[pqTrainInt8Dim]] seeding, [[PqEncodeInt8Expr]] map-only encode,
     * integer ADC — runs over the residual column, so training,
     * encoding, and ranking remain bit-reproducible and the oracle
     * replays every stage (`CAST(x - c AS REAL)` is the same
@@ -1799,16 +1679,6 @@ object Similarity {
       trainSample,
     )
 
-  /** Persist an IVF codebook (e.g. a [[ivfRefine]] result) so ANN
-    * queries reuse a trained index across sessions — the codebook is a
-    * few KB of parquet; training cost is paid once per corpus
-    * generation, not per query. */
-  def saveCentroids(centroids: DataFrame, path: String): Unit =
-    centroids.coalesce(1).write.mode("overwrite").parquet(path)
-
-  def loadCentroids(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
-
   /** Deterministic bounded training set: the `n` vectors whose
     * `md5(id)` sorts first (ties by id). A hash order is a uniform
     * pseudo-random permutation with no RNG state, so the sample is
@@ -1860,7 +1730,7 @@ object Similarity {
     * codebook is bit-deterministic under any partitioning (plain double
     * sums would float with shuffle order). Means are cast back to
     * float, matching the corpus embedding type. A cell that loses
-    * every member keeps its previous centroid (the [[pqRefineInt8]]
+    * every member keeps its previous centroid (the [[pqRefineFromSubs]]
     * policy), so the codebook never shrinks.
     *
     * `trainSample > 0` bounds each Lloyd pass to that many

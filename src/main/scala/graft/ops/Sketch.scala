@@ -122,44 +122,6 @@ object Cms {
       .groupBy(col(keyCol))
       .agg(min(coalesce(col("cnt"), lit(0L))).as("cms_estimate"))
 
-  /** Equi-join SIZE estimation from two sketches built with the SAME
-    * (depth, width) — the inner-product estimator of Cormode &
-    * Muthukrishnan §4.2 (the AMS F₂ idea carried over to CMS): for
-    * each hash row i, Σ_b cntA[i,b]·cntB[i,b] overestimates
-    * |A ⋈ B| = Σ_k fA(k)·fB(k) (keys sharing a bucket only ADD
-    * cross-terms, never subtract — one-sided like the point
-    * estimate), and the estimate is the MIN over the d rows; error ≤
-    * ε·|A|·|B| with probability 1−δ. This is how an optimizer costs a
-    * join from per-table sketches WITHOUT touching either table: the
-    * inputs here are two d×w summaries, so the whole estimate is a
-    * (row, bucket)-keyed join of two broadcast-sized tables — O(d·w)
-    * work at ANY corpus size, where the exact answer costs a full
-    * shuffle join of the corpora.
-    *
-    * The inner join is correct per BUCKET: a bucket absent from either
-    * sketch has a zero counter on that side and contributes 0 to the
-    * product. Per ROW it is not sufficient on its own — a hash row
-    * whose buckets don't overlap at all (dot = 0, i.e. the estimator's
-    * best row) would vanish from the groupBy and the min would be
-    * taken over a SUBSET of the d rows, overshooting exactly when the
-    * join is empty. The dots are therefore left-joined back onto the
-    * row spine (the distinct rows present in either sketch) with
-    * missing dots coalesced to 0 before the min. Returns one row:
-    * `join_size_est` (0 when either sketch is empty — an empty input
-    * has an empty join).
-    */
-  def joinSizeEstimate(skA: DataFrame, skB: DataFrame): DataFrame = {
-    val dots = skA
-      .select(col("row"), col("bucket"), col("cnt").as("cnt_a"))
-      .join(skB.select(col("row"), col("bucket"), col("cnt").as("cnt_b")), Seq("row", "bucket"))
-      .groupBy(col("row"))
-      .agg(sum(col("cnt_a") * col("cnt_b")).as("dot"))
-    val spine = skA.select(col("row")).unionAll(skB.select(col("row"))).distinct()
-    spine
-      .join(dots, Seq("row"), "left")
-      .agg(min(coalesce(col("dot"), lit(0L))).as("join_size_est"))
-      .select(coalesce(col("join_size_est"), lit(0L)).as("join_size_est"))
-  }
 }
 
 /** Bloom filter (Bloom 1970) as a relational artifact — the MEMBERSHIP

@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
   *     y of every strictly-smaller x (ties on y lose to the smaller
   *     x, which dominates via the strict x advantage). The window is
   *     unpartitioned, but it runs over ≤|distinct x| rows — the same
-  *     bounded-domain-histogram argument the quantile/winsorize
+  *     bounded-domain-histogram argument the quantile
   *     family rests on, NEVER the corpus.
   *
   * Row count touched by the sweep at 100 TB: |x domain|. The corpus

@@ -1328,7 +1328,7 @@ object Stats {
     * windows per hash and comparing them numerically against the same
     * CDF cut points. No cross-engine replay exists (DuckDB has no
     * xxhash64), so this is the production path and the md5 form the
-    * oracle twin — the simhash64Xx / simhash64Md5 convention. */
+    * oracle twin — the simhash64Xx / simhash64_md5 convention. */
   def bootstrapMeanCiXx(
       df: DataFrame,
       idCol: Column,
@@ -1580,17 +1580,5 @@ object Stats {
         sum(col("__pos")).as("pos"),
         expr("sum(__t) div sum(__n)").as("gini_split_ppm"),
       )
-  }
-
-  def winsorize(df: DataFrame, valueCol: String, ppmLo: Long, ppmHi: Long): DataFrame = {
-    val th = quantileThresholds(df, valueCol, ppmLo, ppmHi)
-    // least/greatest SKIP nulls (in Spark and DuckDB alike), so without
-    // the guard a NULL feature would clamp to the p-hi threshold — a
-    // null must stay a null through normalization.
-    val clamped = when(col(valueCol).isNull, lit(null))
-      .otherwise(greatest(col("__lo"), least(col("__hi"), col(valueCol))))
-    df.crossJoin(broadcast(th))
-      .withColumn(valueCol, clamped)
-      .drop("__lo", "__hi")
   }
 }

@@ -241,7 +241,7 @@ object Text {
   /** Exact lower-quantile pruning over a BOUNDED-INTEGER score column
     * — drop the worst `quantilePpm`/10⁶ of rows by score (the
     * perplexity-pruning step of CCNet/Gopher-style curation, here on
-    * [[bigramLmScore]]'s integer-ppm scores): keep every row whose
+    * [[bigramLmScoreFromTables]]' integer-ppm scores): keep every row whose
     * score is ≥ the exact q-quantile threshold.
     *
     * The 100 TB trick is that EXACT quantiles over a bounded integer
@@ -285,13 +285,26 @@ object Text {
     scored.crossJoin(broadcast(thresh)).filter(col(scoreCol) >= col("__thresh")).drop("__thresh")
   }
 
-  /** [[bigramLmScore]] over a prebuilt [[NgramCounts.NgramTables]]
-    * artifact (the write-once n-gram store): the two vocabulary-sized
-    * count tables come from the shared artifact (summed over the
-    * train/test slice flag — c(w₁·) is the prefix-marginal of the
-    * bigram table, so no unigram scan is needed), leaving ONE corpus
-    * pass (the per-document scoring explode). Bit-identical to
-    * [[bigramLmScore]] (OpsSpec equality pin). */
+  /** Corpus-trained bigram language-model score — the perplexity-proxy
+    * quality signal (CCNet/Gopher filter by LM perplexity; this is the
+    * n-gram form of that, trained on the corpus itself): per bigram
+    * occurrence the conditional probability P(w₂|w₁) as an integer
+    * ppm, ⌊c(w₁w₂)·10⁶ / c(w₁·)⌋, and per document the mean over its
+    * bigram occurrences, again floored. Predictable text (frequent
+    * continuations) scores high; gibberish and boilerplate-free noise
+    * score low. Deliberately integer end-to-end: log-space perplexity
+    * would drag engine-specific `ln` rounding into the gate, while
+    * floor-ppm arithmetic is bit-identical everywhere and
+    * order-independent (integer sums). Documents with < 2 tokens have
+    * no bigrams and are excluded (score undefined, not zero).
+    *
+    * The two vocabulary-sized count tables come from a prebuilt
+    * [[NgramCounts.NgramTables]] artifact (the write-once n-gram store,
+    * summed over the train/test slice flag — c(w₁·) is the
+    * prefix-marginal of the bigram table, so no unigram scan is
+    * needed), leaving ONE corpus pass (the per-document scoring
+    * explode). Bit-identical to the direct census form (OpsSpec
+    * equality pin against its test-scope reference). */
   def bigramLmScoreFromTables(
       docs: DataFrame,
       idCol: String,
@@ -324,60 +337,30 @@ object Text {
       )
   }
 
-  /** Corpus-trained bigram language-model score — the perplexity-proxy
-    * quality signal (CCNet/Gopher filter by LM perplexity; this is the
-    * n-gram form of that, trained on the corpus itself): per bigram
-    * occurrence the conditional probability P(w₂|w₁) as an integer
-    * ppm, ⌊c(w₁w₂)·10⁶ / c(w₁·)⌋, and per document the mean over its
-    * bigram occurrences, again floored. Predictable text (frequent
-    * continuations) scores high; gibberish and boilerplate-free noise
-    * score low. Deliberately integer end-to-end: log-space perplexity
-    * would drag engine-specific `ln` rounding into the gate, while
-    * floor-ppm arithmetic is bit-identical everywhere and
-    * order-independent (integer sums), so ranking and thresholding
-    * behave the same on any engine or partitioning.
+  /** Trigram language-model scoring with STUPID BACKOFF (Brants et al.
+    * 2007, "Large Language Models in Machine Translation" §4) — the
+    * web-scale LM quality score: no discounting, no normalization,
+    * just count ratios with a fixed back-off penalty α = 0.4. Held-out
+    * evaluation: n-gram counts come from the `!isTest` (train) slice
+    * only, scored positions from the `isTest` slice — on a
+    * self-trained model every observed trigram hits and backoff is
+    * dead code.
     *
-    * Scale shape: the "training pass" is one bigram count aggregation
-    * (shuffle keyed on the bigram) plus a prefix-count aggregation —
-    * both vocabulary-sized, reusable across scoring runs; scoring
-    * joins each document's bigram occurrences to the two count tables
-    * (keyed equi-joins, AQE-broadcastable while the vocabulary fits)
-    * and aggregates per document. Documents with < 2 tokens have no
-    * bigrams and are excluded (score undefined, not zero). */
-  def bigramLmScore(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val withToks = docs
-      .select(col(idCol), tokens(col(textCol)).as("__t"))
-      // sequence(1, 0) would generate a DESCENDING ramp in Spark —
-      // filter the sub-2-token docs before building the ramp
-      .filter(size(col("__t")) >= 2)
-    val bgs = withToks
-      .select(
-        col(idCol),
-        explode(
-          expr("transform(sequence(1, size(__t) - 1), i -> concat(element_at(__t, i), ' ', element_at(__t, i + 1)))")
-        ).as("bg"),
-      )
-      .withColumn("w1", substring_index(col("bg"), " ", 1))
-    val c2 = bgs.groupBy("bg").agg(count(lit(1)).as("__c2"))
-    val c1 = bgs.groupBy("w1").agg(count(lit(1)).as("__c1"))
-    bgs
-      .join(c2, Seq("bg"))
-      .join(c1, Seq("w1"))
-      .select(col(idCol), expr("(__c2 * 1000000L) div __c1").as("__p"))
-      .groupBy(col(idCol))
-      .agg(
-        expr("sum(__p) div count(1)").as("lm_score_ppm"),
-        count(lit(1)).as("n_bigrams"),
-      )
-  }
-
-  /** [[trigramBackoffScore]] over a prebuilt
-    * [[NgramCounts.NgramTables]] artifact whose slice flag was built
-    * with the SAME `isTest` predicate: the three train-side count
-    * tables and the token total are slice filters over the artifact
+    * Per test trigram (t₁,t₂,t₃), in exact floored integer ppm with
+    * α = 2/5 and α² = 4/25 kept as integer ratios:
+    *
+    *   c₃(t₁t₂t₃) > 0 → 10⁶·c₃/c₂(t₁t₂)         (c₂ > 0 whenever c₃ > 0)
+    *   c₂(t₂t₃) > 0  → (2·(10⁶·c₂(t₂t₃)/c₁(t₂))) / 5
+    *   c₁(t₃) > 0    → (4·(10⁶·c₁(t₃)/N)) / 25
+    *   else          → 0   (out-of-vocabulary)
+    *
+    * The train-side count tables and the token total are slice
+    * filters over a prebuilt [[NgramCounts.NgramTables]] artifact whose
+    * slice flag was built with the SAME `isTest` predicate
     * (vocabulary-sized), leaving one corpus pass (the test-position
-    * explode). Bit-identical to [[trigramBackoffScore]] (OpsSpec
-    * equality pin). */
+    * explode). Per doc: (n_trigrams, per-level hit counts, mean
+    * score). Bit-identical to the direct census form (OpsSpec equality
+    * pin against its test-scope reference). */
   def trigramBackoffScoreFromTables(
       docs: DataFrame,
       idCol: String,
@@ -394,70 +377,11 @@ object Text {
     backoffScorePositions(docs, idCol, textCol, isTest, c1, nTot, c2, c3)
   }
 
-  /** Trigram language-model scoring with STUPID BACKOFF (Brants et al.
-    * 2007, "Large Language Models in Machine Translation" §4) — the
-    * web-scale LM quality score: no discounting, no normalization,
-    * just count ratios with a fixed back-off penalty α = 0.4, which at
-    * corpus scale ranks documents as well as smoothed models at a
-    * fraction of the cost. Held-out evaluation: n-gram counts come
-    * from the `!isTest` (train) slice only, scored positions from the
-    * `isTest` slice — on a self-trained model every observed trigram
-    * hits and backoff is dead code (the [[bigramLmScore]] caveat this
-    * op exists to fix).
-    *
-    * Per test trigram (t₁,t₂,t₃), in exact floored integer ppm with
-    * α = 2/5 and α² = 4/25 kept as integer ratios:
-    *
-    *   c₃(t₁t₂t₃) > 0 → 10⁶·c₃/c₂(t₁t₂)         (c₂ > 0 whenever c₃ > 0)
-    *   c₂(t₂t₃) > 0  → (2·(10⁶·c₂(t₂t₃)/c₁(t₂))) / 5
-    *   c₁(t₃) > 0    → (4·(10⁶·c₁(t₃)/N)) / 25
-    *   else          → 0   (out-of-vocabulary)
-    *
-    * Dataflow: three train-side n-gram count tables (vocabulary-sized,
-    * shuffle-keyed on the gram) + a 1-row token total; test positions
-    * left-join each level and take the first hit. Per doc:
-    * (n_trigrams, per-level hit counts, mean score). Everything is
-    * counts and floored divisions — bit-replayable. */
-  def trigramBackoffScore(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      isTest: Column,
-  ): DataFrame = {
-    val withToks = docs.select(col(idCol), isTest.as("__test"), tokens(col(textCol)).as("__t"))
-    val train    = withToks.filter(!col("__test"))
-    val uni      = train.select(explode(col("__t")).as("w"))
-    val c1       = uni.groupBy("w").agg(count(lit(1)).as("__c1"))
-    val nTot     = uni.agg(count(lit(1)).as("__n"))
-    val c2 = train
-      .filter(size(col("__t")) >= 2)
-      .select(
-        explode(
-          expr("transform(sequence(1, size(__t) - 1), i -> concat(element_at(__t, i), ' ', element_at(__t, i + 1)))")
-        ).as("bg")
-      )
-      .groupBy("bg")
-      .agg(count(lit(1)).as("__c2"))
-    val c3 = train
-      .filter(size(col("__t")) >= 3)
-      .select(
-        explode(
-          expr(
-            "transform(sequence(1, size(__t) - 2), i -> concat(element_at(__t, i), ' ', element_at(__t, i + 1), ' ', element_at(__t, i + 2)))"
-          )
-        ).as("tg")
-      )
-      .groupBy("tg")
-      .agg(count(lit(1)).as("__c3"))
-    backoffScorePositions(docs, idCol, textCol, isTest, c1, nTot, c2, c3)
-  }
-
-  /** Shared scoring stage of [[trigramBackoffScore]] /
-    * [[trigramBackoffScoreFromTables]]: explode the test-slice trigram
-    * positions and backoff-join them against the supplied train-side
+  /** Scoring stage of [[trigramBackoffScoreFromTables]]: explode the
+    * test-slice trigram positions and backoff-join them against the supplied train-side
     * count tables (`c1(w, __c1)`, `nTot(__n)`, `c2(bg, __c2)`,
     * `c3(tg, __c3)`). */
-  private def backoffScorePositions(
+  private[ops] def backoffScorePositions(
       docs: DataFrame,
       idCol: String,
       textCol: String,
@@ -1352,38 +1276,22 @@ object Text {
       )
   }
 
-  /** Corpus-derived wordpiece vocabulary over a token-occurrence frame
-    * `(word)` — the deterministic stand-in for a trained vocab so the
-    * whole wordpiece pipeline is engine-replayable: every single
-    * character of the corpus alphabet (base + `##` continuation — the
-    * coverage floor that makes mid-word failure impossible), the
+  /** Corpus-derived wordpiece vocabulary over a PREBUILT word
+    * histogram `(word, __c)` — the deterministic stand-in for a trained
+    * vocab so the whole wordpiece pipeline is engine-replayable: every
+    * single character of the corpus alphabet (base + `##` continuation
+    * — the coverage floor that makes mid-word failure impossible), the
     * `topWords` most frequent whole words, the `topPrefixes` most
     * frequent 2-char word prefixes, and the `topPrefixes` most frequent
     * `##`-continuation bigrams at character position 3. Ties broken by
     * piece ascending, so the vocab is a pure function of the corpus.
     *
-    * Scale shape: ONE corpus aggregation (the word histogram,
-    * map-side combinable); every derived top — whole words, prefixes,
-    * continuation bigrams — re-aggregates that vocab-bounded histogram
-    * (prefix frequency = Σ word counts by prefix), so the corpus is
-    * scanned exactly once however many vocab classes are derived. The
-    * rank windows run over those bounded tables — the [[Stats]]
-    * bounded-domain discipline (a natural-language vocabulary is
-    * Heaps-law-bounded, not corpus-proportional). */
-  def wordpieceVocab(occ: DataFrame, topWords: Int, topPrefixes: Int): DataFrame =
-    wordpieceVocabFromHist(
-      occ.groupBy(col("word")).agg(count(lit(1)).as("__c")).localCheckpoint(eager = false),
-      topWords,
-      topPrefixes,
-    )
-
-  /** [[wordpieceVocab]] over a PREBUILT word histogram `(word, __c)` —
-    * the entry point for callers that already materialized the corpus
-    * word census (tokenize gates need the distinct-word table anyway;
-    * deriving both vocab and tokenizer input from ONE histogram saves
-    * a full corpus explode — guide §2.4). The histogram must be
-    * distinct by `word`; pass a checkpointed frame, it is consumed by
-    * several derived tops. */
+    * Every derived top re-aggregates the vocab-bounded histogram
+    * (prefix frequency = Σ word counts by prefix), so the corpus census
+    * the caller already materialized (tokenize gates need the
+    * distinct-word table anyway) is the only corpus pass. The
+    * histogram must be distinct by `word`; pass a checkpointed frame,
+    * it is consumed by several derived tops. */
   def wordpieceVocabFromHist(hist: DataFrame, topWords: Int, topPrefixes: Int): DataFrame = {
     require(topWords >= 0 && topPrefixes >= 0, s"negative top-k: $topWords/$topPrefixes")
     import org.apache.spark.sql.expressions.Window
@@ -1529,13 +1437,22 @@ object Text {
     )
   }
 
-  /** [[knContinuationCounts]] over a prebuilt
-    * [[NgramCounts.NgramTables]] artifact: the distinct bigram TYPES
-    * are exactly the rows of the bigram count table (summed over the
-    * slice flag), and the unigram counts its marginal — so the whole
-    * operator becomes vocabulary-sized re-aggregations with no corpus
-    * scan at all. Bit-identical to [[knContinuationCounts]] (OpsSpec
-    * equality pin). */
+  /** Kneser–Ney continuation counts (Kneser & Ney 1995) — the other
+    * half of the LM-smoothing toolkit beside
+    * [[freqOfFreqsFromTermCounts]]: per word, the unigram count c(w),
+    * the DISTINCT-left-context count N1+(•w) (how many different words
+    * precede it — the KN insight: "Francisco" is frequent but only
+    * ever follows "San", so its continuation mass should be tiny), the
+    * distinct-right-context count N1+(w •), and the continuation
+    * probability p_cont(w) = N1+(•w) / |distinct bigram types| as a
+    * floored ppm.
+    *
+    * Over a prebuilt [[NgramCounts.NgramTables]] artifact: the distinct
+    * bigram TYPES are exactly the rows of the bigram count table
+    * (summed over the slice flag), and the unigram counts its marginal
+    * — so the whole operator is vocabulary-sized re-aggregations with
+    * no corpus scan at all. Bit-identical to the direct census form
+    * (OpsSpec equality pin against its test-scope reference). */
   def knContinuationCountsFromTables(t: NgramCounts.NgramTables): DataFrame = {
     // one row per distinct bigram type; consumed thrice (total, left,
     // right) — tiny, but checkpoint so the slice re-group runs once
@@ -1557,82 +1474,23 @@ object Text {
       )
   }
 
-  /** Kneser–Ney continuation counts (Kneser & Ney 1995) — the other
-    * half of the LM-smoothing toolkit beside [[freqOfFreqs]]: per
-    * word, the unigram count c(w), the DISTINCT-left-context count
-    * N1+(•w) (how many different words precede it — the KN insight:
-    * "Francisco" is frequent but only ever follows "San", so its
-    * continuation mass should be tiny), the distinct-right-context
-    * count N1+(w •), and the continuation probability
-    * p_cont(w) = N1+(•w) / |distinct bigram types| as a floored ppm.
-    * Corpus-scale posture: one token scan builds within-doc bigrams
-    * map-side (a transform over the token array — no self-join), one
-    * DISTINCT aggregation over bigram types, bounded per-word
-    * rollups; the bigram-type total is a broadcast 1-row aggregate. */
-  def knContinuationCounts(docs: DataFrame, textCol: String): DataFrame = {
-    val toks = tokens(col(textCol))
-    val bigrams = docs
-      .select(
-        explode(
-          when(size(toks) < 2, array().cast("array<struct<w1:string,w2:string>>"))
-            .otherwise(
-              transform(
-                sequence(lit(1), size(toks) - 1),
-                i => struct(element_at(toks, i).as("w1"), element_at(toks, i + lit(1)).as("w2")),
-              )
-            )
-        ).as("bg")
-      )
-      .select(col("bg.w1").as("w1"), col("bg.w2").as("w2"))
-    val types = bigrams.distinct().localCheckpoint(eager = false) // consumed thrice
-    val total = types.agg(count(lit(1)).as("__t"))
-    val uni = docs
-      .select(explode(tokens(col(textCol))).as("word"))
-      .groupBy("word")
-      .agg(count(lit(1)).as("c"))
-    val left  = types.groupBy(col("w2").as("word")).agg(count(lit(1)).as("n_left"))
-    val right = types.groupBy(col("w1").as("word")).agg(count(lit(1)).as("n_right"))
-    uni
-      .join(left, Seq("word"), "left")
-      .join(right, Seq("word"), "left")
-      .crossJoin(broadcast(total))
-      .select(
-        col("word"),
-        col("c"),
-        coalesce(col("n_left"), lit(0L)).as("n_left"),
-        coalesce(col("n_right"), lit(0L)).as("n_right"),
-        expr("coalesce(n_left, 0L) * 1000000L div __t").as("pcont_ppm"),
-      )
-  }
-
   /** Frequency-of-frequencies table with Good–Turing adjusted counts
     * (Good 1953) — the LM-smoothing diagnostic: N_r = how many distinct
-    * token types occur exactly r times, and the GT re-estimated count
+    * terms occur exactly r times, and the GT re-estimated count
     * r* = (r+1)·N_{r+1}/N_r that discounts observed mass toward unseen
     * events (the singleton count N₁ IS the unseen-mass estimate).
     * Reported for r ≤ `maxR` as exact integers — `gt_rstar_ppm` is the
     * floored ppm quotient, null when N_{r+1} is absent (the raw-count
     * regime where GT is unreliable anyway; smoothing past gaps is the
-    * caller's modeling decision). Corpus-scale posture: one token
-    * groupBy (corpus-sized, plain hash aggregate), one count-of-counts
-    * groupBy (output ≤ maxR+1 rows after the early filter), one
-    * broadcast self-join on r+1 — no windows at all.
+    * caller's modeling decision). One count-of-counts groupBy (output
+    * ≤ maxR+1 rows after the early filter) and one broadcast self-join
+    * on r+1 — no windows at all.
     *
-    * `termsCol` is any array-of-terms expression — word tokens for a
-    * unigram table, [[shingles]] for the n-gram tables GT smoothing is
-    * usually applied to (low-r mass lives in the n-gram space; a
-    * bounded word vocabulary may have no rare types at all). */
-  def freqOfFreqs(docs: DataFrame, termsCol: Column, maxR: Int): DataFrame =
-    freqOfFreqsFromTermCounts(
-      docs.select(explode(termsCol).as("tok")).groupBy("tok").agg(count(lit(1)).as("r")),
-      maxR,
-    )
-
-  /** [[freqOfFreqs]] over a prebuilt per-term count table (column `r`
-    * = the term's full-corpus count) — e.g. the trigram table of a
-    * [[NgramCounts.NgramTables]] artifact summed over its slice flag.
-    * This is the whole operator minus the corpus census, which is the
-    * part a production pipeline writes once. */
+    * `counts` is a per-term count table (column `r` = the term's
+    * full-corpus count) — e.g. the trigram table of a
+    * [[NgramCounts.NgramTables]] artifact summed over its slice flag
+    * (low-r mass lives in the n-gram space; a bounded word vocabulary
+    * may have no rare types at all). */
   def freqOfFreqsFromTermCounts(counts: DataFrame, maxR: Int): DataFrame = {
     require(maxR >= 1, s"maxR must be >= 1, got $maxR")
     // ≤ maxR+1 rows, consumed twice (base + shifted self-join):

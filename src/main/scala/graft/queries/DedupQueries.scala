@@ -315,7 +315,7 @@ object DedupQueries {
   }
 
   /** Weighted (multiset) Jaccard over token histograms for the same
-    * MinHash-LSH candidates ([[graft.ops.Dedup.weightedJaccardPairs]]):
+    * MinHash-LSH candidates ([[graft.ops.Dedup.weightedJaccardPairsFromSigs]]):
     * the repeat-sensitive near-dup verify — Σmin/Σmax over token
     * COUNTS, integer-exact, candidate-proportional. τ = 0.30. */
   private val weightedJaccard = Q(
@@ -510,7 +510,7 @@ object DedupQueries {
   }
 
   /** Incremental cross-run NEAR-dup screen
-    * ([[graft.ops.Dedup.dedupIncrementalFuzzy]]): the persisted state
+    * ([[graft.ops.Dedup.dedupIncrementalFuzzyNative]]): the persisted state
     * is the LSH (band, band_hash) index of a previous run (documents
     * below id 250); the incoming batch is the rest of the corpus plus
     * 50 id-shifted replicas of indexed documents. The replicas collide
@@ -571,7 +571,7 @@ object DedupQueries {
   }
 
   /** Shingle-level containment pairs
-    * ([[graft.ops.Dedup.containmentPairs]]): the corpus plus 30
+    * ([[graft.ops.Dedup.containmentPairsPrefix]]): the corpus plus 30
     * id-shifted 12-token prefixes of existing documents — every
     * planted prefix's distinct shingle set is a subset of its source
     * document's, so it must appear as an (inner, outer) pair; the
@@ -631,8 +631,8 @@ object DedupQueries {
        |       AS BIGINT) AS simhash
        |FROM bits GROUP BY doc_id""".stripMargin,
   ) { (s, d) =>
-    // Native single-pass expression — proven bit-equal to
-    // Dedup.simhash32(shingles) in FunctionsSpec; the oracle stays the
+    // Native single-pass expression — proven bit-equal to the
+    // relational vote aggregate in FunctionsSpec; the oracle stays the
     // relational SQL. Map-only: no shuffle at all for signatures.
     // Sub-3-token documents have no 3-shingles: the oracle's shing CTE
     // drops them (no sig row) while the native expression would emit a
@@ -684,7 +684,7 @@ object DedupQueries {
   }
 
   /** 64-bit SimHash pairing, differentially checked: the signature is
-    * [[graft.ops.Dedup.simhash64Md5]] (the engine-reproducible md5
+    * [[graft.functions.SimHash64Md5Expr]] (the engine-reproducible md5
     * twin of the xxhash64 production hash), so the oracle can brute-
     * force Hamming over all pairs while Spark runs the identical
     * 5-band pigeonhole self-join the production path uses — what is
@@ -717,8 +717,8 @@ object DedupQueries {
        |FROM sigs a JOIN sigs b ON a.doc_id < b.doc_id
        |WHERE bit_count(xor(a.simhash, b.simhash)) <= 4""".stripMargin,
   ) { (s, d) =>
-    // Native one-pass signature (bit-equal to
-    // Dedup.simhash64Md5(sharedShingles), asserted in FunctionsSpec):
+    // Native one-pass signature (bit-equal to the relational vote
+    // aggregate over the shingle table, asserted in FunctionsSpec):
     // the signature stage is map-only over the documents scan — no
     // shingle shuffle — leaving the banded self-join as the query's
     // only exchange.
@@ -927,7 +927,8 @@ object DedupQueries {
   }
 
   /** [[knnGraphQ]] through the auto-banded ladder
-    * ([[graft.ops.Similarity.knnGraphAuto]]) — the production twin of
+    * ([[graft.ops.Similarity.embeddingDupPairsAuto]] pairs into
+    * [[graft.ops.Similarity.knnGraphFromPairs]]) — the production twin of
     * the fixed-config demo row (identical at gate scale: the probe
     * picks the 72/12 rung for ≤ 4000 vectors, which is what the shared
     * oracle replays). */
@@ -956,7 +957,7 @@ object DedupQueries {
   }
 
   /** Mutual-k-NN semantic clusters
-    * ([[graft.ops.Similarity.mutualKnnClusters]]): connected components
+    * ([[graft.ops.Similarity.mutualKnnClustersFromPairs]]): connected components
     * of the reciprocated k-NN edges — the hub-robust cluster stage
     * under SemDeDup. Oracle: the same graph through a recursive
     * reachability closure. */
@@ -994,7 +995,7 @@ object DedupQueries {
   }
 
   /** Cluster-cohesion report over the mutual-k-NN components
-    * ([[graft.ops.Similarity.clusterCohesion]]): per semantic cluster,
+    * ([[graft.ops.Similarity.clusterCohesionFromPairs]]): per semantic cluster,
     * size and mean pairwise cosine (floored ppm per pair BEFORE the
     * sum, so the mean is an order-independent integer quotient) — the
     * quality artifact that says how tight the clusters SemDeDup is

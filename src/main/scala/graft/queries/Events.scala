@@ -344,9 +344,7 @@ object Events {
   }
 
   /** Gap-based sessionization (30-min inactivity), declarative batch
-    * form ([[graft.ops.Sessionize.batchSessions]]); the streaming
-    * `flatMapGroupsWithState` twin is asserted equivalent in
-    * SessionizeSpec. */
+    * form ([[graft.ops.Sessionize.batchSessions]]). */
   private val sessionize = Q(
     "evt_sessionize",
     s"""WITH flagged AS (

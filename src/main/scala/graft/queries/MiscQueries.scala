@@ -327,7 +327,7 @@ object MiscQueries {
   }
 
   /** Join-size estimation from two Count-Min sketches
-    * ([[graft.ops.Cms.joinSizeEstimate]]) — costing
+    * (the inner-product estimator, min over hash rows) — costing
     * |lineitem ⋈ lineitem('R')| on partkey from two d×w summaries
     * without executing the join, the optimizer's cardinality-probe
     * use of CMS. md5 bucketing makes both sketches engine-replayable,
@@ -361,8 +361,7 @@ object MiscQueries {
     // into a single (row, bucket) aggregate with a conditional count —
     // same counters as two Cms.sketch calls (identical hashing), half
     // the passes, and the (row, bucket) join disappears because both
-    // counters share the row. The two-table op (Cms.joinSizeEstimate)
-    // is what OpsSpec pins; this is its fused same-source form.
+    // counters share the row.
     val li = lineitem(s, d).select(col("l_partkey"), col("l_returnflag"))
     val fused = li
       .select(

@@ -568,7 +568,7 @@ object SimilarityQueries {
 
   /** PQ-ADC top-3 ([[graft.ops.Similarity.pqAdcTopK]]): 8 subspaces ×
     * 16 int8 codes, one per-subspace Lloyd training round
-    * ([[graft.ops.Similarity.pqRefineInt8]]), queries vec_id < 10. The
+    * ([[graft.ops.Similarity.pqRefineFromSubs]]), queries vec_id < 10. The
     * oracle replays the ENTIRE product-quantization pipeline —
     * quantization, codebook seeding, the Lloyd round (assign +
     * integer rounded-mean recompute), nearest-code encoding, the query

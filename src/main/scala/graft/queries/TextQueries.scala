@@ -527,7 +527,7 @@ object TextQueries {
     graft.ops.Text.chunkTokens(documents(s, d), "doc_id", "text", chunkSize = 64, overlap = 16)
   }
 
-  /** Corpus-trained bigram LM score ([[graft.ops.Text.bigramLmScore]]):
+  /** Corpus-trained bigram LM score ([[graft.ops.Text.bigramLmScoreFromTables]]):
     * integer-ppm perplexity proxy — mean ⌊c(w₁w₂)·10⁶ / c(w₁·)⌋ over
     * each document's bigram occurrences. Training counts and scoring
     * both replayed by the oracle. */
@@ -1215,7 +1215,7 @@ object TextQueries {
     * the distinct-words frame; the oracle walks the IDENTICAL chain as
     * a recursive CTE whose recursive term finds the greedy longest
     * match with a correlated `max(blen)` subquery. The vocabulary is
-    * corpus-derived in both engines ([[Text.wordpieceVocab]]: alphabet
+    * corpus-derived in both engines ([[Text.wordpieceVocabFromHist]]: alphabet
     * singles base+`##`, top-8 words, top-8 2-char prefixes, top-8
     * position-3 continuation bigrams). `maxWordLen = 6` is BELOW the
     * corpus max word length (8), so the `[UNK]` long-word path is
@@ -1315,7 +1315,7 @@ object TextQueries {
   }
 
   /** Trigram stupid-backoff LM over a held-out split
-    * ([[graft.ops.Text.trigramBackoffScore]]): counts from the
+    * ([[graft.ops.Text.trigramBackoffScoreFromTables]]): counts from the
     * doc_id % 10 ≠ 0 train slice, scores on the % 10 = 0 slice, so the
     * backoff ladder (trigram hit → α·bigram → α²·unigram → OOV zero)
     * actually fires — [[bigramLm]] scores against self-trained counts
@@ -1372,8 +1372,8 @@ object TextQueries {
         documents(s, d), "doc_id", "text", expr("doc_id % 10 = 0"), lmTables(s, d))
   }
 
-  /** Good–Turing frequency-of-frequencies ([[graft.ops.Text.freqOfFreqs]])
-    * over TRIGRAM counts: N_r for r ≤ 10 plus the GT adjusted-count
+  /** Good–Turing frequency-of-frequencies
+    * ([[graft.ops.Text.freqOfFreqsFromTermCounts]]) over TRIGRAM counts: N_r for r ≤ 10 plus the GT adjusted-count
     * ppm — the smoothing table an n-gram LM derives its unseen-mass
     * estimate from. Trigrams, not word tokens, because that is where
     * the low-r mass lives (the bounded word vocabulary here has no
@@ -1453,7 +1453,7 @@ object TextQueries {
   }
 
   /** Kneser–Ney continuation counts
-    * ([[graft.ops.Text.knContinuationCounts]]): distinct-context
+    * ([[graft.ops.Text.knContinuationCountsFromTables]]): distinct-context
     * censuses per word plus the continuation-probability ppm — the
     * smoothing table that discounts frequent-but-predictable words. */
   private val knCountsQ = Q(

@@ -247,14 +247,17 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("PQ encode is map-only: literal codebook, zero exchanges, zero joins") {
-    // The corpus-side encode pass carries the m×ksub×dsub codebook as a
-    // literal and computes each vector's codes with a higher-order
-    // argmin fold — one projection over the scan. Any Exchange or Join
-    // here means the encode regained a per-subspace row stream.
+    // The corpus-side encode pass of the IVF-PQ path carries the
+    // m×ksub×dsub codebook as a literal and computes each vector's
+    // codes in one native expression — one projection over the scan.
+    // Any Exchange or Join here means the encode regained a
+    // per-subspace row stream.
     val spark = SparkTestBase.spark
     val emb   = spark.read.parquet(s"$sf/embeddings.parquet")
-    val cb  = graft.ops.Similarity.pqTrainInt8(emb, "vec_id", "embedding", m = 8, ksub = 16)
-    val enc = graft.ops.Similarity.pqEncodeInt8(emb, cb, "vec_id", "embedding", m = 8)
+    val dim   = emb.select(org.apache.spark.sql.functions.size(emb("embedding"))).head().getInt(0)
+    val sim   = graft.ops.Similarity
+    val cb  = sim.pqTrainInt8Dim(emb, "vec_id", "embedding", m = 8, ksub = 16, dim)
+    val enc = sim.pqEncodeInt8Dim(emb, cb, "vec_id", "embedding", m = 8, dim)
     enc.collect()
     val p = enc.queryExecution.executedPlan.toString
     assert(!p.contains("Exchange"), s"encode must not shuffle:\n$p")

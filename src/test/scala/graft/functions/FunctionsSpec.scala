@@ -1,7 +1,7 @@
 package graft.functions
 
 import graft.SparkTestBase
-import graft.ops.Dedup
+import graft.ops.{Dedup, Reference}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -84,7 +84,7 @@ class FunctionsSpec extends AnyFunSuite {
       .collect()
       .map(r => r.getLong(0) -> r.getLong(1))
       .toMap
-    val relational = Dedup
+    val relational = Reference
       .simhash32(Dedup.shingleSets(docs, "doc_id", "text", 3))
       .collect()
       .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("simhash"))
@@ -105,7 +105,7 @@ class FunctionsSpec extends AnyFunSuite {
       .collect()
       .map(r => r.getLong(0) -> r.getLong(1))
       .toMap
-    val relational = Dedup
+    val relational = Reference
       .simhash64Md5(Dedup.shingleSets(docs, "doc_id", "text", 3))
       .collect()
       .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("simhash"))
@@ -123,7 +123,7 @@ class FunctionsSpec extends AnyFunSuite {
       .collect()
       .map(r => r.getLong(0) -> (1 until 17).map(r.getString).toVector)
       .toMap
-    val relational = Dedup
+    val relational = Reference
       .minhashSignatures(Dedup.shingleSets(docs, "doc_id", "text", 3), 16)
       .collect()
       .map(r => r.getAs[Long]("doc_id") -> (1 until 17).map(r.getString).toVector)
@@ -140,25 +140,6 @@ class FunctionsSpec extends AnyFunSuite {
       .map(_.getLong(0))
       .toSet
     assert(ids === Set(2L))
-  }
-
-  test("minhash_xx expression is bit-equal to the relational xxhash64 pipeline") {
-    val docs = spark.read
-      .parquet("/root/testdata/sf0.001/documents.parquet")
-      .select("doc_id", "text")
-    val native = Dedup
-      .minhashSignaturesXxNative(docs, "doc_id", "text", n = 3, k = 16)
-      .collect()
-      .map(r => r.getLong(0) -> (1 until 17).map(r.getLong).toVector)
-      .toMap
-    val relational = Dedup
-      .minhashSignaturesXx(Dedup.shingleSets(docs, "doc_id", "text", 3), 16)
-      .collect()
-      .map(r => r.getAs[Long]("doc_id") -> (1 until 17).map(r.getLong).toVector)
-      .toMap
-    assert(relational.nonEmpty)
-    assert(native.keySet === relational.keySet)
-    relational.foreach { case (id, sig) => assert(native(id) === sig, s"doc $id") }
   }
 
   test("simhash32 via SQL text; short documents yield 0 (no shingles)") {
@@ -186,7 +167,6 @@ class FunctionsSpec extends AnyFunSuite {
         build <- Seq[org.apache.spark.sql.Column => org.apache.spark.sql.Column](
           ShingleGen.shingle_gen(_, 3),
           MinHashMd5Expr.minhash_md5(_, 3, 4),
-          MinHashXxExpr.minhash_xx(_, 3, 4),
         )
         arg <- Seq(col("i"), col("a"))
       } intercept[org.apache.spark.sql.AnalysisException](df.select(build(arg)))
@@ -203,7 +183,7 @@ class FunctionsSpec extends AnyFunSuite {
       .collect()
       .map(r => (r.getAs[Long]("doc_id"), r.getAs[String]("sh")))
       .toSet
-    val composed = Dedup
+    val composed = Reference
       .shingleSetsComposed(docs, "doc_id", "text", 3)
       .collect()
       .map(r => (r.getAs[Long]("doc_id"), r.getAs[String]("sh")))

@@ -1,7 +1,7 @@
 package graft.functions
 
 import graft.SparkTestBase
-import graft.ops.{Dedup, Text}
+import graft.ops.{Dedup, Reference, Text}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.{array_distinct, col, explode}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
@@ -81,31 +81,26 @@ class ShinglePropertySpec extends AnyFunSuite {
     val exploded = docs.select(col("doc_id"), explode(ShingleSetExpr.shingle_set(text, n))).collect().toSeq
     val genProp  = Prop(gen == exploded).label(s"shingle_gen $gen != explode(shingle_set) $exploded")
 
-    val composed = Dedup.shingleSetsComposed(docs, "doc_id", "text", n)
+    val composed = Reference.shingleSetsComposed(docs, "doc_id", "text", n)
     val k        = 4
     val mh = agrees(
       byDoc(Dedup.minhashSignaturesNative(docs, "doc_id", "text", n, k)),
-      byDoc(Dedup.minhashSignatures(composed, k)),
+      byDoc(Reference.minhashSignatures(composed, k)),
       absent = Nil,
     ).label("minhash_md5")
-    val mhXx = agrees(
-      byDoc(Dedup.minhashSignaturesXxNative(docs, "doc_id", "text", n, k)),
-      byDoc(Dedup.minhashSignaturesXx(composed, k)),
-      absent = Nil,
-    ).label("minhash_xx")
 
     // SimHash shingles are always 3-grams; a shingle-less doc signs 0,
     // a null one is null
     val nonNull   = docs.filter(text.isNotNull)
-    val trigrams  = Dedup.shingleSetsComposed(nonNull, "doc_id", "text", 3)
+    val trigrams  = Reference.shingleSetsComposed(nonNull, "doc_id", "text", 3)
     val sh64 = agrees(
       byDoc(nonNull.select(col("doc_id"), SimHash64Md5Expr.simhash64_md5(text))),
-      byDoc(Dedup.simhash64Md5(trigrams).select("doc_id", "simhash")),
+      byDoc(Reference.simhash64Md5(trigrams).select("doc_id", "simhash")),
       absent = Seq(0L),
     ).label("simhash64_md5")
     val sh32 = agrees(
       byDoc(nonNull.select(col("doc_id"), SimHash64Md5Expr.simhash32(text))),
-      byDoc(Dedup.simhash32(trigrams).select("doc_id", "simhash")),
+      byDoc(Reference.simhash32(trigrams).select("doc_id", "simhash")),
       absent = Seq(0L),
     ).label("simhash32")
     val nulls = docs.filter(text.isNull)
@@ -113,7 +108,7 @@ class ShinglePropertySpec extends AnyFunSuite {
       .collect()
     val nullProp = Prop(nulls.forall(r => r.isNullAt(0) && r.isNullAt(1))).label("null text signs null")
 
-    setProp && genProp && mh && mhXx && sh64 && sh32 && nullProp
+    setProp && genProp && mh && sh64 && sh32 && nullProp
   }
 
   test("native shingling and sketches equal the composed built-ins and relational pipelines") {

@@ -3,6 +3,7 @@ package graft.ocsf
 import graft.SparkTestBase
 import graft.SparkTestBase.sha256Hex
 import org.apache.spark.sql.Row
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** End-to-end conversion of the authored sample.sarif fixture (shape per
@@ -10,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * integration tests (`scripts/tests/test_sarif_converter.py:293-440`,
   * `test_sarif_uid_integration.py:53-131`).
   */
-class SarifConvertSpec extends AnyFunSuite {
+class SarifConvertSpec extends AnyFunSuite with BeforeAndAfterAll {
   private lazy val spark = SparkTestBase.spark
 
   private val Now = 1714000000000L
@@ -19,6 +20,13 @@ class SarifConvertSpec extends AnyFunSuite {
     val path = getClass.getResource("/sample.sarif").getPath
     SarifToOcsf.convertFile(spark, path, nowMillis = Some(Now)).cache()
   }
+
+  // The cache lives on the shared test session: release it, or later
+  // plans over the same file and clock in this JVM read the cached
+  // relation instead of their own plan.
+  override def afterAll(): Unit =
+    try findings.unpersist()
+    finally super.afterAll()
 
   private lazy val byRule: Map[String, Row] =
     findings

@@ -80,7 +80,12 @@ class OpsSpec extends AnyFunSuite {
     val other = (100 to 160).map(i => s"w$i").mkString(" ")
     val docs = Seq((1L, base), (2L, nearDup), (3L, other)).toDF("doc_id", "text")
     val pairs = Dedup
-      .minhashLshPairs(Dedup.shingleSets(docs, "doc_id", "text", 3), k = 16, rowsPerBand = 4, minJaccard = 0.5)
+      .minhashLshPairsFromSigs(
+        Dedup.minhashSignaturesNative(docs, "doc_id", "text", n = 3, k = 16),
+        Dedup.shingleSets(docs, "doc_id", "text", 3),
+        rowsPerBand = 4,
+        minJaccard = 0.5,
+      )
       .collect()
     assert(pairs.map(r => (r.getAs[Long]("a_id"), r.getAs[Long]("b_id"))).toSet === Set((1L, 2L)))
     assert(pairs.head.getAs[Double]("jaccard") > 0.8)
@@ -125,7 +130,7 @@ class OpsSpec extends AnyFunSuite {
     // flat distribution: real sf0.001 documents (probe ~2-3)
     val flat = Dedup.shingleSets(
       graft.Tables.documents(spark, "/root/testdata/sf0.001"), "doc_id", "text", 3).persist()
-    assert(Dedup.dfSkewProbe(flat) < 8.0) // flat regime -> naive branch
+    assert(Dedup.dfSkewProbeFromFreq(Dedup.docFreq(flat)) < 8.0) // flat regime -> naive branch
     val auto1 = Dedup.jaccardPairsAuto(flat, 0.5)
     val naive = Dedup.jaccardPairs(flat, 0.5)
     assert(auto1.exceptAll(naive).isEmpty && naive.exceptAll(auto1).isEmpty)
@@ -140,7 +145,7 @@ class OpsSpec extends AnyFunSuite {
       (d.toLong, s"$preamble $tail")
     }.toDF("doc_id", "text")
     val skewed = Dedup.shingleSets(docs, "doc_id", "text", 3).persist()
-    assert(Dedup.dfSkewProbe(skewed) >= 8.0) // boilerplate regime -> prefix branch
+    assert(Dedup.dfSkewProbeFromFreq(Dedup.docFreq(skewed)) >= 8.0) // boilerplate regime -> prefix branch
     val auto2  = Dedup.jaccardPairsAuto(skewed, 0.5)
     val naive2 = Dedup.jaccardPairs(skewed, 0.5)
     assert(auto2.exceptAll(naive2).isEmpty && naive2.exceptAll(auto2).isEmpty)
@@ -148,55 +153,13 @@ class OpsSpec extends AnyFunSuite {
     skewed.unpersist()
   }
 
-  test("IVF codebook round-trips through parquet and drives the same search") {
-    import graft.ops.Similarity
-    val emb   = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val cents = Similarity.ivfRefine(
-      emb, Similarity.ivfCentroids(emb, "vec_id", "embedding", 8), "vec_id", "embedding", 1)
-    val path = graft.SparkTestBase.tmpDir("ivf_codebook")
-    Similarity.saveCentroids(cents, path)
-    val loaded = Similarity.loadCentroids(spark, path)
-    assert(loaded.exceptAll(cents).isEmpty && cents.exceptAll(loaded).isEmpty)
-    val pred = col("vec_id") < 10
-    val a = Similarity.ivfTopK(emb, "vec_id", "embedding", 3, cents, 2, pred)
-    val b = Similarity.ivfTopK(emb, "vec_id", "embedding", 3, loaded, 2, pred)
-    assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
-  }
-
-  test("xxhash64 production paths: LSH pairs are verified-exact; 64-bit simhash finds dups") {
-    // Candidate generation differs from the md5 path (hash family), but
-    // verification is exact shingle Jaccard: every emitted pair must be
-    // a true pair, and the planted near-dup must be recalled.
-    val base    = (1 to 60).map(i => s"tok$i").mkString(" ")
-    val nearDup = (1 to 58).map(i => s"tok$i").mkString(" ") + " tokX tokY"
-    val other   = (100 to 160).map(i => s"w$i").mkString(" ")
-    val docs    = Seq((1L, base), (2L, nearDup), (3L, other)).toDF("doc_id", "text")
-    val sh      = Dedup.shingleSets(docs, "doc_id", "text", 3)
-
-    val xx = Dedup.minhashLshPairsXx(sh, k = 16, rowsPerBand = 4, minJaccard = 0.5).collect()
-    assert(xx.map(r => (r.getAs[Long]("a_id"), r.getAs[Long]("b_id"))).toSet === Set((1L, 2L)))
-    // the native one-pass signature form is candidate- and result-equal
-    val xxN = Dedup
-      .minhashLshPairsXxNative(docs, "doc_id", "text", sh, n = 3, k = 16,
-        rowsPerBand = 4, minJaccard = 0.5)
-      .collect()
-    assert(
-      xxN.map(r => (r.getAs[Long]("a_id"), r.getAs[Long]("b_id"), r.getAs[Double]("jaccard")))
-        .toSet ===
-        xx.map(r => (r.getAs[Long]("a_id"), r.getAs[Long]("b_id"), r.getAs[Double]("jaccard")))
-          .toSet
-    )
-    val truth = Dedup.jaccardPairs(sh, 0.5).collect()
-      .map(r => (r.getAs[Long]("a_id"), r.getAs[Long]("b_id")) -> r.getAs[Double]("jaccard"))
-      .toMap
-    xx.foreach { r =>
-      assert(truth((r.getAs[Long]("a_id"), r.getAs[Long]("b_id"))) === r.getAs[Double]("jaccard"))
-    }
-
-    // 64-bit simhash: identical docs at distance 0, unrelated docs not
-    // paired at a tight threshold; full-width single band is exercised.
-    val docs2 = Seq((1L, base), (2L, base), (3L, other)).toDF("doc_id", "text")
-    val sigs  = Dedup.simhash64Xx(Dedup.shingleSets(docs2, "doc_id", "text", 3))
+  test("xxhash64 simhash: identical docs pair at distance 0 over the full 64-bit band") {
+    val base  = (1 to 60).map(i => s"tok$i").mkString(" ")
+    val other = (100 to 160).map(i => s"w$i").mkString(" ")
+    // identical docs at distance 0, unrelated docs not paired at a
+    // tight threshold; the full-width single band is exercised
+    val docs  = Seq((1L, base), (2L, base), (3L, other)).toDF("doc_id", "text")
+    val sigs  = Dedup.simhash64Xx(Dedup.shingleSets(docs, "doc_id", "text", 3))
     val pairs = Dedup.simhashPairs(sigs, maxHamming = 0, bits = 64).collect()
     assert(pairs.map(r => (r.getAs[Long]("a_id"), r.getAs[Long]("b_id"), r.getAs[Int]("hamming")))
       .toSet === Set((1L, 2L, 0)))
@@ -443,7 +406,8 @@ class OpsSpec extends AnyFunSuite {
     val base = (1 to 60).map(i => s"tok$i").mkString(" ")
     val docs = Seq((1L, base), (2L, base), (3L, (100 to 160).map(i => s"w$i").mkString(" ")))
       .toDF("doc_id", "text")
-    val sigs = Dedup.simhash32(Dedup.shingleSets(docs, "doc_id", "text", 3))
+    val sigs = docs.select(
+      col("doc_id"), graft.functions.SimHash64Md5Expr.simhash32(col("text")).as("simhash"))
     val pairs = Dedup.simhashPairs(sigs, maxHamming = 4).collect()
     assert(pairs.map(r => (r.getAs[Long]("a_id"), r.getAs[Long]("b_id"), r.getAs[Int]("hamming"))).toSet
       === Set((1L, 2L, 0)))
@@ -454,16 +418,18 @@ class OpsSpec extends AnyFunSuite {
     val docs = Seq((1L, base), (2L, base), (3L, (100 to 160).map(i => s"w$i").mkString(" ")))
       .toDF("doc_id", "text")
     val sh = Dedup.shingleSets(docs, "doc_id", "text", 3)
+    val sigs64 = docs.select(
+      col("doc_id"), graft.functions.SimHash64Md5Expr.simhash64_md5(col("text")).as("simhash"))
     // bits 0..31 of the 64-bit md5 twin are BY CONSTRUCTION the same
     // nibble-top-bit hash simhash32 uses — the twin is a strict widening
-    val s32 = Dedup.simhash32(sh).collect()
+    val s32 = Reference.simhash32(sh).collect()
       .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("simhash")).toMap
-    val s64 = Dedup.simhash64Md5(sh).collect()
+    val s64 = sigs64.collect()
       .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("simhash")).toMap
     assert(s64.keySet === s32.keySet)
     for ((id, v) <- s64) assert((v & 0xffffffffL) === s32(id), s"doc $id low-32 mismatch")
     // and the 64-bit banded pairing over the twin behaves like the prod path
-    val pairs = Dedup.simhashPairs(Dedup.simhash64Md5(sh), maxHamming = 4, bits = 64).collect()
+    val pairs = Dedup.simhashPairs(sigs64, maxHamming = 4, bits = 64).collect()
     assert(pairs.map(r => (r.getAs[Long]("a_id"), r.getAs[Long]("b_id"), r.getAs[Int]("hamming")))
       .toSet === Set((1L, 2L, 0)))
   }
@@ -494,13 +460,16 @@ class OpsSpec extends AnyFunSuite {
       (rows.map(_.getAs[Long]("sa")).sum.toDouble / rows.length,
         rows.map(_.getAs[Long]("sb")).sum.toDouble / rows.length)
     }
-    val (za, zb) = spans(Layout.zorderBy(df, Seq(col("a"), col("b")), 10, 16))
+    // range-partition by the curve key into 16 files, sorted within each
+    def layout(key: org.apache.spark.sql.Column) =
+      df.withColumn("__key", key).repartitionByRange(16, col("__key")).sortWithinPartitions("__key")
+    val (za, zb) = spans(layout(Layout.zorderKey(Seq(col("a"), col("b")), 10)))
     // 16 curve segments fix the top 2 bits of BOTH dims: span <= ~256 each
     assert(za < 512 && zb < 512, s"z-order spans not bounded: a=$za b=$zb")
     // Hilbert segments are contiguous curve walks: bounded in both
     // dims too, and never WORSE than Z-order's total envelope (the
     // locality claim — no cross-grid jumps at power-of-two boundaries)
-    val (ha, hb) = spans(Layout.hilbertBy(df, col("a"), col("b"), 10, 16))
+    val (ha, hb) = spans(layout(Layout.hilbertKey(col("a"), col("b"), 10)))
     assert(ha < 512 && hb < 512, s"hilbert spans not bounded: a=$ha b=$hb")
     assert(ha + hb <= (za + zb) * 1.05,
       s"hilbert total envelope must not exceed z-order's: h=${ha + hb} z=${za + zb}")
@@ -577,7 +546,7 @@ class OpsSpec extends AnyFunSuite {
     spans.sliding(2).foreach { case Array((_, hi0), (lo1, _)) => assert(hi0 < lo1) }
   }
 
-  test("winsorize: nearest-rank thresholds from the histogram, clamp respects ties") {
+  test("quantileThresholds: nearest-rank thresholds from the histogram, ties respected") {
     import graft.ops.Stats
     // uniform 1..100 → p01 rank ⌈100·0.01⌉=1 → lo=1; p99 rank 99 → hi=99
     val uniform = (1L to 100L).toDF("v")
@@ -587,8 +556,6 @@ class OpsSpec extends AnyFunSuite {
     val skew = (Seq.fill(98)(1L) ++ Seq(50L, 100L)).toDF("v")
     val t2 = Stats.quantileThresholds(skew, "v", 10000L, 990000L).head()
     assert(t2.getAs[Long]("__lo") === 1L && t2.getAs[Long]("__hi") === 50L)
-    val w = Stats.winsorize(uniform, "v", 10000L, 990000L).agg(max("v"), min("v")).head()
-    assert(w.getLong(0) === 99L && w.getLong(1) === 1L)
   }
 
   test("madOutliers: median/MAD fence flags the extreme, ignores it when fencing") {
@@ -661,11 +628,6 @@ class OpsSpec extends AnyFunSuite {
     import graft.ops.Stats
     val df = Seq(Some(1L), Some(2L), Some(3L), Some(100L), None)
       .zipWithIndex.map { case (v, i) => (i.toLong, v) }.toDF("id", "v")
-    // winsorize: null must NOT clamp to p-hi (least/greatest skip nulls)
-    val w = Stats.winsorize(df, "v", 0L, 750000L).collect()
-      .map(r => r.getAs[Long]("id") -> Option(r.get(r.fieldIndex("v")))).toMap
-    assert(w(4L).isEmpty, s"null value must stay null, got ${w(4L)}")
-    assert(w(3L) === Some(3L)) // 100 clamps to p75 = 3 over the 4 non-null values
     // quantileNormalize: null row survives with null rank; non-null
     // ranks computed over the 4-value non-null domain
     val qn = Stats.quantileNormalize(df, "v").collect()
@@ -944,7 +906,7 @@ class OpsSpec extends AnyFunSuite {
     val viaUnionFind = toMap(Dedup.clusterPairs(rand))
     val viaStars     = toMap(Dedup.clusterPairs(rand, driverEdgeCutoff = 0L))
     assert(viaUnionFind === viaStars)
-    assert(viaUnionFind === toMap(Dedup.clusterPairsPropagate(rand)))
+    assert(viaUnionFind === toMap(Reference.clusterPairsPropagate(rand)))
 
     // the same graph as a pair list arrives from a verify join: self-
     // loops on graph nodes, duplicate and reversed pairs, and node 500
@@ -958,7 +920,7 @@ class OpsSpec extends AnyFunSuite {
     info(s"small-graph clustering + collect: $jobs Spark jobs")
     assert(jobs <= 2, s"small-graph clustering ran $jobs Spark jobs")
     assert(small === toMap(Dedup.clusterPairs(messy, driverEdgeCutoff = 0L)))
-    assert(small === toMap(Dedup.clusterPairsPropagate(messy)))
+    assert(small === toMap(Reference.clusterPairsPropagate(messy)))
     assert(small(500L) === 500L && small - 500L === viaUnionFind)
 
     // pathological chain 0-1-…-200: diameter far beyond the default
@@ -978,7 +940,7 @@ class OpsSpec extends AnyFunSuite {
     val df = vecs.toDF("id", "a", "b")
     val rows = df
       .select(
-        Similarity.dotFold(col("a"), col("b")).as("fold"),
+        Reference.dotFold(col("a"), col("b")).as("fold"),
         Similarity.dot(col("a"), col("b")).as("native"),
       )
       .collect()
@@ -1042,6 +1004,15 @@ class OpsSpec extends AnyFunSuite {
       .getSeq[Array[Byte]](0)
     assert(frames.length === 3)
     assert(new String(frames.head, "UTF-8") === "wide")
+    // the generic contract accepts any decoder/feature type
+    val custom = Multimodal.decodeWith(
+      media,
+      new Multimodal.MediaDecoder[(Long, Int)] {
+        def decode(id: Long, b: Array[Byte]): (Long, Int) = (id, b.length)
+      },
+    ).collect().sortBy(_._1)
+    assert(custom.map(_._1).toSeq === Seq(1L, 2L, 3L))
+    assert(custom.map(_._2).toSeq === Seq(5, 0, 10))
   }
 
   test("patchGrid: complete patches only; empty/short payloads yield none; offsets hand-checked") {
@@ -1186,66 +1157,6 @@ class OpsSpec extends AnyFunSuite {
     assert(d2(999L) === 0.0, "an empty cell's centroid must not move (coalesce to old)")
   }
 
-  test("multimodal: ImageIoDecoder decodes real PNG payloads, isolates corrupt ones row-level") {
-    // real codec on the MediaDecoder contract: encode solid-color PNGs
-    // with javax.imageio, decode them back through the batched
-    // extraction path, and verify dimensions + luminance from pixels
-    def png(w: Int, h: Int, rgb: Int): Array[Byte] = {
-      val img = new java.awt.image.BufferedImage(w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-      (0 until h).foreach(y => (0 until w).foreach(x => img.setRGB(x, y, rgb)))
-      val out = new java.io.ByteArrayOutputStream()
-      javax.imageio.ImageIO.write(img, "png", out)
-      out.toByteArray
-    }
-    val media = Seq(
-      (1L, png(8, 6, 0xffffff)),             // white: luma 255
-      (2L, png(3, 5, 0x000000)),             // black: luma 0
-      (3L, "not an image".getBytes("UTF-8")), // undecodable -> ok=false row
-    ).toDF("doc_id", "content")
-    val feats = Multimodal.extractImageFeatures(media, batchSize = 2)
-      .collect().sortBy(_.doc_id)
-    assert(feats.map(f => (f.ok, f.width, f.height)).toSeq ===
-      Seq((true, 8, 6), (true, 3, 5), (false, 0, 0)))
-    assert(math.abs(feats(0).mean_luma - 255.0) < 0.5)
-    assert(feats(1).mean_luma === 0.0)
-    assert(feats(2).err.nonEmpty)
-    // the generic contract accepts any decoder/feature type
-    val custom = Multimodal.decodeWith(
-      media,
-      new Multimodal.MediaDecoder[(Long, Int)] {
-        def decode(id: Long, b: Array[Byte]): (Long, Int) = (id, b.length)
-      },
-    ).collect().sortBy(_._1)
-    assert(custom.map(_._1).toSeq === Seq(1L, 2L, 3L))
-    assert(custom.forall(_._2 > 0))
-  }
-
-  test("multimodal: ImageIoResizer rescales real PNGs to fixed dims; color preserved; corrupt isolated") {
-    def png(w: Int, h: Int, rgb: Int): Array[Byte] = {
-      val img = new java.awt.image.BufferedImage(w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-      (0 until h).foreach(y => (0 until w).foreach(x => img.setRGB(x, y, rgb)))
-      val out = new java.io.ByteArrayOutputStream()
-      javax.imageio.ImageIO.write(img, "png", out)
-      out.toByteArray
-    }
-    val media = Seq(
-      (1L, png(32, 24, 0xff0000)),            // red, downscaled
-      (2L, png(2, 2, 0x00ff00)),              // green, upscaled
-      (3L, "not an image".getBytes("UTF-8")), // undecodable
-    ).toDF("doc_id", "content")
-    val resized = Multimodal.resizeImages(media, w = 8, h = 8, batchSize = 2)
-      .collect().sortBy(_.doc_id)
-    assert(resized.map(r => (r.ok, r.width, r.height)).toSeq ===
-      Seq((true, 8, 8), (true, 8, 8), (false, 0, 0)))
-    // re-decode the resized payloads: dims stick and solid colors survive scaling
-    resized.take(2).zip(Seq(0xff0000, 0x00ff00)).foreach { case (r, want) =>
-      val back = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(r.content))
-      assert(back.getWidth === 8 && back.getHeight === 8)
-      assert((back.getRGB(4, 4) & 0xffffff) === want)
-    }
-    assert(resized(2).err.nonEmpty && resized(2).content.isEmpty)
-  }
-
   test("corpus pipeline: quality + language gates, exact and fuzzy dedup composed") {
     val base    = "the data pipeline processes " + (1 to 40).map(i => s"tok$i").mkString(" ")
     val nearDup = "the data pipeline processes " + (1 to 38).map(i => s"tok$i").mkString(" ") + " tokX tokY"
@@ -1267,7 +1178,7 @@ class OpsSpec extends AnyFunSuite {
 
   /** The corpus pipeline as separately composed stages: exact dedup by
     * a semi-join against [[Dedup.exactGroups]], then the exploded
-    * shingle table → [[Dedup.minhashLshPairs]] → [[Dedup.dedupByPairs]].
+    * shingle table → [[Reference.minhashLshPairs]] → [[Dedup.dedupByPairs]].
     * [[CorpusPipeline.prepare]] fuses these and must return the same
     * rows. */
   private def composedPrepare(docs: org.apache.spark.sql.DataFrame, cfg: CorpusPipeline.Config) = {
@@ -1277,7 +1188,7 @@ class OpsSpec extends AnyFunSuite {
       .filter(Text.langId(col("text")).isin(cfg.languages.toSeq: _*))
     val keep  = Dedup.exactGroups(inLang, "doc_id", "text").select(col("keep_id").as("__keep_id"))
     val exact = inLang.join(keep, inLang("doc_id") === col("__keep_id"), "left_semi")
-    val pairs = Dedup
+    val pairs = Reference
       .minhashLshPairs(Dedup.shingleSets(exact, "doc_id", "text", cfg.shingleN),
         cfg.minhashK, cfg.rowsPerBand, cfg.minJaccard)
       .select("a_id", "b_id")
@@ -1325,7 +1236,7 @@ class OpsSpec extends AnyFunSuite {
       )
       // minJaccard 0: every LSH candidate with its score
       val got  = Dedup.minhashLshPairsFromSketches(sketches, 16, 4, 0.0)
-      val want = Dedup.minhashLshPairs(Dedup.shingleSets(docs, "doc_id", "text", 3), 16, 4, 0.0)
+      val want = Reference.minhashLshPairs(Dedup.shingleSets(docs, "doc_id", "text", 3), 16, 4, 0.0)
       val rows = (df: org.apache.spark.sql.DataFrame) => df.collect().map(_.toString).sorted.toSeq
       val wantRows = rows(want)
       info(s"$name: ${wantRows.size} candidate pairs")
@@ -1371,8 +1282,9 @@ class OpsSpec extends AnyFunSuite {
     assert(textOnly === Array(1L, 2L, 3L, 4L), "text stage should keep all four")
 
     val kept = CorpusPipeline
-      .prepareWithEmbeddings(docs, embs, "doc_id", "text", "vec_id", "embedding",
-        embTau = 0.9, cfg = CorpusPipeline.Config(minTokens = 10))
+      .embeddingStage(
+        CorpusPipeline.prepare(docs, "doc_id", "text", CorpusPipeline.Config(minTokens = 10)),
+        embs, "doc_id", "vec_id", "embedding", embTau = 0.9)
       .select("doc_id").collect().map(_.getLong(0)).sorted
     // doc 2 collapses into doc 1 (canonical = min id); 3 is far; 4 has
     // no embedding and survives untouched
@@ -1397,14 +1309,15 @@ class OpsSpec extends AnyFunSuite {
     assert(rows(4L)._1 === Some(1.0) && rows(4L)._2 === Some(1.0 / 3))
   }
 
-  test("prepareWithEmbeddings degrades to text-only dedup when embeddings are empty") {
+  test("embeddingStage degrades to text-only dedup when embeddings are empty") {
     import graft.ops.CorpusPipeline
     def words(r: Range) = r.map(i => s"the w$i of t$i in p$i").mkString(" ")
     val docs = Seq((1L, words(1 to 20)), (2L, words(30 to 50))).toDF("doc_id", "text")
     val noEmb = Seq.empty[(Long, Array[Float])].toDF("vec_id", "embedding")
     val kept = CorpusPipeline
-      .prepareWithEmbeddings(docs, noEmb, "doc_id", "text", "vec_id", "embedding",
-        embTau = 0.9, cfg = CorpusPipeline.Config(minTokens = 10))
+      .embeddingStage(
+        CorpusPipeline.prepare(docs, "doc_id", "text", CorpusPipeline.Config(minTokens = 10)),
+        noEmb, "doc_id", "vec_id", "embedding", embTau = 0.9)
       .select("doc_id").collect().map(_.getLong(0)).sorted
     assert(kept === Array(1L, 2L))
   }
@@ -1435,10 +1348,11 @@ class OpsSpec extends AnyFunSuite {
     def ids(df: org.apache.spark.sql.DataFrame) =
       df.select("doc_id").collect().map(_.getLong(0)).toSet
 
-    val half  = ids(Sampling.bernoulli(docs, "doc_id", 0.5))
-    val half2 = ids(Sampling.bernoulli(docs, "doc_id", 0.5))
+    def atRate(rate: Double) = ids(Sampling.stratified(docs, "doc_id", "source", Map.empty, rate))
+    val half  = atRate(0.5)
+    val half2 = atRate(0.5)
     assert(half === half2, "content-hash sample must be run-reproducible")
-    val tenth = ids(Sampling.bernoulli(docs, "doc_id", 0.1))
+    val tenth = atRate(0.1)
     assert(tenth.subsetOf(half), "lowering the rate must shrink, not reshuffle, the sample")
     assert(tenth.nonEmpty && half.size < ids(docs.toDF()).size)
 
@@ -1558,10 +1472,10 @@ class OpsSpec extends AnyFunSuite {
       (2L, Seq(0f, 0f, 1f, 0f)),
       (5L, Seq(1f, 0f, 0f, 0f)), // exact twin of id 0
     ).toDF("vec_id", "embedding")
-    val cb = Similarity.pqTrainInt8(vecs, "vec_id", "embedding", m = 2, ksub = 2)
+    val cb = Similarity.pqTrainInt8Dim(vecs, "vec_id", "embedding", m = 2, ksub = 2, dim = 4)
     assert(cb.count() === 4) // m * ksub rows
     val enc = Similarity
-      .pqEncodeInt8(vecs, cb, "vec_id", "embedding", m = 2)
+      .pqEncodeInt8Dim(vecs, cb, "vec_id", "embedding", m = 2, dim = 4)
       .collect()
       .map(r => r.getLong(0) -> r.getSeq[Long](1))
       .toMap
@@ -1610,16 +1524,20 @@ class OpsSpec extends AnyFunSuite {
         .head()
         .getDouble(0)
     }
-    val cb0Dist = Similarity.pqTrainInt8(emb, "vec_id", "embedding", m = 8, ksub = 16)
+    val dim = 8 * dsub
+    def refine(cb: org.apache.spark.sql.DataFrame, iters: Int) = Similarity.pqRefineFromSubs(
+      Similarity.pqSubvectors(emb, "vec_id", "embedding", m = 8, dsub).localCheckpoint(),
+      cb, "vec_id", iters)
+    val cb0Dist = Similarity.pqTrainInt8Dim(emb, "vec_id", "embedding", m = 8, ksub = 16, dim)
     val d0 = distortion(cb0Dist)
-    val d1 = distortion(Similarity.pqRefineInt8(emb, cb0Dist, "vec_id", "embedding", m = 8, 1))
-    val d2 = distortion(Similarity.pqRefineInt8(emb, cb0Dist, "vec_id", "embedding", m = 8, 2))
+    val d1 = distortion(refine(cb0Dist, 1))
+    val d2 = distortion(refine(cb0Dist, 2))
     assert(d1 < d0, s"one Lloyd round must cut distortion: $d0 -> $d1")
     assert(d2 <= d1, s"second round must not regress: $d1 -> $d2")
 
-    val cb0 = Similarity.pqTrainInt8(emb, "vec_id", "embedding", m = 8, ksub = 16)
-    val r1  = Similarity.pqRefineInt8(emb, cb0, "vec_id", "embedding", m = 8, iters = 2)
-    val r2  = Similarity.pqRefineInt8(emb, cb0, "vec_id", "embedding", m = 8, iters = 2)
+    val cb0 = Similarity.pqTrainInt8Dim(emb, "vec_id", "embedding", m = 8, ksub = 16, dim)
+    val r1  = refine(cb0, 2)
+    val r2  = refine(cb0, 2)
     def snap(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => ((r.get(0), r.get(1)), r.getSeq[Long](2))).toMap
     val s1 = snap(r1)
@@ -1630,21 +1548,6 @@ class OpsSpec extends AnyFunSuite {
       s1.values.forall(_.forall(v => v >= -127L && v <= 127L)),
       "rounded means of int8 points stay in the int8 range",
     )
-  }
-
-  test("PQ codebook round-trips through parquet; reloaded codebook encodes identically") {
-    import graft.ops.Similarity
-    val vecs = (0L until 40L).map(i =>
-      (i, Seq.tabulate(8)(j => ((i * 7 + j * 3) % 13).toFloat - 6f))).toDF("vec_id", "embedding")
-    val cb   = Similarity.pqTrainInt8(vecs, "vec_id", "embedding", m = 4, ksub = 8)
-    val dir  = graft.SparkTestBase.tmpDir("pq_codebook")
-    Similarity.saveCentroids(cb, dir) // generic small-table persistence
-    val cb2 = Similarity.loadCentroids(spark, dir)
-    val a = Similarity.pqEncodeInt8(vecs, cb, "vec_id", "embedding", m = 4)
-      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-    val b = Similarity.pqEncodeInt8(vecs, cb2, "vec_id", "embedding", m = 4)
-      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-    assert(a === b, "a persisted codebook must reproduce the exact same codes")
   }
 
   test("chunkDedup: result is invariant to input partitioning") {
@@ -1873,7 +1776,7 @@ class OpsSpec extends AnyFunSuite {
       (4L, "a b c d e"),     // identical set to 2 => mutual containment with 2
     ).toDF("doc_id", "text")
     val got = Dedup
-      .containmentPairs(Dedup.shingleSets(docs, "doc_id", "text", 3))
+      .containmentPairsPrefix(Dedup.shingleSets(docs, "doc_id", "text", 3))
       .select("inner_id", "outer_id")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got === Set((2L, 1L), (4L, 1L), (2L, 4L), (4L, 2L)))
@@ -1891,7 +1794,7 @@ class OpsSpec extends AnyFunSuite {
       f(Dedup.shingleSets(docs, "doc_id", "text", 3))
         .select("inner_id", "outer_id", "n_shingles")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(pairs(Dedup.containmentPairs(_)) === pairs(Dedup.containmentPairsPrefix(_)))
+    assert(pairs(Reference.containmentPairs(_)) === pairs(Dedup.containmentPairsPrefix(_)))
     // and on a real slice with planted prefixes
     val corpus = graft.Tables.documents(spark, "/root/testdata/sf0.001")
       .select("doc_id", "text")
@@ -1899,7 +1802,7 @@ class OpsSpec extends AnyFunSuite {
       (col("doc_id") + 200000).as("doc_id"),
       concat_ws(" ", slice(Text.tokens(col("text")), 1, 12)).as("text"))
     val sh = Dedup.shingleSets(corpus.unionAll(planted), "doc_id", "text", 3)
-    val naive = Dedup.containmentPairs(sh)
+    val naive = Reference.containmentPairs(sh)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val prefix = Dedup.containmentPairsPrefix(sh)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -1911,45 +1814,21 @@ class OpsSpec extends AnyFunSuite {
       (1L, "alpha beta gamma delta epsilon zeta"),
       (2L, "one two three four five six"),
     ).toDF("doc_id", "text")
-    val index = Dedup.bandIndex(prev, "doc_id", "text", n = 3, k = 16, rowsPerBand = 4)
+    val index = Dedup.bandIndexNative(prev, "doc_id", "text", n = 3, k = 16, rowsPerBand = 4)
     val batch = Seq(
       (10L, "alpha beta gamma delta epsilon zeta"), // replica of 1 => all bands collide
       (11L, "totally different words here entirely now"),
     ).toDF("doc_id", "text")
     val kept = Dedup
-      .dedupIncrementalFuzzy(batch, "doc_id", "text", index, n = 3, k = 16, rowsPerBand = 4)
+      .dedupIncrementalFuzzyNative(batch, "doc_id", "text", index, n = 3, k = 16, rowsPerBand = 4)
     assert(kept.select("doc_id").collect().map(_.getLong(0)).toSet === Set(11L))
     // append the survivors' bands: a re-arrival of 11 now drops too
-    val index2 = index.unionAll(Dedup.bandIndex(kept, "doc_id", "text", 3, 16, 4))
+    val index2 = index.unionAll(Dedup.bandIndexNative(kept, "doc_id", "text", 3, 16, 4))
     val rerun = Seq((12L, "totally different words here entirely now"))
       .toDF("doc_id", "text")
     assert(
-      Dedup.dedupIncrementalFuzzy(rerun, "doc_id", "text", index2, 3, 16, 4).count() === 0L,
+      Dedup.dedupIncrementalFuzzyNative(rerun, "doc_id", "text", index2, 3, 16, 4).count() === 0L,
       "the survivor delta must screen the next run")
-
-    // all three screen variants — relational, shingle-table, native
-    // one-pass — are result-identical (the native signatures are
-    // bit-equal, so the band collisions are too), and the native index
-    // build equals the relational one
-    val idxNative = Dedup.bandIndexNative(prev, "doc_id", "text", n = 3, k = 16, rowsPerBand = 4)
-    assert(
-      idxNative.collect().map(r => (r.getInt(0), r.getString(1))).toSet ===
-        index.collect().map(r => (r.getInt(0), r.getString(1))).toSet
-    )
-    val viaShingles = Dedup
-      .dedupIncrementalFuzzyFromShingles(
-        batch,
-        "doc_id",
-        Dedup.shingleSets(batch, "doc_id", "text", 3),
-        index,
-        k = 16,
-        rowsPerBand = 4,
-      )
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    val viaNative = Dedup
-      .dedupIncrementalFuzzyNative(batch, "doc_id", "text", idxNative, 3, 16, 4)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(viaShingles === Set(11L) && viaNative === Set(11L))
   }
 
   test("shardAssign: pure content function, full coverage in range, reproducible") {
@@ -2940,38 +2819,6 @@ class OpsSpec extends AnyFunSuite {
     assert(got === Map((1.0, 5) -> 2L, (2.0, 7) -> 1L, (4.0, 9) -> 1L))
   }
 
-  test("Cms.joinSizeEstimate: exact when collision-free, never underestimates when not") {
-    val a = Seq("x", "x", "x", "y", "z").toDF("k") // fA = x:3 y:1 z:1
-    val b = Seq("x", "y", "y", "w").toDF("k")      // fB = x:1 y:2 w:1
-    val truth = 3L * 1 + 1L * 2 // = 5
-    // wide sketch: 4x4096 over 4 keys is collision-free w.h.p. => exact
-    val wide = Cms
-      .joinSizeEstimate(Cms.sketch(a, "k", 4, 4096), Cms.sketch(b, "k", 4, 4096))
-      .head().getAs[Long]("join_size_est")
-    assert(wide === truth)
-    // width 1: everything collides; estimate = |A|*|B| = 20, one-sided
-    val tiny = Cms
-      .joinSizeEstimate(Cms.sketch(a, "k", 4, 1), Cms.sketch(b, "k", 4, 1))
-      .head().getAs[Long]("join_size_est")
-    assert(tiny === 20L && tiny >= truth)
-    // disjoint key sets, wide sketch: some hash row has NO overlapping
-    // bucket — its dot is 0 and must reach the min via the row spine
-    // (an inner-join-only min would overshoot exactly here)
-    val disjoint = Cms
-      .joinSizeEstimate(
-        Cms.sketch(Seq("p", "q").toDF("k"), "k", 4, 4096),
-        Cms.sketch(Seq("r", "s").toDF("k"), "k", 4, 4096))
-      .head().getAs[Long]("join_size_est")
-    assert(disjoint === 0L)
-    // empty side: estimate is 0, not null/empty
-    val empty = Cms
-      .joinSizeEstimate(
-        Cms.sketch(Seq.empty[String].toDF("k"), "k", 4, 4096),
-        Cms.sketch(b, "k", 4, 4096))
-      .head().getAs[Long]("join_size_est")
-    assert(empty === 0L)
-  }
-
   test("Text.packWindows: token conservation, straddle pieces, shard-count invariance") {
     val docs = Seq(
       (0L, Seq.fill(3)("a").mkString(" ")),   // [0,3)
@@ -3165,7 +3012,7 @@ class OpsSpec extends AnyFunSuite {
     // "san francisco" x3: francisco is frequent (c=3) but has ONE left
     // context; "b" appears twice with two distinct left contexts.
     val docs = Seq("san francisco a b", "san francisco c b", "san francisco").toDF("text")
-    val got = Text.knContinuationCounts(docs, "text")
+    val got = Text.knContinuationCountsFromTables(graft.ops.NgramCounts.build(docs, "text", lit(false)))
       .collect()
       .map(r => r.getAs[String]("word") ->
         (r.getAs[Long]("c"), r.getAs[Long]("n_left"), r.getAs[Long]("n_right"), r.getAs[Long]("pcont_ppm")))
@@ -3193,23 +3040,23 @@ class OpsSpec extends AnyFunSuite {
       df.collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq
     assert(
       rows(Text.bigramLmScoreFromTables(docs, "doc_id", "text", t)) ===
-        rows(Text.bigramLmScore(docs, "doc_id", "text")))
+        rows(Reference.bigramLmScore(docs, "doc_id", "text")))
     assert(
       rows(Text.trigramBackoffScoreFromTables(docs, "doc_id", "text", isTest, t)) ===
-        rows(Text.trigramBackoffScore(docs, "doc_id", "text", isTest)))
+        rows(Reference.trigramBackoffScore(docs, "doc_id", "text", isTest)))
     assert(
       rows(Text.knContinuationCountsFromTables(t)) ===
-        rows(Text.knContinuationCounts(docs, "text")))
+        rows(Reference.knContinuationCounts(docs, "text")))
     assert(
       rows(Text.freqOfFreqsFromTermCounts(
         t.tri.groupBy("tg").agg(sum(col("c")).as("r")), maxR = 3)) ===
-        rows(Text.freqOfFreqs(docs, Text.shingles(Text.tokens(col("text")), 3), maxR = 3)))
+        rows(Reference.freqOfFreqs(docs, Text.shingles(Text.tokens(col("text")), 3), maxR = 3)))
   }
 
   test("Text.freqOfFreqs: count-of-counts with Good-Turing ppm; gap gives null") {
     // tokens: a:2 b:2 c:2 d:1 -> N_1=1, N_2=3; GT r*=1: (1+1)*N_2/N_1 = 6.
     val docs = Seq("a a b b c", "c d").toDF("text")
-    val got = Text.freqOfFreqs(docs, Text.tokens(col("text")), maxR = 2)
+    val got = Reference.freqOfFreqs(docs, Text.tokens(col("text")), maxR = 2)
       .collect()
       .map(r => r.getAs[Long]("r") -> (r.getAs[Long]("n_r"), Option(r.get(r.fieldIndex("gt_rstar_ppm")))))
       .toMap
@@ -3221,7 +3068,7 @@ class OpsSpec extends AnyFunSuite {
     // tokens: a:1 b:2 b c:3 -> N_1=N_2=N_3=1.
     // r*=1: 2*N_2/N_1 = 2; r*=2: 3*N_3/N_2 = 3 (the r*/r ratio would floor to 1.5e6).
     val docs = Seq("a b b c c c").toDF("text")
-    val got = Text.freqOfFreqs(docs, Text.tokens(col("text")), maxR = 2)
+    val got = Reference.freqOfFreqs(docs, Text.tokens(col("text")), maxR = 2)
       .collect()
       .map(r => r.getAs[Long]("r") -> Option(r.get(r.fieldIndex("gt_rstar_ppm"))))
       .toMap
@@ -3778,8 +3625,9 @@ class OpsSpec extends AnyFunSuite {
     assert(bySrc(1L).map(_.getAs[Long]("dst")).toSet === Set(2L, 3L))
     // ranks are 1..k dense per src
     bySrc.values.foreach(rows => assert(rows.map(_.getAs[Int]("rnk")).sorted.toSeq === (1 to rows.length)))
+    val pairs = Similarity.embeddingDupPairs(vecs, "vec_id", "embedding", tau = 0.9, nPlanes = 8, bands = 2)
     val clusters = Similarity
-      .mutualKnnClusters(vecs, "vec_id", "embedding", k = 2, tau = 0.9, nPlanes = 8, bands = 2)
+      .mutualKnnClustersFromPairs(pairs, k = 2)
       .collect()
       .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("component"))
       .toMap
@@ -3793,8 +3641,9 @@ class OpsSpec extends AnyFunSuite {
       (3L, Array(1.0f, 0.0f, 0.03f)),
       (4L, Array(0.0f, 1.0f, 0.0f)),
     ).toDF("vec_id", "embedding")
+    val pairs = Similarity.embeddingDupPairsAuto(vecs, "vec_id", "embedding", tau = 0.9)
     val got = Similarity
-      .clusterCohesion(vecs, "vec_id", "embedding", k = 2, tau = 0.9)
+      .clusterCohesionFromPairs(vecs, "vec_id", "embedding", pairs, k = 2)
       .collect()
     assert(got.length === 1) // one cluster; the orthogonal loner is absent
     val r = got.head
@@ -3811,9 +3660,9 @@ class OpsSpec extends AnyFunSuite {
       (2L, "alpha alpha beta"),
       (3L, "completely different terms"),
     ).toDF("doc_id", "text")
+    val sigs = Dedup.minhashSignaturesNative(docs, "doc_id", "text", n = 3, k = 16)
     val got = Dedup
-      .weightedJaccardPairs(docs, "doc_id", "text", n = 3, k = 16, rowsPerBand = 4,
-        tauPpm = 300000L)
+      .weightedJaccardPairsFromSigs(docs, "doc_id", "text", sigs, rowsPerBand = 4, tauPpm = 300000L)
       .collect()
     assert(got.length === 1)
     val r = got.head

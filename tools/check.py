@@ -70,7 +70,7 @@ def main():
     if not skip_verify:
         r = subprocess.run(
             ["sbt", "--error", f'runMain graft.Verify {sf_dir} {out_dir}'],
-            cwd="/root/repo", capture_output=True, text=True)
+            cwd=Path(__file__).resolve().parents[1], capture_output=True, text=True)
         sys.stdout.write(r.stdout[-4000:])
         sys.stderr.write(r.stderr[-4000:])
         if r.returncode != 0:
