@@ -1,8 +1,10 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Loaders for the driver-provided synthetic star schema
   * (`/root/repo/TESTDATA.md`). One parquet file per table; the scale
@@ -10,8 +12,32 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * is scale-independent.
   */
 object Tables {
-  def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  /** A table read by its file's [[schema]]: no footer job. */
+  def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    spark.read.schema(schema(spark, path)).parquet(path)
+  }
+
+  /** The schema `spark.read.parquet(path)` infers for a table file,
+    * derived once per process. Inference runs a one-task Spark job that
+    * reads the footer; the schema belongs to the file, so one inference
+    * serves every session. The key is what the inferred schema depends
+    * on: the file's absolute path, length and modification time (a file
+    * rewritten in place is inferred again) and the session's
+    * `spark.sql.parquet.*` and `spark.sql.legacy.parquet.*` values
+    * (`nanosAsLong`, which [[events]] sets, changes the type of a
+    * nanosecond `ts`). */
+  def schema(spark: SparkSession, path: String): StructType = {
+    val p      = new Path(path)
+    val fs     = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val status = fs.getFileStatus(p)
+    val readerConf = spark.conf.getAll.toSeq.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
+    }.sorted
+    val key = (fs.makeQualified(p).toString, status.getLen, status.getModificationTime, readerConf)
+    schemas.computeIfAbsent(key, _ => spark.read.parquet(path).schema)
+  }
+  private val schemas = new ConcurrentHashMap[(String, Long, Long, Seq[(String, String)]), StructType]
 
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = table(s, d, "nation")

@@ -1,5 +1,6 @@
 package graft.ocsf
 
+import graft.SessionSettings
 import graft.io.NioLocalFileSystem
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
@@ -155,11 +156,24 @@ object Monitor {
     // start(). The clone keeps [[StreamSettings]]; the caller's values
     // are restored once it is taken, and the query stays in the
     // caller's `spark.streams`.
-    val before = StreamSettings.keys.map(k => k -> spark.conf.getOption(k))
-    StreamSettings.foreach { case (k, v) => spark.conf.set(k, v) }
-    try triggered.start()
-    finally before.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+    SessionSettings.withSettings(spark, StreamSettings)(triggered.start())
   }
+
+  /** Start a stream under [[StreamSettings]] (plus `settings`), hold
+    * them until the stream ends, then restore the caller's values. A
+    * stream creates its file source log, offset and commit logs and
+    * state stores from its own thread, some on the caller's session;
+    * held for the stream's whole life, the settings reach every one of
+    * them on every run. For streams that the caller awaits anyway;
+    * [[run]] returns its query before it ends. */
+  private[graft] def runToEnd(spark: SparkSession, settings: Map[String, String] = Map.empty)(
+      start: => StreamingQuery
+  ): StreamingQuery =
+    SessionSettings.withSettings(spark, StreamSettings ++ settings) {
+      val q = start
+      q.awaitTermination()
+      q
+    }
 
   /** The stream's session settings:
     *  - artifact isolation off. Under Spark's per-session artifact
@@ -175,9 +189,11 @@ object Monitor {
     *    file is absent and then rename, so a second writer of a batch
     *    fails the same way under either. Other schemes keep their
     *    filesystems. The file source's own log is created by the
-    *    stream thread on the caller's session, so it takes the caller's
-    *    settings unless it is created before they are restored. */
-  private[ocsf] val StreamSettings: Map[String, String] = NioLocalFileSystem.options ++ Map(
+    *    stream thread on the caller's session, so in [[run]] it takes
+    *    the caller's settings unless it is created before they are
+    *    restored; [[runToEnd]] holds them until the stream ends.
+    * Every stream the library starts runs under these settings. */
+  private[graft] val StreamSettings: Map[String, String] = NioLocalFileSystem.options ++ Map(
     "spark.sql.artifact.isolation.enabled" -> "false",
     "spark.sql.streaming.checkpointFileManagerClass" ->
       "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager",

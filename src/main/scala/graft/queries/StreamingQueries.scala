@@ -15,21 +15,21 @@ object StreamingQueries {
 
   /** The file-stream source needs an explicit schema, and the physical
     * type of `events.ts` varies by testdata generation (raw int64 nanos
-    * vs TIMESTAMP(MICROS) — see [[graft.Tables.normalizeEventTs]]). A
-    * one-time batch probe of the parquet footer yields the exact
-    * as-read schema; [[eventsStream]] then applies the same ts
-    * normalization as the batch path so streaming and batch queries see
-    * identical types.
+    * vs TIMESTAMP(MICROS) — see [[graft.Tables.normalizeEventTs]]). The
+    * batch path's file schema ([[graft.Tables.schema]], inferred once
+    * per process) is the exact as-read schema; [[eventsStream]] then
+    * applies the same ts normalization as the batch path so streaming
+    * and batch queries see identical types.
     *
-    * Deliberate side effect: the probe sets
+    * Deliberate side effect: this sets
     * `spark.sql.legacy.parquet.nanosAsLong=true` on the session and
     * LEAVES it set, because the later `readStream` of a nanos-
     * generation events file needs the flag at stream-read time, not
-    * just at probe time. The flag is a no-op for micros-generation
+    * just at schema time. The flag is a no-op for micros-generation
     * data, so it is safe to pin for the session's lifetime. */
   private val eventsRawSchema = Shared("events_raw_schema") { (s, d) =>
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    s.read.parquet(s"$d/events.parquet").schema
+    graft.Tables.schema(s, s"$d/events.parquet")
   }
 
   /** Streaming read of the events table with the batch path's ts
@@ -59,39 +59,49 @@ object StreamingQueries {
   private var streamN = 0
 
   /** Scratch space for replay sources and streaming checkpoints —
-    * tmpfs (`/dev/shm`) when available. Stateful micro-batches fsync a
-    * state-store delta + offset/commit log per partition per batch;
-    * on-disk /tmp makes that commit path the dominant fixed cost of a
-    * replay-scale query, tmpfs makes it memory-speed. Production jobs
-    * point `checkpointLocation` at durable storage instead — this is
-    * bench/gate scratch, not the durability story ([[graft.ocsf.Monitor]]
-    * keeps its real checkpoint on the job's filesystem). */
+    * tmpfs (`/dev/shm`) when available. A replay's fixed cost is its
+    * checkpoint I/O: a state-store delta per partition and an offset and
+    * commit log entry per batch. Through Hadoop's local filesystem
+    * without `libhadoop` each of those files forks `chmod`/`readlink`
+    * processes; [[graft.ocsf.Monitor.runToEnd]] routes them through
+    * java.nio, and tmpfs keeps the writes themselves at memory speed.
+    * Production jobs point `checkpointLocation` at durable storage
+    * instead — this is bench/gate scratch, not the durability story
+    * ([[graft.ocsf.Monitor]] keeps its real checkpoint on the job's
+    * filesystem). */
   private def scratchDir(prefix: String): java.nio.file.Path = {
     val shm = java.nio.file.Paths.get("/dev/shm")
     val dir =
       if (java.nio.file.Files.isDirectory(shm) && java.nio.file.Files.isWritable(shm))
         java.nio.file.Files.createTempDirectory(shm, prefix)
       else java.nio.file.Files.createTempDirectory(prefix)
-    // tmpfs outlives the JVM: without cleanup every run leaks RAM-backed
-    // directories until reboot. Cached dirs (sources, splits) live for
-    // the session and are reaped at exit; per-query checkpoint dirs are
-    // additionally deleted right after their query terminates.
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      try org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
-      catch { case _: Throwable => () }
-    ))
+    reapAtExit
+    liveScratch.add(dir)
     dir
   }
 
-  /** Run a streaming body against a fresh scratch checkpoint dir and
-    * delete the dir as soon as the query has terminated — checkpoints
-    * of a completed AvailableNow replay have no replay value. */
-  private def withScratchCheckpoint[T](prefix: String)(body: String => T): T = {
+  /** tmpfs outlives the JVM: without cleanup every run leaks RAM-backed
+    * directories until reboot. Cached dirs (sources, splits) live for
+    * the session and are deleted at exit by one shutdown hook; per-query
+    * dirs are deleted as soon as their query ends ([[withScratchDir]])
+    * and leave the hook's set then. */
+  private val liveScratch = java.util.concurrent.ConcurrentHashMap.newKeySet[java.nio.file.Path]()
+  private lazy val reapAtExit: Unit =
+    Runtime.getRuntime.addShutdownHook(new Thread(() => liveScratch.forEach(deleteScratch(_))))
+
+  private def deleteScratch(dir: java.nio.file.Path): Unit = {
+    try org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+    catch { case _: Throwable => () }
+    liveScratch.remove(dir)
+  }
+
+  /** Run a body against a fresh scratch dir and delete the dir as soon
+    * as the body returns — checkpoints of a completed AvailableNow
+    * replay have no replay value. */
+  private def withScratchDir[T](prefix: String)(body: String => T): T = {
     val dir = scratchDir(prefix)
     try body(dir.toString)
-    finally
-      try org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
-      catch { case _: Throwable => () }
+    finally deleteScratch(dir)
   }
 
   /** The events table exposed as a file-stream source directory (the
@@ -195,12 +205,7 @@ object StreamingQueries {
     * volume the same way. */
   private def withStatePartitions[T](s: org.apache.spark.sql.SparkSession, n: Int)(
       body: => T
-  ): T = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", n.toString)
-    try body
-    finally s.conf.set("spark.sql.shuffle.partitions", prev)
-  }
+  ): T = graft.SessionSettings.withSettings(s, Map("spark.sql.shuffle.partitions" -> n.toString))(body)
 
   /** ST1/ST4 + tumbling event-time window: streaming replay of the
     * 15-minute bucket aggregation. */
@@ -715,44 +720,46 @@ object StreamingQueries {
     val state =
       scala.collection.mutable.Map.empty[Long, Seq[(Int, String, String)]]
     withStatePartitions(s, 4) {
-    withScratchCheckpoint("graft_ckpt_bpedrift") { ckpt =>
-      val accDir = scratchDir("graft_bpe_acc").toString
-      val q = stream.writeStream
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          val wc = batch
-            .select(
-              (col("doc_id") % 3).as("window_id"),
-              explode(graft.ops.Text.tokens(col("text"))).as("w"),
-            )
-            .groupBy("window_id", "w")
-            .agg(count(lit(1)).as("freq"))
-          wc.write.mode("append").parquet(accDir)
-          // grouped re-learn: ALL windows in one dataflow per merge
-          // round ([[graft.ops.Bpe.learnMergesPerKey]]) — O(k) vocab
-          // scans per batch regardless of window count, the shape
-          // that keeps a many-window monitor viable. The collect is
-          // bounded: |windows| · k merge rows.
-          val acc = batch.sparkSession.read
-            .parquet(accDir)
-            .groupBy("window_id", "w")
-            .agg(sum("freq").as("freq"))
-          graft.ops.Bpe
-            .learnMergesPerKey(acc, "window_id", k)
-            .collect()
-            .groupBy(_.getLong(0))
-            .foreach { case (wd, rows) =>
-              state(wd) = rows
-                .sortBy(_.getInt(1))
-                .map(r => (r.getInt(1), r.getString(2), r.getString(3)))
-                .toSeq
-            }
-          ()
+      withScratchDir("graft_ckpt_bpedrift") { ckpt =>
+        withScratchDir("graft_bpe_acc") { accDir =>
+          graft.ocsf.Monitor.runToEnd(s) {
+            stream.writeStream
+              .option("checkpointLocation", ckpt)
+              .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+                val wc = batch
+                  .select(
+                    (col("doc_id") % 3).as("window_id"),
+                    explode(graft.ops.Text.tokens(col("text"))).as("w"),
+                  )
+                  .groupBy("window_id", "w")
+                  .agg(count(lit(1)).as("freq"))
+                wc.write.mode("append").parquet(accDir)
+                // grouped re-learn: ALL windows in one dataflow per merge
+                // round ([[graft.ops.Bpe.learnMergesPerKey]]) — O(k) vocab
+                // scans per batch regardless of window count, the shape
+                // that keeps a many-window monitor viable. The collect is
+                // bounded: |windows| · k merge rows.
+                val acc = batch.sparkSession.read
+                  .parquet(accDir)
+                  .groupBy("window_id", "w")
+                  .agg(sum("freq").as("freq"))
+                graft.ops.Bpe
+                  .learnMergesPerKey(acc, "window_id", k)
+                  .collect()
+                  .groupBy(_.getLong(0))
+                  .foreach { case (wd, rows) =>
+                    state(wd) = rows
+                      .sortBy(_.getInt(1))
+                      .map(r => (r.getInt(1), r.getString(2), r.getString(3)))
+                      .toSeq
+                  }
+                ()
+              }
+              .trigger(Trigger.AvailableNow())
+              .start()
+          }
         }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+      }
     }
     import s.implicits._
     state.toSeq
@@ -815,28 +822,21 @@ object StreamingQueries {
     // windows NEED it (closed sessions emit on that flush); a gate
     // whose state cannot emit on watermark advance (update-mode
     // emissions with a timeout horizon far past the data) passes
-    // finalNoDataBatch = false to skip it, scoped to this run via the
-    // withStatePartitions set/restore convention.
-    def withNoDataConf[T](body: => T): T =
-      if (finalNoDataBatch) body
-      else {
-        val key  = "spark.sql.streaming.noDataMicroBatches.enabled"
-        val prev = s.conf.get(key)
-        s.conf.set(key, "false")
-        try body
-        finally s.conf.set(key, prev)
-      }
+    // finalNoDataBatch = false to skip it, for this run only.
+    val noData =
+      if (finalNoDataBatch) Map.empty[String, String]
+      else Map("spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
     withStatePartitions(s, 4) {
-      withNoDataConf {
-      withScratchCheckpoint(s"graft_ckpt_$prefix") { ckpt =>
-        val q = df.writeStream
-          .format("memory")
-          .queryName(name)
-          .option("checkpointLocation", ckpt)
-          .outputMode(mode)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+      withScratchDir(s"graft_ckpt_$prefix") { ckpt =>
+        val q = graft.ocsf.Monitor.runToEnd(s, noData) {
+          df.writeStream
+            .format("memory")
+            .queryName(name)
+            .option("checkpointLocation", ckpt)
+            .outputMode(mode)
+            .trigger(Trigger.AvailableNow())
+            .start()
+        }
         if (sys.env.contains("SPARK_GRAFT_STREAM_PROFILE")) {
           q.recentProgress.foreach { p =>
             System.err.println(
@@ -844,7 +844,6 @@ object StreamingQueries {
                 s"durations=${p.durationMs}")
           }
         }
-      }
       }
     }
     s.table(name)
@@ -1481,32 +1480,33 @@ object StreamingQueries {
     val aggDir  = scratchDir("graft_ivm_agg").toString
     val version = new java.util.concurrent.atomic.AtomicInteger(-1)
     withStatePartitions(s, 4) {
-      withScratchCheckpoint("graft_ckpt_ivm") { ckpt =>
-        val q = stream.writeStream
-          .option("checkpointLocation", ckpt)
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-            val proj = batch.select(
-              col("event_type"),
-              expr("CAST(round(value * 100) AS BIGINT)").as("cents"),
-            )
-            val summary = graft.ops.Ivm.summarize(proj, Seq("event_type"), Seq("cents"))
-            val prev    = version.get()
-            val next =
-              if (prev < 0) summary
-              else
-                graft.ops.Ivm.merge(
-                  batch.sparkSession.read.parquet(s"$aggDir/v=$prev"),
-                  summary,
-                  Seq("event_type"),
-                  Seq("cents"),
-                )
-            next.write.mode("overwrite").parquet(s"$aggDir/v=${prev + 1}")
-            version.set(prev + 1)
-            ()
-          }
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+      withScratchDir("graft_ckpt_ivm") { ckpt =>
+        graft.ocsf.Monitor.runToEnd(s) {
+          stream.writeStream
+            .option("checkpointLocation", ckpt)
+            .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+              val proj = batch.select(
+                col("event_type"),
+                expr("CAST(round(value * 100) AS BIGINT)").as("cents"),
+              )
+              val summary = graft.ops.Ivm.summarize(proj, Seq("event_type"), Seq("cents"))
+              val prev    = version.get()
+              val next =
+                if (prev < 0) summary
+                else
+                  graft.ops.Ivm.merge(
+                    batch.sparkSession.read.parquet(s"$aggDir/v=$prev"),
+                    summary,
+                    Seq("event_type"),
+                    Seq("cents"),
+                  )
+              next.write.mode("overwrite").parquet(s"$aggDir/v=${prev + 1}")
+              version.set(prev + 1)
+              ()
+            }
+            .trigger(Trigger.AvailableNow())
+            .start()
+        }
       }
     }
     s.read

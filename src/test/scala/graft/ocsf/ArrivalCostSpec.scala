@@ -1,16 +1,14 @@
 package graft.ocsf
 
+import graft.Forks.processStarts
 import graft.SparkTestBase
 import graft.SparkTestBase.tmpDir
 import java.nio.file.{Files, Paths}
 import java.util.UUID
 import java.util.concurrent.ConcurrentLinkedQueue
-import jdk.jfr.Recording
-import jdk.jfr.consumer.RecordingFile
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.scalatest.funsuite.AnyFunSuite
-import scala.jdk.CollectionConverters._
 
 /** The fixed cost of one steady arrival (monitor → merge → dashboard
   * read): once an arrival of the same shape has run, the next one
@@ -39,29 +37,6 @@ class ArrivalCostSpec extends AnyFunSuite {
       c == "org.apache.parquet.hadoop.ParquetFileWriter" ||
       c == "org.apache.hadoop.mapreduce.lib.output.FileOutputCommitter") ||
       (stack.exists(_.endsWith(".HDFSMetadataLog")) && !stack.exists(_.endsWith(".FileStreamSourceLog")))
-
-  /** `body`'s value and the processes the JVM starts while it runs,
-    * each as the class names of its stack (JFR `jdk.ProcessStart`,
-    * innermost frame first). */
-  private def processStarts[A](body: => A): (A, Seq[Seq[String]]) = {
-    val rec = new Recording()
-    rec.enable("jdk.ProcessStart").withStackTrace()
-    rec.start()
-    val value =
-      try body
-      finally rec.stop()
-    val file = Files.createTempFile("arrival", ".jfr")
-    try {
-      rec.dump(file)
-      value -> RecordingFile.readAllEvents(file).asScala.toSeq.map { e =>
-        Option(e.getStackTrace).fold(Seq.empty[String])(
-          _.getFrames.asScala.toSeq.map(_.getMethod.getType.getName))
-      }
-    } finally {
-      rec.close()
-      Files.delete(file)
-    }
-  }
 
   private def await(what: String)(cond: => Boolean): Unit = {
     val deadline = System.nanoTime() + 30L * 1000000000L
